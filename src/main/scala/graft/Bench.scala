@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): one JSON line with per-query seconds.
   *
@@ -23,53 +22,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_SHUFFLE_PARTITIONS decouples partition count from task
-    // slots for scale probes. Default stays = cpus (the driver's
-    // protocol), but local mode needs the knob above ~sf10: with
-    // partitions == slots, EVERY partition of a shuffle-hash build side
-    // is memory-resident at once (one JVM pool), so a corpus-growing
-    // build side costs Θ(n) resident — on a real cluster each executor
-    // holds only its share, and the remedy is the same one production
-    // owns: more/smaller shuffle partitions (only ⌈slots⌉ of them build
-    // concurrently). Measured: dedup_clusters at sf30 dies at 32
-    // partitions ("Can't acquire … to build hash relation") and passes
-    // at 128 — see BASELINE.md round 13.
-    val shufP = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    // bytes-derived INITIAL shuffle width (r16): AQE coalesces a wide
-    // initial exchange down for free but can never raise a narrow one —
-    // see InternalCaches.adaptiveInitialShuffleParts. The env override,
-    // when set, pins both confs (manual full control, the r13 protocol).
-    val initP = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-      .getOrElse(InternalCaches
-        .adaptiveInitialShuffleParts(sfDir, shufP.toInt).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufP)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        initP)
-      // 128-group default silently converts TopKByScore into an input-
-      // stream external sort (expr/topk.scala scaladoc — the r13 sf100
-      // disk-death)
-      .config(graft.expr.TopKByScore.AggFallbackKey,
-        graft.expr.TopKByScore.AggFallbackValue)
-      // see InternalCaches.ShuffleBypassKey — keep adaptive-width exchanges
-      // on the zero-execution-memory bypass writer
-      .config(graft.InternalCaches.ShuffleBypassKey,
-        graft.InternalCaches.ShuffleBypassValue)
-      // IVF k-means trains as a LAZY round chain (similarity.scala,
-      // ivfCentroidsOf): one BroadcastExchange build can nest up to
-      // `spark.graft.ivf.chainDepth` rounds of corpus compute, and the
-      // default 300 s broadcastTimeout would time that whole nest at
-      // large corpora. No effect on timings at any committed sf (every
-      // local broadcast builds in milliseconds); this is the
-      // scale-safety raise the chain's scaladoc asks of every session.
-      .config("spark.sql.broadcastTimeout", "3600")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(Some(sfDir))
 
     // JOBS-PER-KEY counter (r17, verdict item 2): the r16 round's dominant
     // technique — eager→lazy persists that delete standalone cache-
@@ -180,9 +133,7 @@ object Bench {
       // one-JVM sweep artifact production executors don't share, since
       // no production executor runs 195 unrelated pipelines back-to-back
       // on one heap.
-      // SPARK_GRAFT_KEYGC=0 disables the inter-key GC for A/B probes of
-      // the protocol itself (the call sits OUTSIDE the timer either way)
-      if (sys.env.get("SPARK_GRAFT_KEYGC").forall(_ != "0")) System.gc()
+      System.gc()
       // snapshot AFTER unpersist+GC: the blocking unpersist and the full
       // GC give the async listener bus ample time to drain this key's
       // job-start events before the count is attributed

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only timing probe (not part of the shipped surface): run one
   * query N times in a single session, print each pass's seconds —
   * separates per-session warm-up (JIT/codegen/IO cache) from the
@@ -13,26 +11,7 @@ object DevProbe {
     val sfDir = args(0)
     val key = args(1)
     val n = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // see expr/topk.scala — the 128-group ObjectHashAggregate default
-      .config(graft.expr.TopKByScore.AggFallbackKey,
-        graft.expr.TopKByScore.AggFallbackValue)
-      // see InternalCaches.ShuffleBypassKey — keep adaptive-width exchanges
-      // on the zero-execution-memory bypass writer
-      .config(graft.InternalCaches.ShuffleBypassKey,
-        graft.InternalCaches.ShuffleBypassValue)
-      // see Bench.scala: the IVF lazy round chain nests earlier rounds'
-      // compute inside one BroadcastExchange build; 300 s would time the
-      // whole nest at large corpora
-      .config("spark.sql.broadcastTimeout", "3600")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(Some(sfDir))
     // SPARK_GRAFT_EXPLAIN=1: print the key's formatted physical plan
     // (with whole-stage-codegen ids — the ids OOM stack traces name)
     // and exit without executing. Forensics for scale-probe failures:

@@ -1,0 +1,117 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+
+/** Every `spark.graft.*` session dial, declared once: key, default, the
+  * values it accepts and a one-line doc. Operators read a dial only
+  * through its [[Dials.Dial]] at plan-build time, so a notebook can
+  * re-dial between queries. A value outside the accepted set fails with
+  * the key named. "adaptive" marks a default the operator computes from
+  * its input; such dials are read with [[Dials.Dial.get]]. DialSpec
+  * holds the README conf table and every `spark.graft.` literal under
+  * src/main to this list.
+  */
+object Dials {
+  final class Dial[T] private[Dials] (val key: String, val default: String,
+      val accepts: String, val doc: String, parse: String => Option[T]) {
+    /** The session's value, else the declared default. */
+    def apply(s: SparkSession): T = read(s.conf.get(key, default))
+    /** The session's value if set — for dials with an adaptive default. */
+    def get(s: SparkSession): Option[T] = s.conf.getOption(key).map(read)
+    /** Runs `body` with the dial set to `value`, then restores the
+      * session's prior setting.
+      */
+    def withValue[A](s: SparkSession, value: String)(body: => A): A = {
+      val prior = s.conf.getOption(key)
+      s.conf.set(key, value)
+      try body finally prior.fold(s.conf.unset(key))(s.conf.set(key, _))
+    }
+    private[graft] def read(raw: String): T = parse(raw).getOrElse(
+      throw new IllegalArgumentException(
+        s"$key must be $accepts, got '$raw'"))
+  }
+
+  private val declared = Seq.newBuilder[Dial[_]]
+  private def dial[T](key: String, default: Any, accepts: String,
+                      doc: String)(parse: String => Option[T]): Dial[T] = {
+    val d = new Dial(key, default.toString, accepts, doc, parse)
+    declared += d
+    d
+  }
+  private def int(key: String, default: Any, doc: String,
+                  lo: Int = Int.MinValue,
+                  hi: Int = Int.MaxValue): Dial[Int] =
+    dial(key, default,
+      if (lo == Int.MinValue) "an integer"
+      else if (hi == Int.MaxValue) s"an integer >= $lo"
+      else s"an integer in [$lo, $hi]", doc)(
+      _.toIntOption.filter(v => v >= lo && v <= hi))
+  // block ids are bitmasks of xxhash64, so block counts are powers of two
+  private def pow2(key: String, default: Int, doc: String): Dial[Int] =
+    dial(key, default, "a power of two", doc)(
+      _.toIntOption.filter(v => v > 0 && (v & (v - 1)) == 0))
+  private def num(key: String, default: Double, hi: Double,
+                  doc: String): Dial[Double] =
+    dial(key, default, s"a number in [0, $hi]", doc)(
+      _.toDoubleOption.filter(v => v >= 0.0 && v <= hi))
+  // strict: these dials flip the plan, so a typo must fail, not read as
+  // the default
+  private def bool(key: String, default: Boolean,
+                   doc: String): Dial[Boolean] =
+    dial(key, default, "true or false", doc)(_.toBooleanOption)
+
+  val EstMargin = num("spark.graft.lsh.estMargin", 0.15, 1.0,
+    "threshold slack of the signature-estimate prefilter; 1.0 disables it")
+  val PackedSigma = num("spark.graft.lsh.packedSigma", 4.5, 20.0,
+    "sigmas below the threshold of the packed minhash cut; 0 disables it")
+  val HotBucketWidth = int("spark.graft.lsh.hotBucketWidth", "adaptive",
+    "band-bucket width past which the salted decompositions salt a " +
+      "bucket; adaptive = max(32, ceil(sqrt(documents bytes / 32)))")
+  val SaltBlocks = pow2("spark.graft.lsh.saltBlocks", 8,
+    "salt-block count for hot buckets")
+  val BucketDfCap = int("spark.graft.lsh.bucketDfCap", 65536,
+    "buckets wider than this leave pair generation; 0 disables", lo = 0)
+  val HotSampleShift = int("spark.graft.lsh.hotSampleShift", 4,
+    "width detection samples 1/2^shift of docs; 0 counts exactly",
+    lo = 0, hi = 16)
+  val SimhashMaxDist = int("spark.graft.simhash.maxDist", 4,
+    "dedup_simhash hamming threshold; <= 4 uses the pair-block index")
+  val ComboBlocks = int("spark.graft.simhash.comboBlocks", 6,
+    "fingerprint blocks of the pair-block Hamming index")
+  val ComboClean = int("spark.graft.simhash.comboClean", 2,
+    "clean blocks per key of the pair-block Hamming index")
+  val ContainmentMaxDf = int("spark.graft.containment.maxDf", 128,
+    "text_containment shingle DF cap for the pair join; 0 disables")
+  val CcMaxRounds = int("spark.graft.cc.maxRounds", 50,
+    "connected-components round cap; not converging is an error")
+  val IvfIters = int("spark.graft.ivf.iters", 3,
+    "Lloyd iterations of IVF training")
+  val IvfNprobe = int("spark.graft.ivf.nprobe", 2,
+    "IVF cells probed per vector")
+  val IvfChainDepth = int("spark.graft.ivf.chainDepth", 4,
+    "IVF training rounds one broadcast build may nest", lo = 1)
+  val IvfHotCellWidth = int("spark.graft.ivf.hotCellWidth", 4096,
+    "IVF cell width past which the cell pair join is salted")
+  val IvfCellSaltBlocks = pow2("spark.graft.ivf.cellSaltBlocks", 8,
+    "salt-block count for hot IVF cells")
+  val IvfTopkAgg = bool("spark.graft.ivf.topkAgg", true,
+    "rank IVF candidates by bounded top-k aggregation, not a window")
+  val IvfRefineCells = bool("spark.graft.ivf.refineCells", true,
+    "sub-cluster sim_ann_ivf's label cells by the trained quantizer")
+  val NearembExact = bool("spark.graft.nearemb.exact", false,
+    "dedup_near_embedding as the lossless all-pairs sweep")
+  val AnnlshProbeEvery = int("spark.graft.annlsh.probeEvery", 13,
+    "sim_ann_lsh re-ingests every Nth vector as a clone; 0 disables")
+  val TrianglesBloom = dial("spark.graft.triangles.bloom", "auto",
+    "auto, on or off", "bloom semi-join on the triangle wedge stream")(
+    v => Option(v).filter(Set("auto", "on", "off")))
+  val TrianglesBloomShards = dial[Option[Int]](
+    "spark.graft.triangles.bloomShards", "auto", "auto or 1..64",
+    "closing-edge bloom shards; auto = ceil(8 * edges / 2^31) <= 8") {
+    case "auto" => Some(None)
+    case v => v.toIntOption.filter(k => k >= 1 && k <= 64).map(Some(_))
+  }
+
+  /** Every declared dial, in declaration order. */
+  val all: Seq[Dial[_]] = declared.result()
+}

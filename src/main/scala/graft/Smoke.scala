@@ -2,8 +2,6 @@ package graft
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
-
 /** Multi-process execution smoke (r11): run a representative query
   * subset under WHATEVER master spark-submit provides and print one
   * canonical `SMOKE <key> rows=<n> hash=<md5>` line per key. Running
@@ -76,27 +74,9 @@ object Smoke {
           Seq("dedup_simhash@12", "flagship")
       else if (args.length > 1) args(1).split(",").map(_.trim).toSeq
       else DefaultKeys
-    // no .master() here: spark-submit supplies it — standalone-vs-local
+    // no master here: spark-submit supplies it — standalone-vs-local
     // is the very thing under test
-    val spark = SparkSession.builder()
-      .appName("graft-smoke")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      // see expr/topk.scala — the 128-group ObjectHashAggregate default
-      .config(graft.expr.TopKByScore.AggFallbackKey,
-        graft.expr.TopKByScore.AggFallbackValue)
-      // see InternalCaches.ShuffleBypassKey — keep adaptive-width exchanges
-      // on the zero-execution-memory bypass writer
-      .config(graft.InternalCaches.ShuffleBypassKey,
-        graft.InternalCaches.ShuffleBypassValue)
-      // see Bench.scala: the IVF lazy round chain nests earlier rounds'
-      // compute inside one BroadcastExchange build; 300 s would time the
-      // whole nest at large corpora
-      .config("spark.sql.broadcastTimeout", "3600")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(None, GraftSession.cpus, None)
     var failed = 0
     keys.foreach { k =>
       try {
@@ -122,27 +102,13 @@ object Smoke {
             case Array(base, d) => (base, Some(d))
             case _ => (k, None)
           }
-          // restore (not unset) on exit: a spark-submit-supplied dial
-          // must survive for later keys in the list. Restoring right
-          // after DataFrame CONSTRUCTION is sound only because every
-          // graft conf is read at plan-build time (the queries() closures
-          // read confs eagerly while assembling the plan); a key that
-          // deferred a conf read to execution time would hash under the
-          // restored dial — keep that invariant if new dials are added
-          val prior = dial.flatMap(_ =>
-            spark.conf.getOption("spark.graft.simhash.maxDist"))
-          dial.foreach(d =>
-            spark.conf.set("spark.graft.simhash.maxDist", d))
-          val df =
-            try SparkEntry.queries(qk)(spark, sfDir)
-            finally dial.foreach { _ =>
-              prior match {
-                case Some(v) =>
-                  spark.conf.set("spark.graft.simhash.maxDist", v)
-                case None =>
-                  spark.conf.unset("spark.graft.simhash.maxDist")
-              }
-            }
+          // the dial is restored right after DataFrame CONSTRUCTION:
+          // sound because every graft dial is read at plan-build time
+          // (Dials) — a key that deferred a dial read to execution time
+          // would hash under the restored value
+          val df = dial.fold(SparkEntry.queries(qk)(spark, sfDir))(d =>
+            Dials.SimhashMaxDist.withValue(spark, d)(
+              SparkEntry.queries(qk)(spark, sfDir)))
           val cols = df.columns.sorted
           // JSON per row (stable for nested arrays/structs/timestamps
           // under the UTC session), then sort — row order is not part of

@@ -1,39 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val shufP = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    // bytes-derived INITIAL shuffle width — see Bench.scala / the
-    // InternalCaches.adaptiveInitialShuffleParts scaladoc
-    val initP = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-      .getOrElse(InternalCaches
-        .adaptiveInitialShuffleParts(sfDir, shufP.toInt).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufP)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        initP)
-      // see expr/topk.scala — the 128-group ObjectHashAggregate default
-      .config(graft.expr.TopKByScore.AggFallbackKey,
-        graft.expr.TopKByScore.AggFallbackValue)
-      // see InternalCaches.ShuffleBypassKey — keep adaptive-width exchanges
-      // on the zero-execution-memory bypass writer
-      .config(graft.InternalCaches.ShuffleBypassKey,
-        graft.InternalCaches.ShuffleBypassValue)
-      // see Bench.scala: the IVF lazy round chain nests earlier rounds'
-      // compute inside one BroadcastExchange build; 300 s would time the
-      // whole nest at large corpora
-      .config("spark.sql.broadcastTimeout", "3600")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(Some(sfDir))
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=q1,q2 limits the dump (sf0.1 parity spot-checks);
     // the driver leaves it unset and dumps everything

@@ -68,7 +68,7 @@ object InternalCaches {
   /** Number of live tracked entries (diagnostics / tests). */
   def trackedCount: Int = synchronized(entries.size)
 
-  /** Session dial — every engine session builder sets it, like
+  /** Session dial — [[GraftSession]] sets it, like
     * [[graft.expr.TopKByScore.AggFallbackKey]]: keep hash-partitioned
     * shuffle WRITES on the BypassMergeSortShuffleWriter up to the widest
     * adaptive exchange the engine derives. Spark's default threshold is
@@ -153,7 +153,7 @@ object InternalCaches {
     * runtime (AQE advisory 64 MB), so the cost of a generous initial
     * width is ~nothing; the benefit at sf30 is build/sort partitions
     * that fit. `SPARK_GRAFT_SHUFFLE_PARTITIONS` remains the manual
-    * override at the call sites (Bench/Verify), taking both confs.
+    * override in [[GraftSession]], taking both confs.
     */
   private[graft] def adaptiveInitialShuffleParts(dir: String,
                                                  floor: Int): Int = {

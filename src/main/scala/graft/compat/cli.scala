@@ -140,20 +140,9 @@ object ClientCli {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      // see expr/topk.scala — the 128-group ObjectHashAggregate default
-      .config(graft.expr.TopKByScore.AggFallbackKey,
-        graft.expr.TopKByScore.AggFallbackValue)
-      // see InternalCaches.ShuffleBypassKey — keep adaptive-width exchanges
-      // on the zero-execution-memory bypass writer
-      .config(graft.InternalCaches.ShuffleBypassKey,
-        graft.InternalCaches.ShuffleBypassValue)
-      .config("spark.ui.enabled", "false")
-      .appName("graft-client").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(
+      Some(sys.env.getOrElse("SPARK_MASTER", "local[*]")),
+      graft.GraftSession.cpus, None)
     try args.toList match {
       case "-w" :: file :: rest =>
         val w = rest.headOption.map(_.toInt).getOrElse(3)

@@ -35,7 +35,7 @@ import org.apache.spark.sql.expressions.Aggregator
   * sim_ann_ivf_trained candidate stream is ~1.6e10 rows, the fallback
   * sort's spill filled the probe box's disk, and the key died
   * SPILL_OUT_OF_MEMORY — the exact failure the aggregation exists to
-  * delete. Every engine session builder therefore raises the threshold
+  * delete. [[graft.GraftSession]] therefore raises the threshold
   * to [[TopKByScore.AggFallbackValue]]: per-task group counts here are
   * ~n/P (62 k at 2 M queries / 32 tasks) with ≤ (k+1)-element buffers
   * (~200 B), so the honest map cost is MBs — while the raised ceiling
@@ -77,8 +77,7 @@ case class TopKByScore(k: Int)
 object TopKByScore {
   /** The ObjectHashAggregate fallback dial every engine session must
     * raise — see the class scaladoc for the measured sf100 failure the
-    * 128-group default causes. One definition so the builders
-    * (Bench/Verify/Smoke/DevProbe/CLI) can never drift.
+    * 128-group default causes. [[graft.GraftSession]] installs it.
     */
   val AggFallbackKey = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
   val AggFallbackValue = "4194304"

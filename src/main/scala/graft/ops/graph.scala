@@ -251,27 +251,16 @@ object Graph {
     // spark.graft.triangles.bloomShards = auto|<k> forces the shard
     // count (the GraphSpec count-identity law drives the sharded path
     // on toy graphs, where the byte-derived k is always 1).
-    val bloomMode =
-      edges.sparkSession.conf.get("spark.graft.triangles.bloom", "auto")
-    val useBloom = bloomMode match {
+    val useBloom = graft.Dials.TrianglesBloom(edges.sparkSession) match {
       case "on" => true
       case "off" => false
       case _ => nEdges >= Graph.BloomAutoMinEdges
     }
     val candidates = if (!useBloom) wedges else {
       val idealBits = (8L * nEdges).max(1L << 16)
-      val shardConf = edges.sparkSession.conf
-        .get("spark.graft.triangles.bloomShards", "auto")
-      val k = shardConf match {
-        case "auto" =>
-          (((idealBits + Graph.BloomMaxBits - 1) / Graph.BloomMaxBits)
-            .toInt).max(1).min(Graph.BloomMaxShards)
-        case s =>
-          val v = s.toInt
-          require(v >= 1 && v <= 64,
-            s"spark.graft.triangles.bloomShards must be auto or 1..64, got $s")
-          v
-      }
+      val k = graft.Dials.TrianglesBloomShards(edges.sparkSession)
+        .getOrElse((((idealBits + Graph.BloomMaxBits - 1) /
+          Graph.BloomMaxBits).toInt).max(1).min(Graph.BloomMaxShards))
       val bits = ((idealBits + k - 1) / k).min(Graph.BloomMaxBits)
       val numBits = (((bits + 63) / 64) * 64).toInt
       val bagg = udaf(new graft.expr.BloomFilter.SizedAgg(numBits))

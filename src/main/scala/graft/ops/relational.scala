@@ -337,23 +337,12 @@ object Relational {
         .select(col("c_custkey"), col("c_name"))
         .orderBy("c_custkey")),
 
-    // Non-equi band join |c_acctbal − s_acctbal| ≤ 10. The EXECUTING
-    // plan is the banded bucketization ([[bandedAcctbalJoin]], shared
-    // with `join_range_banded`) — since r10 the broadcast-BNLJ spelling
-    // is a conf-gated DEMONSTRATOR (`spark.graft.theta.bnlj=true`): a
-    // nested loop streams |big|·|small| comparisons even with the small
-    // side broadcast (measured 22.7× on 10× data at r7 sf1 vs ~3× for
-    // the banded equi-join), so it must never be the default a user
-    // scales up with. Identical output either way — each qualifying
-    // pair matches exactly once in both plans.
-    "join_theta_range" -> ((s, d) =>
-      if (s.conf.getOption("spark.graft.theta.bnlj").contains("true"))
-        customer(s, d).join(broadcast(supplier(s, d)),
-            col("c_acctbal").between(col("s_acctbal") - 10,
-                                     col("s_acctbal") + 10))
-          .select(col("s_suppkey"), col("c_custkey"))
-          .orderBy("s_suppkey", "c_custkey")
-      else bandedAcctbalJoin(s, d)),
+    // Non-equi band join |c_acctbal − s_acctbal| ≤ 10, planned as the
+    // banded bucketization ([[bandedAcctbalJoin]], shared with
+    // `join_range_banded`): a broadcast nested loop streams
+    // |big|·|small| comparisons (measured 22.7× on 10× data at r7 sf1
+    // vs ~3× for the banded equi-join) for the same output.
+    "join_theta_range" -> ((s, d) => bandedAcctbalJoin(s, d)),
 
     // The 100 TB form of the same range predicate: bucketize both sides
     // at the band width — a pair with |c - s| ≤ 10 has buckets differing

@@ -54,13 +54,22 @@ object Similarity {
     */
   private val ProbeCount = 100
 
-  /** Blocks for the exact all-pairs decomposition (session conf
-    * `spark.graft.pairBlocks`, POWER OF TWO — the block id is a bitmask
-    * of xxhash64): pair work spreads over blocks·(blocks+1)/2 shuffle
-    * tasks at a ≤ (blocks+1)× replication cost. Dial to ~cluster-width
-    * on a real deployment.
+  /** Blocks for the exact all-pairs decomposition (POWER OF TWO — the
+    * block id is a bitmask of xxhash64): pair work spreads over
+    * blocks·(blocks+1)/2 shuffle tasks at a ≤ (blocks+1)× replication
+    * cost.
     */
-  private val PairBlocksDefault = 8
+  private val PairBlocks = 8
+
+  /** Probed cells per vector in `dedup_near_embedding`'s blocked plan —
+    * the oracle replays this value.
+    */
+  private val NearEmbNprobe = 3
+
+  /** `sim_ann_lsh`'s combined 128-bit hamming cut: clone pairs measure
+    * 8–14, random pairs concentrate at 64 ± 5.7.
+    */
+  private val AnnLshMaxDist = 24
 
   /** vec_id + embedding widened to double + precomputed L2 norm. No
     * repartition here: each consumer rebalances on ITS join/compute key
@@ -93,7 +102,7 @@ object Similarity {
   /** Every unordered vector pair exactly once, via triangular block
     * decomposition — the distributed form of an exact all-pairs sweep.
     * Each row gets a deterministic block `blk = xxhash64(vec_id) &
-    * (pairBlocks-1)`; a pair with blocks (a ≤ b) is produced by the one
+    * (PairBlocks-1)`; a pair with blocks (a ≤ b) is produced by the one
     * shuffle task keyed (a, b): the x-side replicates a row with block r
     * to tags (r, j) for j ≥ r, the y-side to tags (i, r) for i ≤ r.
     * Same-block pairs surface in both orientations — callers normalize
@@ -103,13 +112,11 @@ object Similarity {
     * executor memory.
     */
   private[graft] def blockedPairs(v: DataFrame): DataFrame = {
-    val blocks = Text.blockCountConf(v, "spark.graft.pairBlocks",
-      PairBlocksDefault)
     val tagged = v.withColumn("blk",
-      xxhash64(col("vec_id")).bitwiseAND(lit(blocks - 1)).cast("int"))
+      xxhash64(col("vec_id")).bitwiseAND(lit(PairBlocks - 1)).cast("int"))
     val x = tagged.select(col("vec_id"), col("v"), col("nrm"),
       col("blk").as("pi"),
-      explode(sequence(col("blk"), lit(blocks - 1))).as("pj"))
+      explode(sequence(col("blk"), lit(PairBlocks - 1))).as("pj"))
     val y = tagged.select(col("vec_id").as("nbr_id"), col("v").as("bv"),
       col("nrm").as("bn"),
       explode(sequence(lit(0), col("blk"))).as("pi"),
@@ -189,7 +196,7 @@ object Similarity {
   private def probeCellCol(nprobe: Int): Column =
     explode(transform(slice(col("sc"), 1, nprobe), x => x.getField("cid")))
 
-  /** IVF cell count: conf override, else the standard nlist ∝ √n sizing
+  /** IVF cell count: the standard nlist ∝ √n sizing
     * (k = max(8, round(√(n/8)))) — a FIXED k makes within-cell pair work
     * Ω(n²/k), which the sf1 bench measured as a 13.9× cost on 10× data;
     * √n cells caps it at O(n^1.5). The count() is a one-scalar
@@ -199,12 +206,9 @@ object Similarity {
     * so the two sides stay in lockstep at ANY sf.
     */
   private def ivfK(s: SparkSession, d: String): Int =
-    // conf FIRST: intConf's by-value default would run the count() job
-    // even with the override set (review finding, round 7)
-    s.conf.getOption("spark.graft.ivf.k").map(_.toInt).getOrElse(
-      math.max(8, math.round(math.sqrt(
-        embeddings(s, d).filter(col("embedding").isNotNull).count()
-          / 8.0)).toInt))
+    math.max(8, math.round(math.sqrt(
+      embeddings(s, d).filter(col("embedding").isNotNull).count()
+        / 8.0)).toInt)
 
   /** The Lloyd's training loop over an arbitrary (vec_id, v, nrm)
     * relation — extracted (r10) so the blocked near-dup path and the
@@ -244,11 +248,11 @@ object Similarity {
     // cache write costs ~nothing, but is the checkpoint a mid-count (or
     // a task retry) lands on — that is why intermediates stay persisted
     // even though each is read exactly once on the happy path. The
-    // engine's own session builders also raise broadcastTimeout;
+    // engine's GraftSession also raises broadcastTimeout;
     // library callers with huge corpora should do one or the other.
     // Default 4 keeps the declared iters=3 chain mid-count-free — job
     // count and fixture plans unchanged from r16.
-    val chainDepth = math.max(1, Text.intConf(v, "spark.graft.ivf.chainDepth", 4))
+    val chainDepth = graft.Dials.IvfChainDepth(v.sparkSession)
     (1 to iters).foreach { i =>
       val upd = assignCells(v, cents)
         .select(col("cell").as("cid"), posexplode(col("v")))
@@ -269,7 +273,7 @@ object Similarity {
   }
 
   private def ivfCentroids(s: SparkSession, d: String): DataFrame = {
-    val iters = Text.intConf(embeddings(s, d), "spark.graft.ivf.iters", 3)
+    val iters = graft.Dials.IvfIters(s)
     ivfCentroidsOf(vecs(s, d).select(col("vec_id"), col("v"), col("nrm")),
       ivfK(s, d), iters)
   }
@@ -342,8 +346,8 @@ object Similarity {
     // distinct collapses the same-block double meeting. Defaults keep
     // every committed plan: sf ≤ 1 cell widths sit far under 4096, so
     // the tag columns are constant 0 and the join is the old join.
-    val hotW = Text.intConf(v, "spark.graft.ivf.hotCellWidth", 4096)
-    val blocks = Text.blockCountConf(v, "spark.graft.ivf.cellSaltBlocks", 8)
+    val hotW = graft.Dials.IvfHotCellWidth(v.sparkSession)
+    val blocks = graft.Dials.IvfCellSaltBlocks(v.sparkSession)
     val hot = probes.groupBy(col("pcell"))
       .agg(count(lit(1)).as("cw"))
       .filter(col("cw") > hotW)
@@ -418,7 +422,7 @@ object Similarity {
     // end-to-end accuracy pin.
     "sim_ann_ivf_trained" -> ((s, d) => {
       val p = s.sparkContext.defaultParallelism
-      val nprobe = Text.intConf(embeddings(s, d), "spark.graft.ivf.nprobe", 2)
+      val nprobe = graft.Dials.IvfNprobe(s)
       // ONE map-only scoring pass feeds both sides: scores[0] is the
       // index cell, the front slice is the probe set (nearest first,
       // ties broken by cid — deterministic). Persisted because the index
@@ -458,16 +462,8 @@ object Similarity {
       // sf10, a ~300× exchange cut measured in BASELINE.md's r12
       // section), and nothing sorts but 4-element buffers.
       // spark.graft.ivf.topkAgg=false keeps the window form as the
-      // demonstrator. Strict parse, same rationale as refineCells: this
-      // conf flips the PLAN, so a typo must fail loudly.
-      val topkAgg = s.conf.getOption("spark.graft.ivf.topkAgg")
-        .forall {
-          case v if v.equalsIgnoreCase("true")  => true
-          case v if v.equalsIgnoreCase("false") => false
-          case other => throw new IllegalArgumentException(
-            s"spark.graft.ivf.topkAgg must be true or false, got '$other'")
-        }
-      if (topkAgg) {
+      // demonstrator.
+      if (graft.Dials.IvfTopkAgg(s)) {
         val topk = udaf(graft.expr.TopKByScore(3),
           org.apache.spark.sql.catalyst.encoders
             .ExpressionEncoder[(Double, Long)]())
@@ -566,11 +562,10 @@ object Similarity {
     // set the Spark output is a SUPERSET of the oracle's wherever
     // blocking loses a moderate-cos pair (first divergence: sf0.1,
     // 144 vs 122 rows): the conf is a user escape hatch, not a
-    // gate-compatible mode, unlike `spark.graft.theta.bnlj` whose two
-    // plans are output-identical. Filter on the ROUNDED value either
-    // way so both engines cut on identical numbers.
+    // gate-compatible mode. Filter on the ROUNDED value either way so
+    // both engines cut on identical numbers.
     "dedup_near_embedding" -> ((s, d) =>
-      if (s.conf.getOption("spark.graft.nearemb.exact").contains("true"))
+      if (graft.Dials.NearembExact(s))
         blockedPairs(vecs(s, d))
           .select(col("vec_id"), col("nbr_id"),
             cosine(col("v"), col("bv"), col("nrm"), col("bn")).as("cos"))
@@ -579,13 +574,9 @@ object Similarity {
             greatest(col("vec_id"), col("nbr_id")).as("b"), col("cos"))
           .distinct()
           .orderBy("a", "b")
-      else {
-        val nprobe = Text.intConf(embeddings(s, d),
-          "spark.graft.nearemb.nprobe", 3)
-        nearDupBlocked(
-          vecs(s, d).select(col("vec_id"), col("v"), col("nrm")),
-          ivfCentroids(s, d), nprobe, 0.45)
-      }),
+      else nearDupBlocked(
+        vecs(s, d).select(col("vec_id"), col("v"), col("nrm")),
+        ivfCentroids(s, d), NearEmbNprobe, 0.45)),
 
     // LSH-bucketed ANN — the hash-based alternative to the IVF cell
     // restriction: a 64-bit hyperplane sign sketch per vector (codegen'd,
@@ -672,8 +663,7 @@ object Similarity {
     "sim_ann_lsh" -> ((s, d) => {
       val p = s.sparkContext.defaultParallelism
       val raw = vecs(s, d)
-      val probeEvery = Text.intConf(raw, "spark.graft.annlsh.probeEvery",
-        13)
+      val probeEvery = graft.Dials.AnnlshProbeEvery(s)
       val corpus =
         if (probeEvery <= 0) raw.select(col("vec_id"), col("v"))
         else raw.select(col("vec_id"), col("v")).unionByName(
@@ -711,7 +701,6 @@ object Similarity {
       // join; fp2_a/fp2_b ride the carry. The filter fuses into the
       // join's output stage (whole-stage codegen), so the distinct —
       // the first shuffle of the candidate stream — sees survivors only.
-      val maxD = Text.intConf(sk, "spark.graft.annlsh.maxDist", 24)
       // unordered collision pairs → both orientations (top-k is per
       // query). Emitted via ONE explode, not a self-union: a union would
       // reference the candidate subtree (hot agg, multi-index join,
@@ -719,7 +708,7 @@ object Similarity {
       val cand = Text.multiIndexCandidates(sk, Seq(16, 16, 16, 16), 1,
           carry = Seq("fp2"))
         .filter(col("hamming") +
-          bit_count(col("fp2_a").bitwiseXOR(col("fp2_b"))) <= maxD)
+          bit_count(col("fp2_a").bitwiseXOR(col("fp2_b"))) <= AnnLshMaxDist)
         .select(col("a"), col("b")).distinct()
         .select(explode(array(
           struct(col("a").as("vec_id"), col("b").as("nbr_id")),
@@ -756,27 +745,13 @@ object Similarity {
     // AccuracySpec pins along with the pair-count bound). The oracle
     // replays the refined pipeline, so the gate stays rows+schema+hash.
     // `spark.graft.ivf.refineCells=false` keeps the exact label-only
-    // self-join as the explicit small-corpus demonstrator — the same
-    // default-is-the-scale-safe-plan pattern as join_theta_range's
-    // banded default / conf-gated BNLJ.
+    // self-join as the explicit small-corpus demonstrator.
     "sim_ann_ivf" -> ((s, d) => {
       val p = s.sparkContext.defaultParallelism
       val w = Window.partitionBy(col("vec_id"))
         .orderBy(col("cos").desc, col("nbr_id"))
-      // strict boolean parse (ADVICE r11): a sloppy value ("0", "off",
-      // "Flase") must fail loudly, not silently select the refined
-      // default — this conf flips the PLAN, and a typo that reads as
-      // "true" would make a label-only-vs-refined comparison measure
-      // the same plan twice
-      val refineCells = s.conf.getOption("spark.graft.ivf.refineCells")
-        .forall {
-          case v if v.equalsIgnoreCase("true")  => true
-          case v if v.equalsIgnoreCase("false") => false
-          case other => throw new IllegalArgumentException(
-            s"spark.graft.ivf.refineCells must be true or false, got '$other'")
-        }
       val pairs =
-        if (!refineCells) {
+        if (!graft.Dials.IvfRefineCells(s)) {
           val a = vecs(s, d).repartition(p, col("label"))
           val b = vecs(s, d).select(col("label").as("blabel"),
             col("vec_id").as("nbr_id"), col("v").as("bv"),
@@ -786,8 +761,7 @@ object Similarity {
             .select(col("vec_id"), col("label"), col("nbr_id"),
               cosine(col("v"), col("bv"), col("nrm"), col("bn")).as("cos"))
         } else
-          refinedIvfPairs(s, d,
-            Text.intConf(embeddings(s, d), "spark.graft.ivf.nprobe", 2))
+          refinedIvfPairs(s, d, graft.Dials.IvfNprobe(s))
       // Ranking: the bounded TopKByScore aggregation, same default and
       // same dial as sim_ann_ivf_trained (spark.graft.ivf.topkAgg;
       // output-identical to the window by the shared (cos desc, nbr_id)
@@ -798,14 +772,7 @@ object Similarity {
       // (SPILL_OUT_OF_MEMORY: No space left on device) — the exact
       // failure mode TopKByScore exists to delete. label rides the
       // grouping key (functionally dependent on vec_id).
-      val topkAgg = s.conf.getOption("spark.graft.ivf.topkAgg")
-        .forall {
-          case v if v.equalsIgnoreCase("true")  => true
-          case v if v.equalsIgnoreCase("false") => false
-          case other => throw new IllegalArgumentException(
-            s"spark.graft.ivf.topkAgg must be true or false, got '$other'")
-        }
-      if (topkAgg) {
+      if (graft.Dials.IvfTopkAgg(s)) {
         val topk = udaf(graft.expr.TopKByScore(3),
           org.apache.spark.sql.catalyst.encoders
             .ExpressionEncoder[(Double, Long)]())

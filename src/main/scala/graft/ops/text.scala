@@ -360,17 +360,6 @@ object Text {
   private val MinhashK = 128 // signature length
   private val Bands    = 16  // LSH bands ...
   private val Rows     = 8   // ... of 8 rows: P(miss | jac=0.97) ≈ 3e-11
-  /** Slack between the Jaccard threshold and the signature-estimate
-    * prefilter cut — > 3σ of the estimate at k=128 (see lshJaccardPairs).
-    * Session conf `spark.graft.lsh.estMargin`; the prefilter makes the
-    * pipeline statistically rather than strictly lossless (a true pair
-    * EXACTLY at the threshold clears the cut with P ≈ 1 − 1e-4), so a
-    * caller that needs strict recall sets the conf to 1.0, which disables
-    * the prefilter entirely — every band collision then pays the exact
-    * set verification.
-    */
-  private val EstMarginDefault = 0.15
-
   /** Bucket width beyond which the band self-join is salted (session
     * conf `spark.graft.lsh.hotBucketWidth`). A natural corpus
     * concentrates boilerplate (headers, licence blocks, empty-ish docs)
@@ -440,16 +429,8 @@ object Text {
     math.max(HotBucketDefault,
       math.ceil(math.sqrt(bytes / 32.0)).toInt)
   }
-  /** Sub-blocks a hot bucket is split into (session conf
-    * `spark.graft.lsh.saltBlocks`, POWER OF TWO — the block id is a
-    * bitmask of xxhash64): pair work spreads across
-    * blocks·(blocks+1)/2 tasks at a ≤ (blocks+1)× row-replication cost
-    * paid ONLY by hot-bucket rows. Dial to ~cluster-width at scale.
-    */
-  private val SaltBlocksDefault = 8
-
-  /** Degenerate band-bucket DF cap (session conf
-    * `spark.graft.lsh.bucketDfCap`; 0 disables — the exact r14 plan).
+  /* Degenerate band-bucket DF cap ([[graft.Dials.BucketDfCap]]; 0
+    * disables — the exact r14 plan).
     * The `text_containment` maxDf doctrine applied to LSH band buckets
     * (r14 verdict item 2): a bucket wider than the cap is dropped from
     * pair generation ENTIRELY — its posting rows never enter the salted
@@ -494,40 +475,6 @@ object Text {
     * its recall budget; buckets it drops are individually loggable by
     * re-running the width aggregate.
     */
-  private val BucketDfCapDefault = 65536
-
-  private[ops] def intConf(df: DataFrame, key: String, dflt: Int): Int =
-    df.sparkSession.conf.get(key, dflt.toString).toInt
-
-  /** Fraction-valued session conf in [0, 1]: a parse failure or an
-    * out-of-range value fails HERE with the key named, not as a stray
-    * NumberFormatException deep in plan construction (and a negative
-    * margin would silently TIGHTEN the LSH prefilter above the
-    * threshold, dropping true pairs).
-    */
-  private[ops] def fractionConf(df: DataFrame, key: String,
-                                dflt: Double): Double = {
-    val raw = df.sparkSession.conf.get(key, dflt.toString)
-    val v = try raw.toDouble catch {
-      case _: NumberFormatException =>
-        throw new IllegalArgumentException(
-          s"$key must be a number in [0, 1], got '$raw'")
-    }
-    require(v >= 0.0 && v <= 1.0, s"$key must be in [0, 1], got $v")
-    v
-  }
-
-  /** Block-count conf: the block id is a bitmask of xxhash64 (Pmod is
-    * unconditionally nullable — see [[saltedBandPairs]]), so the value
-    * must be a power of two. One validation for every banded/blocked
-    * decomposition in the engine.
-    */
-  private[ops] def blockCountConf(df: DataFrame, key: String, dflt: Int): Int = {
-    val v = intConf(df, key, dflt)
-    require(v > 0 && (v & (v - 1)) == 0,
-      s"$key must be a power of two, got $v")
-    v
-  }
 
   /** All distinct unordered id pairs sharing a (band, bhash) bucket —
     * the candidate stage every sketch-based dedup runs — with hot buckets
@@ -603,7 +550,7 @@ object Text {
     *
     * This one aggregation serves BOTH bucket decisions — the hot-salt
     * boundary and, when `dfCap` > 0, the degenerate drop boundary
-    * ([[BucketDfCapDefault]]). A first r15 cut detected the two
+    * ([[graft.Dials.BucketDfCap]]). A first r15 cut detected the two
     * boundaries with two separate passes; on a natural corpus the
     * detection aggregate's cost is the per-posting partial-map work
     * (the fourth-wall class), so the second pass measurably cost ~the
@@ -614,9 +561,7 @@ object Text {
     */
   private def flaggedBuckets(postings: DataFrame, keys: Seq[String],
                              hotWidth: Int, dfCap: Int): DataFrame = {
-    val shift = intConf(postings, "spark.graft.lsh.hotSampleShift", 4)
-    require(shift >= 0 && shift <= 16,
-      s"spark.graft.lsh.hotSampleShift must be in [0, 16], got $shift")
+    val shift = graft.Dials.HotSampleShift(postings.sparkSession)
     val minW = if (dfCap > 0) math.min(hotWidth, dfCap) else hotWidth
     // clamp so minW >> s stays ≥ 2: s ≤ log2(minW) − 1
     val s = math.min(shift,
@@ -640,11 +585,10 @@ object Text {
                                    prune: DataFrame => DataFrame = identity,
                                    hotDflt: Int = HotBucketDefault)
       : DataFrame = {
-    val hotWidth = intConf(bands, "spark.graft.lsh.hotBucketWidth",
-      hotDflt)
-    val blocks = blockCountConf(bands, "spark.graft.lsh.saltBlocks",
-      SaltBlocksDefault)
-    // Degenerate-bucket DF cap (see [[BucketDfCapDefault]]): postings of
+    val s = bands.sparkSession
+    val hotWidth = graft.Dials.HotBucketWidth.get(s).getOrElse(hotDflt)
+    val blocks = graft.Dials.SaltBlocks(s)
+    // Degenerate-bucket DF cap ([[graft.Dials.BucketDfCap]]): postings of
     // over-cap buckets are dropped BEFORE the self-join — a dropped
     // bucket must neither replicate under the salt nor enumerate its
     // width² pairs. Both bucket decisions (hot-salt, degenerate drop)
@@ -654,9 +598,7 @@ object Text {
     // detection pass measured ~+60 % on the org-sf30 solo). With the
     // default cap the degen flag is false on every committed fixture
     // and the output is byte-identical to dfCap = 0.
-    val dfCap = intConf(bands, "spark.graft.lsh.bucketDfCap",
-      BucketDfCapDefault)
-    require(dfCap >= 0, s"spark.graft.lsh.bucketDfCap must be >= 0, got $dfCap")
+    val dfCap = graft.Dials.BucketDfCap(s)
     val flagged = flaggedBuckets(bands, Seq("band", "bhash"), hotWidth, dfCap)
     // flagged list is tiny by construction (distinct over-width keys) —
     // broadcast, so tagging never shuffles the bands relation
@@ -816,8 +758,8 @@ object Text {
                                     hotDflt: Int = HotBucketDefault)
       : DataFrame =
     comboBlockPairs(fp, maxDist,
-      nBlocks = intConf(fp, "spark.graft.simhash.comboBlocks", 6),
-      clean = intConf(fp, "spark.graft.simhash.comboClean", 2),
+      nBlocks = graft.Dials.ComboBlocks(fp.sparkSession),
+      clean = graft.Dials.ComboClean(fp.sparkSession),
       hotDflt = hotDflt)
 
   /** The combo-block generalization behind [[pairBlockPairs]] (r13
@@ -906,10 +848,9 @@ object Text {
       radius: Int, carry: Seq[String] = Nil,
       hotDflt: Int = HotBucketDefault): DataFrame = {
     val blockVal = fpBlockVal(widths)
-    val hotWidth = intConf(fp, "spark.graft.lsh.hotBucketWidth",
-      hotDflt)
-    val saltBlocks = blockCountConf(fp, "spark.graft.lsh.saltBlocks",
-      SaltBlocksDefault)
+    val s = fp.sparkSession
+    val hotWidth = graft.Dials.HotBucketWidth.get(s).getOrElse(hotDflt)
+    val saltBlocks = graft.Dials.SaltBlocks(s)
     // degenerate-bucket DF cap (r16, closing the r15 ADVICE asymmetry):
     // the cap guards THIS salted decomposition too — a template corpus
     // minting one block value for 10⁵⁺ docs would otherwise replicate
@@ -918,9 +859,7 @@ object Text {
     // Same one-pass detector, same recall contract (an over-cap bucket
     // drops from candidate generation; a pair loses that band's
     // pigeonhole factor), same fixture no-op at the 65536 default.
-    val dfCap = intConf(fp, "spark.graft.lsh.bucketDfCap",
-      BucketDfCapDefault)
-    require(dfCap >= 0, s"spark.graft.lsh.bucketDfCap must be >= 0, got $dfCap")
+    val dfCap = graft.Dials.BucketDfCap(s)
     // NOT persisted, deliberately: the posting projection feeds both the
     // hot-key aggregate and the index side of the candidate join, but it
     // is a codegen shift/mask explode over the ALREADY-CACHED fp relation
@@ -1059,25 +998,6 @@ object Text {
         .reduce(_.bitwiseOR(_))
     }: _*)
 
-  /** `spark.graft.lsh.packedSigma` (default 4.5; 0 disables the packed
-    * prune entirely — the plan reverts to the exact r13 shape): how
-    * many σ₆₄ below the threshold the packed cut sits. Parsed here so
-    * a bad value fails with the key named (the fractionConf
-    * discipline); ≤ 20 because past that the cut is vacuous at any
-    * threshold.
-    */
-  private def packedSigmaConf(df: DataFrame): Double = {
-    val key = "spark.graft.lsh.packedSigma"
-    val raw = df.sparkSession.conf.get(key, "4.5")
-    val v = try raw.toDouble catch {
-      case _: NumberFormatException =>
-        throw new IllegalArgumentException(
-          s"$key must be a number in [0, 20], got '$raw'")
-    }
-    require(v >= 0.0 && v <= 20.0, s"$key must be in [0, 20], got $v")
-    v
-  }
-
   /** The packed prune's byte-count cut for `threshold`: every
     * candidate row has its agreeing band's 8 positions equal by
     * construction (a uniform +8 — all 16 bands live inside the
@@ -1092,9 +1012,11 @@ object Text {
     * separation on the organic fixture (J ≈ 0.47 noise tail, t = 0.8):
     * noise mean 64.7 bytes vs cut 85 — 3.7σ, pass ≈ 1e-4.
     */
-  private def packedCut(sets: DataFrame, threshold: Double): Int =
-    8 + math.ceil(120.0 * (threshold - packedSigmaConf(sets) *
+  private def packedCut(sets: DataFrame, threshold: Double): Int = {
+    val sigma = graft.Dials.PackedSigma(sets.sparkSession)
+    8 + math.ceil(120.0 * (threshold - sigma *
       math.sqrt(threshold * (1 - threshold) / 120.0))).toInt
+  }
 
   /** Engagement floor for the packed prune: below this threshold the
     * cut (threshold − 4.5σ) sits at or under the band-conditioned
@@ -1114,7 +1036,7 @@ object Text {
   private def lshJaccardPairs(sets: DataFrame, threshold: Double,
                               hotDflt: Int = HotBucketDefault): DataFrame = {
     val packed = threshold >= PackedPruneMinThreshold &&
-      packedSigmaConf(sets) > 0
+      graft.Dials.PackedSigma(sets.sparkSession) > 0
     // the persisted relation is IDENTICAL with the prune on or off; pk
     // derives DOWNSTREAM of the cache boundary, deliberately — derived
     // inside the cached projection, CollapseProject substituted the
@@ -1142,7 +1064,7 @@ object Text {
     // P ≈ 1 − 1e-4, and every fixture/planted pair sits ≥ 0.13 above
     // threshold where the miss probability vanishes (< 1e-15). Strictly
     // lossless mode: conf the margin to 1.0 and the prefilter drops out
-    // of the plan entirely (see EstMarginDefault).
+    // of the plan entirely.
     //
     // PACKED COARSE PRUNE (r14, high-threshold representations only —
     // see PackedPruneMinThreshold): at organic gram density the
@@ -1157,8 +1079,7 @@ object Text {
     // (packedCut), so the noise mass dies where the simhash pipeline's
     // hamming cut does. The 128-position margin filter stays as the
     // precision backstop on the survivors.
-    val margin = fractionConf(sets, "spark.graft.lsh.estMargin",
-      EstMarginDefault)
+    val margin = graft.Dials.EstMargin(sets.sparkSession)
     val cand =
       if (!packed) saltedBandPairs(bands, hotDflt = hotDflt)
       else {
@@ -1325,8 +1246,7 @@ object Text {
     val bsig = sigOf(batch)
     val cand = saltedProbePairs(bandKeys(isig, bands = 32, rows = 4),
       bandKeys(bsig, bands = 32, rows = 4), hotDflt)
-    val margin = fractionConf(index, "spark.graft.lsh.estMargin",
-      EstMarginDefault)
+    val margin = graft.Dials.EstMargin(index.sparkSession)
     estimateAndVerify(cand, bsig, isig, threshold, margin)
   }
 
@@ -1344,10 +1264,9 @@ object Text {
                                       bb: DataFrame,
                                       hotDflt: Int = HotBucketDefault)
       : DataFrame = {
-    val hotWidth = intConf(ib, "spark.graft.lsh.hotBucketWidth",
-      hotDflt)
-    val blocks = blockCountConf(ib, "spark.graft.lsh.saltBlocks",
-      SaltBlocksDefault)
+    val s = ib.sparkSession
+    val hotWidth = graft.Dials.HotBucketWidth.get(s).getOrElse(hotDflt)
+    val blocks = graft.Dials.SaltBlocks(s)
     // degenerate-bucket DF cap (r16, closing the r15 ADVICE asymmetry:
     // the cap guarded only the self-join): an over-cap INDEX bucket is
     // dropped from BOTH sides of the probe join — its index postings
@@ -1355,9 +1274,7 @@ object Text {
     // their blocks-× replication of rows that could join nothing. Same
     // one-pass detector, same 1/(1−J^rows)-per-band recall trade, same
     // fixture no-op at the 65536 default.
-    val dfCap = intConf(ib, "spark.graft.lsh.bucketDfCap",
-      BucketDfCapDefault)
-    require(dfCap >= 0, s"spark.graft.lsh.bucketDfCap must be >= 0, got $dfCap")
+    val dfCap = graft.Dials.BucketDfCap(s)
     // shared sampled detector: the probe's standing-index side is
     // corpus-sized too, so it hits the same partial-agg wall (doc_id
     // here is the index-side id the sample gate hashes)
@@ -1583,7 +1500,7 @@ object Text {
       // (measured r13; 25 at the loose dial) — a pinned positive
       // rows-only check at any fixture with planted clones.
       hammingBlockPairs(fp,
-        maxDist = intConf(fp, "spark.graft.simhash.maxDist", 4),
+        maxDist = graft.Dials.SimhashMaxDist(s),
         hotDflt = adaptiveHotWidth(s, d))
         .orderBy("a", "b")
     }),
@@ -2348,8 +2265,7 @@ object Text {
       // full posting stream by `sh` too; a degenerate hub makes one
       // window partition wide, exactly as it made one anti-join
       // partition wide.
-      val maxDf = intConf(documents(s, d),
-        "spark.graft.containment.maxDf", 128)
+      val maxDf = graft.Dials.ContainmentMaxDf(s)
       val exploded = tokenizedDocs(s, d)
         .select(col("doc_id"), shingleCol(col("t")).as("ss"))
         .select(col("doc_id"), size(col("ss")).cast("long").as("n"),
@@ -2469,7 +2385,7 @@ object Text {
         edges.groupBy(col("src").as("id"))
           .agg(least(first(col("src")), min(col("dst"))).as("lbl")),
         eager = true)
-      val maxRounds = intConf(labels, "spark.graft.cc.maxRounds", 50)
+      val maxRounds = graft.Dials.CcMaxRounds(s)
       var converged = false
       var rounds = 0
       while (!converged && rounds < maxRounds) {
@@ -2724,10 +2640,11 @@ object Text {
       // unroll-storm wall verbatim: GB-scale unevictable chunk builds
       // zero the execution pool and the materializing count dies at its
       // first page ask (UNABLE_TO_ACQUIRE_MEMORY at sf100). Both
-      // readers are map-only re-derivations of a columnar scan, so
-      // recompute-twice is strictly cheaper than an 8×-corpus string
-      // cache at every scale past toy (guide §5's cache rule) — and the
-      // 100 TB contract never caches the corpus gram stream anyway.
+      // readers are map-only up to the bench-sized distinct —
+      // re-derivations of a columnar scan — so recompute-twice is
+      // strictly cheaper than an 8×-corpus string cache at every scale
+      // past toy (guide §5's cache rule) — and the 100 TB contract
+      // never caches the corpus gram stream anyway.
       val grams = docs.select(col("doc_id"),
         explode(graft.expr.TextSetExprs.wordShingles(col("tf"), 8))
           .as("g"))

@@ -4,7 +4,6 @@
 // Run: sbt "Test/runMain graft.PlanAudit"
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
@@ -23,13 +22,7 @@ object PlanAudit {
     }.flatten
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(Some("local[8]"), 8, None)
     spark.sparkContext.setLogLevel("ERROR")
     val sfDir = "/root/testdata/sf0.001"
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

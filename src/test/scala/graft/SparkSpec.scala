@@ -39,22 +39,7 @@ object SparkSpec {
     java.nio.file.Files.createTempDirectory(scratchRoot, prefix).toString
 
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      // see expr/topk.scala — the 128-group ObjectHashAggregate default
-      .config(graft.expr.TopKByScore.AggFallbackKey,
-        graft.expr.TopKByScore.AggFallbackValue)
-      // see InternalCaches.ShuffleBypassKey — keep adaptive-width exchanges
-      // on the zero-execution-memory bypass writer
-      .config(graft.InternalCaches.ShuffleBypassKey,
-        graft.InternalCaches.ShuffleBypassValue)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = GraftSession(Some("local[4]"), 4, None)
     // The `WindowExec: No Partition Defined` warnings seen in test logs
     // come from the two-pass prefix-sum operators' OFFSETS windows
     // (agg_ks_test / text_pack_sequences / stream_watermark_late /
