@@ -76,10 +76,6 @@ object Dials {
     lo = 0, hi = 16)
   val SimhashMaxDist = int("spark.graft.simhash.maxDist", 4,
     "dedup_simhash hamming threshold; <= 4 uses the pair-block index")
-  val ComboBlocks = int("spark.graft.simhash.comboBlocks", 6,
-    "fingerprint blocks of the pair-block Hamming index")
-  val ComboClean = int("spark.graft.simhash.comboClean", 2,
-    "clean blocks per key of the pair-block Hamming index")
   val ContainmentMaxDf = int("spark.graft.containment.maxDf", 128,
     "text_containment shingle DF cap for the pair join; 0 disables")
   val CcMaxRounds = int("spark.graft.cc.maxRounds", 50,

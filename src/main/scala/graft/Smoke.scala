@@ -47,7 +47,7 @@ object Smoke {
     // SignSketch64 codegen + carry columns through the salted postings)
     // and both simhash index paths. Since r13 the DEFAULT dial is 4
     // (pair-block index), so the `@12` suffix drives the loose 5-block
-    // variant-enumeration path (Text.multiIndexCandidates at radius 2)
+    // variant-enumeration path (Blocking.multiIndexPairs at radius 2)
     // that no default-dial key reaches any more.
     "sim_ann_lsh", "dedup_simhash@12",
     // r13: the per-frame video decode's 1→N flatMap closure (typed

@@ -111,7 +111,7 @@ object Graph {
       .select(col("l_orderkey"), col("l_partkey"))
       .repartition(edgeParts(s, d), col("l_orderkey"))
     // fact-table self-join: both sides corpus-sized — shuffle pin
-    // (broadcast-cliff hazard, see ops/text.scala hammingBlockPairs)
+    // (broadcast-cliff hazard, see ops/blocking.scala Blocking.candidates)
     li.as("a").hint("shuffle_merge").join(li.as("b"),
         col("a.l_orderkey") === col("b.l_orderkey") &&
           col("a.l_partkey") < col("b.l_partkey"))
@@ -196,7 +196,7 @@ object Graph {
     // shuffle pins on both wedge joins: the edge relation is
     // corpus-sized, and the co-partitioned-cache-no-exchange contract
     // above only holds if AQE never swaps in a broadcast build
-    // (broadcast-cliff hazard, see ops/text.scala hammingBlockPairs)
+    // (broadcast-cliff hazard, see ops/blocking.scala Blocking.candidates)
     val wedges = oriented.as("e1").hint("shuffle_merge")
       .join(oriented.as("e2"),
         col("e1.src") === col("e2.src") && col("e1.kdst") < col("e2.kdst"))
@@ -361,7 +361,7 @@ object Graph {
     // deg) — un-cached each reader would recompute the caller's edge
     // derivation. Join strategy per iteration: the rank relation GROWS
     // WITH THE GRAPH (one row per source node), so it must never sit on
-    // the adaptive broadcast cliff (ops/text.scala hammingBlockPairs —
+    // the adaptive broadcast cliff (ops/blocking.scala Blocking.candidates —
     // the r12 rule: a corpus-growing side is never broadcast). Measured
     // at sf10 (2.1M nodes): the planner-chosen plan was bimodal 117/221 s
     // across identical runs — the slow mode repeatedly building hashed

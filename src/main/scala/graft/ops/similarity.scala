@@ -125,7 +125,7 @@ object Similarity {
     // contract above against AQE's runtime conversion — a vector-payload
     // side near the adaptive threshold otherwise becomes a
     // single-threaded driver-built broadcast (the jstack-caught
-    // dedup_simhash sf1 cliff, ops/text.scala hammingBlockPairs)
+    // dedup_simhash sf1 cliff, ops/blocking.scala Blocking.candidates)
     x.as("x").hint("shuffle_merge").join(y.as("y"),
         col("x.pi") === col("y.pi") && col("x.pj") === col("y.pj") &&
         col("x.vec_id") =!= col("y.nbr_id"))
@@ -332,8 +332,8 @@ object Similarity {
     // skewed probed cell concentrated its whole width² in a single
     // join task (jstack: one RUNNABLE worker, 26 min of CPU, 31 idle
     // threads; the key read 1538 s end-to-end). The cure is the
-    // engine's triangular block-pair scheme (ops/text.scala
-    // saltedBandPairs — same tag algebra, same recall argument): rows
+    // engine's triangular block-pair scheme (ops/blocking.scala
+    // Blocking.candidates — same tag algebra, same recall argument): rows
     // of a hot cell get a deterministic block id, the x side replicates
     // to tags (blk, j ≥ blk), the y side to (i ≤ blk, blk), so every
     // unordered pair meets in exactly one (cell, pi, pj) bucket and the
@@ -581,7 +581,7 @@ object Similarity {
     // LSH-bucketed ANN — the hash-based alternative to the IVF cell
     // restriction: a 64-bit hyperplane sign sketch per vector (codegen'd,
     // graft.expr.SignSketch64), bucketed through the MULTI-INDEX probe
-    // (Text.multiIndexCandidates): 4 bands of 16 bits as 65 536-way
+    // (Blocking.multiIndexPairs): 4 bands of 16 bits as 65 536-way
     // index keys posted exactly, the query side probing every key
     // within 1 bit flip (17 masks/band — the simhash machinery at ANN
     // dials), then a SECOND-SKETCH verify (r12), then exact rounded
@@ -601,7 +601,7 @@ object Similarity {
     // cascade keeps the band probe EXACTLY as-is (it is the recall
     // guarantee: any pair within 7 bits on sketch A is caught by
     // pigeonhole) and threads an INDEPENDENT seed-split sketch B through
-    // the postings (multiIndexCandidates carry), cutting on combined
+    // the postings (multiIndexPairs carry), cutting on combined
     // 128-bit hamming INSIDE the join's output stage — codegen-fused,
     // zero extra shuffle. Random pairs sit at hamming₁₂₈ ~ Binom(128,½)
     // = 64 ± 5.7 while clone pairs measure 8–14, so the cut at 24 is
@@ -697,18 +697,18 @@ object Similarity {
           coalesce(graft.expr.VectorExprs.signSketch64(col("v"),
             seed = 0x9E3779B97F4A7C15L), lit(0L)).as("fp2")),
         eager = true)
-      // the 128-bit cut: `hamming` is sketch A's distance from the band
-      // join; fp2_a/fp2_b ride the carry. The filter fuses into the
-      // join's output stage (whole-stage codegen), so the distinct —
+      // the 128-bit cut: sketch A (fp) and sketch B (fp2) both ride the
+      // carry. The filter fuses into the join's output stage
+      // (whole-stage codegen), so the distinct —
       // the first shuffle of the candidate stream — sees survivors only.
       // unordered collision pairs → both orientations (top-k is per
       // query). Emitted via ONE explode, not a self-union: a union would
       // reference the candidate subtree (hot agg, multi-index join,
       // distinct) twice and execute it twice.
-      val cand = Text.multiIndexCandidates(sk, Seq(16, 16, 16, 16), 1,
+      val cand = Blocking.multiIndexPairs(sk, Seq(16, 16, 16, 16), 1,
           carry = Seq("fp2"))
-        .filter(col("hamming") +
-          bit_count(col("fp2_a").bitwiseXOR(col("fp2_b"))) <= AnnLshMaxDist)
+        .filter(Blocking.hamming("fp") + Blocking.hamming("fp2")
+          <= AnnLshMaxDist)
         .select(col("a"), col("b")).distinct()
         .select(explode(array(
           struct(col("a").as("vec_id"), col("b").as("nbr_id")),

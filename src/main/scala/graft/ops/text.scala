@@ -28,10 +28,11 @@ import graft.Tables._
   *  - `dedup_near_minhash` NEVER forms all pairs: candidates come from a
   *    self-join on (band, band-hash) buckets — O(collisions), not O(n²) —
   *    then only candidates pay the exact-Jaccard verification. Hot
-  *    buckets are salted into triangular block-pairs ([[saltedBandPairs]],
-  *    SURVEY.md §7.5 item 1) so one boilerplate mega-bucket cannot
-  *    serialize O(bucket²) work into a single task, and the set/signature
-  *    relation is persisted so it computes once, not per join branch.
+  *    buckets are salted into triangular block-pairs
+  *    ([[Blocking.candidates]], SURVEY.md §7.5 item 1) so one
+  *    boilerplate mega-bucket cannot serialize O(bucket²) work into a
+  *    single task, and the set/signature relation is persisted so it
+  *    computes once, not per join branch.
   *  - `text_tokens_topn` is explode → partial-agg count → TakeOrdered:
   *    the classic word-count; the shuffle carries (token, partial count).
   *  - `text_tfidf` joins token counts to doc frequencies — both sides are
@@ -360,628 +361,12 @@ object Text {
   private val MinhashK = 128 // signature length
   private val Bands    = 16  // LSH bands ...
   private val Rows     = 8   // ... of 8 rows: P(miss | jac=0.97) ≈ 3e-11
-  /** Bucket width beyond which the band self-join is salted (session
-    * conf `spark.graft.lsh.hotBucketWidth`). A natural corpus
-    * concentrates boilerplate (headers, licence blocks, empty-ish docs)
-    * into a handful of mega-buckets; without salting every pair in such a
-    * bucket lands in ONE join task — the O(n²) serial hotspot inside an
-    * otherwise-bucketed plan.
-    *
-    * Since r16 the conf's DEFAULT is data-adaptive ([[adaptiveHotWidth]],
-    * floored at this constant); an explicit conf always wins. This
-    * constant remains the floor and the width every sub-128 KB corpus
-    * (all committed sf ≤ 0.01 fixtures, every spec scratch corpus)
-    * resolves to.
-    */
-  private val HotBucketDefault = 32
 
-  /** Data-adaptive DEFAULT for `spark.graft.lsh.hotBucketWidth` — the
-    * [[graft.InternalCaches.adaptiveParts]] doctrine (source-bytes
-    * derived, an O(1) filesystem listing, no job) applied to the salt
-    * boundary: `max(32, ceil(sqrt(docBytes / 32)))`, from the operator's
-    * `documents.parquet` source.
-    *
-    * Why sqrt: the boundary trades two costs that cross at W ~ sqrt(n).
-    * Buckets WIDER than W salt-replicate (≤ (saltBlocks+1)× row cost on
-    * their posting mass); buckets AT the boundary enumerate W²/2 pairs
-    * in one task. sqrt keeps the widest cold bucket's enumeration
-    * (W²/2 ≈ docBytes/64 packed compares, ~one corpus-linear pass) a
-    * bounded multiple of a task's fair share at ANY corpus size, while
-    * the salted mass shrinks as the boundary rises with n.
-    *
-    * Why it must be adaptive (r15 verdict, the repo's last `weak`): at
-    * the organic-sf100 rung (5 M docs, 602 MB source) the fixed
-    * test-corpus default of 32 hot-salts ~25 % of posting mass ×~4.5
-    * into a ~26 GB/side merge-join sort — disk death on this box —
-    * while the hand-set production dial 4096 completed clean in 1108 s
-    * with only ~3 % of mass salted (BASELINE.md r15). This formula
-    * resolves that same fixture to 4338 — the measured-clean operating
-    * point — with no conf. Calibration: 602 MB → 4338; copied sf30
-    * 178 MB → 2357; sf1 5.9 MB → 430; sf0.1 595 KB → 137; every ≤128 KB
-    * corpus → the 32 floor (65 KB parquet metadata floor → 45 → still
-    * under the planted-skew law's width-64 bucket, and that law pins
-    * the conf explicitly anyway). Output is IDENTICAL at any width —
-    * salting redistributes work, never candidates (SaltLawSpec's
-    * equality law sweeps the dial) — so every committed fixture hash is
-    * byte-identical by construction; only the plan's balance changes.
-    *
-    * Why not the sampled width histogram: deciding the boundary from
-    * [[flaggedBuckets]]' own output needs the aggregation to run BEFORE
-    * the threshold is known — a second detection pass over the posting
-    * stream, the exact shape r15 A/B-measured at ~+60 % on the org-sf30
-    * solo and rejected. Bytes-derived is free and lands within 6 % of
-    * the measured-clean dial.
-    *
-    * The missing-path fallback (→ floor) covers callers probing a
-    * relation with no documents.parquet beside it (none of the shipped
-    * query entry points — all read the documents table they derive
-    * widths for; `sim_ann_lsh`'s vector-sketch probe deliberately keeps
-    * the fixed default: its 65 536-way 16-bit keys self-spread and its
-    * organic exponent measured 1.09, BASELINE.md r15).
-    */
-  private def adaptiveHotWidth(s: SparkSession, d: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(s"$d/documents.parquet")
-    val bytes =
-      try {
-        val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
-      } catch { case _: java.io.IOException => 0L }
-    math.max(HotBucketDefault,
-      math.ceil(math.sqrt(bytes / 32.0)).toInt)
-  }
-  /* Degenerate band-bucket DF cap ([[graft.Dials.BucketDfCap]]; 0
-    * disables — the exact r14 plan).
-    * The `text_containment` maxDf doctrine applied to LSH band buckets
-    * (r14 verdict item 2): a bucket wider than the cap is dropped from
-    * pair generation ENTIRELY — its posting rows never enter the salted
-    * self-join, so neither the hot-salt replication of its rows nor the
-    * O(width²) enumeration of its pairs ever happens. Why it must
-    * exist: at organic gram density the band minima concentrate on the
-    * handful of highest-DF grams, so bucket widths grow ∝ N — at the
-    * organic-sf100 rung (5 M docs over a 985-gram universe) the widest
-    * buckets reach 10⁵⁺ docs, their salted postings replicate into a
-    * ~50 GB/side merge-join sort, and enumerating one such bucket is
-    * CPU-quadratic wherever the in-stage prune sits (BASELINE.md r14:
-    * the ladder's honest ✗). A bucket that wide carries ~no pair
-    * signal: its members agree on 8 positions BECAUSE those positions
-    * are the corpus-wide high-DF minima, which is exactly the
-    * banding-noise class the packed prune kills row-by-row — the cap
-    * kills it bucket-at-a-time, before any exchange.
-    *
-    * QUANTIFIED RECALL TRADE (the law in TextSpec): a true pair at
-    * Jaccard J collides in a given band with probability J^8, so with
-    * all 16 bands live P(miss) = (1−J⁸)¹⁶. Each band whose shared
-    * bucket is dropped removes one (1−J⁸) factor: with d dropped
-    * bands, P(miss) = (1−J⁸)^(16−d) — the miss bound grows by
-    * 1/(1−J⁸) per dropped band (at the char-gram threshold 0.8 that
-    * is 1.20× per band; at the planted-pair J ≥ 0.93 the 16-band miss
-    * is ≈ 2·10⁻⁶ and stays < 2·10⁻³ even with 8 of 16 bands dropped),
-    * and a pair ALL of whose bands land in dropped buckets is lost —
-    * the honest worst case, reachable only by a pair whose every band
-    * minimum is corpus-boilerplate, i.e. a pair that LOOKS like the
-    * background. Detection rides the hot-salt boundary's own sampled
-    * width pass ([[flaggedBuckets]]: content-keyed doc-hash sample,
-    * deterministic for a given corpus — ONE aggregation serves both
-    * decisions), so flagging a width-W bucket at cap C fails with
-    * probability Binomial(W, 2⁻ˢ) under its threshold — exponentially
-    * small for W ≫ C.
-    *
-    * The 65536 default cannot engage on any committed fixture (the
-    * widest sf ≤ 1 / copied-fixture bucket is orders of magnitude
-    * under it — vocabularies are disjoint across copies, so bucket
-    * width is bounded by one copy's corpus), so fixture output is
-    * byte-identical to dfCap = 0 (TextSpec pins this) and the
-    * brute-force oracle stays exact. A production run sizes the cap to
-    * its recall budget; buckets it drops are individually loggable by
-    * re-running the width aggregate.
-    */
-
-  /** All distinct unordered id pairs sharing a (band, bhash) bucket —
-    * the candidate stage every sketch-based dedup runs — with hot buckets
-    * salted into triangular block-pairs (the engine's `join_salted`
-    * pattern applied to a SELF-join).
-    *
-    * Input columns: `doc_id`, `band`, `bhash`. Each row in a bucket wider
-    * than the hot width gets a deterministic block id `blk =
-    * xxhash64(doc_id) & (saltBlocks-1)` (a bitmask, NOT pmod — Pmod is
-    * unconditionally nullable in Catalyst, and a nullable key would demote
-    * the band join's HashedRelation probe to its slow path, the discipline
-    * PlanSpec pins). A doc pair with blocks (a, b) is produced by exactly
-    * one join task keyed (band, bhash, min(a,b), max(a,b)): the x-side
-    * replicates a row with block r to tags (r, j) for j ≥ r, the y-side to
-    * tags (i, r) for i ≤ r, and the output is normalized with
-    * least/greatest + distinct — doc_id order is independent of block
-    * order, so the orientation cannot be a join predicate. Cold buckets
-    * keep a single (0, 0) tag: zero replication, same plan as the
-    * unsalted join.
-    *
-    * `carry` columns (small, per-doc — e.g. an 8-byte fingerprint) ride
-    * through the join and come out as `<c>_a`/`<c>_b`, swapped
-    * consistently with the id normalization. `prune` runs on the joined
-    * pairs BEFORE the distinct: for an unselective blocking (the retired
-    * exact-4-bit simhash banding produced 12.7M raw collisions for 260
-    * true pairs at sf0.1 — see [[hammingBlockPairs]] for its
-    * replacement) filtering on the carried payload first means the
-    * distinct shuffle sees thousands of rows, not millions. Carry only cheap
-    * payloads — a 1 KB minhash signature would multiply the band-join
-    * shuffle instead; those verifications join the persisted signature
-    * relation AFTER the distinct.
-    */
-  /** Posting keys wider than `hotWidth` (and, when `dfCap` > 0, than the
-    * cap) → a broadcastable (keys..., is_hot, is_degen?) list. ONE
-    * definition of "hot"/"degenerate" for every salted decomposition
-    * (triangular self-join, asymmetric multi-index probe, combo-block
-    * index, cross-relation ingest probe — since r16 all four read BOTH
-    * flags from this one pass) — the width semantics and the
-    * tiny-list/broadcast invariant must not drift between them.
-    *
-    * Detection SAMPLES the posting stream (r13, the fourth capacity
-    * wall). An exact width count keys its map-side partial aggregation
-    * by the whole posting relation — and on a natural corpus nearly
-    * every (band, key) is unique, so the partial hash map holds
-    * ~|postings|/P entries where P is PINNED by the upstream cached
-    * relation's layout (a partial aggregate runs on its input's
-    * partitioning; shuffle-partition sizing never reaches it — measured:
-    * the sf100 failure is byte-identical at 32 and 256 shuffle
-    * partitions). At sf100 (5 M docs, 16 g one-JVM protocol) that map is
-    * ~2.5 M keys × ~48 B per task × 32 co-resident tasks against a
-    * cache-squeezed execution pool — the whole MinHash family died
-    * there (AGGREGATE_OUT_OF_MEMORY in the hot-width aggregate;
-    * BASELINE.md round 13, fourth wall). The detector now counts only
-    * postings of docs with xxhash64(doc_id) ≡ 0 (mod 2^s) — a
-    * CONTENT-KEYED gate, so the sample is deterministic under any
-    * partitioning or layout — and flags a key when its sampled width
-    * exceeds hotWidth >> s: the decision boundary stays at hotWidth in
-    * expectation while the aggregate's state and input both shrink
-    * 2^s ×. Detection is a BALANCE decision, not a correctness one —
-    * salting is recall-invariant for ANY hot list (SaltLawSpec's
-    * equality law, which sweeps this dial too) — so sampling noise near
-    * the boundary costs only routing: a missed barely-hot bucket keeps
-    * ~hotWidth² pairs in one join task, a false-positive cold bucket
-    * pays bounded replication, and true mega-buckets (width ≫
-    * hotWidth) are flagged with exponentially small failure odds
-    * (width W samples Binomial(W, 2^-s)). The shift self-clamps to
-    * keep the sampled threshold ≥ 2 — at the clamp the flagged set is
-    * still "strictly over-width keys", so the broadcast list cannot
-    * degrade into a corpus-sized relation when a test dials hotWidth
-    * tiny. `spark.graft.lsh.hotSampleShift` = 0 restores the exact
-    * count (the dial the planted-skew law uses to pin deterministic
-    * engagement at its 64-doc width).
-    *
-    * This one aggregation serves BOTH bucket decisions — the hot-salt
-    * boundary and, when `dfCap` > 0, the degenerate drop boundary
-    * ([[graft.Dials.BucketDfCap]]). A first r15 cut detected the two
-    * boundaries with two separate passes; on a natural corpus the
-    * detection aggregate's cost is the per-posting partial-map work
-    * (the fourth-wall class), so the second pass measurably cost ~the
-    * first's price again (org-sf30 solo A/B: 170–208 s vs 130 s with
-    * one pass). Output rows are strictly over-min-width keys — tiny by
-    * the argument above — flagged per boundary; the shift clamp keys
-    * on the SMALLER engaged width so both sampled thresholds stay ≥ 2.
-    */
-  private def flaggedBuckets(postings: DataFrame, keys: Seq[String],
-                             hotWidth: Int, dfCap: Int): DataFrame = {
-    val shift = graft.Dials.HotSampleShift(postings.sparkSession)
-    val minW = if (dfCap > 0) math.min(hotWidth, dfCap) else hotWidth
-    // clamp so minW >> s stays ≥ 2: s ≤ log2(minW) − 1
-    val s = math.min(shift,
-      math.max(0, 31 - Integer.numberOfLeadingZeros(math.max(minW, 1))
-        - 1))
-    val sampled =
-      if (s == 0) postings
-      else postings.filter(
-        xxhash64(col("doc_id")).bitwiseAND(lit((1L << s) - 1)) === 0L)
-    val flags = (col("bw") > (hotWidth >> s)).as("is_hot") +:
-      (if (dfCap > 0) Seq((col("bw") > (dfCap >> s)).as("is_degen"))
-       else Nil)
-    sampled.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("bw"))
-      .filter(col("bw") > (minW >> s))
-      .select(keys.map(col) ++ flags: _*)
-  }
-
-  private[graft] def saltedBandPairs(bands: DataFrame,
-                                   carry: Seq[String] = Nil,
-                                   prune: DataFrame => DataFrame = identity,
-                                   hotDflt: Int = HotBucketDefault)
-      : DataFrame = {
-    val s = bands.sparkSession
-    val hotWidth = graft.Dials.HotBucketWidth.get(s).getOrElse(hotDflt)
-    val blocks = graft.Dials.SaltBlocks(s)
-    // Degenerate-bucket DF cap ([[graft.Dials.BucketDfCap]]): postings of
-    // over-cap buckets are dropped BEFORE the self-join — a dropped
-    // bucket must neither replicate under the salt nor enumerate its
-    // width² pairs. Both bucket decisions (hot-salt, degenerate drop)
-    // ride ONE sampled width pass ([[flaggedBuckets]]) and the ONE
-    // broadcast left join the hot tag always used; the drop is a filter
-    // on the joined row, so the cap's plan cost is ~nothing (a second
-    // detection pass measured ~+60 % on the org-sf30 solo). With the
-    // default cap the degen flag is false on every committed fixture
-    // and the output is byte-identical to dfCap = 0.
-    val dfCap = graft.Dials.BucketDfCap(s)
-    val flagged = flaggedBuckets(bands, Seq("band", "bhash"), hotWidth, dfCap)
-    // flagged list is tiny by construction (distinct over-width keys) —
-    // broadcast, so tagging never shuffles the bands relation
-    val joined0 = bands.join(broadcast(flagged), Seq("band", "bhash"), "left")
-    val live =
-      if (dfCap == 0) joined0
-      else joined0.filter(!coalesce(col("is_degen"), lit(false)))
-        .drop("is_degen")
-    val tagged = live
-      .withColumn("blk",
-        when(coalesce(col("is_hot"), lit(false)),
-          xxhash64(col("doc_id")).bitwiseAND(lit(blocks - 1)).cast("int"))
-          .otherwise(lit(0)))
-    val x = tagged.select(col("doc_id").as("xid") +: col("band") +:
-      col("bhash") +: col("blk").as("pi") +:
-      explode(
-        when(coalesce(col("is_hot"), lit(false)),
-          sequence(col("blk"), lit(blocks - 1)))
-          .otherwise(array(lit(0)))).as("pj") +:
-      carry.map(c => col(c).as(c + "_x")): _*)
-    val y = tagged.select(col("doc_id").as("yid") +: col("band") +:
-      col("bhash") +:
-      explode(
-        when(coalesce(col("is_hot"), lit(false)), sequence(lit(0), col("blk")))
-          .otherwise(array(lit(0)))).as("pi") +:
-      col("blk").as("pj") +:
-      carry.map(c => col(c).as(c + "_y")): _*)
-    // shuffle-strategy pin: both banded posting sides grow with the
-    // corpus — near the adaptive broadcast threshold AQE flip-flops one
-    // side into a single-threaded driver-built broadcast (the
-    // jstack-caught dedup_simhash sf1 cliff, see hammingBlockPairs);
-    // the merge hint keeps the candidate join a shuffle at every scale
-    val joined = x.as("x").hint("shuffle_merge").join(y.as("y"),
-      col("x.band") === col("y.band") &&
-      col("x.bhash") === col("y.bhash") &&
-      col("x.pi") === col("y.pi") &&
-      col("x.pj") === col("y.pj") &&
-      col("x.xid") =!= col("y.yid"))
-    val fwd = col("x.xid") < col("y.yid")
-    val normalized = joined.select(
-      least(col("x.xid"), col("y.yid")).as("a") +:
-      greatest(col("x.xid"), col("y.yid")).as("b") +:
-      carry.flatMap(c => Seq(
-        when(fwd, col(s"x.${c}_x")).otherwise(col(s"y.${c}_y")).as(c + "_a"),
-        when(fwd, col(s"y.${c}_y")).otherwise(col(s"x.${c}_x")).as(c + "_b"))): _*)
-    prune(normalized).distinct()
-  }
-
-  /** All distinct unordered id pairs within Hamming distance `maxDist`
-    * over a (doc_id, fp: bigint) fingerprint relation — the multi-index
-    * Hamming join (the pigeonhole family of Manku et al., WWW'07): the
-    * 64-bit fingerprint splits into 5 blocks (13/13/13/13/12 bits), and
-    * since `maxDist` errors across 5 blocks leave SOME block with
-    * ≤ ⌊maxDist/5⌋ = 2 errors, a pair within distance 14 must agree to
-    * within 2 bits on at least one block. The index side posts each
-    * doc's 5 EXACT block values; the query side posts every value within
-    * distance ≤ 2 of each block (1 + w + C(w,2) XOR masks — 447 rows per
-    * doc, a one-time literal array); candidates are the (band, key)
-    * equi-join of the two. Versus exact 4-bit banding (16 buckets per
-    * band ⇒ collision mass ≈ C(n,2) on a uniform corpus — measured 12.7M
-    * raw pairs at sf0.1, 1.3 G at sf1, quadratic at 100 TB), the 8192-way
-    * keys at ≤2-error selectivity pass ≈ 5·92/8192 ≈ 5.6 % of random
-    * pairs — an ~18× candidate cut bought with a LINEAR 447×/doc posting
-    * cost. The OUTPUT is identical by construction: both blockings are
-    * recall-complete for the final `hamming ≤ maxDist` cut.
-    *
-    * OPERATING-POINT CONTRACT (r13, closing the r12 verdict's default
-    * decision): the SHIPPED default is `maxDist = 4` — Manku et al.'s
-    * crawl regime, routed to the PAIR-BLOCK index ([[pairBlockPairs]]:
-    * 15 tables of 20–22-bit keys, collision mass 15·n²/2²¹ — still a
-    * constant fraction of n² as any recall-complete blocking must be,
-    * but the constant sits three decades past the 13-bit path's
-    * saturation point, so the candidate stream is output-dominated
-    * through the measured sf10 decade: exponent 0.94, sf10 solo
-    * 21.4 s). The r7–r12 default of 12 stays available through
-    * `spark.graft.simhash.maxDist` as the LOOSE demonstrator — honest
-    * selectivity note for 100 TB: at 12 of 64 bits even the 13-bit
-    * index's 5.6 % pass rate is Θ(n²) on a uniform corpus (sf10 solo
-    * 491 s, 8 g-driver OOM cliff — BASELINE.md r12), and no blocking
-    * escapes that, because the THRESHOLD itself admits that many
-    * pairs. BASELINE.md records both dials' measured costs side by
-    * side, so the default's claimed benefit is a number, not a
-    * prediction. The ScalaCheck law sweeps maxDist across all three
-    * index paths (0/3/7/12/14), so every setting carries the
-    * brute-force-equality guarantee.
-    *
-    * Skew guard (structural, PlanSpec-pinned): a block value shared by
-    * more docs than the hot width — template corpora mint identical
-    * fingerprints at scale — gets a third salt join key: index rows of a
-    * hot key scatter to `xxhash64(doc_id) & (saltBlocks-1)` (bitmask,
-    * not Pmod — see [[saltedBandPairs]] on nullability), query rows of a
-    * hot key replicate across all salt blocks, so one hot key fans out
-    * across `saltBlocks` tasks instead of serializing O(bucket²) pair
-    * work in one. Cold keys keep salt 0 with zero replication — the same
-    * conditional discipline as the triangular self-join salting. Each
-    * surviving pair is emitted once per agreeing band (the
-    * `query.doc_id < index.doc_id` predicate keeps one of the two
-    * symmetric directions) and the hamming cut runs BEFORE the distinct,
-    * so the wide shuffle sees survivors, not the candidate stream.
-    */
-  private[graft] def hammingBlockPairs(fp: DataFrame, maxDist: Int,
-                                       hotDflt: Int = HotBucketDefault)
-      : DataFrame = {
-    require(maxDist <= 14, "5-block/2-error enumeration is recall-" +
-      s"complete only up to hamming 14, got $maxDist")
-    // the variant radius SCALES with the threshold: pigeonhole puts
-    // some block within ⌊maxDist/5⌋ errors, so radius 2 (447 masks/doc)
-    // is needed only for maxDist 10–14; at the production dial
-    // (maxDist ≤ 4, Manku's k ≤ 3) the PAIR-BLOCK index applies — 21-bit
-    // keys instead of 13-bit, an ~85× candidate cut (see
-    // [[pairBlockPairs]] for the sf10 evidence that forced it)
-    if (maxDist <= 4) pairBlockPairs(fp, maxDist, hotDflt)
-    else multiIndexCandidates(fp, Seq(13, 13, 13, 13, 12), maxDist / 5,
-        hotDflt = hotDflt)
-      .filter(col("hamming") <= maxDist)
-      .distinct()
-  }
-
-  /** Pair-block Hamming index for the PRODUCTION dial (maxDist ≤ 4,
-    * Manku et al.'s crawl regime): the 64-bit fingerprint splits into
-    * SIX blocks (11/11/11/11/10/10 bits) and the index keys on every
-    * PAIR of blocks — C(6,2) = 15 tables of 20–22-bit keys, posted
-    * exactly on both sides (no variant enumeration at all; the salted
-    * triangular self-join is [[saltedBandPairs]], the same machinery
-    * as the MinHash bands). Recall-completeness is the counting
-    * pigeonhole: d ≤ 4 errors touch at most 4 of the 6 blocks, so at
-    * least TWO blocks are clean and their pair key matches exactly.
-    * (d = 5 can touch 5 blocks leaving one clean block but no clean
-    * pair — the bound is tight, hence the ≤ 4 gate.)
-    *
-    * Why this exists (sf10 decade probe, r12): the 5×13-bit exact-probe
-    * path saturates once n ≫ 2¹³ — uniform collision mass 5·n²/2¹³
-    * reached 1.5e8 candidates at 500 k docs and `dedup_simhash`'s
-    * production dial would have inherited the default dial's quadratic
-    * wall one decade later. Pair keys push the saturation point from
-    * n ~ 2¹³ to n ~ 2²¹ (collision mass 15·n²/2²¹ — ~85× fewer
-    * candidates at any n), with CHEAPER postings than the 5-block path
-    * (15 rows/doc on both sides, vs 5 exact + up-to-447 variant).
-    * Identical-fingerprint template clusters still concentrate in one
-    * bucket regardless of key width — the hot-key salting inside
-    * [[saltedBandPairs]] (shared with the MinHash bands) scatters them;
-    * the brute-force equality law (SaltLawSpec) sweeps maxDist 0 and 3
-    * through this path against planted mega-clusters.
-    */
-  /** Block extractor shared by BOTH Hamming index paths: the value of
-    * the i-th block of the packed 64-bit `fp` column under `widths`.
-    * One definition so the pair-block and multi-index paths can never
-    * silently diverge on the bit layout.
-    */
-  private def fpBlockVal(widths: Seq[Int]): Int => Column = {
-    val shifts = widths.scanLeft(0)(_ + _).init
-    i => shiftrightunsigned(col("fp"), shifts(i))
-      .bitwiseAND(lit((1L << widths(i)) - 1))
-  }
-
-  private[graft] def pairBlockPairs(fp: DataFrame, maxDist: Int,
-                                    hotDflt: Int = HotBucketDefault)
-      : DataFrame =
-    comboBlockPairs(fp, maxDist,
-      nBlocks = graft.Dials.ComboBlocks(fp.sparkSession),
-      clean = graft.Dials.ComboClean(fp.sparkSession),
-      hotDflt = hotDflt)
-
-  /** The combo-block generalization behind [[pairBlockPairs]] (r13
-    * session 2): split the 64-bit fingerprint into `nBlocks` blocks and
-    * key the index on every `clean`-subset's concatenated block values —
-    * C(nBlocks, clean) tables, posted EXACTLY on both sides. Counting
-    * pigeonhole: d ≤ nBlocks − clean errors dirty at most nBlocks −
-    * clean blocks, leaving ≥ `clean` clean ones, so some clean-subset
-    * key matches exactly — recall-complete for any
-    * `maxDist ≤ nBlocks − clean` (the require; d = nBlocks − clean + 1
-    * can dirty that many blocks leaving only clean−1 — the bound is
-    * tight). (6, 2) reproduces the r12 pair-block layout (11/11/11/11/
-    * 10/10, band ids and key bits identical); the dial exists because
-    * the sf100 probe measured where (6, 2) leaves the linear class:
-    * collision mass 15·n²/2²¹ ≈ 1.8e8 candidates at 5 M docs — sf30→
-    * sf100 exponent 1.33 (14.3 → 71.3 s solo, this box).
-    *
-    * MEASURED VERDICT on the wider rungs (sf100, 5 M docs, solo,
-    * same box/protocol): (6,2) 71.3 s / (7,3) 188.5 s / (8,4) 453.4 s.
-    * The wider keys do exactly what the mass model predicts to the
-    * CANDIDATE stream ((7,3): 35·n²/2²⁷ ≈ 6.5e6, a 28× cut) — and it
-    * doesn't matter, because the candidate excess they remove is ~24 s
-    * while the posting machinery they inflate (explode + hot-key agg +
-    * salted self-join sort at 35 or 70 postings/doc vs 15) scales with
-    * combo count and dominates total cost. Extrapolating the two
-    * curves (quadratic excess 24·(n/5M)² vs posting extra 117·(n/5M))
-    * puts the (7,3) crossover at n ≈ 25 M docs — NO MEASURED REGIME
-    * favors the wider rungs, so (6,2) is the unconditional default and
-    * the confs exist as the documented, law-covered way to test the
-    * wider geometries, not as a recommended dial. The SaltLawSpec
-    * brute-force equality law sweeps (6,2)/(7,3)/(8,4) so every
-    * setting carries the same recall guarantee.
-    */
-  private[graft] def comboBlockPairs(fp: DataFrame, maxDist: Int,
-      nBlocks: Int, clean: Int,
-      hotDflt: Int = HotBucketDefault): DataFrame = {
-    require(clean >= 1 && clean < nBlocks && nBlocks <= 16,
-      s"combo geometry out of range: blocks=$nBlocks clean=$clean")
-    require(maxDist <= nBlocks - clean,
-      s"$nBlocks-block/$clean-clean combo keys are recall-complete " +
-        s"only up to hamming ${nBlocks - clean}, got $maxDist")
-    val base = 64 / nBlocks
-    val rem = 64 % nBlocks
-    val widths = Seq.tabulate(nBlocks)(i => if (i < rem) base + 1 else base)
-    val blockVal = fpBlockVal(widths)
-    val combos = (0 until nBlocks).combinations(clean).toSeq
-    require(combos.forall(_.map(widths).sum <= 63),
-      "combo key must fit a signed long")
-    val bands = fp.select(col("doc_id"), col("fp"),
-        posexplode(array(combos.map { idxs =>
-          idxs.tail.foldLeft(blockVal(idxs.head)) { (acc, i) =>
-            shiftleft(acc, widths(i)).bitwiseOR(blockVal(i))
-          }
-        }: _*)))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "bhash")
-    // the hamming cut runs in the PRUNE slot — before saltedBandPairs'
-    // closing distinct, so the wide shuffle sees survivors only
-    saltedBandPairs(bands, carry = Seq("fp"),
-        prune = _.filter(
-          bit_count(col("fp_a").bitwiseXOR(col("fp_b"))) <= maxDist),
-        hotDflt = hotDflt)
-      .select(col("a"), col("b"),
-        bit_count(col("fp_a").bitwiseXOR(col("fp_b"))).as("hamming"))
-  }
-
-  /** The multi-index candidate generator underneath [[hammingBlockPairs]]
-    * and `sim_ann_lsh`'s 16-bit-band ANN probe: the 64-bit key splits
-    * into `widths` blocks; the index side posts each doc's exact block
-    * values, the query side posts every value within `radius` bit flips
-    * of each block, candidates are the salted (band, key) equi-join.
-    * Emits one (a, b, hamming) row per agreeing (band, salt) — callers
-    * apply their own cut and `.distinct()` (fusing the cut BEFORE the
-    * distinct keeps the wide shuffle on survivors, not candidates).
-    * Pigeonhole: the candidate set is complete for any hamming cut
-    * ≤ (radius+1)·|widths| − 1.
-    *
-    * `carry` names extra columns of `fp` to thread through both posting
-    * relations and emit as `<c>_a`/`<c>_b` on each candidate row — the
-    * r12 hook for `sim_ann_lsh`'s second-sketch verify, whose cut must
-    * run INSIDE the join's output stage (a filter chained onto the
-    * returned frame fuses there under whole-stage codegen) rather than
-    * after a join-back that would shuffle the raw candidate stream.
-    */
-  private[graft] def multiIndexCandidates(fp: DataFrame, widths: Seq[Int],
-      radius: Int, carry: Seq[String] = Nil,
-      hotDflt: Int = HotBucketDefault): DataFrame = {
-    val blockVal = fpBlockVal(widths)
-    val s = fp.sparkSession
-    val hotWidth = graft.Dials.HotBucketWidth.get(s).getOrElse(hotDflt)
-    val saltBlocks = graft.Dials.SaltBlocks(s)
-    // degenerate-bucket DF cap (r16, closing the r15 ADVICE asymmetry):
-    // the cap guards THIS salted decomposition too — a template corpus
-    // minting one block value for 10⁵⁺ docs would otherwise replicate
-    // that bucket's query rows ×saltBlocks and enumerate its width²
-    // candidates exactly like the self-join case the cap was built for.
-    // Same one-pass detector, same recall contract (an over-cap bucket
-    // drops from candidate generation; a pair loses that band's
-    // pigeonhole factor), same fixture no-op at the 65536 default.
-    val dfCap = graft.Dials.BucketDfCap(s)
-    // NOT persisted, deliberately: the posting projection feeds both the
-    // hot-key aggregate and the index side of the candidate join, but it
-    // is a codegen shift/mask explode over the ALREADY-CACHED fp relation
-    // — recomputing it per consumer is cheaper than caching it (a cache
-    // here measured 2× on the whole key at sf1: the InMemoryRelation
-    // boundary costs columnar materialization and denies the planner the
-    // fused scan→explode→join pipeline on the index side)
-    val cc = carry.map(col)
-    val exact = fp.select(Seq(col("doc_id"), col("fp")) ++ cc :+
-        posexplode(array((0 until widths.size).map(blockVal): _*)): _*)
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "key")
-    // flagged list is tiny by construction (distinct over-width keys) —
-    // broadcast, so salt tagging never shuffles either posting relation.
-    // Widths are measured on the INDEX-side postings (exact block
-    // values), the side that accumulates template mass.
-    val hot = flaggedBuckets(exact, Seq("band", "key"), hotWidth, dfCap)
-    def flips(w: Int): Seq[Long] =
-      Seq(0L) ++
-        (if (radius >= 1) (0 until w).map(b => 1L << b) else Nil) ++
-        (if (radius >= 2)
-          for { x <- 0 until w; y <- x + 1 until w }
-            yield (1L << x) | (1L << y)
-        else Nil)
-    // Variant postings explode ONE flat (band, mask) literal over the
-    // PERSISTED 1-row/doc fp relation, then compute the key with a
-    // when-chain over the same blockVal extraction the index side posts.
-    // NOT derived from the 5-row/doc `exact` relation: deriving there
-    // (r10's a82adb1) re-ran the posexplode subtree under the generate
-    // and measured 7.2→24.5 s on the sf1 key — the r11 bisect's one real
-    // regression — while this shape restores the pinned 7 s at an
-    // identical output (the ScalaCheck brute-force law sweeps all radii
-    // either way). typedlit marks tuple elements nullable
-    // (ScalaReflection treats Product elements as nullable), which would
-    // leak into the join keys — coalesce against never-taken literals
-    // re-pins both.
-    val masks: Seq[(Int, Long)] = widths.zipWithIndex.flatMap {
-      case (w, i) => flips(w).map(m => (i, m))
-    }
-    val keyExpr = (1 until widths.size - 1)
-      .foldLeft(when(col("band") === 0, blockVal(0))) {
-        (acc, i) => acc.when(col("band") === i, blockVal(i))
-      }
-      .otherwise(blockVal(widths.size - 1))
-      .bitwiseXOR(col("m"))
-    val variants = fp.select(Seq(col("doc_id"), col("fp")) ++ cc :+
-        explode(typedlit(masks)).as("bm"): _*)
-      .select(Seq(col("doc_id"), col("fp")) ++ cc ++ Seq(
-        coalesce(col("bm._1"), lit(0)).as("band"),
-        coalesce(col("bm._2"), lit(0L)).as("m")): _*)
-      .select(Seq(col("doc_id"), col("fp")) ++ cc ++
-        Seq(col("band"), keyExpr.as("key")): _*)
-    // degen drop rides the same broadcast join on BOTH sides: a dropped
-    // index posting can never meet a candidate, and dropping the query
-    // side too skips its salt replication of rows that would join nothing
-    def live(side: DataFrame): DataFrame = {
-      val j = side.join(broadcast(hot), Seq("band", "key"), "left")
-      if (dfCap == 0) j
-      else j.filter(!coalesce(col("is_degen"), lit(false))).drop("is_degen")
-    }
-    val exactS = live(exact)
-      .select(Seq(col("doc_id"), col("fp")) ++ cc ++
-        Seq(col("band"), col("key"),
-          when(coalesce(col("is_hot"), lit(false)),
-            xxhash64(col("doc_id")).bitwiseAND(lit(saltBlocks - 1))
-              .cast("int"))
-            .otherwise(lit(0)).as("salt")): _*)
-    val varS = live(variants)
-      .select(Seq(col("doc_id"), col("fp")) ++ cc ++
-        Seq(col("band"), col("key"),
-          explode(when(coalesce(col("is_hot"), lit(false)),
-              sequence(lit(0), lit(saltBlocks - 1)))
-            .otherwise(array(lit(0)))).as("salt")): _*)
-    // SHUFFLE-STRATEGY PIN (r12): both posting relations grow with the
-    // corpus (5 and 447 rows/doc). Near the adaptive broadcast
-    // threshold their measured compressed size makes AQE flip-flop the
-    // exact side into a BroadcastHashJoin whose UnsafeHashedRelation is
-    // built and serialized single-threaded on the driver while every
-    // executor thread idles — jstack-caught at sf1, where the flip is
-    // the whole bimodal 7 s/35 s evidence split of r10–r12 (and the
-    // GC of the abandoned 10⁵-row broadcast then bled into the NEXT
-    // alphabetical keys: dedup_url's phantom 2→16 s "regression").
-    // A corpus-growing side must never sit on a broadcast cliff — the
-    // merge hint pins the shuffle plan at every scale; only the
-    // bounded hot-key relation is broadcast.
-    varS.as("q").hint("shuffle_merge").join(exactS.as("x"),
-        col("q.band") === col("x.band") &&
-        col("q.key") === col("x.key") &&
-        col("q.salt") === col("x.salt") &&
-        col("q.doc_id") < col("x.doc_id"))
-      .select(Seq(col("q.doc_id").as("a"), col("x.doc_id").as("b"),
-        bit_count(col("q.fp").bitwiseXOR(col("x.fp"))).as("hamming")) ++
-        carry.flatMap(c => Seq(
-          col(s"q.$c").as(s"${c}_a"), col(s"x.$c").as(s"${c}_b"))): _*)
-  }
-
-  /** Banded MinHash-LSH near-dup pairs over a (doc_id, s: array<string>)
-    * relation — the one LSH pipeline both set representations (word
-    * 3-gram shingles, char 4-grams) run through:
-    * fused-codegen signature → `Bands` hashed band keys → salted bucket
-    * self-join candidates (O(collisions), never all-pairs) → exact
-    * Jaccard verification at `threshold`. Candidate recall at the
-    * threshold is the (1/Bands)^(1/Rows) s-curve — thresholds are chosen
-    * per representation so every true pair sits far above the knee.
-    *
-    * The (doc_id, s, sig) relation is persisted MEMORY_AND_DISK: the set
-    * transform (O(len) interpreted HOF per row) and the 128-permutation
-    * signature dominate the cost, and the plan reads the relation from
-    * FOUR branches (x/y band sides, both verification joins) — uncached
-    * that compute ran 3-5×, the top two lines of the round-3/4 bench.
-    * The cache entry lives until [[graft.InternalCaches.unpersistAll]]
-    * (the returned plan is lazy, so there is no post-action unpersist
-    * point inside the operator — a repeat caller invokes the hook between
-    * jobs; Bench/Verify do, between queries). At production scale
-    * MEMORY_AND_DISK degrades to a disk-backed materialization — the same
-    * shape as a checkpoint before a reused subtree.
-    */
   /** All 128 byte-quantized minhash positions packed into 16 longs —
     * the 128 B/doc payload the packed coarse prune carries through the
-    * band join (vs the 1 KB full signature the carry docstring
-    * forbids; an 8× cut). ALL positions, deliberately: every candidate
-    * row exists because SOME band's 8 positions agree, and with the
+    * band join (vs the 1 KB full signature that
+    * [[Blocking.candidates]] warns against carrying; an 8× cut). ALL
+    * positions, deliberately: every candidate row exists because SOME band's 8 positions agree, and with the
     * full signature packed that conditioning is a uniform +8 on every
     * row's byte count — [[packedCut]] subtracts it exactly, leaving
     * 120 unconditioned positions of clean Jaccard evidence. (A 64-
@@ -1033,8 +418,29 @@ object Text {
     */
   private val PackedPruneMinThreshold = 0.7
 
+  /** Banded MinHash-LSH near-dup pairs over a (doc_id, s: array<string>)
+    * relation — the one LSH pipeline both set representations (word
+    * 3-gram shingles, char 4-grams) run through:
+    * fused-codegen signature → `Bands` hashed band keys → salted bucket
+    * self-join candidates (O(collisions), never all-pairs) → exact
+    * Jaccard verification at `threshold`. Candidate recall at the
+    * threshold is the (1/Bands)^(1/Rows) s-curve — thresholds are chosen
+    * per representation so every true pair sits far above the knee.
+    *
+    * The (doc_id, s, sig) relation is persisted MEMORY_AND_DISK: the set
+    * transform (O(len) interpreted HOF per row) and the 128-permutation
+    * signature dominate the cost, and the plan reads the relation from
+    * FOUR branches (x/y band sides, both verification joins) — uncached
+    * that compute ran 3-5×, the top two lines of the round-3/4 bench.
+    * The cache entry lives until [[graft.InternalCaches.unpersistAll]]
+    * (the returned plan is lazy, so there is no post-action unpersist
+    * point inside the operator — a repeat caller invokes the hook between
+    * jobs; Bench/Verify do, between queries). At production scale
+    * MEMORY_AND_DISK degrades to a disk-backed materialization — the same
+    * shape as a checkpoint before a reused subtree.
+    */
   private def lshJaccardPairs(sets: DataFrame, threshold: Double,
-                              hotDflt: Int = HotBucketDefault): DataFrame = {
+                              hotDflt: Int): DataFrame = {
     val packed = threshold >= PackedPruneMinThreshold &&
       graft.Dials.PackedSigma(sets.sparkSession) > 0
     // the persisted relation is IDENTICAL with the prune on or off; pk
@@ -1074,21 +480,21 @@ object Text {
     // ALL pairs on an organic corpus (measured: 1.7e8 candidates at
     // organic sf10; the est join-back intermediates outran the probe
     // box's disk). The packed 64-position estimate rides the band join
-    // as a 64 B carry and cuts IN-STAGE in the prune slot — before the
+    // as a 64 B carry and cuts IN-STAGE on the join output — before the
     // distinct, before any exchange — at threshold − 4.5σ₆₄
     // (packedCut), so the noise mass dies where the simhash pipeline's
     // hamming cut does. The 128-position margin filter stays as the
     // precision backstop on the survivors.
     val margin = graft.Dials.EstMargin(sets.sparkSession)
     val cand =
-      if (!packed) saltedBandPairs(bands, hotDflt = hotDflt)
+      if (!packed) Blocking.candidates(bands, hotDflt = hotDflt).distinct()
       else {
         val cut = packedCut(sets, threshold)
-        saltedBandPairs(bands, carry = Seq("pk"),
-          prune = _.filter(graft.expr.MinHashExprs.packedEqBytes(
-              col("pk_a"), col("pk_b")) >= cut)
-            .select(col("a"), col("b")),
-          hotDflt = hotDflt)
+        Blocking.candidates(bands, carry = Seq("pk"), hotDflt = hotDflt)
+          .filter(graft.expr.MinHashExprs.packedEqBytes(
+            col("pk_a"), col("pk_b")) >= cut)
+          .select(col("a"), col("b"))
+          .distinct()
       }
     estimateAndVerify(cand, sig, sig, threshold, margin)
   }
@@ -1202,7 +608,7 @@ object Text {
     // but the hash VALUES differ from the slice() form (different arg
     // shape), which is invisible outside this relation.
     // `keep` columns ride along per posting row (the packed prune's
-    // 64 B carry — keep payloads small, the saltedBandPairs carry
+    // 64 B carry — keep payloads small, the Blocking.candidates carry
     // doctrine).
     sig.select(col("doc_id") +: keep.map(col) :+
         posexplode(transform(sequence(lit(0), lit(bands - 1)),
@@ -1237,67 +643,18 @@ object Text {
     */
   private def lshProbePairs(index: DataFrame, batch: DataFrame,
                             threshold: Double,
-                            hotDflt: Int = HotBucketDefault): DataFrame = {
+                            hotDflt: Int): DataFrame = {
     def sigOf(sets: DataFrame) = graft.InternalCaches.persistTracked(
       sets.select(col("doc_id"), col("s"),
         graft.expr.MinHashExprs.minhashSignature(col("s"), MinhashK)
           .as("sig")))
     val isig = sigOf(index)
     val bsig = sigOf(batch)
-    val cand = saltedProbePairs(bandKeys(isig, bands = 32, rows = 4),
-      bandKeys(bsig, bands = 32, rows = 4), hotDflt)
+    val cand = Blocking.candidates(bandKeys(isig, bands = 32, rows = 4),
+        Some(bandKeys(bsig, bands = 32, rows = 4)), hotDflt = hotDflt)
+      .distinct()
     val margin = graft.Dials.EstMargin(index.sparkSession)
     estimateAndVerify(cand, bsig, isig, threshold, margin)
-  }
-
-  /** Salted CROSS-relation band join: candidate (a = batch doc, b =
-    * index doc) pairs for every (band, bhash) collision between the two
-    * band relations. Hot buckets (measured by INDEX-side width — the
-    * standing side is where boilerplate accumulates) salt join-style:
-    * the index row keeps one hash-assigned block, the batch row
-    * replicates across all blocks, so each cross collision meets in
-    * exactly one (band, bhash, blk) bucket — recall is unchanged for ANY
-    * layout and any dials (SaltLawSpec property), while the widest
-    * bucket shrinks by the block factor.
-    */
-  private[graft] def saltedProbePairs(ib: DataFrame,
-                                      bb: DataFrame,
-                                      hotDflt: Int = HotBucketDefault)
-      : DataFrame = {
-    val s = ib.sparkSession
-    val hotWidth = graft.Dials.HotBucketWidth.get(s).getOrElse(hotDflt)
-    val blocks = graft.Dials.SaltBlocks(s)
-    // degenerate-bucket DF cap (r16, closing the r15 ADVICE asymmetry:
-    // the cap guarded only the self-join): an over-cap INDEX bucket is
-    // dropped from BOTH sides of the probe join — its index postings
-    // never replicate under the salt, and batch rows keyed to it skip
-    // their blocks-× replication of rows that could join nothing. Same
-    // one-pass detector, same 1/(1−J^rows)-per-band recall trade, same
-    // fixture no-op at the 65536 default.
-    val dfCap = graft.Dials.BucketDfCap(s)
-    // shared sampled detector: the probe's standing-index side is
-    // corpus-sized too, so it hits the same partial-agg wall (doc_id
-    // here is the index-side id the sample gate hashes)
-    val hot = flaggedBuckets(ib, Seq("band", "bhash"), hotWidth, dfCap)
-    def live(side: DataFrame): DataFrame = {
-      val j = side.join(broadcast(hot), Seq("band", "bhash"), "left")
-      if (dfCap == 0) j
-      else j.filter(!coalesce(col("is_degen"), lit(false))).drop("is_degen")
-    }
-    val iTagged = live(ib)
-      .select(col("doc_id").as("b"), col("band"), col("bhash"),
-        when(coalesce(col("is_hot"), lit(false)),
-          xxhash64(col("doc_id")).bitwiseAND(lit(blocks - 1)).cast("int"))
-          .otherwise(lit(0)).as("blk"))
-    val bTagged = live(bb)
-      .select(col("doc_id").as("a"), col("band"), col("bhash"),
-        explode(when(coalesce(col("is_hot"), lit(false)),
-            sequence(lit(0), lit(blocks - 1)))
-          .otherwise(array(lit(0)))).as("blk"))
-    // batch×index probe: both posting sides scale with their corpora —
-    // same shuffle pin as saltedBandPairs (broadcast-cliff hazard)
-    bTagged.hint("shuffle_merge").join(iTagged, Seq("band", "bhash", "blk"))
-      .select(col("a"), col("b")).distinct()
   }
 
   /** Word-shingle MinHash-LSH near-dup pairs, UNSORTED — the shared
@@ -1311,7 +668,7 @@ object Text {
       .repartition(p, col("doc_id"))
       .filter(size(col("t")) >= 3)
       .select(col("doc_id"), shingleCol(col("t")).as("s"))
-    lshJaccardPairs(sh, 0.5, adaptiveHotWidth(s, d))
+    lshJaccardPairs(sh, 0.5, Blocking.adaptiveHotWidth(s, d))
   }
 
   /** Cache partition count for the KB-per-row LSH relations (shingle /
@@ -1451,18 +808,20 @@ object Text {
         .repartition(p, col("doc_id"))
         .filter(length(col("text")) >= 4) // cheap proxy: ≥4 chars ⟺ ≥1 gram
         .select(col("doc_id"), charGramCol(col("text"), 4).as("s"))
-      lshJaccardPairs(g, 0.8, adaptiveHotWidth(s, d)).orderBy("a", "b")
+      lshJaccardPairs(g, 0.8, Blocking.adaptiveHotWidth(s, d))
+        .orderBy("a", "b")
     }),
 
     // SimHash near-dup: one 64-bit fingerprint per document (codegen'd
     // single pass over the shingle set), candidate pairs from the
-    // Hamming index matched to the threshold dial ([[hammingBlockPairs]]:
-    // the C(6,2) pair-block index at the production dial, the 5-block
-    // ≤2-bit variant enumeration above it), exact hamming verification
-    // via bit_count(xor). The r10 plan change from exact 4-bit banding:
-    // 16-bucket bands passed ~every random pair somewhere (12.7M raw
-    // collisions at sf0.1, 1.3 G at sf1 — the engine's last quadratic
-    // candidate stream); the block-key indexes cut candidates for a
+    // Hamming index matched to the threshold dial
+    // ([[Blocking.hammingBlockPairs]]: the C(6,2) pair-block index at the
+    // production dial, the 5-block ≤2-bit variant enumeration above it),
+    // exact hamming verification via bit_count(xor). The r10 plan change
+    // from exact 4-bit banding: 16-bucket bands passed ~every random pair
+    // somewhere (12.7M raw collisions at sf0.1, 1.3 G at sf1 — the
+    // engine's last quadratic candidate stream); the block-key indexes
+    // cut candidates for a
     // LINEAR per-doc posting cost, OUTPUT IDENTICAL per dial by
     // pigeonhole completeness, which is why the planted-pair and
     // determinism laws carry over unchanged.
@@ -1499,9 +858,9 @@ object Text {
       // sf0.01 the planted near-dup pairs within hamming ≤ 4 number 14
       // (measured r13; 25 at the loose dial) — a pinned positive
       // rows-only check at any fixture with planted clones.
-      hammingBlockPairs(fp,
+      Blocking.hammingBlockPairs(fp,
         maxDist = graft.Dials.SimhashMaxDist(s),
-        hotDflt = adaptiveHotWidth(s, d))
+        hotDflt = Blocking.adaptiveHotWidth(s, d))
         .orderBy("a", "b")
     }),
 
@@ -2279,7 +1638,7 @@ object Text {
           .select(col("doc_id"), col("n"), col("sh")),
         eager = true)
       // posting self-join: both sides corpus-sized — shuffle pin (see
-      // hammingBlockPairs on the broadcast cliff); sort-merge is free
+      // Blocking.candidates on the broadcast cliff); sort-merge is free
       // here, both inputs arrive partitioned+sorted by sh from the cache
       sh.as("x").hint("shuffle_merge").join(sh.as("y"),
           col("x.sh") === col("y.sh")
@@ -2593,7 +1952,7 @@ object Text {
           reverse(col("t")).as("t"))
       val batch = mutated.unionByName(reversed)
         .select(col("doc_id"), shingleCol(col("t")).as("s"))
-      lshProbePairs(index, batch, 0.5, adaptiveHotWidth(s, d))
+      lshProbePairs(index, batch, 0.5, Blocking.adaptiveHotWidth(s, d))
         .orderBy("a", "b")
     }),
 

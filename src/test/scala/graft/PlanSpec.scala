@@ -135,7 +135,7 @@ class PlanSpec extends SparkSpec {
     // join. Nullability sneaks in through innocuous-looking exprs (a Cast
     // from NullType, a size() over a nullable array), so pin it here.
     Seq("dedup_simhash", "dedup_near_minhash", "dedup_ngram_jaccard",
-        "sim_ann_lsh")
+        "sim_ann_lsh", "dedup_lsh_ingest")
       .foreach { name =>
         // the band join keys on (band, bhash|bval); the later verification
         // joins key on doc_id alone (nullable in the parquet schema, fine)
@@ -165,6 +165,21 @@ class PlanSpec extends SparkSpec {
       assert(wide.nonEmpty,
         s"$name: expected the salted band join keyed (band, bhash, pi, pj)")
     }
+  }
+
+  test("LSH ingest probe joins on the 3-part salted key (band, bhash, blk)") {
+    // the cross mode's skew guard: a hot index bucket keeps one block per
+    // row and the batch side copies to every block, so the probe join
+    // must key on the block as well as the bucket
+    val wide = collectAll(finalPlan("dedup_lsh_ingest")) {
+      case j: org.apache.spark.sql.execution.joins.BaseJoinExec
+          if j.leftKeys.size >= 3 => j
+    }
+    val keyed = wide.filter(j => Set("band", "bhash", "blk").subsetOf(
+      j.leftKeys.flatMap(_.references.map(_.name)).toSet))
+    assert(keyed.nonEmpty,
+      "dedup_lsh_ingest: expected the salted probe join keyed " +
+        s"(band, bhash, blk), got ${wide.map(_.leftKeys)}")
   }
 
   test("dedup_simhash candidates come from the salted 3-key multi-index join") {

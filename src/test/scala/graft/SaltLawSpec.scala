@@ -44,27 +44,43 @@ object SaltLawSpec extends Properties("saltedBandPairs") {
   // (and therefore the sampling noise) can never change the output —
   // exactly the property that makes sampled detection admissible
   private val genShift = Gen.oneOf(0, 1, 4)
+  // the degenerate-bucket DF cap (0 = off): a bucket wider than the cap
+  // leaves pair generation on both sides of the join. With the cap on,
+  // widths are counted exactly (shift 0), so the expected set is the
+  // naive pairs that share a bucket no wider than the cap
+  private val genCap = Gen.oneOf(0, 8, 24)
+  private def capped(rows: Seq[(Long, Int, Long)],
+                     cap: Int): ((Int, Long)) => Boolean = {
+    val width = rows.groupBy(r => (r._2, r._3)).map {
+      case (k, rs) => k -> rs.size }
+    k => cap == 0 || width.getOrElse(k, 0) <= cap
+  }
 
   property("salted == naive self-join pairs, any skew, any dials") =
-    Prop.forAll(genBands, genSalt, genHotW, genShift) {
-        (rows, saltW, hotW, shift) =>
+    Prop.forAll(genBands, genSalt, genHotW, genShift, genCap) {
+        (rows, saltW, hotW, shift, cap) =>
       val bands = rows.toDF("doc_id", "band", "bhash")
+      val kept = capped(rows, cap)
       spark.conf.set("spark.graft.lsh.saltBlocks", saltW.toString)
       spark.conf.set("spark.graft.lsh.hotBucketWidth", hotW.toString)
-      spark.conf.set("spark.graft.lsh.hotSampleShift", shift.toString)
+      spark.conf.set("spark.graft.lsh.hotSampleShift",
+        (if (cap > 0) 0 else shift).toString)
+      spark.conf.set("spark.graft.lsh.bucketDfCap", cap.toString)
       try {
-        val got = ops.Text.saltedBandPairs(bands)
+        val got = ops.Blocking.candidates(bands)
           .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
         val naive = (for {
           (d1, b1, h1) <- rows; (d2, b2, h2) <- rows
-          if b1 == b2 && h1 == h2 && d1 < d2
+          if b1 == b2 && h1 == h2 && d1 < d2 && kept((b1, h1))
         } yield (d1, d2)).toSet
         Prop(got == naive) :|
-          s"salt=$saltW hot=$hotW missing=${naive -- got} extra=${got -- naive}"
+          s"salt=$saltW hot=$hotW cap=$cap missing=${naive -- got} " +
+            s"extra=${got -- naive}"
       } finally {
         spark.conf.unset("spark.graft.lsh.saltBlocks")
         spark.conf.unset("spark.graft.lsh.hotBucketWidth")
         spark.conf.unset("spark.graft.lsh.hotSampleShift")
+        spark.conf.unset("spark.graft.lsh.bucketDfCap")
       }
     }
 
@@ -74,26 +90,31 @@ object SaltLawSpec extends Properties("saltedBandPairs") {
   // cross-collision pairs — no triangle here, but the one-block-meets-
   // all-blocks argument is just as easy to get subtly wrong
   property("salted probe == naive cross-collision pairs, any skew, any dials") =
-    Prop.forAll(genBands, genBands, genSalt, genHotW, genShift) {
-      (iRows, bRows, saltW, hotW, shift) =>
+    Prop.forAll(genBands, genBands, genSalt, genHotW, genShift, genCap) {
+      (iRows, bRows, saltW, hotW, shift, cap) =>
         val ib = iRows.toDF("doc_id", "band", "bhash")
         val bb = bRows.toDF("doc_id", "band", "bhash")
+        val kept = capped(iRows, cap) // widths of the index side
         spark.conf.set("spark.graft.lsh.saltBlocks", saltW.toString)
         spark.conf.set("spark.graft.lsh.hotBucketWidth", hotW.toString)
-        spark.conf.set("spark.graft.lsh.hotSampleShift", shift.toString)
+        spark.conf.set("spark.graft.lsh.hotSampleShift",
+          (if (cap > 0) 0 else shift).toString)
+        spark.conf.set("spark.graft.lsh.bucketDfCap", cap.toString)
         try {
-          val got = ops.Text.saltedProbePairs(ib, bb)
+          val got = ops.Blocking.candidates(ib, Some(bb))
             .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
           val naive = (for {
             (da, ba, ha) <- bRows; (db, bb2, hb) <- iRows
-            if ba == bb2 && ha == hb
+            if ba == bb2 && ha == hb && kept((ba, ha))
           } yield (da, db)).toSet
           Prop(got == naive) :|
-            s"salt=$saltW hot=$hotW missing=${naive -- got} extra=${got -- naive}"
+            s"salt=$saltW hot=$hotW cap=$cap missing=${naive -- got} " +
+              s"extra=${got -- naive}"
         } finally {
           spark.conf.unset("spark.graft.lsh.saltBlocks")
           spark.conf.unset("spark.graft.lsh.hotBucketWidth")
           spark.conf.unset("spark.graft.lsh.hotSampleShift")
+          spark.conf.unset("spark.graft.lsh.bucketDfCap")
         }
     }
 
@@ -119,10 +140,10 @@ object SaltLawSpec extends Properties("saltedBandPairs") {
   private val genDist = Gen.oneOf(0, 3, 7, 12, 14)
 
   // combo geometry sweep for the maxDist ≤ 4 route: (6,2) is the
-  // shipped pair-block layout, (7,3)/(8,4) the conf-dialed scale rungs
-  // (wider keys for bigger corpora — text.scala comboBlockPairs). The
-  // dist > 4 route ignores the confs, so pairing the geometry with any
-  // genDist draw is safe and exercises both paths under the same law.
+  // shipped pair-block layout, (7,3)/(8,4) the wider scale rungs
+  // (blocking.scala comboBlockPairs), passed to comboBlockPairs
+  // directly. The dist > 4 route has no geometry, so pairing it with
+  // any genDist draw is safe and exercises both paths under the same law.
   private val genGeom = Gen.oneOf((6, 2), (7, 3), (8, 4))
 
   property("hammingBlockPairs == brute-force sweep, any fps, any dials") =
@@ -133,10 +154,10 @@ object SaltLawSpec extends Properties("saltedBandPairs") {
         spark.conf.set("spark.graft.lsh.hotBucketWidth", hotW.toString)
         spark.conf.set("spark.graft.lsh.hotSampleShift",
           (maxDist % 3).toString) // piggyback a 0/1/2 shift sweep
-        spark.conf.set("spark.graft.simhash.comboBlocks", geom._1.toString)
-        spark.conf.set("spark.graft.simhash.comboClean", geom._2.toString)
         try {
-          val got = ops.Text.hammingBlockPairs(fp, maxDist)
+          val got = (if (maxDist <= 4)
+              ops.Blocking.comboBlockPairs(fp, maxDist, geom._1, geom._2)
+            else ops.Blocking.hammingBlockPairs(fp, maxDist))
             .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
           val naive = (for {
             (d1, f1) <- rows; (d2, f2) <- rows
@@ -149,8 +170,6 @@ object SaltLawSpec extends Properties("saltedBandPairs") {
           spark.conf.unset("spark.graft.lsh.saltBlocks")
           spark.conf.unset("spark.graft.lsh.hotBucketWidth")
           spark.conf.unset("spark.graft.lsh.hotSampleShift")
-          spark.conf.unset("spark.graft.simhash.comboBlocks")
-          spark.conf.unset("spark.graft.simhash.comboClean")
         }
     }
 
@@ -166,7 +185,7 @@ object SaltLawSpec extends Properties("saltedBandPairs") {
       spark.conf.set("spark.graft.lsh.saltBlocks", saltW.toString)
       spark.conf.set("spark.graft.lsh.hotBucketWidth", hotW.toString)
       try {
-        val got = ops.Text.multiIndexCandidates(fp, Seq(16, 16, 16, 16), 1)
+        val got = ops.Blocking.multiIndexPairs(fp, Seq(16, 16, 16, 16), 1)
           .select("a", "b").collect()
           .map(r => (r.getLong(0), r.getLong(1))).toSet
         val need = (for {

@@ -108,7 +108,7 @@ class TextSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     // Planted corpus for the r15 degenerate-bucket cap (the
     // text_containment maxDf doctrine applied to band buckets —
-    // ops/text.scala BucketDfCapDefault):
+    // ops/blocking.scala Blocking.candidates):
     //  - 40 VERBATIM copies of one boilerplate doc: every band bucket
     //    they form has width ≥ 40, so at dfCap = 8 ALL their buckets
     //    drop and their C(40,2) J=1.0 pairs must vanish — the
@@ -363,7 +363,7 @@ class TextSpec extends SparkSpec {
     // (the sampled detector's own noise is covered by SaltLawSpec's
     // dial sweep, where the law holds whichever way a flag falls).
     // The width is pinned too (r16): the DEFAULT is now bytes-adaptive
-    // (ops/text.scala adaptiveHotWidth — this scratch corpus resolves
+    // (ops/blocking.scala adaptiveHotWidth — this scratch corpus resolves
     // ~45, still under 64, but the law's subject is salted-path
     // engagement and must not ride a parquet-size coincidence)
     spark.conf.set("spark.graft.lsh.hotSampleShift", "0")
