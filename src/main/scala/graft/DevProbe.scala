@@ -23,7 +23,15 @@ object DevProbe {
       spark.stop()
       return
     }
+    // generated classes compiled (a Spark codegen cache miss each) and
+    // JIT milliseconds per pass: a query whose passes keep compiling
+    // overflows spark.sql.codegen.cache.maxEntries
+    val compiles =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val jit = java.lang.management.ManagementFactory.getCompilationMXBean
     (1 to n).foreach { i =>
+      val c0 = compiles.getCount
+      val j0 = jit.getTotalCompilationTime
       val t0 = System.nanoTime()
       val df = SparkEntry.queries(key)(spark, sfDir)
       val tBuild = System.nanoTime()
@@ -35,7 +43,9 @@ object DevProbe {
       InternalCaches.unpersistAll()
       println(f"PROBE pass=$i $key build=${(tBuild - t0) / 1e9}%.3f " +
         f"plan=${(tPlan - tBuild) / 1e9}%.3f " +
-        f"exec=${(tExec - tPlan) / 1e9}%.3f s")
+        f"exec=${(tExec - tPlan) / 1e9}%.3f s " +
+        s"codegen_compiles=${compiles.getCount - c0} " +
+        s"jit_ms=${jit.getTotalCompilationTime - j0}")
     }
     spark.stop()
   }

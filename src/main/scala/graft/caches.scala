@@ -18,9 +18,10 @@ import org.apache.spark.sql.Dataset
   * operator appends another (equivalent-plan) entry. That is deliberate —
   * Spark's CacheManager dedupes cache storage by canonicalized plan, so
   * the duplicate entry costs a registry slot, not a second cache copy,
-  * and unpersist is idempotent (an operator that eagerly unpersists an
-  * intermediate itself, as dedup_clusters does per round, leaves a stale
-  * registry entry whose later unpersist is a no-op).
+  * and unpersist is idempotent (an operator that unpersists an
+  * intermediate itself, as the BPE training rounds and the IVF Lloyd
+  * chain do, leaves a stale registry entry whose later unpersist is a
+  * no-op).
   */
 object InternalCaches {
   private val entries = scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]
@@ -34,6 +35,12 @@ object InternalCaches {
     * pipeline), because no branch sees the others' blocks until they are
     * written. Lazy (the default) is right when the first reader is a
     * single-branch action that populates the cache for everyone after.
+    * Lazy is also right when the first reader is a query AQE plans (one
+    * with an exchange): AQE materializes each cached relation as one
+    * table-cache query stage before the stages that read it, so every
+    * branch shares that one computation. `Text.componentLabels` relies on
+    * this; its seed's shuffle is written once with a two-branch probe as
+    * the first reader.
     */
   private[graft] def persistTracked[T](ds: Dataset[T],
                                        eager: Boolean = false): Dataset[T] = {

@@ -593,27 +593,20 @@ object Text {
     * cross-relation ingest probe ([[lshProbePairs]], 32×4). `bands`×`rows`
     * must tile the 128-minimum signature.
     */
-  private def bandKeys(sig: DataFrame, bands: Int = Bands,
-                       rows: Int = Rows,
-                       keep: Seq[String] = Nil): DataFrame =
-    // band hash = xxhash64 over the band's `rows` signature positions,
-    // read via `get` (0-based, dynamic index) rather than slice(): the
-    // Slice expression inside this generator evaluates INTERPRETED and
-    // materializes a boxed Vector per (doc, band) — ~6.4e8 boxed longs
-    // of pure allocation per pass at the sf100 probe (5 M docs × 16
-    // bands × 8), enough garbage velocity at 32 threads to contribute
-    // to the one-JVM heap envelope (BASELINE.md r13). Per-position
-    // `get` stays primitive end-to-end. Bucket SEMANTICS are unchanged
-    // — two docs share a band hash iff their `rows` positions agree —
-    // but the hash VALUES differ from the slice() form (different arg
-    // shape), which is invisible outside this relation.
-    // `keep` columns ride along per posting row (the packed prune's
-    // 64 B carry — keep payloads small, the Blocking.candidates carry
-    // doctrine).
+  private[graft] def bandKeys(sig: DataFrame, bands: Int = Bands,
+                              rows: Int = Rows,
+                              keep: Seq[String] = Nil): DataFrame =
+    // band j hashes (j, sig[j·rows] … sig[j·rows + rows − 1]) with
+    // xxhash64, one literal-indexed `get` per position: a `transform`
+    // lambda or a slice() runs interpreted per doc and boxes the band,
+    // while this array of plain expressions is whole-stage codegen'd.
+    // The hashed values are the bucket ids of stored indexes, so the
+    // argument list must not change (DedupLawSpec pins it). `keep` columns
+    // ride along per posting row; keep them small.
     sig.select(col("doc_id") +: keep.map(col) :+
-        posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          j => xxhash64(
-            (j +: (0 until rows).map(k => get(col("sig"), j * rows + k))): _*))): _*)
+        posexplode(array((0 until bands).map(j => xxhash64(
+          (lit(j) +: (0 until rows).map(k =>
+            get(col("sig"), lit(j * rows + k)))): _*)): _*)): _*)
       .withColumnRenamed("pos", "band")
       .withColumnRenamed("col", "bhash")
 
@@ -669,6 +662,81 @@ object Text {
       .filter(size(col("t")) >= 3)
       .select(col("doc_id"), shingleCol(col("t")).as("s"))
     lshJaccardPairs(sh, 0.5, Blocking.adaptiveHotWidth(s, d))
+  }
+
+  /** Connected components of a symmetric `(src, dst)` edge relation as
+    * `(id, lbl)`: every vertex with an edge, labelled with the least id
+    * of its component.
+    *
+    * Min-label propagation with pointer jumping: a round sets each label
+    * to min(own, neighbours' labels, label-of-label). A label is always
+    * a reachable id, so the jump is sound, and it halves the remaining
+    * path lengths, so rounds grow with log(diameter), not diameter. The
+    * seed fuses the first propagation step (min(id, min neighbour)).
+    *
+    * A probe, the seed's first reader, counts the edges whose far end
+    * holds the smaller label. When there are none, labels are
+    * equal across every edge, each component carries its least id, and
+    * no round could lower a label, so the round is skipped. Disjoint
+    * near-dup pairs, the common case, converge that way. The driver
+    * reads one scalar per round, and not converging within
+    * `spark.graft.cc.maxRounds` is an error: partial labels would be
+    * silently wrong clusters.
+    */
+  private[graft] def componentLabels(edges: DataFrame): DataFrame = {
+    val s = edges.sparkSession
+    // lazy: the probe is the first reader, and AQE materializes the seed
+    // once for both of its branches (persistTracked)
+    var labels: DataFrame = graft.InternalCaches.persistTracked(
+      edges.groupBy(col("src").as("id"))
+        .agg(least(first(col("src")), min(col("dst"))).as("lbl")))
+    val open = {
+      val bySrc = edges.join(labels, edges("src") === labels("id"))
+        .select(col("dst"), col("lbl").as("src_lbl"))
+      bySrc.join(labels, bySrc("dst") === labels("id"))
+        .filter(col("lbl") < col("src_lbl")).count()
+    }
+    val maxRounds = graft.Dials.CcMaxRounds(s)
+    var converged = open == 0
+    var rounds = 0
+    while (!converged && rounds < maxRounds) {
+      val nm = edges.join(labels, edges("dst") === labels("id"))
+        .groupBy(col("src")).agg(min(col("lbl")).as("nbr_lbl"))
+      val jump = labels.select(col("lbl").as("j_id"), col("id").as("via"))
+        .join(labels.withColumnRenamed("lbl", "j_lbl")
+          .withColumnRenamed("id", "j_id2"),
+          col("j_id") === col("j_id2"))
+        .select(col("via").as("id"), col("j_lbl"))
+      // The new label carries its changed flag (labels only decrease), so
+      // convergence needs no comparison join. localCheckpoint cuts the
+      // lineage: the round reads `labels` from four branches, so without
+      // it the plan grows ~4x per round and analysis goes exponential.
+      // The lazy form materializes in the same job as the count.
+      val next = labels.join(nm, labels("id") === nm("src"), "left")
+        .join(jump, Seq("id"), "left")
+        .select(col("id"),
+          least(col("lbl"),
+            least(coalesce(col("nbr_lbl"), col("lbl")),
+              coalesce(col("j_lbl"), col("lbl")))).as("new_lbl"),
+          col("lbl"))
+        .select(col("id"), col("new_lbl").as("lbl"),
+          (col("new_lbl") < col("lbl")).as("chg"))
+        .localCheckpoint(false)
+      val changed = next.filter(col("chg")).count()
+      // rebuilt from the checkpoint's rows: a checkpoint keeps its plan's
+      // size estimate, join estimates multiply their inputs', so the
+      // estimate's digits grew ~4x per round and planning stalled in
+      // BigInt products after about eight rounds
+      val kept = next.select(col("id"), col("lbl"))
+      labels = s.createDataFrame(kept.rdd, kept.schema)
+      converged = changed == 0
+      rounds += 1
+    }
+    require(converged,
+      s"connected components: labels not converged after $maxRounds " +
+        "rounds (raise spark.graft.cc.maxRounds) — partial labels would " +
+        "be silently wrong clusters")
+    labels
   }
 
   /** Cache partition count for the KB-per-row LSH relations (shingle /
@@ -1697,103 +1765,24 @@ object Text {
         .orderBy("doc_id")),
 
     // Cluster-level dedup: connected components over the verified
-    // near-dup pair graph (pairwise dedup keeps BOTH ends of a chain
-    // A~B~C if A~C falls under the threshold; component-level keeps one
-    // doc per transitive cluster — the form production dedup actually
-    // ships). Algorithm: min-label propagation with POINTER JUMPING —
-    // each round a doc's label becomes min(own, neighbors' labels,
-    // label-of-label). The neighbor step alone converges in O(component
-    // diameter) rounds; the label-of-label jump (valid because a label is
-    // always a reachable doc_id, so its label is reachable transitively)
-    // halves remaining path lengths each round, giving O(log diameter) —
-    // a 1000-hop boilerplate chain converges in ~10 rounds, not 1000.
-    // The driver loop is CONTROL PLANE only: per round it reads a single
-    // scalar changed-count (the iterative-algorithm contract GraphX/MLlib
-    // share, not a data collect; the rows stay distributed throughout).
-    // Non-convergence within the conf'd round cap is an ERROR — partial
-    // labels are silently-wrong clusters, never returned.
-    // Output: every document with its cluster id (min doc_id reachable)
-    // and cluster size. Oracle: recursive CTE reachability over the
-    // brute-force pair graph.
+    // near-dup pair graph. Pairwise dedup keeps BOTH ends of a chain
+    // A~B~C when A~C falls under the threshold; component-level keeps one
+    // doc per transitive cluster, the form production dedup ships. Only
+    // docs with an edge iterate ([[componentLabels]]); the rest are
+    // singletons and join back after. Output: every document with its
+    // cluster id (min doc_id reachable) and cluster size. Oracle:
+    // recursive CTE reachability over the brute-force pair graph.
     "dedup_clusters" -> ((s, d) => {
-      // Single-scan symmetrization (r17): the old pairs-cache + two-leg
-      // union read the pair relation from two branches of the first CC
-      // job, which forced an eager (standalone-job) materialization of
-      // the pairs cache. Explode emits both orientations in ONE pass, so
-      // the edge relation is a single-branch map over the LSH pipeline
-      // and can persist LAZILY — the seed count below is its first
-      // reader and populates both caches in one job. Each round's nbrMin
-      // now also scans one cached relation instead of a two-leg union.
+      // one explode emits both orientations in a single pass, so the
+      // edge cache persists lazily: the CC probe populates it and the
+      // seed in one query
       val edges = graft.InternalCaches.persistTracked(
         minhashPairs(s, d)
           .select(explode(array(
             struct(col("a").as("src"), col("b").as("dst")),
             struct(col("b").as("src"), col("a").as("dst")))).as("e"))
           .select(col("e.src").as("src"), col("e.dst").as("dst")))
-      // ONLY docs with at least one near-dup edge iterate — everything
-      // else is a converged singleton by definition and joins back after
-      // the loop. At 100 TB this is the difference between iterating over
-      // the (small) duplicate-graph and re-shuffling the whole corpus
-      // every round. Seed = min(id, min neighbor): the first propagation
-      // round fused into initialization, so disjoint pairs (the common
-      // case) converge with a single verification round.
-      // eager: the round-1 job reads the seed from four branches (nbrMin,
-      // both jump sides, next) — an unpopulated entry would recompute the
-      // seed's full edge shuffle once per branch
-      var labels: DataFrame = graft.InternalCaches.persistTracked(
-        edges.groupBy(col("src").as("id"))
-          .agg(least(first(col("src")), min(col("dst"))).as("lbl")),
-        eager = true)
-      val maxRounds = graft.Dials.CcMaxRounds(s)
-      var converged = false
-      var rounds = 0
-      while (!converged && rounds < maxRounds) {
-        val nbrMin = edges.join(labels, edges("dst") === labels("id"))
-          .groupBy(col("src")).agg(min(col("lbl")).as("nbr_lbl"))
-        val jump = labels.select(col("lbl").as("j_id"),
-          col("id").as("via"))
-          .join(labels.withColumnRenamed("lbl", "j_lbl")
-            .withColumnRenamed("id", "j_id2"),
-            col("j_id") === col("j_id2"))
-          .select(col("via").as("id"), col("j_lbl"))
-        // the new label is carried WITH its changed flag (labels only
-        // ever decrease), so convergence needs no extra comparison join
-        // LINEAGE TRUNCATION (r17, guide §3.3/§7.3 — planning time): the
-        // round plan references `labels` from FOUR branches (nbrMin, both
-        // jump sides, the base), so building round r+1 over round r's
-        // DataFrame grows the logical tree ~4× PER ROUND — Catalyst
-        // transforms re-walk shared subtrees per path, so analyzer cost
-        // and the final plan dump are exponential in rounds (measured:
-        // the sf0.1 final plan was 31,295 formatted lines / 3,685
-        // Exchange reprints after only a handful of rounds; a
-        // 10-round chain would be ~4¹⁰ subtree copies — a dead driver
-        // long before any task launches). localCheckpoint cuts each
-        // round to a constant-size LogicalRDD scan; the lazy form fuses
-        // checkpoint materialization into the SAME job as the
-        // convergence count (1 control job per round, as before).
-        // Block lifecycle: checkpoint blocks (MEMORY_AND_DISK) are freed
-        // by the ContextCleaner once the round's Dataset is unreachable
-        // — the explicit per-round cache unpersist this replaces had the
-        // same goal; rows per round are duplicate-graph-sized, ≪ corpus.
-        val next = labels.join(nbrMin, labels("id") === nbrMin("src"), "left")
-          .join(jump, Seq("id"), "left")
-          .select(col("id"),
-            least(col("lbl"),
-              least(coalesce(col("nbr_lbl"), col("lbl")),
-                coalesce(col("j_lbl"), col("lbl")))).as("new_lbl"),
-            col("lbl"))
-          .select(col("id"), col("new_lbl").as("lbl"),
-            (col("new_lbl") < col("lbl")).as("chg"))
-          .localCheckpoint(false)
-        val changed = next.filter(col("chg")).count()
-        labels = next.select(col("id"), col("lbl"))
-        converged = changed == 0
-        rounds += 1
-      }
-      require(converged,
-        s"dedup_clusters: labels not converged after $maxRounds rounds " +
-          "(raise spark.graft.cc.maxRounds) — partial labels would be " +
-          "silently wrong clusters")
+      val labels = componentLabels(edges)
       // cluster size via a window over lbl: one shuffle, where a
       // groupBy-then-join-back would shuffle the same relation twice
       val clustered = labels

@@ -42,6 +42,14 @@ class PlanSpec extends SparkSpec {
     here
   }
 
+  /** Collect through AQE query stages too, which [[collectAll]] sees as
+    * leaves.
+    */
+  private def stages[T](p: SparkPlan)(pf: PartialFunction[SparkPlan, T])
+      : Seq[T] =
+    new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collectWithSubqueries(p)(pf)
+
   private def planString(name: String): String =
     SparkEntry.queries(name)(spark, sfDir)
       .queryExecution.explainString(
@@ -180,6 +188,51 @@ class PlanSpec extends SparkSpec {
     assert(keyed.nonEmpty,
       "dedup_lsh_ingest: expected the salted probe join keyed " +
         s"(band, bhash, blk), got ${wide.map(_.leftKeys)}")
+  }
+
+  test("LSH band keys are codegen'd: no lambda in any band-key generator") {
+    // a transform() lambda in the band generator runs interpreted per
+    // doc; the keys are a literal array of xxhash64 calls instead. The
+    // dedup_clusters pipeline sits under its caches, so walk those too.
+    def withCaches(p: SparkPlan): Seq[SparkPlan] = p +: stages(p) {
+      case i: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
+        withCaches(i.relation.cachedPlan)
+    }.flatten
+    Seq("dedup_near_minhash", "dedup_ngram_jaccard", "dedup_lsh_ingest",
+        "dedup_clusters").foreach { name =>
+      val gens = withCaches(finalPlan(name)).flatMap(p => stages(p) {
+        case g: org.apache.spark.sql.execution.GenerateExec
+            if g.generator.isInstanceOf[
+              org.apache.spark.sql.catalyst.expressions.PosExplode] => g
+      })
+      InternalCaches.unpersistAll()
+      assert(gens.nonEmpty, s"$name: expected the band-key posexplode")
+      gens.foreach { g =>
+        val lambdas = g.generator.collect {
+          case t: org.apache.spark.sql.catalyst.expressions.ArrayTransform => t
+        }
+        assert(lambdas.isEmpty,
+          s"$name: band-key generator evaluates a lambda: ${g.generator}")
+      }
+    }
+  }
+
+  test("LSH candidate joins run at most one bucket-width aggregation") {
+    // the sampled hot-bucket list is computed once per candidate join and
+    // broadcast as a local relation; a subtree under both join sides ran
+    // its aggregation twice (AQE did not reuse the exchange)
+    Seq("dedup_near_minhash", "dedup_lsh_ingest").foreach { name =>
+      val widthAggs = stages(finalPlan(name)) {
+        case a: org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+            if a.groupingExpressions.map(_.references.map(_.name).toSet)
+              .reduceOption(_ ++ _).contains(Set("band", "bhash")) &&
+              a.aggregateExpressions.forall(_.mode ==
+                org.apache.spark.sql.catalyst.expressions.aggregate.Final) => a
+      }
+      InternalCaches.unpersistAll()
+      assert(widthAggs.size <= 1,
+        s"$name: ${widthAggs.size} bucket-width aggregations in the plan")
+    }
   }
 
   test("dedup_simhash candidates come from the salted 3-key multi-index join") {
