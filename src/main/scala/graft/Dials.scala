@@ -54,11 +54,6 @@ object Dials {
                   doc: String): Dial[Double] =
     dial(key, default, s"a number in [0, $hi]", doc)(
       _.toDoubleOption.filter(v => v >= 0.0 && v <= hi))
-  // strict: these dials flip the plan, so a typo must fail, not read as
-  // the default
-  private def bool(key: String, default: Boolean,
-                   doc: String): Dial[Boolean] =
-    dial(key, default, "true or false", doc)(_.toBooleanOption)
 
   val EstMargin = num("spark.graft.lsh.estMargin", 0.15, 1.0,
     "threshold slack of the signature-estimate prefilter; 1.0 disables it")
@@ -78,24 +73,14 @@ object Dials {
     "dedup_simhash hamming threshold; <= 4 uses the pair-block index")
   val ContainmentMaxDf = int("spark.graft.containment.maxDf", 128,
     "text_containment shingle DF cap for the pair join; 0 disables")
-  val CcMaxRounds = int("spark.graft.cc.maxRounds", 50,
-    "connected-components round cap; not converging is an error")
   val IvfIters = int("spark.graft.ivf.iters", 3,
     "Lloyd iterations of IVF training")
   val IvfNprobe = int("spark.graft.ivf.nprobe", 2,
     "IVF cells probed per vector")
-  val IvfChainDepth = int("spark.graft.ivf.chainDepth", 4,
-    "IVF training rounds one broadcast build may nest", lo = 1)
   val IvfHotCellWidth = int("spark.graft.ivf.hotCellWidth", 4096,
     "IVF cell width past which the cell pair join is salted")
   val IvfCellSaltBlocks = pow2("spark.graft.ivf.cellSaltBlocks", 8,
     "salt-block count for hot IVF cells")
-  val IvfTopkAgg = bool("spark.graft.ivf.topkAgg", true,
-    "rank IVF candidates by bounded top-k aggregation, not a window")
-  val IvfRefineCells = bool("spark.graft.ivf.refineCells", true,
-    "sub-cluster sim_ann_ivf's label cells by the trained quantizer")
-  val NearembExact = bool("spark.graft.nearemb.exact", false,
-    "dedup_near_embedding as the lossless all-pairs sweep")
   val AnnlshProbeEvery = int("spark.graft.annlsh.probeEvery", 13,
     "sim_ann_lsh re-ingests every Nth vector as a clone; 0 disables")
   val TrianglesBloom = dial("spark.graft.triangles.bloom", "auto",

@@ -22,7 +22,7 @@ object GraftSession {
     // writer (InternalCaches.ShuffleBypassKey)
     InternalCaches.ShuffleBypassKey -> InternalCaches.ShuffleBypassValue,
     // one BroadcastExchange build of the IVF lazy round chain can nest
-    // up to `spark.graft.ivf.chainDepth` rounds of corpus compute
+    // up to `Similarity.IvfChainDepth` rounds of corpus compute
     // (Similarity.ivfCentroidsOf); 300 s would time the whole nest
     "spark.sql.broadcastTimeout" -> "3600",
     "spark.sql.session.timeZone" -> "UTC",

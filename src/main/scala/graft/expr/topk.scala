@@ -5,8 +5,9 @@ import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 
 /** Bounded top-k partial aggregation over (score, id) pairs — the
-  * shuffle-thin alternative to the `row_number().over(partitionBy(q)
-  * .orderBy(score desc, id))` window the ANN consumers rank with.
+  * shuffle-thin form of a `row_number().over(partitionBy(q)
+  * .orderBy(score desc, id))` rank cut at k. The IVF keys rank through
+  * it (`Similarity.topK3`).
   *
   * Why it exists (r12): the window form must SHUFFLE the full candidate
   * stream and SORT every partition of it — at the sf10 decade,
@@ -17,10 +18,8 @@ import org.apache.spark.sql.expressions.Aggregator
   * buffer per group, so the exchange carries ~k rows per query instead
   * of the whole stream, and nothing is ever sorted but k+1-element
   * buffers. Selection order is EXACTLY the window's — (score desc, id
-  * asc) — so the two plans are output-identical row for row; the
-  * equality law in AccuracySpec pins that on the real fixture, and the
-  * consumer keeps the conf-gated window form as the default until a
-  * full oracle round blesses the flip.
+  * asc) — so the two are output-identical row for row; AccuracySpec
+  * pins that on the real fixture and on random streams.
   *
   * The buffer is a sorted Seq capped at k (k ≤ 16 guarded: this is a
   * top-FEW operator; a large k wants a heap, not an insertion sort).
@@ -50,9 +49,11 @@ case class TopKByScore(k: Int)
   // pairs (ids are unique per group). Double.compare, not raw >: Spark's
   // sort ranks NaN as the largest double (first under desc), and a raw >
   // would never rank a NaN score — the two row-for-row-identical plans
-  // would silently diverge on a NaN (e.g. a zero-norm cosine) input
+  // would silently diverge on a NaN (e.g. a zero-norm cosine) input.
+  // `+ 0.0` turns -0.0 into 0.0: Spark's sort ties them, Double.compare
+  // does not
   private def beats(a: (Double, Long), b: (Double, Long)): Boolean = {
-    val c = java.lang.Double.compare(a._1, b._1)
+    val c = java.lang.Double.compare(a._1 + 0.0, b._1 + 0.0)
     c > 0 || (c == 0 && a._2 < b._2)
   }
 

@@ -20,25 +20,17 @@ import graft.Tables._
   *    ([[ProbeCount]] queries) against the full corpus. The probe side is
   *    broadcast and stays constant-size as the corpus grows; the corpus
   *    never shuffles and the pair stream is O(q·n) — linear in n.
-  *  - `dedup_near_embedding`: DEFAULT (r10) is trained-IVF cell
-  *    blocking ([[nearDupBlocked]]) — candidates share a probed cell,
-  *    pair work is O(n^1.5) under the √n cell sizing, and the oracle
-  *    replays the identical pipeline so the gate stays hash-exact.
-  *    `spark.graft.nearemb.exact=true` restores the lossless all-pairs
-  *    sweep: a triangular block decomposition ([[blockedPairs]])
-  *    shuffles each row to its block-pair tasks, so no unbounded
-  *    broadcast exists and no single task owns the pair space — but the
-  *    pair stream is n²/2 by definition, affordable only below cluster
-  *    scale.
+  *  - `dedup_near_embedding` is trained-IVF cell blocking
+  *    ([[nearDupBlocked]]) — candidates share a probed cell, pair work
+  *    is O(n^1.5) under the √n cell sizing, and the oracle replays the
+  *    identical pipeline so the gate stays hash-exact.
   *  - `sim_ann_ivf` restricts the search to the query's own cell (here:
   *    the pre-assigned `label`, standing in for a nearest-centroid
-  *    assignment computed at ingest) — and, by DEFAULT since r11,
-  *    sub-clusters every label cell with the trained √n-cell quantizer
-  *    ([[refinedIvfPairs]]): the join key is (label, quantizer cell), so
-  *    pair work is Σ|label ∩ cell|² instead of the fixed-vocabulary
-  *    Ω(n²/|labels|). One hash shuffle on the composite cell key
-  *    co-locates each cell. `spark.graft.ivf.refineCells=false` keeps
-  *    the exact label-only join as the small-corpus demonstrator.
+  *    assignment computed at ingest), sub-clustered by the trained
+  *    √n-cell quantizer ([[refinedIvfPairs]]): the join key is (label,
+  *    quantizer cell), so pair work is Σ|label ∩ cell|² instead of the
+  *    fixed-vocabulary Ω(n²/|labels|). One hash shuffle on the
+  *    composite cell key co-locates each cell.
   *  - `sim_ann_lsh` buckets by hyperplane-sign bands and shares the
   *    hot-bucket-salted band self-join with the text dedups.
   */
@@ -54,17 +46,16 @@ object Similarity {
     */
   private val ProbeCount = 100
 
-  /** Blocks for the exact all-pairs decomposition (POWER OF TWO — the
-    * block id is a bitmask of xxhash64): pair work spreads over
-    * blocks·(blocks+1)/2 shuffle tasks at a ≤ (blocks+1)× replication
-    * cost.
-    */
-  private val PairBlocks = 8
-
   /** Probed cells per vector in `dedup_near_embedding`'s blocked plan —
     * the oracle replays this value.
     */
   private val NearEmbNprobe = 3
+
+  /** IVF training rounds one broadcast build may nest before
+    * [[ivfCentroidsOf]] materializes a generation mid-chain. 4 keeps the
+    * default iters = 3 chain free of mid-chain counts.
+    */
+  private val IvfChainDepth = 4
 
   /** `sim_ann_lsh`'s combined 128-bit hamming cut: clone pairs measure
     * 8–14, random pairs concentrate at 64 ± 5.7.
@@ -96,43 +87,8 @@ object Similarity {
   // DuckDB's binary rounding can split on a representable half-boundary
   // (this file measured the mechanism on the int8 scale at 3.85e-7) —
   // the floor spelling is the identical IEEE expression on both engines
-  private def cosine(av: Column, bv: Column, an: Column, bn: Column): Column =
+  private[graft] def cosine(av: Column, bv: Column, an: Column, bn: Column): Column =
     floor(graft.expr.VectorExprs.dot(av, bv) / (an * bn) * 1e4 + 0.5) / 1e4
-
-  /** Every unordered vector pair exactly once, via triangular block
-    * decomposition — the distributed form of an exact all-pairs sweep.
-    * Each row gets a deterministic block `blk = xxhash64(vec_id) &
-    * (PairBlocks-1)`; a pair with blocks (a ≤ b) is produced by the one
-    * shuffle task keyed (a, b): the x-side replicates a row with block r
-    * to tags (r, j) for j ≥ r, the y-side to tags (i, r) for i ≤ r.
-    * Same-block pairs surface in both orientations — callers normalize
-    * with least/greatest + distinct (cosine is symmetric, so the measure
-    * is identical either way). No broadcast anywhere: both sides shuffle
-    * on the (pi, pj) tag, so the plan survives a corpus that dwarfs
-    * executor memory.
-    */
-  private[graft] def blockedPairs(v: DataFrame): DataFrame = {
-    val tagged = v.withColumn("blk",
-      xxhash64(col("vec_id")).bitwiseAND(lit(PairBlocks - 1)).cast("int"))
-    val x = tagged.select(col("vec_id"), col("v"), col("nrm"),
-      col("blk").as("pi"),
-      explode(sequence(col("blk"), lit(PairBlocks - 1))).as("pj"))
-    val y = tagged.select(col("vec_id").as("nbr_id"), col("v").as("bv"),
-      col("nrm").as("bn"),
-      explode(sequence(lit(0), col("blk"))).as("pi"),
-      col("blk").as("pj"))
-    // shuffle-strategy pin: enforces the "no broadcast anywhere"
-    // contract above against AQE's runtime conversion — a vector-payload
-    // side near the adaptive threshold otherwise becomes a
-    // single-threaded driver-built broadcast (the jstack-caught
-    // dedup_simhash sf1 cliff, ops/blocking.scala Blocking.candidates)
-    x.as("x").hint("shuffle_merge").join(y.as("y"),
-        col("x.pi") === col("y.pi") && col("x.pj") === col("y.pj") &&
-        col("x.vec_id") =!= col("y.nbr_id"))
-      .select(col("x.vec_id").as("vec_id"), col("x.v").as("v"),
-        col("x.nrm").as("nrm"), col("y.nbr_id").as("nbr_id"),
-        col("y.bv").as("bv"), col("y.bn").as("bn"))
-  }
 
   /** IVF index TRAINING — Lloyd's k-means over DataFrames, producing the
     * nearest-centroid cell assignment `sim_ann_ivf` consumes as a given.
@@ -241,18 +197,15 @@ object Similarity {
     // BroadcastExchange build recursively computes every unmaterialized
     // earlier round — a full corpus scan + K·dim shuffle each — and
     // `spark.sql.broadcastTimeout` (default 300 s) times the WHOLE nest.
-    // A mid-chain count() every `chainDepth` rounds materializes that
-    // generation's cache, so no single broadcast build ever covers more
-    // than chainDepth rounds of compute. The per-generation persists
+    // A mid-chain count() every [[IvfChainDepth]] rounds materializes
+    // that generation's cache, so no single broadcast build ever covers
+    // more than that many rounds of compute. The per-generation persists
     // below are what make this effective (and retries cheap): each K-row
     // cache write costs ~nothing, but is the checkpoint a mid-count (or
     // a task retry) lands on — that is why intermediates stay persisted
     // even though each is read exactly once on the happy path. The
     // engine's GraftSession also raises broadcastTimeout;
     // library callers with huge corpora should do one or the other.
-    // Default 4 keeps the declared iters=3 chain mid-count-free — job
-    // count and fixture plans unchanged from r16.
-    val chainDepth = graft.Dials.IvfChainDepth(v.sparkSession)
     (1 to iters).foreach { i =>
       val upd = assignCells(v, cents)
         .select(col("cell").as("cid"), posexplode(col("v")))
@@ -263,7 +216,7 @@ object Similarity {
           col("m")))), x => x.getField("m")).as("c"))
       stale += cents
       cents = graft.InternalCaches.persistTracked(upd)
-      if (i % chainDepth == 0 && i < iters) cents.count(): Unit
+      if (i % IvfChainDepth == 0 && i < iters) cents.count(): Unit
     }
     // one materializing action for the chain tail; consumers then read a
     // populated final relation from every task (the return contract)
@@ -299,9 +252,7 @@ object Similarity {
     * partition of the sphere can separate θ ≈ 60° pairs from noise, so
     * blocking there trades recall for the n^1.5 envelope — measured
     * 122/144 at sf0.1 with nprobe = 3, and every exact pair recovered
-    * at the sf0.01 gate. `spark.graft.nearemb.exact=true` restores the
-    * lossless all-pairs sweep ([[blockedPairs]]) when the corpus is
-    * small enough to afford it.
+    * at the sf0.01 gate.
     *
     * A candidate pair sharing several probed cells is produced once per
     * shared cell; the rounded cosine is identical on every copy, so the
@@ -310,7 +261,6 @@ object Similarity {
     */
   private[graft] def nearDupBlocked(v: DataFrame, cents: DataFrame,
       nprobe: Int, threshold: Double): DataFrame = {
-    val p = v.sparkSession.sparkContext.defaultParallelism
     // persisted EAGERLY: both sides of the candidate self-join read the
     // scored relation inside one action — unpopulated, the K-centroid
     // scoring projection (and the cached k-means lineage above it)
@@ -372,7 +322,7 @@ object Similarity {
           .otherwise(array(lit(0)))).as("ypi"),
       col("blk").as("ypj"))
     // corpus-sized vector relations on both sides — shuffle pin
-    // (broadcast-cliff hazard, see blockedPairs)
+    // (broadcast-cliff hazard, see Blocking.candidates)
     // Cold cells keep the old one-orientation a < b predicate (each
     // pair enumerated once); hot cells must use ≠ — the triangle
     // pairs an (a, b) in whichever orientation matches the block
@@ -420,65 +370,8 @@ object Similarity {
     // the DuckDB side replays the k-means rounds then the probe+rank
     // stage; the planted-clone recall law in AccuracySpec remains the
     // end-to-end accuracy pin.
-    "sim_ann_ivf_trained" -> ((s, d) => {
-      val p = s.sparkContext.defaultParallelism
-      val nprobe = graft.Dials.IvfNprobe(s)
-      // ONE map-only scoring pass feeds both sides: scores[0] is the
-      // index cell, the front slice is the probe set (nearest first,
-      // ties broken by cid — deterministic). Persisted because the index
-      // and probe branches both read it; uncached, the k-means rounds'
-      // cached lineage would still re-score per branch. Top-nprobe
-      // slice only (see nearDupBlocked — the full k ∝ √n array is a
-      // measured cache bomb at sf100 and nothing downstream reads past
-      // the slice).
-      val scored = graft.InternalCaches.persistTracked(
-        scoredVecs(vecs(s, d).select(col("vec_id"), col("v"), col("nrm")),
-          ivfCentroids(s, d))
-          .withColumn("sc", slice(col("sc"), 1, math.max(nprobe, 1))),
-        eager = true)
-      val probes = scored
-        .select(col("vec_id"), col("v"), col("nrm"),
-          probeCellCol(nprobe).as("pcell"))
-        .repartition(p, col("pcell"))
-      val index = scored.select(
-        col("sc").getItem(0).getField("cid").as("bcell"),
-        col("vec_id").as("nbr_id"), col("v").as("bv"), col("nrm").as("bn"))
-      val w = Window.partitionBy(col("vec_id"))
-        .orderBy(col("cos").desc, col("nbr_id"))
-      // probes and index are both the full vector corpus — pinned
-      // shuffle_hash, build on the 1-row/vec index side (broadcast-cliff
-      // hazard, see blockedPairs; sort-free, cell keys are coarse)
-      val cand = probes.join(index.hint("shuffle_hash"),
-          col("pcell") === col("bcell")
-          && col("vec_id") =!= col("nbr_id"))
-        .select(col("vec_id"), col("nbr_id"),
-          cosine(col("v"), col("bv"), col("nrm"), col("bn")).as("cos"))
-      // The bounded top-k partial aggregation (graft.expr.TopKByScore)
-      // is the DEFAULT ranking plan since r13 (the r12 verdict's
-      // blessing item): output-identical to the rank window by the
-      // shared (cos desc, nbr_id) total order — AccuracySpec's equality
-      // law — but the exchange carries ≤ 3 rows per query instead of
-      // the whole nprobe·√n-per-query candidate stream (~1.8e8 rows at
-      // sf10, a ~300× exchange cut measured in BASELINE.md's r12
-      // section), and nothing sorts but 4-element buffers.
-      // spark.graft.ivf.topkAgg=false keeps the window form as the
-      // demonstrator.
-      if (graft.Dials.IvfTopkAgg(s)) {
-        val topk = udaf(graft.expr.TopKByScore(3),
-          org.apache.spark.sql.catalyst.encoders
-            .ExpressionEncoder[(Double, Long)]())
-        cand.groupBy(col("vec_id"))
-          .agg(topk(col("cos"), col("nbr_id")).as("tk"))
-          .select(col("vec_id"), posexplode(col("tk")))
-          .select(col("vec_id"), (col("pos") + 1).as("rn"),
-            col("col._2").as("nbr_id"), col("col._1").as("cos"))
-          .orderBy("vec_id", "rn")
-      } else cand
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 3)
-        .select(col("vec_id"), col("rn"), col("nbr_id"), col("cos"))
-        .orderBy("vec_id", "rn")
-    }),
+    "sim_ann_ivf_trained" -> ((s, d) =>
+      topK3(ivfTrainedCandidates(s, d), col("vec_id"))),
 
     // Brute-force top-5 cosine neighbors for each of the ProbeCount probe
     // vectors. The probe side is broadcast (bounded by construction — the
@@ -547,36 +440,20 @@ object Similarity {
     }),
 
     // Embedding-cosine near-dup: pairs whose rounded cosine clears the
-    // threshold. DEFAULT plan (r10) = trained-IVF cell blocking
-    // ([[nearDupBlocked]]): candidates share one of their nprobe = 3
-    // probed cells, so pair work is O(n^1.5) under the √n cell sizing
-    // instead of the exact sweep's n²/2 — the only plan that survives a
-    // 100 TB corpus. The oracle replays the identical k-means + probe +
-    // pair pipeline in SQL (same ivfReplayCtes as the other trained-IVF
-    // keys), so the gate is hash-exact BY CONSTRUCTION at any sf; the
-    // recall-vs-exact contract (clones never lost; moderate-cos pairs
-    // best-effort — all 14 exact pairs recovered at sf0.01) is pinned
-    // in AccuracySpec. `spark.graft.nearemb.exact=true` restores the
-    // lossless all-pairs triangular block sweep ([[blockedPairs]]) —
-    // NOTE the oracle pins the DEFAULT blocked plan, so with the conf
-    // set the Spark output is a SUPERSET of the oracle's wherever
-    // blocking loses a moderate-cos pair (first divergence: sf0.1,
-    // 144 vs 122 rows): the conf is a user escape hatch, not a
-    // gate-compatible mode. Filter on the ROUNDED value either way so
-    // both engines cut on identical numbers.
-    "dedup_near_embedding" -> ((s, d) =>
-      if (graft.Dials.NearembExact(s))
-        blockedPairs(vecs(s, d))
-          .select(col("vec_id"), col("nbr_id"),
-            cosine(col("v"), col("bv"), col("nrm"), col("bn")).as("cos"))
-          .filter(col("cos") >= 0.45)
-          .select(least(col("vec_id"), col("nbr_id")).as("a"),
-            greatest(col("vec_id"), col("nbr_id")).as("b"), col("cos"))
-          .distinct()
-          .orderBy("a", "b")
-      else nearDupBlocked(
-        vecs(s, d).select(col("vec_id"), col("v"), col("nrm")),
-        ivfCentroids(s, d), NearEmbNprobe, 0.45)),
+    // threshold, through trained-IVF cell blocking ([[nearDupBlocked]]):
+    // candidates share one of their nprobe = 3 probed cells, so pair
+    // work is O(n^1.5) under the √n cell sizing instead of an exact
+    // sweep's n²/2 — the only plan that survives a 100 TB corpus. The
+    // oracle replays the identical k-means + probe + pair pipeline in
+    // SQL (same ivfReplayCtes as the other trained-IVF keys), so the
+    // gate is hash-exact BY CONSTRUCTION at any sf; the recall-vs-exact
+    // contract (clones never lost; moderate-cos pairs best-effort — all
+    // 14 exact pairs recovered at sf0.01) is pinned in AccuracySpec.
+    // The filter cuts on the ROUNDED value so both engines cut on
+    // identical numbers.
+    "dedup_near_embedding" -> ((s, d) => nearDupBlocked(
+      vecs(s, d).select(col("vec_id"), col("v"), col("nrm")),
+      ivfCentroids(s, d), NearEmbNprobe, 0.45)),
 
     // LSH-bucketed ANN — the hash-based alternative to the IVF cell
     // restriction: a 64-bit hyperplane sign sketch per vector (codegen'd,
@@ -736,59 +613,17 @@ object Similarity {
     // IVF-style ANN restricted to the query's own cell (label), top-3
     // per query. The label vocabulary is FIXED, so a plain within-label
     // self-join is Ω(n²/|labels|) as n grows — measured 13.5× cost on
-    // 10× data at sf1, the one remaining scale-killer default after r10.
-    // The DEFAULT is therefore [[refinedIvfPairs]] (r11, the r10 verdict's
-    // item 3): every label cell is sub-clustered by the trained √n-cell
-    // quantizer, the join key becomes (label, quantizer cell), and pair
-    // work shrinks by ~k× at a bounded recall cost (multi-probe on the
-    // query side; candidates stay a SUBSET of the label cell, which
-    // AccuracySpec pins along with the pair-count bound). The oracle
-    // replays the refined pipeline, so the gate stays rows+schema+hash.
-    // `spark.graft.ivf.refineCells=false` keeps the exact label-only
-    // self-join as the explicit small-corpus demonstrator.
-    "sim_ann_ivf" -> ((s, d) => {
-      val p = s.sparkContext.defaultParallelism
-      val w = Window.partitionBy(col("vec_id"))
-        .orderBy(col("cos").desc, col("nbr_id"))
-      val pairs =
-        if (!graft.Dials.IvfRefineCells(s)) {
-          val a = vecs(s, d).repartition(p, col("label"))
-          val b = vecs(s, d).select(col("label").as("blabel"),
-            col("vec_id").as("nbr_id"), col("v").as("bv"),
-            col("nrm").as("bn"))
-          a.join(b, col("label") === col("blabel")
-              && col("vec_id") =!= col("nbr_id"))
-            .select(col("vec_id"), col("label"), col("nbr_id"),
-              cosine(col("v"), col("bv"), col("nrm"), col("bn")).as("cos"))
-        } else
-          refinedIvfPairs(s, d, graft.Dials.IvfNprobe(s))
-      // Ranking: the bounded TopKByScore aggregation, same default and
-      // same dial as sim_ann_ivf_trained (spark.graft.ivf.topkAgg;
-      // output-identical to the window by the shared (cos desc, nbr_id)
-      // total order — AccuracySpec's equality law). The window form
-      // SORTS the whole candidate stream: at the sf100 probe that is
-      // ~1.6e9 rows (2 M vectors × ~800-wide refined cells) and the
-      // rank sort's spill alone exceeded the probe box's disk
-      // (SPILL_OUT_OF_MEMORY: No space left on device) — the exact
-      // failure mode TopKByScore exists to delete. label rides the
-      // grouping key (functionally dependent on vec_id).
-      if (graft.Dials.IvfTopkAgg(s)) {
-        val topk = udaf(graft.expr.TopKByScore(3),
-          org.apache.spark.sql.catalyst.encoders
-            .ExpressionEncoder[(Double, Long)]())
-        pairs.groupBy(col("vec_id"), col("label"))
-          .agg(topk(col("cos"), col("nbr_id")).as("tk"))
-          .select(col("vec_id"), col("label"), posexplode(col("tk")))
-          .select(col("vec_id"), col("label"), (col("pos") + 1).as("rn"),
-            col("col._2").as("nbr_id"), col("col._1").as("cos"))
-          .orderBy("vec_id", "rn")
-      } else pairs
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 3)
-        .select(col("vec_id"), col("label"), col("rn"), col("nbr_id"),
-          col("cos"))
-        .orderBy("vec_id", "rn")
-    }),
+    // 10× data at sf1. [[refinedIvfPairs]] therefore sub-clusters every
+    // label cell by the trained √n-cell quantizer: the join key becomes
+    // (label, quantizer cell), and pair work shrinks by ~k× at a bounded
+    // recall cost (multi-probe on the query side; candidates stay a
+    // SUBSET of the label cell, which AccuracySpec pins along with the
+    // pair-count bound). The oracle replays the refined pipeline, so the
+    // gate stays rows+schema+hash. label rides the ranking's grouping
+    // key (functionally dependent on vec_id).
+    "sim_ann_ivf" -> ((s, d) =>
+      topK3(refinedIvfPairs(s, d, graft.Dials.IvfNprobe(s)),
+        col("vec_id"), col("label"))),
 
     // INT8 symmetric per-vector quantization of the embedding column —
     // the 4× memory/IO compression a 100 TB ANN index runs on (float32
@@ -841,9 +676,67 @@ object Similarity {
         .withColumn("vq", slice(col("v"), 1, 16))))
   )
 
-  /** Refined-cell candidate stream for `sim_ann_ivf` (the DEFAULT since
-    * r11; `spark.graft.ivf.refineCells=false` restores the exact
-    * label-only join as the demonstrator): every label cell is
+  /** `sim_ann_ivf_trained`'s candidate stream `(vec_id, nbr_id, cos)`,
+    * pre-ranking: each query probes its `spark.graft.ivf.nprobe` nearest
+    * trained centroids, the index posts each vector in its argmin cell.
+    */
+  private[graft] def ivfTrainedCandidates(s: SparkSession,
+      d: String): DataFrame = {
+    val p = s.sparkContext.defaultParallelism
+    val nprobe = graft.Dials.IvfNprobe(s)
+    // ONE map-only scoring pass feeds both sides: scores[0] is the
+    // index cell, the front slice is the probe set (nearest first,
+    // ties broken by cid — deterministic). Persisted because the index
+    // and probe branches both read it; uncached, the k-means rounds'
+    // cached lineage would still re-score per branch. Top-nprobe
+    // slice only (see nearDupBlocked — the full k ∝ √n array is a
+    // measured cache bomb at sf100 and nothing downstream reads past
+    // the slice).
+    val scored = graft.InternalCaches.persistTracked(
+      scoredVecs(vecs(s, d).select(col("vec_id"), col("v"), col("nrm")),
+        ivfCentroids(s, d))
+        .withColumn("sc", slice(col("sc"), 1, math.max(nprobe, 1))),
+      eager = true)
+    val probes = scored
+      .select(col("vec_id"), col("v"), col("nrm"),
+        probeCellCol(nprobe).as("pcell"))
+      .repartition(p, col("pcell"))
+    val index = scored.select(
+      col("sc").getItem(0).getField("cid").as("bcell"),
+      col("vec_id").as("nbr_id"), col("v").as("bv"), col("nrm").as("bn"))
+    // probes and index are both the full vector corpus — pinned
+    // shuffle_hash, build on the 1-row/vec index side (broadcast-cliff
+    // hazard, see Blocking.candidates; sort-free, cell keys are coarse)
+    probes.join(index.hint("shuffle_hash"),
+        col("pcell") === col("bcell")
+        && col("vec_id") =!= col("nbr_id"))
+      .select(col("vec_id"), col("nbr_id"),
+        cosine(col("v"), col("bv"), col("nrm"), col("bn")).as("cos"))
+  }
+
+  /** Top-3 neighbours per query of a `(keys…, nbr_id, cos)` candidate
+    * stream as `(keys…, rn, nbr_id, cos)`, sorted by (query, rn). The
+    * first key is the query id; any further key must be functionally
+    * dependent on it. Ranks by (cos desc, nbr_id) through the bounded
+    * [[graft.expr.TopKByScore]] aggregate: its exchange carries ≤ 3
+    * rows per query, where a rank window would shuffle and sort the
+    * whole stream — ~1.8e8 rows at sf10 for `sim_ann_ivf_trained`, and
+    * at the sf100 probe `sim_ann_ivf`'s ~1.6e9-row rank sort spilled
+    * past the box's disk.
+    */
+  private[graft] def topK3(pairs: DataFrame, keys: Column*): DataFrame = {
+    val topk = udaf(graft.expr.TopKByScore(3),
+      org.apache.spark.sql.catalyst.encoders
+        .ExpressionEncoder[(Double, Long)]())
+    pairs.groupBy(keys: _*)
+      .agg(topk(col("cos"), col("nbr_id")).as("tk"))
+      .select(keys :+ posexplode(col("tk")): _*)
+      .select(keys ++ Seq((col("pos") + 1).as("rn"),
+        col("col._2").as("nbr_id"), col("col._1").as("cos")): _*)
+      .orderBy(keys.head, col("rn"))
+  }
+
+  /** Refined-cell candidate stream for `sim_ann_ivf`: every label cell is
     * sub-clustered by the TRAINED quantizer ([[ivfCentroidsOf]] over the
     * whole corpus — one model, reused across labels), so candidate pairs
     * must share (label, quantizer cell) instead of just the label. The
@@ -855,8 +748,7 @@ object Similarity {
     * and the pair-count shrink), and within-refined-cell pair work is
     * Σ|label ∩ cell|² ≈ n²·nprobe/(|labels|·k) — the k× cut that keeps
     * the fixed label vocabulary from going Ω(n²/|labels|) as n grows.
-    * Returned columns match the plain branch: (vec_id, label, nbr_id,
-    * cos), pre-ranking.
+    * Returns (vec_id, label, nbr_id, cos), pre-ranking.
     */
   private[graft] def refinedIvfPairs(s: SparkSession, d: String,
       nprobe: Int): DataFrame = {
@@ -875,7 +767,7 @@ object Similarity {
       col("vec_id").as("nbr_id"), col("v").as("bv"), col("nrm").as("bn"))
     // both refined-cell sides carry the full vector corpus — pinned
     // shuffle_hash, build on the 1-row/vec index side (broadcast-cliff
-    // hazard, see blockedPairs)
+    // hazard, see Blocking.candidates)
     a.join(b.hint("shuffle_hash"), col("label") === col("blabel")
         && col("pcell") === col("bcell")
         && col("vec_id") =!= col("nbr_id"))
@@ -1123,9 +1015,9 @@ object Similarity {
     // same unrolled k-means rounds, probes = the nprobe = 2 nearest
     // trained centroids per vector (rn ≤ 2 of the d²-then-cid ranking),
     // index = the argmin cell (rn = 1), candidates restricted to
-    // label ∧ quantizer-cell agreement, DISTINCT before ranking exactly
-    // as the Spark side (a neighbor reachable through both probed cells
-    // must rank once).
+    // label ∧ quantizer-cell agreement, then ranked. The DISTINCT is a
+    // no-op: a pair meets at most once, at the neighbor's one index
+    // cell, which is why the Spark side runs none (see refinedIvfPairs).
     "sim_ann_ivf" ->
       (ivfReplayCtes +
       """ap AS (SELECT vec_id, v, cid AS cell, rn FROM (

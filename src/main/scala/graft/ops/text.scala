@@ -664,6 +664,11 @@ object Text {
     lshJaccardPairs(sh, 0.5, Blocking.adaptiveHotWidth(s, d))
   }
 
+  /** Round cap of [[componentLabels]]. Pointer jumping needs about
+    * log2(diameter) rounds, so 50 never binds on a real component.
+    */
+  private val CcMaxRounds = 50
+
   /** Connected components of a symmetric `(src, dst)` edge relation as
     * `(id, lbl)`: every vertex with an edge, labelled with the least id
     * of its component.
@@ -680,8 +685,8 @@ object Text {
     * no round could lower a label, so the round is skipped. Disjoint
     * near-dup pairs, the common case, converge that way. The driver
     * reads one scalar per round, and not converging within
-    * `spark.graft.cc.maxRounds` is an error: partial labels would be
-    * silently wrong clusters.
+    * [[CcMaxRounds]] is an error: partial labels would be silently wrong
+    * clusters.
     */
   private[graft] def componentLabels(edges: DataFrame): DataFrame = {
     val s = edges.sparkSession
@@ -696,10 +701,9 @@ object Text {
       bySrc.join(labels, bySrc("dst") === labels("id"))
         .filter(col("lbl") < col("src_lbl")).count()
     }
-    val maxRounds = graft.Dials.CcMaxRounds(s)
     var converged = open == 0
     var rounds = 0
-    while (!converged && rounds < maxRounds) {
+    while (!converged && rounds < CcMaxRounds) {
       val nm = edges.join(labels, edges("dst") === labels("id"))
         .groupBy(col("src")).agg(min(col("lbl")).as("nbr_lbl"))
       val jump = labels.select(col("lbl").as("j_id"), col("id").as("via"))
@@ -733,9 +737,9 @@ object Text {
       rounds += 1
     }
     require(converged,
-      s"connected components: labels not converged after $maxRounds " +
-        "rounds (raise spark.graft.cc.maxRounds) — partial labels would " +
-        "be silently wrong clusters")
+      s"connected components: labels not converged after CcMaxRounds = " +
+        s"$CcMaxRounds rounds — partial labels would be silently wrong " +
+        "clusters")
     labels
   }
 

@@ -1,12 +1,48 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test}
 
 /** Accuracy bounds for the approximate operators (SURVEY.md §2.3 ◐ rows):
   * the sketch result must sit within its declared error of the exact
   * answer — the check the driver's oracle can't do (no_oracle by design).
   */
 class AccuracySpec extends SparkSpec {
+
+  /** The reference ranking for `Similarity.topK3`: a `row_number` window
+    * over (cos desc, nbr_id) per query, cut at 3, in the helper's
+    * (query, rn) order.
+    */
+  private def windowTop3(pairs: DataFrame, keys: Column*): DataFrame =
+    pairs
+      .withColumn("rn", row_number().over(Window.partitionBy(keys.head)
+        .orderBy(col("cos").desc, col("nbr_id"))))
+      .filter(col("rn") <= 3)
+      .select(keys ++ Seq(col("rn"), col("nbr_id"), col("cos")): _*)
+      .orderBy(keys.head, col("rn"))
+
+  /** (vec_id, label, v, nrm) as the similarity keys widen embeddings:
+    * float → double, norm by the same codegen'd dot.
+    */
+  private def widened(dir: String): DataFrame =
+    Tables.embeddings(spark, dir).filter(col("embedding").isNotNull)
+      .select(col("vec_id"), col("label"),
+        transform(col("embedding"), x => x.cast("double")).as("v"))
+      .withColumn("nrm",
+        sqrt(graft.expr.VectorExprs.dot(col("v"), col("v"))))
+
+  /** Every pair of `widened(dir)` meeting `on`, with the operators'
+    * rounded cosine as (vec_id, nbr_id, cos).
+    */
+  private def allPairs(dir: String, on: Column): DataFrame = {
+    val v = widened(dir)
+    v.as("x").join(v.as("y"), on)
+      .select(col("x.vec_id").as("vec_id"), col("y.vec_id").as("nbr_id"),
+        ops.Similarity.cosine(col("x.v"), col("y.v"), col("x.nrm"),
+          col("y.nrm")).as("cos"))
+  }
 
   test("sim_ann_lsh recall law: planted near-dups surface at rank 1") {
     import spark.implicits._
@@ -88,18 +124,17 @@ class AccuracySpec extends SparkSpec {
 
   test("sim_ann_ivf_trained topkAgg plan: output-identical to the rank " +
     "window, row for row") {
-    // the bounded top-k aggregate (graft.expr.TopKByScore, the DEFAULT
-    // since r13) must select EXACTLY the window form's rows — same
-    // (cos desc, nbr_id) order, same rn assignment — on the real
+    // the bounded top-k aggregate (graft.expr.TopKByScore, through
+    // Similarity.topK3) must select EXACTLY the window form's rows —
+    // same (cos desc, nbr_id) order, same rn assignment — on the real
     // fixture, where cos ties across identical-embedding duplicates
-    // exercise the tie-break path.
-    val name = "sim_ann_ivf_trained"
-    val agg = SparkEntry.queries(name)(spark, sfDir)
-      .collect().map(_.toSeq).toSeq
-    InternalCaches.unpersistAll()
-    spark.conf.set("spark.graft.ivf.topkAgg", "false")
+    // exercise the tie-break path. Both rank the key's own candidate
+    // stream.
     try {
-      val window = SparkEntry.queries(name)(spark, sfDir)
+      val cand = ops.Similarity.ivfTrainedCandidates(spark, sfDir)
+      val agg = ops.Similarity.topK3(cand, col("vec_id"))
+        .collect().map(_.toSeq).toSeq
+      val window = windowTop3(cand, col("vec_id"))
         .collect().map(_.toSeq).toSeq
       assert(agg.size == window.size,
         s"row counts differ: ${agg.size} vs ${window.size}")
@@ -107,10 +142,39 @@ class AccuracySpec extends SparkSpec {
         val diff = agg.zip(window).find { case (a, b) => a != b }
         s"first divergence: $diff"
       })
-    } finally {
-      spark.conf.unset("spark.graft.ivf.topkAgg")
-      InternalCaches.unpersistAll()
+    } finally InternalCaches.unpersistAll()
+  }
+
+  test("topK3 equals the rank window on random streams: cos ties, NaN, " +
+    "groups under 3 rows, both key shapes") {
+    // Spark's sort ranks NaN above every double (first under desc) and
+    // ties -0.0 with 0.0, the order TopKByScore.beats must keep; a small
+    // cos vocabulary forces ties onto the nbr_id tie-break, and a query
+    // range wider than the stream leaves groups of one or two rows
+    import spark.implicits._
+    val genCos = Gen.frequency(
+      4 -> Gen.oneOf(0.5, 0.25, 0.9, -0.1, 0.0, -0.0),
+      1 -> Gen.const(Double.NaN),
+      3 -> Gen.chooseNum(-1.0, 1.0).map(x => math.floor(x * 1e4 + 0.5) / 1e4))
+    val genStream = Gen.chooseNum(0, 60).flatMap(n => Gen.listOfN(n,
+        Gen.zip(Gen.chooseNum(0L, 12L), genCos, Gen.chooseNum(0L, 20L))))
+      // ids are unique per query, the aggregate's total-order contract
+      .map(_.groupBy(r => (r._1, r._3)).values.map(_.head).toSeq)
+    val law = Prop.forAll(genStream) { stream =>
+      val pairs = stream.toDF("vec_id", "cos", "nbr_id")
+        .withColumn("label", (col("vec_id") % 3).cast("int"))
+      Prop.all(Seq(Seq(col("vec_id")), Seq(col("vec_id"), col("label")))
+        .map { keys =>
+          val got = ops.Similarity.topK3(pairs, keys: _*).collect().toSeq
+          val want = windowTop3(pairs, keys: _*).collect().toSeq
+          // Row equality: NaN equals NaN
+          Prop(got == want) :|
+            s"keys=${keys.mkString(",")} got=$got want=$want"
+        }: _*)
     }
+    val res = Test.check(
+      Test.Parameters.default.withMinSuccessfulTests(8), law)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
   }
 
   test("dedup_near_embedding blocked default: planted boundary clones " +
@@ -141,13 +205,11 @@ class AccuracySpec extends SparkSpec {
       assert(blocked.contains((cid - 50000, cid)),
         s"planted clone pair (${cid - 50000}, $cid) lost by cell blocking")
     }
-    spark.conf.set("spark.graft.nearemb.exact", "true")
-    val exact =
-      try SparkEntry.queries("dedup_near_embedding")(spark, dir)
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-      finally spark.conf.unset("spark.graft.nearemb.exact")
-    InternalCaches.unpersistAll()
+    // the exact sweep: every unordered pair, the same rounded cosine
+    val exact = allPairs(dir, col("x.vec_id") < col("y.vec_id"))
+      .filter(col("cos") >= 0.45)
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     // blocking only ever REMOVES candidates: every surviving pair must
     // carry the identical exact cosine
     blocked.foreach { case (pair, cos) =>
@@ -181,15 +243,12 @@ class AccuracySpec extends SparkSpec {
       s"refined candidate stream ($refinedPairs) must undercut the " +
         s"label join ($labelPairs)")
     // subset law: the refined search space is contained in the plain
-    // one, so per query the refined rank-1 cosine can never EXCEED the
-    // plain rank-1 cosine. Refined IS the default since r11 (the exact
-    // label join sits behind refineCells=false as the demonstrator).
-    spark.conf.set("spark.graft.ivf.refineCells", "false")
-    val plain =
-      try SparkEntry.queries("sim_ann_ivf")(spark, sfDir)
-        .filter($"rn" === 1)
-        .collect().map(r => r.getLong(0) -> r.getDouble(4)).toMap
-      finally spark.conf.unset("spark.graft.ivf.refineCells")
+    // label self-join's, so per query the refined rank-1 cosine can
+    // never EXCEED the plain rank-1 cosine
+    val plain = windowTop3(allPairs(sfDir, col("x.label") === col("y.label")
+        && col("x.vec_id") =!= col("y.vec_id")), col("vec_id"))
+      .filter($"rn" === 1)
+      .collect().map(r => r.getLong(0) -> r.getDouble(3)).toMap
     val refined = SparkEntry.queries("sim_ann_ivf")(spark, sfDir)
       .filter($"rn" === 1)
       .collect().map(r => r.getLong(0) -> r.getDouble(4)).toMap
@@ -330,12 +389,14 @@ class AccuracySpec extends SparkSpec {
           rows.map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("cell"))).toSeq)
       } finally spark.conf.unset("spark.graft.ivf.iters")
     }
-    val objs = (0 to 3).map(i => run(i)._1)
+    // rounds 4 and 5 run past the chain depth (4): round 4 materializes
+    // its generation mid-chain, and the descent must not notice
+    val objs = (0 to 5).map(i => run(i)._1)
     objs.sliding(2).foreach { case Seq(a, b) =>
       assert(b <= a + 1e-3, s"objective rose across a round: $objs")
     }
     assert(objs.last < objs.head,
-      s"three rounds must improve on the raw seeds: $objs")
+      s"five rounds must improve on the raw seeds: $objs")
     // determinism: same conf, same input ⇒ identical assignment
     val (o1, a1) = run(3)
     val (o2, a2) = run(3)

@@ -59,6 +59,27 @@ class DialSpec extends SparkSpec {
     assert(missing.isEmpty, s"dials without a README row: $missing")
   }
 
+  test("every declared dial is set by a test or the smoke run") {
+    // a dial no law or smoke step sets is an untested plan branch: it
+    // counts as exercised when its quoted key, or `Dials.<Val>.withValue`,
+    // appears in a spec other than this one or in Smoke.scala
+    val valName = Dials.getClass.getMethods.toSeq
+      .filter(m => m.getParameterCount == 0 &&
+        classOf[Dials.Dial[_]].isAssignableFrom(m.getReturnType))
+      .map(m => m.invoke(Dials).asInstanceOf[Dials.Dial[_]].key -> m.getName)
+      .toMap
+    assert(valName.size == Dials.all.size)
+    val texts = (scalaSources("src/test")
+      .filterNot(_.getFileName.toString == "DialSpec.scala") :+
+      Paths.get("src/main/scala/graft/Smoke.scala")).map(Files.readString)
+    val unexercised = Dials.all.map(_.key).filterNot { k =>
+      texts.exists(t => t.contains("\"" + k + "\"") ||
+        t.contains(s"Dials.${valName(k)}.withValue"))
+    }
+    assert(unexercised.isEmpty,
+      s"dials no test or smoke step sets: ${unexercised.mkString(", ")}")
+  }
+
   test("each declared default passes its own check; a bad value names the key") {
     Dials.all.filter(_.default != "adaptive").foreach(d => d.read(d.default))
     Dials.all.foreach { d =>

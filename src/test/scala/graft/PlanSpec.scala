@@ -321,28 +321,22 @@ class PlanSpec extends SparkSpec {
     } finally InternalCaches.unpersistAll()
   }
 
-  test("dedup_near_embedding exact conf: pairs via the blocked " +
-    "equi-join, never a cartesian") {
-    // exact all-pairs is O(n^2) compute by definition; the plan's job is
-    // to DISTRIBUTE it: the pair sweep is an equi-join on the (pi, pj)
-    // block tags — nothing in the operator mandates a broadcast, so at
-    // corpus scale (where stats rule out broadcasting) both sides shuffle
-    // on the tags and no single task owns the pair space. (At test scale
-    // AQE is free to broadcast the few-MB replicated side — that is the
-    // optimizer working, not the operator demanding it.)
-    spark.conf.set("spark.graft.nearemb.exact", "true")
-    try {
-      val plan = finalPlan("dedup_near_embedding")
-      val cart = collectAll(plan) {
-        case c: org.apache.spark.sql.execution.joins.CartesianProductExec => c
-      }
-      assert(cart.isEmpty, "block tags must make the pair sweep an equi-join")
-      val pairJoins = collectAll(plan) {
-        case j: org.apache.spark.sql.execution.joins.BaseJoinExec
-            if j.leftKeys.size >= 2 => j
-      }
-      assert(pairJoins.nonEmpty, "expected the (pi, pj) blocked pair join")
-    } finally spark.conf.unset("spark.graft.nearemb.exact")
+  test("sim_ann_ivf / sim_ann_ivf_trained: ranked by the bounded top-k " +
+    "aggregate, never a window") {
+    // a rank window shuffles and sorts the whole candidate stream; the
+    // TopKByScore aggregate (an ObjectHashAggregate) carries ≤ 3 rows
+    // per query through its exchange
+    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    for (key <- Seq("sim_ann_ivf", "sim_ann_ivf_trained")) {
+      try {
+        val plan = finalPlan(key)
+        assert(stages(plan) { case w: WindowExec => w }.isEmpty,
+          s"$key: no window may rank the candidates:\n$plan")
+        assert(stages(plan) { case a: ObjectHashAggregateExec => a }
+          .nonEmpty, s"$key: expected the top-k aggregate:\n$plan")
+      } finally InternalCaches.unpersistAll()
+    }
   }
 
   test("join_range_banded: equi-join on the band bucket, no nested loop") {

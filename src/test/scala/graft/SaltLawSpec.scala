@@ -200,34 +200,6 @@ object SaltLawSpec extends Properties("saltedBandPairs") {
       }
     }
 
-  // the OTHER hand-rolled triangle decomposition (blocked exact all-pairs
-  // in similarity.scala) earns the same law: every unordered id pair
-  // reaches exactly one-or-two tasks with its payload columns still
-  // attached to the right side
-  private val genIds = Gen.chooseNum(2, 50).flatMap(n =>
-    Gen.listOfN(n, Gen.chooseNum(0L, 5000L)).map(_.distinct))
-
-  property("blockedPairs covers every unordered pair, payloads intact") =
-    Prop.forAll(genIds) { ids =>
-      import org.apache.spark.sql.functions._
-      val v = ids.toDF("vec_id")
-        .withColumn("label", lit(0))
-        .withColumn("v", array(col("vec_id").cast("double")))
-        .withColumn("nrm", col("vec_id").cast("double"))
-      val rows = ops.Similarity.blockedPairs(v).collect()
-      val payloadOk = rows.forall { r =>
-        r.getAs[Seq[Double]]("v").head == r.getLong(0).toDouble &&
-        r.getAs[Seq[Double]]("bv").head == r.getAs[Long]("nbr_id").toDouble &&
-        r.getAs[Double]("nrm") == r.getLong(0).toDouble &&
-        r.getAs[Double]("bn") == r.getAs[Long]("nbr_id").toDouble
-      }
-      val got = rows.map(r => (math.min(r.getLong(0), r.getAs[Long]("nbr_id")),
-        math.max(r.getLong(0), r.getAs[Long]("nbr_id")))).toSet
-      val want = (for { a <- ids; b <- ids if a < b } yield (a, b)).toSet
-      (Prop(payloadOk) :| "payload misassociated") &&
-        (Prop(got == want) :| s"missing=${want -- got} extra=${got -- want}")
-    }
-
   // the IVF hot-CELL triangular salting (similarity.scala
   // nearDupBlocked, r13 — the measured sf100 single-task straggler):
   // with ONE trained centroid every vector probes the same mega-cell,
