@@ -55,15 +55,14 @@ object Dials {
     dial(key, default, s"a number in [0, $hi]", doc)(
       _.toDoubleOption.filter(v => v >= 0.0 && v <= hi))
 
-  val EstMargin = num("spark.graft.lsh.estMargin", 0.15, 1.0,
-    "threshold slack of the signature-estimate prefilter; 1.0 disables it")
   val PackedSigma = num("spark.graft.lsh.packedSigma", 4.5, 20.0,
     "sigmas below the threshold of the packed minhash cut; 0 disables it")
   val HotBucketWidth = int("spark.graft.lsh.hotBucketWidth", "adaptive",
-    "band-bucket width past which the salted decompositions salt a " +
-      "bucket; adaptive = max(32, ceil(sqrt(documents bytes / 32)))")
+    "bucket width past which every salted join salts a band bucket or " +
+      "IVF cell; adaptive = max(32, ceil(sqrt(documents bytes / 32))), " +
+      "4096 for IVF cells")
   val SaltBlocks = pow2("spark.graft.lsh.saltBlocks", 8,
-    "salt-block count for hot buckets")
+    "salt-block count for hot buckets and hot IVF cells")
   val BucketDfCap = int("spark.graft.lsh.bucketDfCap", 65536,
     "buckets wider than this leave pair generation; 0 disables", lo = 0)
   val HotSampleShift = int("spark.graft.lsh.hotSampleShift", 4,
@@ -72,15 +71,11 @@ object Dials {
   val SimhashMaxDist = int("spark.graft.simhash.maxDist", 4,
     "dedup_simhash hamming threshold; <= 4 uses the pair-block index")
   val ContainmentMaxDf = int("spark.graft.containment.maxDf", 128,
-    "text_containment shingle DF cap for the pair join; 0 disables")
+    "text_containment shingle DF cap for the pair join", lo = 1)
   val IvfIters = int("spark.graft.ivf.iters", 3,
     "Lloyd iterations of IVF training")
   val IvfNprobe = int("spark.graft.ivf.nprobe", 2,
     "IVF cells probed per vector")
-  val IvfHotCellWidth = int("spark.graft.ivf.hotCellWidth", 4096,
-    "IVF cell width past which the cell pair join is salted")
-  val IvfCellSaltBlocks = pow2("spark.graft.ivf.cellSaltBlocks", 8,
-    "salt-block count for hot IVF cells")
   val AnnlshProbeEvery = int("spark.graft.annlsh.probeEvery", 13,
     "sim_ann_lsh re-ingests every Nth vector as a clone; 0 disables")
   val TrianglesBloom = dial("spark.graft.triangles.bloom", "auto",

@@ -13,7 +13,7 @@ import graft.expr.{CentroidScores, CharGramCounts, CharGrams, DotProduct, MinHas
   *  - cluster-wide: `spark.sql.extensions=graft.GraftExtensions` applies
   *    at session build (the `SparkSessionExtensions` plugin point);
   *  - per-session: `GraftFunctions.register(spark)` injects into an
-  *    already-running session (what Verify/Bench/tests use).
+  *    already-running session (ExprSpec's SQL-surface tests use it).
   *
   * After either, `dot_product(a, b)`, `minhash_signature(shingles, k)` and
   * `simhash64(features)` are plain SQL functions — the codegen'd

@@ -93,20 +93,23 @@ object Blocking {
     *  - self (`probe` = None): all unordered pairs of `index`, as
     *    `a < b`. A hot bucket's rows take a block `blk`; the x side
     *    replicates to tags (blk, j ≥ blk), the y side to (i ≤ blk, blk),
-    *    so each pair meets in exactly one (band, bhash, pi, pj) task.
-    *    Doc order is independent of block order, so the join keeps `≠`
-    *    and the output is normalized with least/greatest, carries swapped
-    *    to match.
+    *    so each pair meets in exactly one (band, bhash, pi, pj) task. A
+    *    pair from two blocks meets there in one orientation only, in an
+    *    off-diagonal tile (pi < pj); a pair inside one block or a cold
+    *    bucket (pi = pj) meets in both, and the id order keeps one. The
+    *    kept orientation follows block order, not id order, so the output
+    *    is normalized with least/greatest, carries swapped to match.
     *  - cross: (a = `probe` doc, b = `index` doc) pairs. The index row of
     *    a hot bucket keeps one block and the probe row copies to every
     *    block, so each pair meets in one (band, bhash, blk) task.
     *
     * Hot and degenerate are measured on `index`, the side that gathers
-    * template mass. A degenerate bucket (wider than the DF cap) leaves
-    * both sides before any exchange; a pair loses only that band's
-    * collision chance, and the 65536 default never engages on a
-    * committed fixture (TextSpec). Cold buckets keep tag 0, the unsalted
-    * join.
+    * template mass. With `capDegenerate`, a degenerate bucket (wider than
+    * the DF cap) leaves both sides before any exchange; a pair loses only
+    * that band's collision chance, and the 65536 default never engages on
+    * a committed fixture (TextSpec). A caller whose key is not one of
+    * several bands turns the cap off, since dropping its bucket would
+    * lose the pair outright. Cold buckets keep tag 0, the unsalted join.
     *
     * Why it is built this way:
     *  - `blk` is a bitmask of xxhash64, not pmod: Pmod is always nullable
@@ -129,12 +132,13 @@ object Blocking {
   private[graft] def candidates(index: DataFrame,
                                 probe: Option[DataFrame] = None,
                                 carry: Seq[String] = Nil,
-                                hotDflt: Int = HotBucketDefault)
+                                hotDflt: Int = HotBucketDefault,
+                                capDegenerate: Boolean = true)
       : DataFrame = {
     val s = index.sparkSession
     val hotWidth = graft.Dials.HotBucketWidth.get(s).getOrElse(hotDflt)
     val blocks = graft.Dials.SaltBlocks(s)
-    val dfCap = graft.Dials.BucketDfCap(s)
+    val dfCap = if (capDegenerate) graft.Dials.BucketDfCap(s) else 0
     val flagged = {
       val f = flaggedBuckets(index, hotWidth, dfCap)
       val rows = f.collect()
@@ -174,7 +178,7 @@ object Blocking {
           col("blk").as("pj")), "_y")
         val fwd = col("x.xid") < col("y.yid")
         join(x, y, Seq("band", "bhash", "pi", "pj"),
-            Seq(col("x.xid") =!= col("y.yid")))
+            Seq(col("x.pi") < col("x.pj") || col("x.xid") < col("y.yid")))
           .select(least(col("x.xid"), col("y.yid")).as("a") +:
             greatest(col("x.xid"), col("y.yid")).as("b") +:
             carry.flatMap(c => Seq(

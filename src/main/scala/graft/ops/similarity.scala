@@ -21,7 +21,8 @@ import graft.Tables._
   *    broadcast and stays constant-size as the corpus grows; the corpus
   *    never shuffles and the pair stream is O(q·n) — linear in n.
   *  - `dedup_near_embedding` is trained-IVF cell blocking
-  *    ([[nearDupBlocked]]) — candidates share a probed cell, pair work
+  *    ([[nearDupBlocked]]) — candidates share a probed cell, met by the
+  *    engine's one salted self-join ([[Blocking.candidates]]); pair work
   *    is O(n^1.5) under the √n cell sizing, and the oracle replays the
   *    identical pipeline so the gate stays hash-exact.
   *  - `sim_ann_ivf` restricts the search to the query's own cell (here:
@@ -31,8 +32,9 @@ import graft.Tables._
   *    quantizer cell), so pair work is Σ|label ∩ cell|² instead of the
   *    fixed-vocabulary Ω(n²/|labels|). One hash shuffle on the
   *    composite cell key co-locates each cell.
-  *  - `sim_ann_lsh` buckets by hyperplane-sign bands and shares the
-  *    hot-bucket-salted band self-join with the text dedups.
+  *  - `sim_ann_lsh` buckets by hyperplane-sign bands through
+  *    [[Blocking.multiIndexPairs]], the salted multi-index probe that
+  *    `dedup_simhash` uses above hamming 4.
   */
 object Similarity {
   type Q = (SparkSession, String) => DataFrame
@@ -56,6 +58,14 @@ object Similarity {
     * default iters = 3 chain free of mid-chain counts.
     */
   private val IvfChainDepth = 4
+
+  /** Probe-cell width past which `dedup_near_embedding` salts a cell
+    * when `spark.graft.lsh.hotBucketWidth` is unset. k-means cells are
+    * not uniform: one skewed cell at the sf100 probe put its whole
+    * width² pair work in one join task (jstack: one RUNNABLE worker for
+    * 26 min). Every committed fixture's cells sit far below it.
+    */
+  private val HotCellWidth = 4096
 
   /** `sim_ann_lsh`'s combined 128-bit hamming cut: clone pairs measure
     * 8–14, random pairs concentrate at 64 ± 5.7.
@@ -254,10 +264,13 @@ object Similarity {
     * 122/144 at sf0.1 with nprobe = 3, and every exact pair recovered
     * at the sf0.01 gate.
     *
-    * A candidate pair sharing several probed cells is produced once per
-    * shared cell; the rounded cosine is identical on every copy, so the
-    * post-filter `distinct()` collapses them (dedup runs on the ≥θ
-    * survivors, not the candidate stream).
+    * The pairing is [[Blocking.candidates]]' salted self-join with the
+    * probed cell as the bucket, so a cell wider than [[HotCellWidth]]
+    * spreads over the salt blocks. A candidate pair sharing several
+    * probed cells is produced once per shared cell; the rounded cosine
+    * is identical on every copy, so the post-filter `distinct()`
+    * collapses them (dedup runs on the ≥θ survivors, not the candidate
+    * stream).
     */
   private[graft] def nearDupBlocked(v: DataFrame, cents: DataFrame,
       nprobe: Int, threshold: Double): DataFrame = {
@@ -274,71 +287,15 @@ object Similarity {
       scoredVecs(v, cents)
         .withColumn("sc", slice(col("sc"), 1, math.max(nprobe, 1))),
       eager = true)
-    val probes = scored
-      .select(col("vec_id"), col("v"), col("nrm"),
-        probeCellCol(nprobe).as("pcell"))
-    // HOT-CELL SALTING (r13, measured at the sf100 probe): within-cell
-    // pair work is width², and k-means cells are NOT uniform — one
-    // skewed probed cell concentrated its whole width² in a single
-    // join task (jstack: one RUNNABLE worker, 26 min of CPU, 31 idle
-    // threads; the key read 1538 s end-to-end). The cure is the
-    // engine's triangular block-pair scheme (ops/blocking.scala
-    // Blocking.candidates — same tag algebra, same recall argument): rows
-    // of a hot cell get a deterministic block id, the x side replicates
-    // to tags (blk, j ≥ blk), the y side to (i ≤ blk, blk), so every
-    // unordered pair meets in exactly one (cell, pi, pj) bucket and the
-    // widest cell's work spreads over blocks·(blocks+1)/2 tasks. Two
-    // simplifications vs the band form: the cell vocabulary is BOUNDED
-    // (≤ k·nprobe ≤ ~10³), so hot detection is a tiny exact aggregate
-    // (no sampling needed), and cosine is SYMMETRIC, so id
-    // normalization needs no carry swap — least/greatest on the ids,
-    // the cosine is identical in either orientation, and the existing
-    // distinct collapses the same-block double meeting. Defaults keep
-    // every committed plan: sf ≤ 1 cell widths sit far under 4096, so
-    // the tag columns are constant 0 and the join is the old join.
-    val hotW = graft.Dials.IvfHotCellWidth(v.sparkSession)
-    val blocks = graft.Dials.IvfCellSaltBlocks(v.sparkSession)
-    val hot = probes.groupBy(col("pcell"))
-      .agg(count(lit(1)).as("cw"))
-      .filter(col("cw") > hotW)
-      .select(col("pcell"), lit(true).as("is_hot"))
-    val tagged = probes.join(broadcast(hot), Seq("pcell"), "left")
-      .withColumn("blk",
-        when(col("is_hot").isNotNull,
-          xxhash64(col("vec_id")).bitwiseAND(lit(blocks - 1)).cast("int"))
-          .otherwise(lit(0)))
-    val x = tagged
-      .select(col("pcell"), col("vec_id").as("a_id"), col("v").as("av"),
-        col("nrm").as("an"), col("is_hot").isNotNull.as("xh"),
-        col("blk").as("pi"),
-        explode(
-          when(col("is_hot").isNotNull,
-            sequence(col("blk"), lit(blocks - 1)))
-            .otherwise(array(lit(0)))).as("pj"))
-    val y = tagged.select(col("pcell").as("ycell"),
-      col("vec_id").as("b_id"), col("v").as("bv"), col("nrm").as("bn"),
-      explode(
-        when(col("is_hot").isNotNull, sequence(lit(0), col("blk")))
-          .otherwise(array(lit(0)))).as("ypi"),
-      col("blk").as("ypj"))
-    // corpus-sized vector relations on both sides — shuffle pin
-    // (broadcast-cliff hazard, see Blocking.candidates)
-    // Cold cells keep the old one-orientation a < b predicate (each
-    // pair enumerated once); hot cells must use ≠ — the triangle
-    // pairs an (a, b) in whichever orientation matches the block
-    // order, which is independent of id order (the documented
-    // first-draft bug class of this scheme) — and the least/greatest
-    // normalization + the existing distinct restore unordered-pair
-    // semantics (cosine is symmetric, so the value is orientation-
-    // independent).
-    x.hint("shuffle_merge")
-      .join(y, col("pcell") === col("ycell")
-        && col("pi") === col("ypi") && col("pj") === col("ypj")
-        && when(col("xh"), col("a_id") =!= col("b_id"))
-          .otherwise(col("a_id") < col("b_id")))
-      .select(least(col("a_id"), col("b_id")).as("a"),
-        greatest(col("a_id"), col("b_id")).as("b"),
-        cosine(col("av"), col("bv"), col("an"), col("bn")).as("cos"))
+    // one cell is one bucket: no band to fall back on, so the
+    // degenerate-bucket cap (an LSH band policy) stays off
+    val postings = scored.select(col("vec_id").as("doc_id"),
+      lit(0).as("band"), probeCellCol(nprobe).as("bhash"),
+      col("v"), col("nrm"))
+    Blocking.candidates(postings, carry = Seq("v", "nrm"),
+        hotDflt = HotCellWidth, capDegenerate = false)
+      .select(col("a"), col("b"),
+        cosine(col("v_a"), col("v_b"), col("nrm_a"), col("nrm_b")).as("cos"))
       .filter(col("cos") >= threshold)
       .distinct()
       .orderBy("a", "b")

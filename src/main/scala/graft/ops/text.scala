@@ -319,26 +319,13 @@ object Text {
     * child is non-nullable — the `when` guard already excludes the < 3
     * case, the `greatest` exists only for the static type), and the empty
     * branch is a literal, not `array().cast(...)` (a Cast from NullType is
-    * force-nullable).
+    * force-nullable). That declarative form is ExprSpec's parity
+    * reference; this expression builds the same set in one codegen'd
+    * pass instead of an interpreted lambda per element.
     */
   private[graft] def shingleCol(t: Column): Column =
     coalesce(graft.expr.TextSetExprs.wordShingles(t, 3),
       typedLit(Array.empty[String]))
-
-  /** The declarative HOF formulation [[shingleCol]] replaced (round 5) —
-    * kept as the parity reference: ExprSpec asserts the codegen'd
-    * expression is byte-equal to this form, whose ANSI guard and
-    * nullability discipline the original docstring above explains. The
-    * HOF path re-evaluates its lambda interpreted per element; the
-    * expression builds the same set in one codegen'd pass.
-    */
-  private[graft] def shingleColHof(t: Column): Column =
-    when(size(t) >= 3,
-      array_distinct(transform(
-        sequence(lit(0), greatest(size(t) - 3, lit(0))),
-        i => concat_ws(" ",
-          element_at(t, i + 1), element_at(t, i + 2), element_at(t, i + 3)))))
-      .otherwise(typedLit(Array.empty[String]))
 
   /** Character n-gram set (distinct) over the raw text — the
     * tokenization-free near-dup signal ("n-gram Jaccard"): robust to
@@ -349,14 +336,6 @@ object Text {
   private[graft] def charGramCol(c: Column, n: Int): Column =
     coalesce(graft.expr.TextSetExprs.charGrams(c, n),
       typedLit(Array.empty[String]))
-
-  /** HOF parity reference for [[charGramCol]] — see [[shingleColHof]]. */
-  private[graft] def charGramColHof(c: Column, n: Int): Column =
-    when(length(c) >= n,
-      array_distinct(transform(
-        sequence(lit(1), greatest(length(c) - (n - 1), lit(1))),
-        i => c.substr(i, lit(n)))))
-      .otherwise(typedLit(Array.empty[String]))
 
   private val MinhashK = 128 // signature length
   private val Bands    = 16  // LSH bands ...
@@ -465,12 +444,10 @@ object Text {
     // jaccard) costs 128 long-compares per pair over the already-cached
     // signatures; only est-survivors join the big set arrays for the
     // exact verify. The margin keeps the filter lossless in practice:
-    // sd(est) = sqrt(t(1-t)/128) ≤ 0.045, so the 0.15 default is a > 3σ
-    // allowance — a true pair AT the threshold clears it with
+    // sd(est) = sqrt(t(1-t)/128) ≤ 0.045, so the 0.15 [[EstMargin]] is
+    // a > 3σ allowance — a true pair AT the threshold clears it with
     // P ≈ 1 − 1e-4, and every fixture/planted pair sits ≥ 0.13 above
-    // threshold where the miss probability vanishes (< 1e-15). Strictly
-    // lossless mode: conf the margin to 1.0 and the prefilter drops out
-    // of the plan entirely.
+    // threshold where the miss probability vanishes (< 1e-15).
     //
     // PACKED COARSE PRUNE (r14, high-threshold representations only —
     // see PackedPruneMinThreshold): at organic gram density the
@@ -485,7 +462,6 @@ object Text {
     // (packedCut), so the noise mass dies where the simhash pipeline's
     // hamming cut does. The 128-position margin filter stays as the
     // precision backstop on the survivors.
-    val margin = graft.Dials.EstMargin(sets.sparkSession)
     val cand =
       if (!packed) Blocking.candidates(bands, hotDflt = hotDflt).distinct()
       else {
@@ -496,11 +472,16 @@ object Text {
           .select(col("a"), col("b"))
           .distinct()
       }
-    estimateAndVerify(cand, sig, sig, threshold, margin)
+    estimateAndVerify(cand, sig, sig, threshold)
   }
 
+  /** Slack between the Jaccard threshold and the signature-estimate
+    * prefilter's cut: > 3σ of the 128-position estimate at any threshold.
+    */
+  private val EstMargin = 0.15
+
   /** Shared tail of both LSH pipelines: the signature-estimate prefilter
-    * (margin ≥ 1.0 disables it) followed by the exact-Jaccard verify.
+    * followed by the exact-Jaccard verify.
     * `aSig`/`bSig` are the persisted (doc_id, s, sig) relations the `a`
     * and `b` candidate columns refer to — the SAME relation for the
     * self-join ([[lshJaccardPairs]]), the batch/index pair for the
@@ -518,44 +499,42 @@ object Text {
     * add their own orderBy.
     */
   private def estimateAndVerify(cand: DataFrame, aSig: DataFrame,
-                                bSig: DataFrame, threshold: Double,
-                                margin: Double): DataFrame = {
-    val estOk =
-      if (margin >= 1.0) cand
-      else cand
-        // signature join-backs: both sides corpus-sized (candidates ×
-        // 1-row/doc 128-long signatures), so the joins must stay
-        // SHUFFLEs — but a SORT-merge would sort the huge candidate
-        // stream (measured 8× on sim_ann_lsh sf1), so the pin is
-        // shuffle_HASH, and BOTH join-backs build the SIGNATURE side
-        // (the hint rides the side the join must BUILD; a hint inside a
-        // join's subtree does not mark the enclosing join). The sig
-        // side, laid out at the ADAPTIVE docParts width, is a bounded
-        // ~35 MB/partition at 5 M docs and reuses the cache's
-        // hash(doc_id) partitioning with no extra exchange — while a
-        // HashedRelation build has NO spill path, so NOTHING that
-        // scales with the CANDIDATE stream may ever be a build side.
-        // The r13 first cut hinted the candidate side of both
-        // join-backs on a "16 B/row narrow" argument; the sf100 probe
-        // killed it twice over: the second join's left is (a, b, ga) —
-        // the candidate stream with a 1 KB signature attached ("Can't
-        // acquire 134217728 bytes to build hash relation"), and even
-        // the first join's bare pairs are candidate-mass-sized, which
-        // for char-gram banding is ~7.5e8 rows at 5 M docs (within-copy
-        // 4-gram Jaccards run ~0.5, and 16×8 bands pass 16·J⁸ ≈ 6 % of
-        // such pairs — a heap-OOM'd LongToUnsafeRowMap at 16 g). The
-        // estimate FILTER is where that mass is allowed to die; builds
-        // must stay corpus-bounded.
-        .join(aSig.select(col("doc_id").as("a"), col("sig").as("ga"))
-          .hint("shuffle_hash"), "a")
-        .join(bSig.select(col("doc_id").as("b"), col("sig").as("gb"))
-          .hint("shuffle_hash"), "b")
-        .withColumn("est",
-          aggregate(zip_with(col("ga"), col("gb"),
-              (x, y) => when(x === y, 1).otherwise(0)),
-            lit(0), (acc, v) => acc + v).cast("double") / MinhashK)
-        .filter(col("est") >= threshold - margin)
-        .select(col("a"), col("b"))
+                                bSig: DataFrame,
+                                threshold: Double): DataFrame = {
+    val estOk = cand
+      // signature join-backs: both sides corpus-sized (candidates ×
+      // 1-row/doc 128-long signatures), so the joins must stay
+      // SHUFFLEs — but a SORT-merge would sort the huge candidate
+      // stream (measured 8× on sim_ann_lsh sf1), so the pin is
+      // shuffle_HASH, and BOTH join-backs build the SIGNATURE side
+      // (the hint rides the side the join must BUILD; a hint inside a
+      // join's subtree does not mark the enclosing join). The sig
+      // side, laid out at the ADAPTIVE docParts width, is a bounded
+      // ~35 MB/partition at 5 M docs and reuses the cache's
+      // hash(doc_id) partitioning with no extra exchange — while a
+      // HashedRelation build has NO spill path, so NOTHING that
+      // scales with the CANDIDATE stream may ever be a build side.
+      // The r13 first cut hinted the candidate side of both
+      // join-backs on a "16 B/row narrow" argument; the sf100 probe
+      // killed it twice over: the second join's left is (a, b, ga) —
+      // the candidate stream with a 1 KB signature attached ("Can't
+      // acquire 134217728 bytes to build hash relation"), and even
+      // the first join's bare pairs are candidate-mass-sized, which
+      // for char-gram banding is ~7.5e8 rows at 5 M docs (within-copy
+      // 4-gram Jaccards run ~0.5, and 16×8 bands pass 16·J⁸ ≈ 6 % of
+      // such pairs — a heap-OOM'd LongToUnsafeRowMap at 16 g). The
+      // estimate FILTER is where that mass is allowed to die; builds
+      // must stay corpus-bounded.
+      .join(aSig.select(col("doc_id").as("a"), col("sig").as("ga"))
+        .hint("shuffle_hash"), "a")
+      .join(bSig.select(col("doc_id").as("b"), col("sig").as("gb"))
+        .hint("shuffle_hash"), "b")
+      .withColumn("est",
+        aggregate(zip_with(col("ga"), col("gb"),
+            (x, y) => when(x === y, 1).otherwise(0)),
+          lit(0), (acc, v) => acc + v).cast("double") / MinhashK)
+      .filter(col("est") >= threshold - EstMargin)
+      .select(col("a"), col("b"))
     // exact-verify join-backs: the BUILD side flips to the est-survivor
     // stream (r13). Building on the (doc_id, s) set relation — the r12
     // shape — is a measured capacity wall: shingle sets are ~KBs/row, so
@@ -570,12 +549,7 @@ object Text {
     // side a bounded build wants — including the SECOND join-back, whose
     // build carries sa (survivors × KB-row sets ≈ output × KB, still
     // orders under the corpus-sized set relation at any dedup
-    // threshold). Under the lossless dial (margin ≥ 1.0) the first
-    // build is the raw candidate stream (16 B/row narrow) and the
-    // second carries sa at candidate cardinality — the one shape that
-    // can grow past a bounded build, accepted as the conf'd
-    // strict-recall demonstrator's price and the reason the margin
-    // prefilter is the default.
+    // threshold).
     estOk.hint("shuffle_hash")
       .join(aSig.select(col("doc_id").as("a"), col("s").as("sa")), "a")
       .hint("shuffle_hash")
@@ -646,8 +620,7 @@ object Text {
     val cand = Blocking.candidates(bandKeys(isig, bands = 32, rows = 4),
         Some(bandKeys(bsig, bands = 32, rows = 4)), hotDflt = hotDflt)
       .distinct()
-    val margin = graft.Dials.EstMargin(index.sparkSession)
-    estimateAndVerify(cand, bsig, isig, threshold, margin)
+    estimateAndVerify(cand, bsig, isig, threshold)
   }
 
   /** Word-shingle MinHash-LSH near-dup pairs, UNSORTED — the shared
@@ -1664,8 +1637,7 @@ object Text {
     // copied-corpus posting lengths (≤ ~625) that drove the sf10
     // exponent to 1.30. The hub list (shingles with DF > cap) grows
     // with the corpus → shuffle-pinned anti-join, never a broadcast
-    // (the cliff rule). `maxDf <= 0` restores the lossless exact sweep
-    // for corpora where the O(ΣL²) cost is affordable.
+    // (the cliff rule).
     "text_containment" -> ((s, d) => {
       // r17 plan shape (guide §2.3/§2.4 — carry metadata, remove
       // shuffles). Three structural changes vs the r16 form, all
@@ -1697,13 +1669,11 @@ object Text {
       // window partition wide, exactly as it made one anti-join
       // partition wide.
       val maxDf = graft.Dials.ContainmentMaxDf(s)
-      val exploded = tokenizedDocs(s, d)
-        .select(col("doc_id"), shingleCol(col("t")).as("ss"))
-        .select(col("doc_id"), size(col("ss")).cast("long").as("n"),
-          explode(col("ss")).as("sh"))
       val sh = graft.InternalCaches.persistTracked(
-        if (maxDf <= 0) exploded
-        else exploded
+        tokenizedDocs(s, d)
+          .select(col("doc_id"), shingleCol(col("t")).as("ss"))
+          .select(col("doc_id"), size(col("ss")).cast("long").as("n"),
+            explode(col("ss")).as("sh"))
           .withColumn("df", count(lit(1)).over(
             org.apache.spark.sql.expressions.Window.partitionBy(col("sh"))))
           .filter(col("df") <= maxDf)

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.expr.VectorExprs
 
@@ -35,6 +36,26 @@ class ExprSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 
+  /** The declarative HOF formulation [[ops.Text.shingleCol]] replaced,
+    * kept as its parity reference (the guard and nullability discipline
+    * are explained on `shingleCol`).
+    */
+  private def shingleColHof(t: Column): Column =
+    when(size(t) >= 3,
+      array_distinct(transform(
+        sequence(lit(0), greatest(size(t) - 3, lit(0))),
+        i => concat_ws(" ",
+          element_at(t, i + 1), element_at(t, i + 2), element_at(t, i + 3)))))
+      .otherwise(typedLit(Array.empty[String]))
+
+  /** HOF parity reference for [[ops.Text.charGramCol]]. */
+  private def charGramColHof(c: Column, n: Int): Column =
+    when(length(c) >= n,
+      array_distinct(transform(
+        sequence(lit(1), greatest(length(c) - (n - 1), lit(1))),
+        i => c.substr(i, lit(n)))))
+      .otherwise(typedLit(Array.empty[String]))
+
   test("CharGrams/WordShingles equal their HOF forms byte-for-byte") {
     import spark.implicits._
     // the corpus plus adversarial cases: unicode multibyte, repeats (the
@@ -49,9 +70,9 @@ class ExprSpec extends SparkSpec {
       .withColumn("t", split(col("text"), " "))
     val mismatches = docs.select(
         ops.Text.charGramCol(col("text"), 4).as("cg"),
-        ops.Text.charGramColHof(col("text"), 4).as("cg_hof"),
+        charGramColHof(col("text"), 4).as("cg_hof"),
         ops.Text.shingleCol(col("t")).as("sh"),
-        ops.Text.shingleColHof(col("t")).as("sh_hof"))
+        shingleColHof(col("t")).as("sh_hof"))
       .filter(col("cg") =!= col("cg_hof") || col("sh") =!= col("sh_hof"))
     assert(mismatches.count() == 0,
       s"codegen'd set builders diverged from the HOF reference:\n" +

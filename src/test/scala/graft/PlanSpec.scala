@@ -301,9 +301,9 @@ class PlanSpec extends SparkSpec {
   test("dedup_near_embedding default plan: cell-keyed candidate join, " +
     "never a cartesian or corpus×corpus sweep") {
     // the r10 default blocks candidates through trained-IVF cells: the
-    // pair join must be an EQUI-join on the probed-cell id (a<b is the
-    // residual), so pair work is per-cell after one shuffle — no
-    // cartesian, no (pi, pj) all-pairs replication anywhere in the plan
+    // pair join is Blocking.candidates' shuffled self-join, an EQUI-join
+    // on the probed-cell id (its bucket `bhash`, beside the salt tags),
+    // so pair work is per-cell after one shuffle — no cartesian
     try {
       val plan = finalPlan("dedup_near_embedding")
       val cart = collectAll(plan) {
@@ -311,10 +311,9 @@ class PlanSpec extends SparkSpec {
       }
       assert(cart.isEmpty, s"candidate sweep must be an equi-join:\n$plan")
       val cellJoins = collectAll(plan) {
-        case j: org.apache.spark.sql.execution.joins.BaseJoinExec
-            if j.leftKeys.size == 1 &&
-              j.leftKeys.head.references.toSeq
-                .exists(_.name == "pcell") => j
+        case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec
+            if j.leftKeys.exists(_.references.exists(_.name == "bhash")) =>
+          j
       }
       assert(cellJoins.nonEmpty,
         s"expected the cell-keyed candidate equi-join:\n$plan")

@@ -3,15 +3,15 @@ package graft
 import org.scalacheck.{Gen, Prop, Properties, Test}
 import org.apache.spark.sql.functions._
 
-/** Property law for the hot-bucket-salted band self-join: for ANY band
-  * layout — including buckets far past the HotBucket width, the exact
+/** Property laws for [[ops.Blocking]]'s hot-bucket-salted joins: for ANY
+  * band layout — including buckets far past the HotBucket width, the exact
   * regime where the triangular block-pair replication engages — the
   * salted join must produce EXACTLY the unordered collision pairs of the
   * naive self-join. The triangle scheme earned this law: its first draft
   * silently dropped pairs whose doc_id order opposed their block order,
   * a bug only a skewed instance exposes.
   */
-object SaltLawSpec extends Properties("saltedBandPairs") {
+object SaltLawSpec extends Properties("Blocking") {
 
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(6) // each case runs Spark jobs
@@ -67,15 +67,22 @@ object SaltLawSpec extends Properties("saltedBandPairs") {
         (if (cap > 0) 0 else shift).toString)
       spark.conf.set("spark.graft.lsh.bucketDfCap", cap.toString)
       try {
-        val got = ops.Blocking.candidates(bands)
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        val naive = (for {
+        val rowsOut = ops.Blocking.candidates(bands)
+          .collect().map(r => (r.getLong(0), r.getLong(1)))
+        val got = rowsOut.toSet
+        // one tuple per (pair, shared bucket): the join meets each
+        // unordered pair once per bucket, never in both orientations
+        val perBucket = for {
           (d1, b1, h1) <- rows; (d2, b2, h2) <- rows
           if b1 == b2 && h1 == h2 && d1 < d2 && kept((b1, h1))
-        } yield (d1, d2)).toSet
-        Prop(got == naive) :|
+        } yield (d1, d2)
+        val naive = perBucket.toSet
+        (Prop(got == naive) :|
           s"salt=$saltW hot=$hotW cap=$cap missing=${naive -- got} " +
-            s"extra=${got -- naive}"
+            s"extra=${got -- naive}") &&
+          (Prop(rowsOut.length == perBucket.size) :|
+            s"salt=$saltW hot=$hotW cap=$cap rows=${rowsOut.length} " +
+              s"pair-buckets=${perBucket.size}")
       } finally {
         spark.conf.unset("spark.graft.lsh.saltBlocks")
         spark.conf.unset("spark.graft.lsh.hotBucketWidth")
@@ -173,7 +180,7 @@ object SaltLawSpec extends Properties("saltedBandPairs") {
         }
     }
 
-  property("multiIndexCandidates(4x16, r=1) covers every pair within " +
+  property("multiIndexPairs(4x16, r=1) covers every pair within " +
     "hamming 7, any fps, any dials") =
     // the generator underneath sim_ann_lsh's ANN probe: pigeonhole says
     // ≤7 errors over 4 blocks leave SOME block within 1 bit, so the
@@ -200,15 +207,15 @@ object SaltLawSpec extends Properties("saltedBandPairs") {
       }
     }
 
-  // the IVF hot-CELL triangular salting (similarity.scala
-  // nearDupBlocked, r13 — the measured sf100 single-task straggler):
+  // the IVF hot-CELL salting (nearDupBlocked's probe cells through
+  // Blocking.candidates — the measured sf100 single-task straggler):
   // with ONE trained centroid every vector probes the same mega-cell,
   // so the salted within-cell sweep must equal the brute-force
   // all-pairs cosine filter EXACTLY — for any block count and any hot
-  // threshold (0 = the whole corpus salted, 2^20 = the unsalted old
-  // join; the brute side mirrors the operator's floor(x·1e4+0.5)/1e4
-  // cosine rounding on the same left-fold dot order, so the comparison
-  // is bit-deterministic)
+  // threshold (0 = the whole corpus salted, 2^20 = unsalted; shift 0
+  // counts widths exactly, so width 4 salts the cell; the brute side
+  // mirrors the operator's floor(x·1e4+0.5)/1e4 cosine rounding on the
+  // same left-fold dot order, so the comparison is bit-deterministic)
   private val genVecList = Gen.chooseNum(2, 50).flatMap(n =>
     Gen.listOfN(n, Gen.listOfN(4, Gen.chooseNum(-5, 5))))
   property("nearDupBlocked mega-cell == brute-force cosine pairs, any salt dials") =
@@ -223,8 +230,9 @@ object SaltLawSpec extends Properties("saltedBandPairs") {
         else {
           val v = rows.toDF("vec_id", "v", "nrm")
           val cents = Seq((0, Array(0.1, 0.1, 0.1, 0.1))).toDF("cid", "c")
-          spark.conf.set("spark.graft.ivf.cellSaltBlocks", saltW.toString)
-          spark.conf.set("spark.graft.ivf.hotCellWidth", hotW.toString)
+          spark.conf.set("spark.graft.lsh.saltBlocks", saltW.toString)
+          spark.conf.set("spark.graft.lsh.hotBucketWidth", hotW.toString)
+          spark.conf.set("spark.graft.lsh.hotSampleShift", "0")
           try {
             val got = ops.Similarity.nearDupBlocked(v, cents, 1, 0.3)
               .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -239,8 +247,9 @@ object SaltLawSpec extends Properties("saltedBandPairs") {
               s"salt=$saltW hotCell=$hotW missing=${naive -- got} " +
                 s"extra=${got -- naive}"
           } finally {
-            spark.conf.unset("spark.graft.ivf.cellSaltBlocks")
-            spark.conf.unset("spark.graft.ivf.hotCellWidth")
+            spark.conf.unset("spark.graft.lsh.saltBlocks")
+            spark.conf.unset("spark.graft.lsh.hotBucketWidth")
+            spark.conf.unset("spark.graft.lsh.hotSampleShift")
             InternalCaches.unpersistAll()
           }
         }

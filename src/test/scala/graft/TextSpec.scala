@@ -519,17 +519,29 @@ class TextSpec extends SparkSpec {
   }
 
   test("strict mode (estMargin >= 1) disables the prefilter, same pairs") {
-    // conf-gated losslessness: with the margin maxed the signature-estimate
-    // cut drops out of the plan and EVERY band collision pays the exact
-    // verify — the pair set must be identical to the prefiltered run
+    // the signature-estimate prefilter is lossless in practice: with no
+    // prefilter, EVERY band collision pays the exact verify — that
+    // strict reference is built here over the same shingle sets, bands
+    // and rounded Jaccard cut, and must give the prefiltered key's pairs
+    import org.apache.spark.sql.functions._
+    val sets = ops.Text.tokenizedDocs(spark, sfDir)
+      .filter(size(col("t")) >= 3)
+      .select(col("doc_id"), ops.Text.shingleCol(col("t")).as("s"))
+    val sig = sets.withColumn("sig",
+      graft.expr.MinHashExprs.minhashSignature(col("s"), 128))
+    val strict = ops.Blocking.candidates(ops.Text.bandKeys(sig)).distinct()
+      .join(sets.select(col("doc_id").as("a"), col("s").as("sa")), "a")
+      .join(sets.select(col("doc_id").as("b"), col("s").as("sb")), "b")
+      .withColumn("ni", size(array_intersect(col("sa"), col("sb"))))
+      .filter(round(col("ni").cast("double")
+        / (size(col("sa")) + size(col("sb")) - col("ni")), 4) >= 0.5)
+      .select("a", "b").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
     val dflt = pairs("dedup_near_minhash")
-    spark.conf.set("spark.graft.lsh.estMargin", "1.0")
-    try {
-      val strict = pairs("dedup_near_minhash")
-      assert(strict == dflt,
-        s"strict/prefiltered disagree: only-strict=${strict -- dflt} " +
-          s"only-default=${dflt -- strict}")
-    } finally spark.conf.unset("spark.graft.lsh.estMargin")
+    assert(strict.nonEmpty)
+    assert(strict == dflt,
+      s"strict/prefiltered disagree: only-strict=${strict -- dflt} " +
+        s"only-default=${dflt -- strict}")
   }
 
   test("InternalCaches: operator persists register and unpersist via the hook") {
