@@ -50,13 +50,7 @@ object Dials {
   private def pow2(key: String, default: Int, doc: String): Dial[Int] =
     dial(key, default, "a power of two", doc)(
       _.toIntOption.filter(v => v > 0 && (v & (v - 1)) == 0))
-  private def num(key: String, default: Double, hi: Double,
-                  doc: String): Dial[Double] =
-    dial(key, default, s"a number in [0, $hi]", doc)(
-      _.toDoubleOption.filter(v => v >= 0.0 && v <= hi))
 
-  val PackedSigma = num("spark.graft.lsh.packedSigma", 4.5, 20.0,
-    "sigmas below the threshold of the packed minhash cut; 0 disables it")
   val HotBucketWidth = int("spark.graft.lsh.hotBucketWidth", "adaptive",
     "bucket width past which every salted join salts a band bucket or " +
       "IVF cell; adaptive = max(32, ceil(sqrt(documents bytes / 32))), " +

@@ -6,20 +6,21 @@ import org.apache.spark.sql.expressions.Aggregator
 
 /** Bounded top-k partial aggregation over (score, id) pairs — the
   * shuffle-thin form of a `row_number().over(partitionBy(q)
-  * .orderBy(score desc, id))` rank cut at k. The IVF keys rank through
-  * it (`Similarity.topK3`).
+  * .orderBy(score desc, id))` rank cut at k. Every nearest-neighbour
+  * key ranks through it (`Similarity.topK`).
   *
-  * Why it exists (r12): the window form must SHUFFLE the full candidate
-  * stream and SORT every partition of it — at the sf10 decade,
+  * Why it exists (r12): the window form must SORT every partition of
+  * the full candidate stream (Spark's partial WindowGroupLimit then
+  * ships only k rows per query and partition) — at the sf10 decade,
   * `sim_ann_ivf_trained`'s stream is ~1.8e8 rows (nprobe·√n candidates
   * per query × 200 k queries) sorted to keep 3 per query. A typed
   * aggregate with a ≤ k buffer does the same selection with MAP-SIDE
   * partial merge: each upstream partition emits at most one k-element
-  * buffer per group, so the exchange carries ~k rows per query instead
-  * of the whole stream, and nothing is ever sorted but k+1-element
-  * buffers. Selection order is EXACTLY the window's — (score desc, id
-  * asc) — so the two are output-identical row for row; AccuracySpec
-  * pins that on the real fixture and on random streams.
+  * buffer per group, so the exchange carries ~k rows per query, and
+  * nothing is ever sorted but k+1-element buffers. Selection order is
+  * EXACTLY the window's — (score desc, id asc) — so the two are
+  * output-identical row for row; AccuracySpec pins that on the real
+  * fixture and on random streams.
   *
   * The buffer is a sorted Seq capped at k (k ≤ 16 guarded: this is a
   * top-FEW operator; a large k wants a heap, not an insertion sort).

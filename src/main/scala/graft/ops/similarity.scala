@@ -28,13 +28,17 @@ import graft.Tables._
   *  - `sim_ann_ivf` restricts the search to the query's own cell (here:
   *    the pre-assigned `label`, standing in for a nearest-centroid
   *    assignment computed at ingest), sub-clustered by the trained
-  *    √n-cell quantizer ([[refinedIvfPairs]]): the join key is (label,
-  *    quantizer cell), so pair work is Σ|label ∩ cell|² instead of the
-  *    fixed-vocabulary Ω(n²/|labels|). One hash shuffle on the
+  *    √n-cell quantizer ([[ivfProbePairs]], the probe join
+  *    `sim_ann_ivf_trained` runs without the label): the join key is
+  *    (label, quantizer cell), so pair work is Σ|label ∩ cell|² instead
+  *    of the fixed-vocabulary Ω(n²/|labels|). One hash shuffle on the
   *    composite cell key co-locates each cell.
   *  - `sim_ann_lsh` buckets by hyperplane-sign bands through
   *    [[Blocking.multiIndexPairs]], the salted multi-index probe that
   *    `dedup_simhash` uses above hamming 4.
+  *
+  * Every per-query neighbour ranking — both IVF keys, `sim_ann_lsh`,
+  * `sim_topk_cosine` and the recall gates — is one [[topK]] call.
   */
 object Similarity {
   type Q = (SparkSession, String) => DataFrame
@@ -154,13 +158,29 @@ object Similarity {
 
   /** THE multi-probe cell generator: one row per of the `nprobe`
     * nearest trained centroids under the (d², cid) ranking baked into
-    * the scored `sc` array. Defined once — `sim_ann_ivf_trained`,
-    * [[nearDupBlocked]], and [[refinedIvfPairs]] all pin their SQL
-    * replays to exactly this meaning, so the slice semantics must never
-    * drift between them (review finding r10).
+    * the scored `sc` array. Defined once — [[ivfProbePairs]] (both IVF
+    * keys) and [[nearDupBlocked]] pin their SQL replays to exactly this
+    * meaning, so the slice semantics must never drift between them
+    * (review finding r10).
     */
   private def probeCellCol(nprobe: Int): Column =
     explode(transform(slice(col("sc"), 1, nprobe), x => x.getField("cid")))
+
+  /** [[scoredVecs]] cut to the top-`nprobe` slice and persisted EAGERLY,
+    * the one scored relation every probe join reads from both sides —
+    * unpopulated, the K-centroid scoring projection (and the cached
+    * k-means lineage above it) would run once per side. Only the slice
+    * is cached (r13): centroidScores ranks all k ∝ √n centroids, ~10 KB
+    * per row at the sf100 probe's k = 500 — a ~20 GB cache whose unroll
+    * chunks heap-OOM'd sim_ann_ivf at 16 g — while every consumer reads
+    * only sc[0] and slice(sc, 1, nprobe).
+    */
+  private def scoredSlice(v: DataFrame, cents: DataFrame,
+                          nprobe: Int): DataFrame =
+    graft.InternalCaches.persistTracked(
+      scoredVecs(v, cents)
+        .withColumn("sc", slice(col("sc"), 1, math.max(nprobe, 1))),
+      eager = true)
 
   /** IVF cell count: the standard nlist ∝ √n sizing
     * (k = max(8, round(√(n/8)))) — a FIXED k makes within-cell pair work
@@ -274,19 +294,7 @@ object Similarity {
     */
   private[graft] def nearDupBlocked(v: DataFrame, cents: DataFrame,
       nprobe: Int, threshold: Double): DataFrame = {
-    // persisted EAGERLY: both sides of the candidate self-join read the
-    // scored relation inside one action — unpopulated, the K-centroid
-    // scoring projection (and the cached k-means lineage above it)
-    // would run once per side. Cache only the top-nprobe SLICE of the
-    // score array (r13 fourth-wall follow-on): centroidScores ranks all
-    // k ∝ √n centroids, ~10 KB/row at the sf100 probe's k = 500 — a
-    // ~20 GB cache whose unroll chunks heap-OOM'd sim_ann_ivf at 16 g —
-    // while every consumer reads sc[0] and slice(sc, 1, nprobe), so the
-    // slice IS the downstream contract (~k/nprobe× smaller rows)
-    val scored = graft.InternalCaches.persistTracked(
-      scoredVecs(v, cents)
-        .withColumn("sc", slice(col("sc"), 1, math.max(nprobe, 1))),
-      eager = true)
+    val scored = scoredSlice(v, cents, nprobe)
     // one cell is one bucket: no band to fall back on, so the
     // degenerate-bucket cap (an LSH band policy) stays off
     val postings = scored.select(col("vec_id").as("doc_id"),
@@ -328,31 +336,14 @@ object Similarity {
     // stage; the planted-clone recall law in AccuracySpec remains the
     // end-to-end accuracy pin.
     "sim_ann_ivf_trained" -> ((s, d) =>
-      topK3(ivfTrainedCandidates(s, d), col("vec_id"))),
+      topK(ivfProbePairs(s, d, Nil), 3, col("vec_id"))
+        .orderBy("vec_id", "rn")),
 
     // Brute-force top-5 cosine neighbors for each of the ProbeCount probe
-    // vectors. The probe side is broadcast (bounded by construction — the
-    // plan pin is the pushed vec_id range filter on the broadcast branch);
-    // the corpus side streams, rebalanced so the O(q·n·dim) dot-product
-    // work spreads across the cluster instead of the input split count.
-    "sim_topk_cosine" -> ((s, d) => {
-      val p = s.sparkContext.defaultParallelism
-      val corpus = vecs(s, d)
-        .repartition(p, col("vec_id"))
-        .select(col("vec_id").as("nbr_id"), col("v").as("bv"),
-          col("nrm").as("bn"))
-      val probes = broadcast(vecs(s, d).filter(col("vec_id") < ProbeCount)
-        .select(col("vec_id"), col("v"), col("nrm")))
-      val w = Window.partitionBy(col("vec_id"))
-        .orderBy(col("cos").desc, col("nbr_id"))
-      corpus.join(probes, col("vec_id") =!= col("nbr_id"))
-        .select(col("vec_id"), col("nbr_id"),
-          cosine(col("v"), col("bv"), col("nrm"), col("bn")).as("cos"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 5)
-        .select(col("vec_id"), col("rn"), col("nbr_id"), col("cos"))
-        .orderBy("vec_id", "rn")
-    }),
+    // vectors ([[probeScores]]).
+    "sim_topk_cosine" -> ((s, d) =>
+      topK(probeScores(vecs(s, d), "v", "nrm"), 5, col("vec_id"))
+        .orderBy("vec_id", "rn")),
 
     // HYBRID retrieval with reciprocal-rank fusion: the modern RAG /
     // training-data retrieval shape — rank the corpus by keyword match
@@ -441,7 +432,7 @@ object Similarity {
     // = 64 ± 5.7 while clone pairs measure 8–14, so the cut at 24 is
     // > 7σ below the noise mean (P ≈ 1e-12): everything DOWNSTREAM of
     // the band join — the distinct's wide shuffle, both vector
-    // join-backs, the window — is output-sized at any corpus size. What
+    // join-backs, the ranking — is output-sized at any corpus size. What
     // remains quadratic is only the in-stage bit_count stream itself
     // (68·n²/2¹⁶ register ops, no shuffle, no memory): ~4e7 at 200 k
     // vectors, compute-bound. The r13 sf30 probe measured where that
@@ -548,29 +539,24 @@ object Similarity {
           struct(col("a").as("vec_id"), col("b").as("nbr_id")),
           struct(col("b").as("vec_id"), col("a").as("nbr_id")))).as("p"))
         .select(col("p.vec_id").as("vec_id"), col("p.nbr_id").as("nbr_id"))
-      val w = Window.partitionBy(col("vec_id"))
-        .orderBy(col("cos").desc, col("nbr_id"))
-      cand
-        // vector join-backs: candidates × full corpus with float[64]
-        // payloads — shuffle_HASH pinned on the vector side (scale-safe
-        // per-partition build; a sort-merge pin here sorted the wide
-        // candidate stream, measured 5.2→39.8 s on the sf1 key)
+      // vector join-backs: candidates × full corpus with float[64]
+      // payloads — shuffle_HASH pinned on the vector side (scale-safe
+      // per-partition build; a sort-merge pin here sorted the wide
+      // candidate stream, measured 5.2→39.8 s on the sf1 key)
+      val scored = cand
         .join(v.select(col("vec_id"), col("v"), col("nrm"))
           .hint("shuffle_hash"), "vec_id")
         .join(v.select(col("vec_id").as("nbr_id"), col("v").as("bv"),
           col("nrm").as("bn")).hint("shuffle_hash"), "nbr_id")
         .select(col("vec_id"), col("nbr_id"),
           cosine(col("v"), col("bv"), col("nrm"), col("bn")).as("cos"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 3)
-        .select(col("vec_id"), col("rn"), col("nbr_id"), col("cos"))
-        .orderBy("vec_id", "rn")
+      topK(scored, 3, col("vec_id")).orderBy("vec_id", "rn")
     }),
 
     // IVF-style ANN restricted to the query's own cell (label), top-3
     // per query. The label vocabulary is FIXED, so a plain within-label
     // self-join is Ω(n²/|labels|) as n grows — measured 13.5× cost on
-    // 10× data at sf1. [[refinedIvfPairs]] therefore sub-clusters every
+    // 10× data at sf1. [[ivfProbePairs]] therefore sub-clusters every
     // label cell by the trained √n-cell quantizer: the join key becomes
     // (label, quantizer cell), and pair work shrinks by ~k× at a bounded
     // recall cost (multi-probe on the query side; candidates stay a
@@ -579,8 +565,8 @@ object Similarity {
     // gate stays rows+schema+hash. label rides the ranking's grouping
     // key (functionally dependent on vec_id).
     "sim_ann_ivf" -> ((s, d) =>
-      topK3(refinedIvfPairs(s, d, graft.Dials.IvfNprobe(s)),
-        col("vec_id"), col("label"))),
+      topK(ivfProbePairs(s, d, Seq("label")), 3, col("vec_id"),
+        col("label")).orderBy("vec_id", "rn")),
 
     // INT8 symmetric per-vector quantization of the embedding column —
     // the 4× memory/IO compression a 100 TB ANN index runs on (float32
@@ -633,56 +619,74 @@ object Similarity {
         .withColumn("vq", slice(col("v"), 1, 16))))
   )
 
-  /** `sim_ann_ivf_trained`'s candidate stream `(vec_id, nbr_id, cos)`,
-    * pre-ranking: each query probes its `spark.graft.ivf.nprobe` nearest
-    * trained centroids, the index posts each vector in its argmin cell.
+  /** The IVF probe join, pre-ranking, as `(vec_id, keys…, nbr_id, cos)`:
+    * each query probes its `spark.graft.ivf.nprobe` nearest trained
+    * centroids, the index posts each vector in its argmin cell, and a
+    * pair must also agree on every column of `keys` — `Nil` for
+    * `sim_ann_ivf_trained`, `Seq("label")` for `sim_ann_ivf`, whose
+    * label cells are thereby sub-clustered by the TRAINED quantizer
+    * ([[ivfCentroidsOf]] over the whole corpus — one model, reused
+    * across labels). Label candidates are a SUBSET of the plain label
+    * join (the rank-1 cosine can only drop — AccuracySpec pins both that
+    * ordering and the pair-count shrink), and within-refined-cell pair
+    * work is Σ|label ∩ cell|² ≈ n²·nprobe/(|labels|·k) — the k× cut that
+    * keeps the fixed label vocabulary from going Ω(n²/|labels|) as n
+    * grows.
     */
-  private[graft] def ivfTrainedCandidates(s: SparkSession,
-      d: String): DataFrame = {
+  private[graft] def ivfProbePairs(s: SparkSession, d: String,
+      keys: Seq[String]): DataFrame = {
     val p = s.sparkContext.defaultParallelism
     val nprobe = graft.Dials.IvfNprobe(s)
     // ONE map-only scoring pass feeds both sides: scores[0] is the
     // index cell, the front slice is the probe set (nearest first,
-    // ties broken by cid — deterministic). Persisted because the index
-    // and probe branches both read it; uncached, the k-means rounds'
-    // cached lineage would still re-score per branch. Top-nprobe
-    // slice only (see nearDupBlocked — the full k ∝ √n array is a
-    // measured cache bomb at sf100 and nothing downstream reads past
-    // the slice).
-    val scored = graft.InternalCaches.persistTracked(
-      scoredVecs(vecs(s, d).select(col("vec_id"), col("v"), col("nrm")),
-        ivfCentroids(s, d))
-        .withColumn("sc", slice(col("sc"), 1, math.max(nprobe, 1))),
-      eager = true)
+    // ties broken by cid — deterministic)
+    val vecCols = (("vec_id" +: keys) ++ Seq("v", "nrm")).map(col)
+    val scored = scoredSlice(vecs(s, d).select(vecCols: _*),
+      ivfCentroids(s, d), nprobe)
     val probes = scored
-      .select(col("vec_id"), col("v"), col("nrm"),
-        probeCellCol(nprobe).as("pcell"))
-      .repartition(p, col("pcell"))
-    val index = scored.select(
+      .select(vecCols :+ probeCellCol(nprobe).as("pcell"): _*)
+      .repartition(p, (keys.map(col) :+ col("pcell")): _*)
+    val index = scored.select(keys.map(k => col(k).as(s"b$k")) ++ Seq(
       col("sc").getItem(0).getField("cid").as("bcell"),
-      col("vec_id").as("nbr_id"), col("v").as("bv"), col("nrm").as("bn"))
+      col("vec_id").as("nbr_id"), col("v").as("bv"),
+      col("nrm").as("bn")): _*)
+    val cell = (keys.map(k => col(k) === col(s"b$k"))
+      :+ (col("pcell") === col("bcell"))).reduce(_ && _)
     // probes and index are both the full vector corpus — pinned
     // shuffle_hash, build on the 1-row/vec index side (broadcast-cliff
     // hazard, see Blocking.candidates; sort-free, cell keys are coarse)
     probes.join(index.hint("shuffle_hash"),
-        col("pcell") === col("bcell")
-        && col("vec_id") =!= col("nbr_id"))
-      .select(col("vec_id"), col("nbr_id"),
-        cosine(col("v"), col("bv"), col("nrm"), col("bn")).as("cos"))
+        cell && col("vec_id") =!= col("nbr_id"))
+      .select((col("vec_id") +: keys.map(col)) ++ Seq(col("nbr_id"),
+        cosine(col("v"), col("bv"), col("nrm"), col("bn")).as("cos")): _*)
+      // NO distinct, by proof (r13): a (vec_id, nbr_id) pair can meet
+      // AT MOST ONCE here — the index side posts exactly ONE row per
+      // neighbor (its argmin cell, sc[0]), and the probe side's cells
+      // are distinct cids (a slice of the sorted centroid ranking), so
+      // the equi-join key matches a pair only at the neighbor's single
+      // cell. At the sf100 probe a no-op distinct here was a FULL
+      // 1.6e9-row aggregate whose sort-fallback spill heap-OOM'd the
+      // key. (nearDupBlocked's distinct is NOT this case: both of its
+      // sides explode probe cells, so pairs there genuinely duplicate —
+      // but only ≥-threshold survivors reach it.)
   }
 
-  /** Top-3 neighbours per query of a `(keys…, nbr_id, cos)` candidate
-    * stream as `(keys…, rn, nbr_id, cos)`, sorted by (query, rn). The
-    * first key is the query id; any further key must be functionally
-    * dependent on it. Ranks by (cos desc, nbr_id) through the bounded
-    * [[graft.expr.TopKByScore]] aggregate: its exchange carries ≤ 3
-    * rows per query, where a rank window would shuffle and sort the
-    * whole stream — ~1.8e8 rows at sf10 for `sim_ann_ivf_trained`, and
-    * at the sf100 probe `sim_ann_ivf`'s ~1.6e9-row rank sort spilled
-    * past the box's disk.
+  /** Top-`k` neighbours per query of a `(keys…, nbr_id, cos)` candidate
+    * stream as `(keys…, rn, nbr_id, cos)`, unsorted: each caller adds
+    * its own presentation sort. The first key is the query id; any
+    * further key must be functionally dependent on it, and the stream
+    * must hold one row per (query, nbr_id). Ranks by (cos desc, nbr_id)
+    * through the bounded [[graft.expr.TopKByScore]] aggregate: its
+    * exchange carries ≤ k rows per query and nothing sorts the stream,
+    * where a rank window sorts all of it (Spark's partial
+    * WindowGroupLimit only trims each sorted partition to k per query
+    * before the exchange) — ~1.8e8 rows at sf10 for
+    * `sim_ann_ivf_trained`, and at the sf100 probe `sim_ann_ivf`'s
+    * ~1.6e9-row rank sort spilled past the box's disk.
     */
-  private[graft] def topK3(pairs: DataFrame, keys: Column*): DataFrame = {
-    val topk = udaf(graft.expr.TopKByScore(3),
+  private[graft] def topK(pairs: DataFrame, k: Int,
+                          keys: Column*): DataFrame = {
+    val topk = udaf(graft.expr.TopKByScore(k),
       org.apache.spark.sql.catalyst.encoders
         .ExpressionEncoder[(Double, Long)]())
     pairs.groupBy(keys: _*)
@@ -690,58 +694,28 @@ object Similarity {
       .select(keys :+ posexplode(col("tk")): _*)
       .select(keys ++ Seq((col("pos") + 1).as("rn"),
         col("col._2").as("nbr_id"), col("col._1").as("cos")): _*)
-      .orderBy(keys.head, col("rn"))
   }
 
-  /** Refined-cell candidate stream for `sim_ann_ivf`: every label cell is
-    * sub-clustered by the TRAINED quantizer ([[ivfCentroidsOf]] over the
-    * whole corpus — one model, reused across labels), so candidate pairs
-    * must share (label, quantizer cell) instead of just the label. The
-    * query side multi-probes its `nprobe` nearest quantizer cells; the
-    * index side sits in its argmin cell — the same probe topology as
-    * `sim_ann_ivf_trained`, intersected with the label restriction.
-    * Candidates are therefore a SUBSET of the plain label join (the
-    * rank-1 cosine can only drop — AccuracySpec pins both that ordering
-    * and the pair-count shrink), and within-refined-cell pair work is
-    * Σ|label ∩ cell|² ≈ n²·nprobe/(|labels|·k) — the k× cut that keeps
-    * the fixed label vocabulary from going Ω(n²/|labels|) as n grows.
-    * Returns (vec_id, label, nbr_id, cos), pre-ranking.
+  /** The brute-force probe scorer: every bounded probe (`vec_id <`
+    * [[ProbeCount]]) of `rel` against every other vector of `rel`, under
+    * the vector column `vecCol` and its norm `nrmCol`, as
+    * `(vec_id, nbr_id, cos)`. The probe side is broadcast (bounded by
+    * construction — the plan pin is the pushed vec_id range filter on
+    * the broadcast branch); the corpus side streams, rebalanced on
+    * vec_id so the O(q·n·dim) dot-product work spreads across the
+    * cluster instead of the input split count.
     */
-  private[graft] def refinedIvfPairs(s: SparkSession, d: String,
-      nprobe: Int): DataFrame = {
-    val p = s.sparkContext.defaultParallelism
-    // top-nprobe slice only (see nearDupBlocked's persist note)
-    val scored = graft.InternalCaches.persistTracked(
-      scoredVecs(vecs(s, d), ivfCentroids(s, d))
-        .withColumn("sc", slice(col("sc"), 1, math.max(nprobe, 1))),
-      eager = true)
-    val a = scored
-      .select(col("vec_id"), col("label"), col("v"), col("nrm"),
-        probeCellCol(nprobe).as("pcell"))
-      .repartition(p, col("label"), col("pcell"))
-    val b = scored.select(col("label").as("blabel"),
-      col("sc").getItem(0).getField("cid").as("bcell"),
-      col("vec_id").as("nbr_id"), col("v").as("bv"), col("nrm").as("bn"))
-    // both refined-cell sides carry the full vector corpus — pinned
-    // shuffle_hash, build on the 1-row/vec index side (broadcast-cliff
-    // hazard, see Blocking.candidates)
-    a.join(b.hint("shuffle_hash"), col("label") === col("blabel")
-        && col("pcell") === col("bcell")
-        && col("vec_id") =!= col("nbr_id"))
-      .select(col("vec_id"), col("label"), col("nbr_id"),
-        cosine(col("v"), col("bv"), col("nrm"), col("bn")).as("cos"))
-      // NO distinct, by proof (r13): a (vec_id, nbr_id) pair can meet
-      // AT MOST ONCE here — the index side posts exactly ONE row per
-      // neighbor (its argmin cell, sc[0]), and the probe side's cells
-      // are distinct cids (a slice of the sorted centroid ranking), so
-      // the equi-join key (label, pcell = bcell) matches a pair only at
-      // the neighbor's single cell. The r11 draft carried a "collapse
-      // multi-cell matches" distinct against a hazard this construction
-      // cannot produce — and at the sf100 probe that no-op was a FULL
-      // 1.6e9-row aggregate whose sort-fallback spill heap-OOM'd the
-      // key. (nearDupBlocked's distinct is NOT this case: both of its
-      // sides explode probe cells, so pairs there genuinely duplicate —
-      // but only ≥-threshold survivors reach it.)
+  private def probeScores(rel: DataFrame, vecCol: String,
+                          nrmCol: String): DataFrame = {
+    val p = rel.sparkSession.sparkContext.defaultParallelism
+    val corpus = rel.repartition(p, col("vec_id"))
+      .select(col("vec_id").as("nbr_id"), col(vecCol).as("bv"),
+        col(nrmCol).as("bn"))
+    val probes = broadcast(rel.filter(col("vec_id") < ProbeCount)
+      .select(col("vec_id"), col(vecCol).as("pv"), col(nrmCol).as("pn")))
+    corpus.join(probes, col("vec_id") =!= col("nbr_id"))
+      .select(col("vec_id"), col("nbr_id"),
+        cosine(col("pv"), col("bv"), col("pn"), col("bn")).as("cos"))
   }
 
   /** Shared harness of the recall@5 gates: per bounded probe
@@ -749,40 +723,23 @@ object Similarity {
     * vs the top-5 under a VARIANT representation (the `variant` callback
     * adds a `vq` column — quantized, truncated, …; its norm is
     * recomputed here) — n_match/recall@5 per probe. Both rankings are
-    * bounded-probe broadcast joins: the corpus never shuffles, pair work
+    * [[probeScores]] joins: the corpus never shuffles, pair work
     * is O(q·n) with q fixed, and the overlap join is 5 rows/probe.
     * Cosine rounds to 4 BEFORE ranking, ties by nbr_id — deterministic
     * across engines, so the oracle replays both rankings verbatim.
     */
   private def recallVsVariant(s: SparkSession, d: String)(
       variant: DataFrame => DataFrame): DataFrame = {
-    val p = s.sparkContext.defaultParallelism
     val deq = variant(vecs(s, d).select(col("vec_id"), col("v"), col("nrm")))
       .select(col("vec_id"), col("v"), col("nrm"), col("vq"),
         sqrt(graft.expr.VectorExprs.dot(col("vq"), col("vq"))).as("nq"))
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cos").desc, col("nbr_id"))
-    def top5(vecCol: String, nrmCol: String): DataFrame = {
-      val corpus = deq.repartition(p, col("vec_id"))
-        .select(col("vec_id").as("nbr_id"), col(vecCol).as("bv"),
-          col(nrmCol).as("bn"))
-      val probes = broadcast(deq.filter(col("vec_id") < ProbeCount)
-        .select(col("vec_id"), col(vecCol).as("pv"),
-          col(nrmCol).as("pn")))
-      corpus.join(probes, col("vec_id") =!= col("nbr_id"))
-        .select(col("vec_id"), col("nbr_id"),
-          cosine(col("pv"), col("bv"), col("pn"), col("bn")).as("cos"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 5)
-        .select(col("vec_id"), col("nbr_id"))
-    }
     // the two rankings share deq's lineage — rename BOTH of the variant
     // side's columns so the join never resolves through the ambiguous
     // self-join attributes
-    val fl = top5("v", "nrm")
-    val qt = top5("vq", "nq")
-      .withColumnRenamed("vec_id", "qvec_id")
-      .withColumnRenamed("nbr_id", "qnbr_id")
+    val fl = topK(probeScores(deq, "v", "nrm"), 5, col("vec_id"))
+      .select(col("vec_id"), col("nbr_id"))
+    val qt = topK(probeScores(deq, "vq", "nq"), 5, col("vec_id"))
+      .select(col("vec_id").as("qvec_id"), col("nbr_id").as("qnbr_id"))
     fl.join(qt, col("vec_id") === col("qvec_id")
           && col("nbr_id") === col("qnbr_id"), "left")
       .groupBy(col("vec_id"))
@@ -968,13 +925,14 @@ object Similarity {
         |      FROM p)
         |SELECT vec_id, CAST(rn AS INTEGER) AS rn, nbr_id, cos
         |FROM r WHERE rn <= 5 ORDER BY vec_id, rn""".stripMargin,
-    // Replays the refined-cell DEFAULT ([[refinedIvfPairs]], r11): the
-    // same unrolled k-means rounds, probes = the nprobe = 2 nearest
-    // trained centroids per vector (rn ≤ 2 of the d²-then-cid ranking),
+    // Replays the refined-cell DEFAULT ([[ivfProbePairs]] with the label
+    // key, r11): the same unrolled k-means rounds, probes = the
+    // nprobe = 2 nearest trained centroids per vector (rn ≤ 2 of the
+    // d²-then-cid ranking),
     // index = the argmin cell (rn = 1), candidates restricted to
     // label ∧ quantizer-cell agreement, then ranked. The DISTINCT is a
     // no-op: a pair meets at most once, at the neighbor's one index
-    // cell, which is why the Spark side runs none (see refinedIvfPairs).
+    // cell, which is why the Spark side runs none (see ivfProbePairs).
     "sim_ann_ivf" ->
       (ivfReplayCtes +
       """ap AS (SELECT vec_id, v, cid AS cell, rn FROM (

@@ -7,12 +7,13 @@ import graft.Tables._
 /** Event-time windowing (SURVEY.md §2.3 `stream_*`).
   *
   * The reference is batch-only; these are the north-star streaming
-  * operators. Each window shape is expressed once over a plain DataFrame —
-  * `window`/`session_window` work identically in batch and streaming — so
-  * the batch form is DuckDB-checkable while `streamingTumbling` /
-  * `streamingDedup` below run the very same expressions under
-  * `readStream` with watermarks (exercised by the ScalaTest harness,
-  * SURVEY.md §5.2 item 5).
+  * operators. `window`/`session_window` work identically in batch and
+  * streaming, but the two forms are written separately: the batch keys
+  * in `queries` are DuckDB-checked, and the `streamingX` functions below
+  * restate each shape for `readStream` with watermarks. Nothing shares
+  * the expressions; StreamingSpec's parity tests feed the same rows to a
+  * streaming form and to its batch formulation and check that the
+  * finalized windows agree (SURVEY.md §5.2 item 5).
   *
   * Scale notes: tumbling/sliding aggregation is partial-aggregatable (the
   * window start is just a computed group key), so map-side combine applies

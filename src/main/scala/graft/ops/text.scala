@@ -367,8 +367,8 @@ object Text {
     * construction (a uniform +8 — all 16 bands live inside the
     * 128-position pack), so the cut scores the 120 UNCONDITIONED
     * positions, which estimate Jaccard with σ_t = sqrt(t(1−t)/120);
-    * the cut sits `packedSigma` (default 4.5) σ BELOW the threshold,
-    * so a true pair AT the threshold clears it with P ≈ 1 − 3e-6
+    * the cut sits [[PackedSigma]] = 4.5 σ BELOW the threshold, so a
+    * true pair AT the threshold clears it with P ≈ 1 − 3e-6
     * (normal approx; planted fixture pairs sit ≥ 0.13 above, ≥ 10σ) —
     * the same "lossless in practice" contract class as the
     * 128-position estimate margin. Byte truncation inflates the
@@ -376,11 +376,11 @@ object Text {
     * separation on the organic fixture (J ≈ 0.47 noise tail, t = 0.8):
     * noise mean 64.7 bytes vs cut 85 — 3.7σ, pass ≈ 1e-4.
     */
-  private def packedCut(sets: DataFrame, threshold: Double): Int = {
-    val sigma = graft.Dials.PackedSigma(sets.sparkSession)
-    8 + math.ceil(120.0 * (threshold - sigma *
+  private def packedCut(threshold: Double): Int =
+    8 + math.ceil(120.0 * (threshold - PackedSigma *
       math.sqrt(threshold * (1 - threshold) / 120.0))).toInt
-  }
+
+  private val PackedSigma = 4.5
 
   /** Engagement floor for the packed prune: below this threshold the
     * cut (threshold − 4.5σ) sits at or under the band-conditioned
@@ -420,8 +420,7 @@ object Text {
     */
   private def lshJaccardPairs(sets: DataFrame, threshold: Double,
                               hotDflt: Int): DataFrame = {
-    val packed = threshold >= PackedPruneMinThreshold &&
-      graft.Dials.PackedSigma(sets.sparkSession) > 0
+    val packed = threshold >= PackedPruneMinThreshold
     // the persisted relation is IDENTICAL with the prune on or off; pk
     // derives DOWNSTREAM of the cache boundary, deliberately — derived
     // inside the cached projection, CollapseProject substituted the
@@ -465,7 +464,7 @@ object Text {
     val cand =
       if (!packed) Blocking.candidates(bands, hotDflt = hotDflt).distinct()
       else {
-        val cut = packedCut(sets, threshold)
+        val cut = packedCut(threshold)
         Blocking.candidates(bands, carry = Seq("pk"), hotDflt = hotDflt)
           .filter(graft.expr.MinHashExprs.packedEqBytes(
             col("pk_a"), col("pk_b")) >= cut)

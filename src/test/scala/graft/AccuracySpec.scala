@@ -11,17 +11,20 @@ import org.scalacheck.{Gen, Prop, Test}
   */
 class AccuracySpec extends SparkSpec {
 
-  /** The reference ranking for `Similarity.topK3`: a `row_number` window
-    * over (cos desc, nbr_id) per query, cut at 3, in the helper's
-    * (query, rn) order.
+  /** The reference ranking for `Similarity.topK`: a `row_number` window
+    * over (cos desc, nbr_id) per query, cut at `k`, in the helper's
+    * column order.
     */
-  private def windowTop3(pairs: DataFrame, keys: Column*): DataFrame =
+  private def windowTopK(pairs: DataFrame, k: Int, keys: Column*): DataFrame =
     pairs
       .withColumn("rn", row_number().over(Window.partitionBy(keys.head)
         .orderBy(col("cos").desc, col("nbr_id"))))
-      .filter(col("rn") <= 3)
+      .filter(col("rn") <= k)
       .select(keys ++ Seq(col("rn"), col("nbr_id"), col("cos")): _*)
-      .orderBy(keys.head, col("rn"))
+
+  /** `ranked`'s rows in (query, rn) order, a total order on the rows. */
+  private def inRankOrder(ranked: DataFrame): Seq[org.apache.spark.sql.Row] =
+    ranked.orderBy(ranked.columns.head, "rn").collect().toSeq
 
   /** (vec_id, label, v, nrm) as the similarity keys widen embeddings:
     * float → double, norm by the same codegen'd dot.
@@ -125,17 +128,15 @@ class AccuracySpec extends SparkSpec {
   test("sim_ann_ivf_trained topkAgg plan: output-identical to the rank " +
     "window, row for row") {
     // the bounded top-k aggregate (graft.expr.TopKByScore, through
-    // Similarity.topK3) must select EXACTLY the window form's rows —
+    // Similarity.topK) must select EXACTLY the window form's rows —
     // same (cos desc, nbr_id) order, same rn assignment — on the real
     // fixture, where cos ties across identical-embedding duplicates
     // exercise the tie-break path. Both rank the key's own candidate
     // stream.
     try {
-      val cand = ops.Similarity.ivfTrainedCandidates(spark, sfDir)
-      val agg = ops.Similarity.topK3(cand, col("vec_id"))
-        .collect().map(_.toSeq).toSeq
-      val window = windowTop3(cand, col("vec_id"))
-        .collect().map(_.toSeq).toSeq
+      val cand = ops.Similarity.ivfProbePairs(spark, sfDir, Nil)
+      val agg = inRankOrder(ops.Similarity.topK(cand, 3, col("vec_id")))
+      val window = inRankOrder(windowTopK(cand, 3, col("vec_id")))
       assert(agg.size == window.size,
         s"row counts differ: ${agg.size} vs ${window.size}")
       assert(agg == window, {
@@ -145,12 +146,12 @@ class AccuracySpec extends SparkSpec {
     } finally InternalCaches.unpersistAll()
   }
 
-  test("topK3 equals the rank window on random streams: cos ties, NaN, " +
-    "groups under 3 rows, both key shapes") {
-    // Spark's sort ranks NaN above every double (first under desc) and
-    // ties -0.0 with 0.0, the order TopKByScore.beats must keep; a small
-    // cos vocabulary forces ties onto the nbr_id tie-break, and a query
-    // range wider than the stream leaves groups of one or two rows
+  test("topK equals the rank window on random streams, k in {1, 3, 5}") {
+    // each k under both key shapes. Spark's sort ranks NaN above every
+    // double (first under desc) and ties -0.0 with 0.0, the order
+    // TopKByScore.beats must keep; a small cos vocabulary forces ties
+    // onto the nbr_id tie-break, and a query range wider than the
+    // stream leaves groups shorter than k
     import spark.implicits._
     val genCos = Gen.frequency(
       4 -> Gen.oneOf(0.5, 0.25, 0.9, -0.1, 0.0, -0.0),
@@ -163,14 +164,16 @@ class AccuracySpec extends SparkSpec {
     val law = Prop.forAll(genStream) { stream =>
       val pairs = stream.toDF("vec_id", "cos", "nbr_id")
         .withColumn("label", (col("vec_id") % 3).cast("int"))
-      Prop.all(Seq(Seq(col("vec_id")), Seq(col("vec_id"), col("label")))
-        .map { keys =>
-          val got = ops.Similarity.topK3(pairs, keys: _*).collect().toSeq
-          val want = windowTop3(pairs, keys: _*).collect().toSeq
-          // Row equality: NaN equals NaN
-          Prop(got == want) :|
-            s"keys=${keys.mkString(",")} got=$got want=$want"
-        }: _*)
+      Prop.all((for {
+        k <- Seq(1, 3, 5)
+        keys <- Seq(Seq(col("vec_id")), Seq(col("vec_id"), col("label")))
+      } yield {
+        val got = inRankOrder(ops.Similarity.topK(pairs, k, keys: _*))
+        val want = inRankOrder(windowTopK(pairs, k, keys: _*))
+        // Row equality: NaN equals NaN
+        Prop(got == want) :|
+          s"k=$k keys=${keys.mkString(",")} got=$got want=$want"
+      }): _*)
     }
     val res = Test.check(
       Test.Parameters.default.withMinSuccessfulTests(8), law)
@@ -236,8 +239,8 @@ class AccuracySpec extends SparkSpec {
     val sizes = Tables.embeddings(spark, sfDir)
       .groupBy($"label").count().as[(Int, Long)].collect()
     val labelPairs = sizes.map { case (_, n) => n * (n - 1) }.sum
-    val refinedPairs = ops.Similarity.refinedIvfPairs(spark, sfDir, 2)
-      .count()
+    val refinedPairs = ops.Similarity.ivfProbePairs(spark, sfDir,
+      Seq("label")).count()
     InternalCaches.unpersistAll()
     assert(refinedPairs < labelPairs,
       s"refined candidate stream ($refinedPairs) must undercut the " +
@@ -245,8 +248,8 @@ class AccuracySpec extends SparkSpec {
     // subset law: the refined search space is contained in the plain
     // label self-join's, so per query the refined rank-1 cosine can
     // never EXCEED the plain rank-1 cosine
-    val plain = windowTop3(allPairs(sfDir, col("x.label") === col("y.label")
-        && col("x.vec_id") =!= col("y.vec_id")), col("vec_id"))
+    val plain = windowTopK(allPairs(sfDir, col("x.label") === col("y.label")
+        && col("x.vec_id") =!= col("y.vec_id")), 3, col("vec_id"))
       .filter($"rn" === 1)
       .collect().map(r => r.getLong(0) -> r.getDouble(3)).toMap
     val refined = SparkEntry.queries("sim_ann_ivf")(spark, sfDir)

@@ -322,12 +322,14 @@ class PlanSpec extends SparkSpec {
 
   test("sim_ann_ivf / sim_ann_ivf_trained: ranked by the bounded top-k " +
     "aggregate, never a window") {
-    // a rank window shuffles and sorts the whole candidate stream; the
-    // TopKByScore aggregate (an ObjectHashAggregate) carries ≤ 3 rows
-    // per query through its exchange
+    // a rank window sorts the whole candidate stream; the
+    // TopKByScore aggregate (an ObjectHashAggregate) carries ≤ k rows
+    // per query through its exchange. Every per-query neighbour ranking
+    // goes through it.
     import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
     import org.apache.spark.sql.execution.window.WindowExec
-    for (key <- Seq("sim_ann_ivf", "sim_ann_ivf_trained")) {
+    for (key <- Seq("sim_ann_ivf", "sim_ann_ivf_trained", "sim_ann_lsh",
+        "sim_topk_cosine", "sim_recall_int8", "sim_recall_prefix")) {
       try {
         val plan = finalPlan(key)
         assert(stages(plan) { case w: WindowExec => w }.isEmpty,

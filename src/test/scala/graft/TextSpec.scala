@@ -12,6 +12,26 @@ class TextSpec extends SparkSpec {
       .select("a", "b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
 
+  /** The unfiltered LSH reference over `(doc_id, s)` sets: EVERY band
+    * collision of the 128-position signatures pays the exact verify, so
+    * no prefilter or prune stands between the bands and the rounded
+    * Jaccard cut at `threshold`.
+    */
+  private def bandedExact(sets: org.apache.spark.sql.DataFrame,
+                          threshold: Double): Set[(Long, Long)] = {
+    import org.apache.spark.sql.functions._
+    val sig = sets.withColumn("sig",
+      graft.expr.MinHashExprs.minhashSignature(col("s"), 128))
+    ops.Blocking.candidates(ops.Text.bandKeys(sig)).distinct()
+      .join(sets.select(col("doc_id").as("a"), col("s").as("sa")), "a")
+      .join(sets.select(col("doc_id").as("b"), col("s").as("sb")), "b")
+      .withColumn("ni", size(array_intersect(col("sa"), col("sb"))))
+      .filter(round(col("ni").cast("double")
+        / (size(col("sa")) + size(col("sb")) - col("ni")), 4) >= threshold)
+      .select("a", "b").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+  }
+
   test("dedup_simhash: loose dial matches the minhash near-dup set; " +
     "production default is a precise subset of it") {
     // cross-sketch law: the Jaccard-threshold near-dup notion minhash
@@ -86,19 +106,20 @@ class TextSpec extends SparkSpec {
   test("packed coarse prune is output-invariant on the fixture " +
     "(prune on == prune off)") {
     // the r14 in-stage 64-position cut only KILLS candidates; the exact
-    // verify decides the output, so disabling the prune (sigma = 0 —
-    // the exact r13 plan) must return identical rows. This is the
-    // recall law at the fixture's planted-pair margins (≥ 7σ above the
-    // cut); the threshold-adjacent 3e-6 miss class is documented at
-    // packedCut.
+    // verify decides the output, so the unpruned reference — every band
+    // collision of the same char 4-gram sets verified exactly — must
+    // return identical rows. This is the recall law at the fixture's
+    // planted-pair margins (≥ 7σ above the cut); the threshold-adjacent
+    // 3e-6 miss class is documented at packedCut.
+    import org.apache.spark.sql.functions._
     val withPrune = pairs("dedup_ngram_jaccard")
-    spark.conf.set("spark.graft.lsh.packedSigma", "0")
-    try {
-      val without = pairs("dedup_ngram_jaccard")
-      assert(withPrune == without,
-        s"packed prune changed output: only-pruned=${withPrune -- without} " +
-          s"only-unpruned=${without -- withPrune}")
-    } finally spark.conf.unset("spark.graft.lsh.packedSigma")
+    val without = bandedExact(Tables.documents(spark, sfDir)
+      .filter(length(col("text")) >= 4)
+      .select(col("doc_id"), ops.Text.charGramCol(col("text"), 4).as("s")),
+      0.8)
+    assert(withPrune == without,
+      s"packed prune changed output: only-pruned=${withPrune -- without} " +
+        s"only-unpruned=${without -- withPrune}")
     assert(withPrune.nonEmpty, "fixture must contain planted pairs")
   }
 
@@ -524,19 +545,9 @@ class TextSpec extends SparkSpec {
     // strict reference is built here over the same shingle sets, bands
     // and rounded Jaccard cut, and must give the prefiltered key's pairs
     import org.apache.spark.sql.functions._
-    val sets = ops.Text.tokenizedDocs(spark, sfDir)
+    val strict = bandedExact(ops.Text.tokenizedDocs(spark, sfDir)
       .filter(size(col("t")) >= 3)
-      .select(col("doc_id"), ops.Text.shingleCol(col("t")).as("s"))
-    val sig = sets.withColumn("sig",
-      graft.expr.MinHashExprs.minhashSignature(col("s"), 128))
-    val strict = ops.Blocking.candidates(ops.Text.bandKeys(sig)).distinct()
-      .join(sets.select(col("doc_id").as("a"), col("s").as("sa")), "a")
-      .join(sets.select(col("doc_id").as("b"), col("s").as("sb")), "b")
-      .withColumn("ni", size(array_intersect(col("sa"), col("sb"))))
-      .filter(round(col("ni").cast("double")
-        / (size(col("sa")) + size(col("sb")) - col("ni")), 4) >= 0.5)
-      .select("a", "b").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
+      .select(col("doc_id"), ops.Text.shingleCol(col("t")).as("s")), 0.5)
     val dflt = pairs("dedup_near_minhash")
     assert(strict.nonEmpty)
     assert(strict == dflt,
