@@ -24,8 +24,12 @@ object DevProbe {
       return
     }
     // generated classes compiled (a Spark codegen cache miss each) and
-    // JIT milliseconds per pass: a query whose passes keep compiling
-    // overflows spark.sql.codegen.cache.maxEntries
+    // JIT milliseconds per pass. The cache (spark.sql.codegen.cache.maxEntries,
+    // 100) is 4 segments of 25 entries, each its own LRU, keyed by
+    // (class loader, source), so a local-mode class compiled on the driver
+    // and in a task takes 2 entries. A query whose later passes keep
+    // compiling overflows a 25-entry segment, whichever one its loaders'
+    // hashes pick, so the count can differ from JVM to JVM.
     val compiles =
       org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
     val jit = java.lang.management.ManagementFactory.getCompilationMXBean

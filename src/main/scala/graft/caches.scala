@@ -38,7 +38,7 @@ object InternalCaches {
     * Lazy is also right when the first reader is a query AQE plans (one
     * with an exchange): AQE materializes each cached relation as one
     * table-cache query stage before the stages that read it, so every
-    * branch shares that one computation. `Text.componentLabels` relies on
+    * branch shares that one computation. `Text.labelRounds` relies on
     * this; its seed's shuffle is written once with a two-branch probe as
     * the first reader.
     */

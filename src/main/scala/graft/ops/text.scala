@@ -353,14 +353,11 @@ object Text {
     * organic fixture: collisions from bands inside the half got +8 of
     * 64 conditioned positions — est inflation (1−J)/8 — and organic
     * noise at J ≈ 0.47 passed its cut at ~20 %.) Computed once on the
-    * persisted signature relation.
+    * persisted signature relation, by the looped
+    * [[graft.expr.PackedSignature]] kernel.
     */
   private def packedSigCol(sig: Column): Column =
-    array((0 until 16).map { w =>
-      (0 until 8).map(b =>
-        shiftleft(get(sig, lit(w * 8 + b)).bitwiseAND(lit(0xFFL)), 8 * b))
-        .reduce(_.bitwiseOR(_))
-    }: _*)
+    graft.expr.MinHashExprs.packedSignature(sig)
 
   /** The packed prune's byte-count cut for `threshold`: every
     * candidate row has its agreeing band's 8 positions equal by
@@ -528,10 +525,8 @@ object Text {
         .hint("shuffle_hash"), "a")
       .join(bSig.select(col("doc_id").as("b"), col("sig").as("gb"))
         .hint("shuffle_hash"), "b")
-      .withColumn("est",
-        aggregate(zip_with(col("ga"), col("gb"),
-            (x, y) => when(x === y, 1).otherwise(0)),
-          lit(0), (acc, v) => acc + v).cast("double") / MinhashK)
+      .withColumn("est", graft.expr.MinHashExprs.eqPositions(
+        col("ga"), col("gb")).cast("double") / MinhashK)
       .filter(col("est") >= threshold - EstMargin)
       .select(col("a"), col("b"))
     // exact-verify join-backs: the BUILD side flips to the est-survivor
@@ -570,16 +565,16 @@ object Text {
                               rows: Int = Rows,
                               keep: Seq[String] = Nil): DataFrame =
     // band j hashes (j, sig[j·rows] … sig[j·rows + rows − 1]) with
-    // xxhash64, one literal-indexed `get` per position: a `transform`
-    // lambda or a slice() runs interpreted per doc and boxes the band,
-    // while this array of plain expressions is whole-stage codegen'd.
-    // The hashed values are the bucket ids of stored indexes, so the
-    // argument list must not change (DedupLawSpec pins it). `keep` columns
-    // ride along per posting row; keep them small.
+    // xxhash64 in one codegen'd loop ([[graft.expr.BandHashes]]): a
+    // `transform` lambda or a slice() runs interpreted per doc and boxes
+    // the band, and a literal array of `bands` xxhash64 calls generates a
+    // method too long for HotSpot to compile. The hashed values are the
+    // bucket ids of stored indexes, so they must not change (DedupLawSpec
+    // pins them). `keep` columns ride along per posting row; keep them
+    // small.
     sig.select(col("doc_id") +: keep.map(col) :+
-        posexplode(array((0 until bands).map(j => xxhash64(
-          (lit(j) +: (0 until rows).map(k =>
-            get(col("sig"), lit(j * rows + k)))): _*)): _*)): _*)
+        posexplode(graft.expr.MinHashExprs.bandHashes(
+          col("sig"), bands, rows)): _*)
       .withColumnRenamed("pos", "band")
       .withColumnRenamed("col", "bhash")
 
@@ -636,14 +631,75 @@ object Text {
     lshJaccardPairs(sh, 0.5, Blocking.adaptiveHotWidth(s, d))
   }
 
-  /** Round cap of [[componentLabels]]. Pointer jumping needs about
+  /** Round cap of [[labelRounds]]. Pointer jumping needs about
     * log2(diameter) rounds, so 50 never binds on a real component.
     */
   private val CcMaxRounds = 50
 
+  /** Connected components of an undirected `(a, b)` pair relation as
+    * `(id, lbl, n)`: every vertex with an edge, the least id of its
+    * component, and the component's size.
+    *
+    * The pairs persist and are counted. A graph that fits the session's
+    * broadcast budget (`pairs × 16 B ≤ spark.sql.autoBroadcastJoinThreshold`,
+    * the planner's own "small enough to ship whole" rule; ≤ 0 turns the
+    * path off) is collected and labelled by a union-find on the driver,
+    * and comes back as a local relation. Near-dup graphs are that small
+    * in practice. There the driver path reads the counted pairs once
+    * more, where the rounds run a seed, a probe and a job per round,
+    * each with its own generated classes: enough of them to overflow
+    * Spark's codegen cache and recompile on every call. Larger graphs
+    * run [[labelRounds]], which only needs the edges to fit the cluster.
+    */
+  private[graft] def componentLabels(pairs: DataFrame): DataFrame = {
+    val s = pairs.sparkSession
+    val (p, m) = graft.InternalCaches.persistTrackedCounted(
+      pairs.select(col("a"), col("b")))
+    val budget = s.sessionState.conf.autoBroadcastJoinThreshold
+    if (budget > 0 && m * 16 <= budget)
+      driverLabels(s, p.collect().map(r => (r.getLong(0), r.getLong(1))))
+    else
+      labelRounds(p.select(explode(array(
+          struct(col("a").as("src"), col("b").as("dst")),
+          struct(col("b").as("src"), col("a").as("dst")))).as("e"))
+        .select(col("e.src").as("src"), col("e.dst").as("dst")))
+        // size via a window over lbl: one shuffle, where a
+        // groupBy-then-join-back would shuffle the same relation twice
+        .withColumn("n", count(lit(1)).over(
+          org.apache.spark.sql.expressions.Window.partitionBy(col("lbl"))))
+  }
+
+  /** Union-find over collected pairs, as a local `(id, lbl, n)`
+    * relation. Each union links the larger root under the smaller, so a
+    * root is its component's least id.
+    */
+  private def driverLabels(s: SparkSession,
+                           pairs: Array[(Long, Long)]): DataFrame = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var r = parent.getOrElseUpdate(x, x)
+      while (parent(r) != r) r = parent(r)
+      var c = x
+      while (c != r) { val up = parent(c); parent(c) = r; c = up }
+      r
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val labelled = parent.keys.toArray.map(v => v -> find(v))
+    val sizes = labelled.groupMapReduce(_._2)(_ => 1L)(_ + _)
+    val rows = labelled.map { case (v, r) =>
+      org.apache.spark.sql.Row(v, r, sizes(r)) }
+    s.createDataFrame(java.util.Arrays.asList(rows: _*),
+      org.apache.spark.sql.types.StructType(Seq("id", "lbl", "n").map(
+        org.apache.spark.sql.types.StructField(_,
+          org.apache.spark.sql.types.LongType, nullable = false))))
+  }
+
   /** Connected components of a symmetric `(src, dst)` edge relation as
-    * `(id, lbl)`: every vertex with an edge, labelled with the least id
-    * of its component.
+    * `(id, lbl)`, in Spark rounds: [[componentLabels]]' path for graphs
+    * over the broadcast budget.
     *
     * Min-label propagation with pointer jumping: a round sets each label
     * to min(own, neighbours' labels, label-of-label). A label is always
@@ -660,7 +716,7 @@ object Text {
     * [[CcMaxRounds]] is an error: partial labels would be silently wrong
     * clusters.
     */
-  private[graft] def componentLabels(edges: DataFrame): DataFrame = {
+  private def labelRounds(edges: DataFrame): DataFrame = {
     val s = edges.sparkSession
     // lazy: the probe is the first reader, and AQE materializes the seed
     // once for both of its branches (persistTracked)
@@ -1741,35 +1797,20 @@ object Text {
     // near-dup pair graph. Pairwise dedup keeps BOTH ends of a chain
     // A~B~C when A~C falls under the threshold; component-level keeps one
     // doc per transitive cluster, the form production dedup ships. Only
-    // docs with an edge iterate ([[componentLabels]]); the rest are
-    // singletons and join back after. Output: every document with its
-    // cluster id (min doc_id reachable) and cluster size. Oracle:
-    // recursive CTE reachability over the brute-force pair graph.
+    // docs with an edge are labelled ([[componentLabels]]: a union-find on
+    // the driver when the pair graph fits the broadcast budget, Spark
+    // rounds otherwise); every other doc is its own cluster of size 1.
+    // Output: every document with its cluster id (min doc_id reachable)
+    // and cluster size. Oracle: recursive CTE reachability over the
+    // brute-force pair graph.
     "dedup_clusters" -> ((s, d) => {
-      // one explode emits both orientations in a single pass, so the
-      // edge cache persists lazily: the CC probe populates it and the
-      // seed in one query
-      val edges = graft.InternalCaches.persistTracked(
-        minhashPairs(s, d)
-          .select(explode(array(
-            struct(col("a").as("src"), col("b").as("dst")),
-            struct(col("b").as("src"), col("a").as("dst")))).as("e"))
-          .select(col("e.src").as("src"), col("e.dst").as("dst")))
-      val labels = componentLabels(edges)
-      // cluster size via a window over lbl: one shuffle, where a
-      // groupBy-then-join-back would shuffle the same relation twice
-      val clustered = labels
-        .withColumn("n", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("lbl"))))
-        .select(col("id").as("doc_id"), col("lbl").as("cluster_id"),
-          col("n").as("cluster_size"))
-      // singletons: no edge → own cluster of size 1, no iteration paid
-      val singletons = documents(s, d)
-        .join(labels.select(col("id").as("doc_id")), Seq("doc_id"),
-          "left_anti")
-        .select(col("doc_id"), col("doc_id").as("cluster_id"),
-          lit(1L).as("cluster_size"))
-      clustered.unionByName(singletons).orderBy("doc_id")
+      val labels = componentLabels(minhashPairs(s, d))
+      documents(s, d).select(col("doc_id"))
+        .join(labels.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
+        .select(col("doc_id"),
+          coalesce(col("lbl"), col("doc_id")).as("cluster_id"),
+          coalesce(col("n"), lit(1L)).as("cluster_size"))
+        .orderBy("doc_id")
     }),
 
     // Normalization — the canonicalization pass run BEFORE hashing or

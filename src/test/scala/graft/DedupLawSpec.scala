@@ -10,9 +10,14 @@ import org.apache.spark.sql.functions._
   *    `transform` lambda form hashed, (j, sig[j·rows + k]…), for both
   *    banding geometries. The values are bucket ids, so a stored index
   *    built by either form must keep matching probes built by the other.
-  *  - Components: `componentLabels` must equal a driver-side union-find
-  *    on any graph. The oracle fixture converges at the seed and the
-  *    empty-input sweep has no edges, so only this law drives the
+  *  - The packed signature and the equal-position count must equal the
+  *    expression forms they replaced, so the packed prune and the
+  *    signature estimate keep every cut.
+  *  - Components: `componentLabels` must equal a union-find on any
+  *    graph, labels and sizes, on both of its paths: the driver
+  *    union-find (the session's default broadcast threshold) and the
+  *    Spark rounds (`spark.sql.autoBroadcastJoinThreshold = -1`). The
+  *    oracle fixture takes the driver path, so only this law drives the
   *    pointer-jumping rounds: chains of 16+ docs in shuffled id order
   *    need several of them.
   */
@@ -58,6 +63,26 @@ object DedupLawSpec extends Properties("dedupClusters") {
       }: _*)
     }
 
+  property("packedSignature and eqPositions == their expression forms") =
+    // no shrinking: a shrunk signature is shorter than 128, where the
+    // forms differ by design (a missing position packs as 0, not null)
+    Prop.forAllNoShrink(genSigs, genSigs) { (xs, ys) =>
+      val pairs = xs.zip(ys).toDF("x", "y")
+      // the get/shift/or pack and the zip_with count the kernels replaced
+      def packForm(c: org.apache.spark.sql.Column) =
+        array((0 until 16).map(w => (0 until 8).map(b =>
+          shiftleft(get(c, lit(w * 8 + b)).bitwiseAND(lit(0xFFL)), 8 * b))
+          .reduce(_.bitwiseOR(_))): _*)
+      val eqForm = aggregate(zip_with(col("x"), col("y"),
+        (a, b) => when(a === b, 1).otherwise(0)), lit(0), (acc, v) => acc + v)
+      val rows = pairs.select(
+        graft.expr.MinHashExprs.packedSignature(col("x")), packForm(col("x")),
+        graft.expr.MinHashExprs.eqPositions(col("x"), col("y")), eqForm).collect()
+      Prop(rows.forall(r => r.getSeq[Long](0) == r.getSeq[Long](1) &&
+          r.getInt(2) == r.getInt(3))) :|
+        s"differs: ${rows.find(r => r.get(0) != r.get(1) || r.get(2) != r.get(3))}"
+    }
+
   /** Driver-side union-find: vertex -> least id of its component. */
   private def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
     val parent = scala.collection.mutable.Map.empty[Long, Long]
@@ -89,21 +114,44 @@ object DedupLawSpec extends Properties("dedupClusters") {
     extra <- Gen.chooseNum(0, 30).flatMap(Gen.listOfN(_, genEdge))
   } yield (chain ++ extra).filter { case (a, b) => a != b }
 
-  private def labels(undirected: Seq[(Long, Long)]): Map[Long, Long] = {
-    val sym = undirected.flatMap { case (a, b) => Seq((a, b), (b, a)) }
-    try ops.Text.componentLabels(sym.toDF("src", "dst")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    finally InternalCaches.unpersistAll()
+  // the broadcast threshold that selects each componentLabels path
+  private val paths = Seq("driver" -> None, "rounds" -> Some("-1"))
+  private val ThresholdKey = "spark.sql.autoBroadcastJoinThreshold"
+
+  /** `componentLabels` as vertex -> (label, size), and whether it took
+    * the driver path (a local relation comes back).
+    */
+  private def labels(undirected: Seq[(Long, Long)], threshold: Option[String])
+      : (Map[Long, (Long, Long)], Boolean) = {
+    val prev = spark.conf.get(ThresholdKey)
+    threshold.foreach(spark.conf.set(ThresholdKey, _))
+    try {
+      val df = ops.Text.componentLabels(undirected.toDF("a", "b"))
+      val local = df.queryExecution.analyzed
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+      (df.select("id", "lbl", "n").collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap, local)
+    } finally {
+      spark.conf.set(ThresholdKey, prev)
+      InternalCaches.unpersistAll()
+    }
   }
 
   property("componentLabels == union-find, chains of 16+") =
     Prop.forAll(genGraph) { undirected =>
-      val got = labels(undirected)
-      val want = unionFind(undirected)
-      Prop(got == want) :|
-        s"edges=$undirected wrong=${(got.toSet diff want.toSet).take(5)}"
+      val roots = unionFind(undirected)
+      val sizes = roots.values.groupBy(identity).view.mapValues(_.size.toLong)
+      val want = roots.map { case (v, r) => v -> (r, sizes(r)) }
+      Prop.all(paths.map { case (path, threshold) =>
+        val (got, local) = labels(undirected, threshold)
+        Prop(got == want && local == (path == "driver")) :|
+          s"$path: local=$local edges=$undirected " +
+            s"wrong=${(got.toSet diff want.toSet).take(5)}"
+      }: _*)
     }
 
   property("componentLabels of the empty edge set is empty") =
-    Prop(labels(Nil).isEmpty)
+    Prop.all(paths.map { case (path, threshold) =>
+      Prop(labels(Nil, threshold)._1.isEmpty) :| path
+    }: _*)
 }
