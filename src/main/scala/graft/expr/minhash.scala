@@ -2,10 +2,8 @@ package graft.expr
 
 import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
@@ -103,154 +101,6 @@ case class MinHashSignature(child: Expression, k: Int)
     copy(child = newChild)
 }
 
-/** LSH band hashes of a signature: element j is Spark's
-  * `xxhash64(j, sig[j·rows], …, sig[j·rows + rows − 1])`, bit for bit
-  * (seed 42, `hashInt` for the band number, `hashLong` per position, a
-  * null or missing position skipped as `xxhash64` skips a null
-  * argument). The hashes are the bucket ids of stored indexes, so they
-  * must not change. Generated code calls the one loop in the companion;
-  * the literal form, an array of `bands` 9-argument `xxhash64` calls,
-  * generated a 10 KB method that HotSpot refuses to compile (its 8,000
-  * byte huge-method limit), so it ran interpreted on every row.
-  */
-case class BandHashes(child: Expression, bands: Int, rows: Int)
-    extends UnaryExpression {
-  require(bands > 0 && rows > 0,
-    s"band_hashes needs positive bands and rows, got $bands x $rows")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"band_hashes requires array<long>, got ${other.catalogString}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  // a null signature hashes its band numbers alone, as xxhash64 does
-  override def nullable: Boolean = false
-  override def prettyName: String = "band_hashes"
-
-  override def eval(input: InternalRow): Any =
-    BandHashes.hashes(child.eval(input).asInstanceOf[ArrayData], bands, rows)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val kernel = MinHashExprs.module(BandHashes)
-    ev.copy(code = code"""
-       |${c.code}
-       |${classOf[ArrayData].getName} ${ev.value} =
-       |  $kernel.hashes(${c.isNull} ? null : ${c.value}, $bands, $rows);
-     """.stripMargin, isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object BandHashes {
-  def hashes(sig: ArrayData, bands: Int, rows: Int): ArrayData = {
-    val n = if (sig == null) 0 else sig.numElements()
-    val out = new Array[Long](bands)
-    var j = 0
-    while (j < bands) {
-      var h = XXH64.hashInt(j, 42L)
-      var p = j * rows
-      while (p < (j + 1) * rows) {
-        if (p < n && !sig.isNullAt(p)) h = XXH64.hashLong(sig.getLong(p), h)
-        p += 1
-      }
-      out(j) = h
-      j += 1
-    }
-    UnsafeArrayData.fromPrimitiveArray(out)
-  }
-}
-
-/** The first 128 signature positions byte-quantized into 16 longs: byte
-  * b of word w is the low byte of position w·8+b (a missing or null
-  * position packs as 0). The packed coarse prune's carry, compared by
-  * [[PackedEqBytes]]. One loop, where 128 get/shift/or expressions
-  * generated a method past HotSpot's 8,000 byte compile limit.
-  */
-case class PackedSignature(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"packed_signature requires array<long>, got ${other.catalogString}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "packed_signature"
-
-  override def nullSafeEval(input: Any): Any =
-    PackedSignature.pack(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      sig => s"${MinHashExprs.module(PackedSignature)}.pack($sig)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object PackedSignature {
-  def pack(sig: ArrayData): ArrayData = {
-    val out = new Array[Long](16)
-    val n = math.min(sig.numElements(), 128)
-    var p = 0
-    while (p < n) {
-      if (!sig.isNullAt(p))
-        out(p >> 3) |= (sig.getLong(p) & 0xFFL) << (8 * (p & 7))
-      p += 1
-    }
-    UnsafeArrayData.fromPrimitiveArray(out)
-  }
-}
-
-/** Count of equal positions between two array<long> signatures, over
-  * their common prefix; a null element equals nothing. The MinHash
-  * estimate's numerator: the `aggregate(zip_with(…))` form it replaces
-  * is interpreted (both are CodegenFallback) and allocates a 128-element
-  * array per candidate pair.
-  */
-case class EqPositions(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"eq_positions requires two array<long>, got " +
-          s"${l.catalogString} / ${r.catalogString}")
-    }
-  override def dataType: DataType =
-    org.apache.spark.sql.types.IntegerType
-  override def prettyName: String = "eq_positions"
-
-  override def nullSafeEval(l: Any, r: Any): Any =
-    EqPositions.count(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"${MinHashExprs.module(EqPositions)}.count($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-object EqPositions {
-  def count(a: ArrayData, b: ArrayData): Int = {
-    val n = math.min(a.numElements(), b.numElements())
-    var eq = 0
-    var i = 0
-    while (i < n) {
-      if (!a.isNullAt(i) && !b.isNullAt(i) && a.getLong(i) == b.getLong(i))
-        eq += 1
-      i += 1
-    }
-    eq
-  }
-}
-
 /** Count of equal BYTES between two packed byte arrays stored as
   * array<long> — the comparator of the r14 packed coarse-estimate
   * prune: 64 byte-quantized minhash positions travel as 8 longs
@@ -295,7 +145,7 @@ case class PackedEqBytes(left: Expression, right: Expression)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
-      val cls = MinHashExprs.module(PackedEqBytes)
+      val cls = PackedEqBytes.getClass.getName.stripSuffix("$") + "$.MODULE$"
       val n = ctx.freshName("n")
       val i = ctx.freshName("i")
       val eq = ctx.freshName("eq")
@@ -327,30 +177,10 @@ object PackedEqBytes {
 }
 
 object MinHashExprs {
-  /** Java expression for a Scala object, for generated code that calls
-    * a kernel written once in Scala.
-    */
-  private[expr] def module(o: AnyRef): String =
-    o.getClass.getName.stripSuffix("$") + "$.MODULE$"
-
   /** k-element MinHash signature of an array<string> shingle set. */
   def minhashSignature(shingles: Column, k: Int): Column =
     GraftSqlBridge.column(
       MinHashSignature(GraftSqlBridge.expression(shingles), k))
-
-  /** `bands` LSH band hashes of a signature — see [[BandHashes]]. */
-  def bandHashes(sig: Column, bands: Int, rows: Int): Column =
-    GraftSqlBridge.column(
-      BandHashes(GraftSqlBridge.expression(sig), bands, rows))
-
-  /** 16-long byte-quantized signature — see [[PackedSignature]]. */
-  def packedSignature(sig: Column): Column =
-    GraftSqlBridge.column(PackedSignature(GraftSqlBridge.expression(sig)))
-
-  /** Equal signature positions — see [[EqPositions]]. */
-  def eqPositions(a: Column, b: Column): Column =
-    GraftSqlBridge.column(EqPositions(
-      GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
 
   /** In-stage packed-pair score — see [[PackedEqBytes]]. */
   def packedEqBytes(a: Column, b: Column): Column =

@@ -353,11 +353,14 @@ object Text {
     * organic fixture: collisions from bands inside the half got +8 of
     * 64 conditioned positions — est inflation (1−J)/8 — and organic
     * noise at J ≈ 0.47 passed its cut at ~20 %.) Computed once on the
-    * persisted signature relation, by the looped
-    * [[graft.expr.PackedSignature]] kernel.
+    * persisted signature relation.
     */
   private def packedSigCol(sig: Column): Column =
-    graft.expr.MinHashExprs.packedSignature(sig)
+    array((0 until 16).map { w =>
+      (0 until 8).map(b =>
+        shiftleft(get(sig, lit(w * 8 + b)).bitwiseAND(lit(0xFFL)), 8 * b))
+        .reduce(_.bitwiseOR(_))
+    }: _*)
 
   /** The packed prune's byte-count cut for `threshold`: every
     * candidate row has its agreeing band's 8 positions equal by
@@ -525,8 +528,10 @@ object Text {
         .hint("shuffle_hash"), "a")
       .join(bSig.select(col("doc_id").as("b"), col("sig").as("gb"))
         .hint("shuffle_hash"), "b")
-      .withColumn("est", graft.expr.MinHashExprs.eqPositions(
-        col("ga"), col("gb")).cast("double") / MinhashK)
+      .withColumn("est",
+        aggregate(zip_with(col("ga"), col("gb"),
+            (x, y) => when(x === y, 1).otherwise(0)),
+          lit(0), (acc, v) => acc + v).cast("double") / MinhashK)
       .filter(col("est") >= threshold - EstMargin)
       .select(col("a"), col("b"))
     // exact-verify join-backs: the BUILD side flips to the est-survivor
@@ -565,16 +570,16 @@ object Text {
                               rows: Int = Rows,
                               keep: Seq[String] = Nil): DataFrame =
     // band j hashes (j, sig[j·rows] … sig[j·rows + rows − 1]) with
-    // xxhash64 in one codegen'd loop ([[graft.expr.BandHashes]]): a
-    // `transform` lambda or a slice() runs interpreted per doc and boxes
-    // the band, and a literal array of `bands` xxhash64 calls generates a
-    // method too long for HotSpot to compile. The hashed values are the
-    // bucket ids of stored indexes, so they must not change (DedupLawSpec
-    // pins them). `keep` columns ride along per posting row; keep them
-    // small.
+    // xxhash64, one literal-indexed `get` per position: a `transform`
+    // lambda or a slice() runs interpreted per doc and boxes the band,
+    // while this array of plain expressions is whole-stage codegen'd.
+    // The hashed values are the bucket ids of stored indexes, so the
+    // argument list must not change (DedupLawSpec pins it). `keep` columns
+    // ride along per posting row; keep them small.
     sig.select(col("doc_id") +: keep.map(col) :+
-        posexplode(graft.expr.MinHashExprs.bandHashes(
-          col("sig"), bands, rows)): _*)
+        posexplode(array((0 until bands).map(j => xxhash64(
+          (lit(j) +: (0 until rows).map(k =>
+            get(col("sig"), lit(j * rows + k)))): _*)): _*)): _*)
       .withColumnRenamed("pos", "band")
       .withColumnRenamed("col", "bhash")
 
@@ -636,70 +641,87 @@ object Text {
     */
   private val CcMaxRounds = 50
 
+  /** Largest edge relation [[componentLabels]] labels on the driver:
+    * 2^17 directed edges, 65,536 pairs. It is a fixed count, not a
+    * session setting, because what it bounds is driver heap: the
+    * collected edges as primitive arrays (8 B per end), the union-find's
+    * int arrays, and one `(id, lbl, n)` row per vertex. At the cap, on
+    * 65,536 disjoint pairs (131,072 vertices, the most the cap allows),
+    * the building thread allocated about 80 MB and the labels kept about
+    * 55 MB live once a join had broadcast them (4-core box, local mode).
+    */
+  private val DriverCcMaxEdges = 1L << 17
+
   /** Connected components of an undirected `(a, b)` pair relation as
     * `(id, lbl, n)`: every vertex with an edge, the least id of its
     * component, and the component's size.
     *
-    * The pairs persist and are counted. A graph that fits the session's
-    * broadcast budget (`pairs × 16 B ≤ spark.sql.autoBroadcastJoinThreshold`,
-    * the planner's own "small enough to ship whole" rule; ≤ 0 turns the
-    * path off) is collected and labelled by a union-find on the driver,
-    * and comes back as a local relation. Near-dup graphs are that small
-    * in practice. There the driver path reads the counted pairs once
-    * more, where the rounds run a seed, a probe and a job per round,
-    * each with its own generated classes: enough of them to overflow
-    * Spark's codegen cache and recompile on every call. Larger graphs
-    * run [[labelRounds]], which only needs the edges to fit the cluster.
+    * Both orientations of each pair persist as one `(src, dst)` edge
+    * relation, and the materializing count picks the path. Up to
+    * [[DriverCcMaxEdges]] edges are collected and labelled by a
+    * union-find on the driver, and come back as a local relation: two
+    * jobs and a handful of generated classes, where the rounds run a
+    * seed, a probe and a job per round, each with its own classes,
+    * enough of them to overflow Spark's codegen cache and recompile on
+    * every call. Measured verified pairs: 25 at sf0.01 and 256 at sf0.1
+    * (5,000 docs); 8 and 47 on the benchmark's 2- and 12-copy fixtures
+    * at seed 7. Larger graphs run [[labelRounds]] over the same cached
+    * edges, which only need to fit the cluster.
     */
   private[graft] def componentLabels(pairs: DataFrame): DataFrame = {
-    val s = pairs.sparkSession
-    val (p, m) = graft.InternalCaches.persistTrackedCounted(
-      pairs.select(col("a"), col("b")))
-    val budget = s.sessionState.conf.autoBroadcastJoinThreshold
-    if (budget > 0 && m * 16 <= budget)
-      driverLabels(s, p.collect().map(r => (r.getLong(0), r.getLong(1))))
-    else
-      labelRounds(p.select(explode(array(
+    val (edges, m) = graft.InternalCaches.persistTrackedCounted(
+      pairs.select(explode(array(
           struct(col("a").as("src"), col("b").as("dst")),
           struct(col("b").as("src"), col("a").as("dst")))).as("e"))
         .select(col("e.src").as("src"), col("e.dst").as("dst")))
-        // size via a window over lbl: one shuffle, where a
-        // groupBy-then-join-back would shuffle the same relation twice
-        .withColumn("n", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("lbl"))))
+    if (m <= DriverCcMaxEdges) driverLabels(edges) else labelRounds(edges)
   }
 
-  /** Union-find over collected pairs, as a local `(id, lbl, n)`
-    * relation. Each union links the larger root under the smaller, so a
-    * root is its component's least id.
+  /** [[componentLabels]] on the driver: the edges come back as primitive
+    * arrays, vertices are indexed by sorted id, and each union links the
+    * larger root index under the smaller, so a root is its component's
+    * least id.
     */
-  private def driverLabels(s: SparkSession,
-                           pairs: Array[(Long, Long)]): DataFrame = {
-    val parent = scala.collection.mutable.LongMap.empty[Long]
-    def find(x: Long): Long = {
-      var r = parent.getOrElseUpdate(x, x)
+  private def driverLabels(edges: DataFrame): DataFrame = {
+    val ends = edges.rdd.mapPartitions { it =>
+      val b = Array.newBuilder[Long]
+      it.foreach { r => b += r.getLong(0); b += r.getLong(1) }
+      Iterator.single(b.result())
+    }.collect().flatten
+    val ids = ends.clone()
+    java.util.Arrays.sort(ids)
+    var n = 0
+    ids.indices.foreach { i =>
+      if (i == 0 || ids(i) != ids(n - 1)) { ids(n) = ids(i); n += 1 }
+    }
+    val parent = Array.range(0, n)
+    def find(x: Int): Int = {
+      var r = x
       while (parent(r) != r) r = parent(r)
       var c = x
       while (c != r) { val up = parent(c); parent(c) = r; c = up }
       r
     }
-    pairs.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
+    (0 until ends.length by 2).foreach { i =>
+      val ra = find(java.util.Arrays.binarySearch(ids, 0, n, ends(i)))
+      val rb = find(java.util.Arrays.binarySearch(ids, 0, n, ends(i + 1)))
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
     }
-    val labelled = parent.keys.toArray.map(v => v -> find(v))
-    val sizes = labelled.groupMapReduce(_._2)(_ => 1L)(_ + _)
-    val rows = labelled.map { case (v, r) =>
-      org.apache.spark.sql.Row(v, r, sizes(r)) }
-    s.createDataFrame(java.util.Arrays.asList(rows: _*),
+    val root = Array.tabulate(n)(find)
+    val size = new Array[Long](n)
+    root.foreach(r => size(r) += 1)
+    val rows = new java.util.ArrayList[org.apache.spark.sql.Row](n)
+    (0 until n).foreach(v =>
+      rows.add(org.apache.spark.sql.Row(ids(v), ids(root(v)), size(root(v)))))
+    edges.sparkSession.createDataFrame(rows,
       org.apache.spark.sql.types.StructType(Seq("id", "lbl", "n").map(
         org.apache.spark.sql.types.StructField(_,
           org.apache.spark.sql.types.LongType, nullable = false))))
   }
 
   /** Connected components of a symmetric `(src, dst)` edge relation as
-    * `(id, lbl)`, in Spark rounds: [[componentLabels]]' path for graphs
-    * over the broadcast budget.
+    * `(id, lbl, n)`, in Spark rounds: [[componentLabels]]' path for
+    * graphs over [[DriverCcMaxEdges]].
     *
     * Min-label propagation with pointer jumping: a round sets each label
     * to min(own, neighbours' labels, label-of-label). A label is always
@@ -716,7 +738,7 @@ object Text {
     * [[CcMaxRounds]] is an error: partial labels would be silently wrong
     * clusters.
     */
-  private def labelRounds(edges: DataFrame): DataFrame = {
+  private[graft] def labelRounds(edges: DataFrame): DataFrame = {
     val s = edges.sparkSession
     // lazy: the probe is the first reader, and AQE materializes the seed
     // once for both of its branches (persistTracked)
@@ -768,7 +790,10 @@ object Text {
       s"connected components: labels not converged after CcMaxRounds = " +
         s"$CcMaxRounds rounds — partial labels would be silently wrong " +
         "clusters")
-    labels
+    // size via a window over lbl: one shuffle, where a groupBy-then-
+    // join-back would shuffle the same relation twice
+    labels.withColumn("n", count(lit(1)).over(
+      org.apache.spark.sql.expressions.Window.partitionBy(col("lbl"))))
   }
 
   /** Cache partition count for the KB-per-row LSH relations (shingle /
@@ -1798,8 +1823,8 @@ object Text {
     // A~B~C when A~C falls under the threshold; component-level keeps one
     // doc per transitive cluster, the form production dedup ships. Only
     // docs with an edge are labelled ([[componentLabels]]: a union-find on
-    // the driver when the pair graph fits the broadcast budget, Spark
-    // rounds otherwise); every other doc is its own cluster of size 1.
+    // the driver up to a fixed edge count, Spark rounds past it); every
+    // other doc is its own cluster of size 1.
     // Output: every document with its cluster id (min doc_id reachable)
     // and cluster size. Oracle: recursive CTE reachability over the
     // brute-force pair graph.

