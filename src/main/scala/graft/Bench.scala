@@ -20,6 +20,22 @@ package graft
   *    BENCH json carries it.
   */
 object Bench {
+  /** A counter of the Spark jobs `spark` starts from now on, fed by a
+    * listener (on the async listener bus, so read it after the actions
+    * it should cover have returned).
+    */
+  private[graft] def countJobs(spark: org.apache.spark.sql.SparkSession)
+      : java.util.concurrent.atomic.AtomicInteger = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    spark.sparkContext.addSparkListener(
+      new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet(): Unit
+      })
+    jobs
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.local(Some(sfDir))
@@ -33,14 +49,7 @@ object Bench {
     // listener bus, but every action in `materialize` is blocking and the
     // snapshot is taken after the post-key unpersist+GC (tens of ms), so
     // attribution lag is not a practical concern at per-key granularity.
-    val jobCounter = new java.util.concurrent.atomic.AtomicInteger(0)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobCounter.incrementAndGet(): Unit
-        }
-      })
+    val jobCounter = countJobs(spark)
 
     def materialize(name: String): Unit =
       SparkEntry.queries(name)(spark, sfDir)

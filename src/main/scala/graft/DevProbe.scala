@@ -1,9 +1,9 @@
 package graft
 
 /** Dev-only timing probe (not part of the shipped surface): run one
-  * query N times in a single session, print each pass's seconds —
-  * separates per-session warm-up (JIT/codegen/IO cache) from the
-  * query's steady-state cost. Usage:
+  * query N times in a single session, print each pass's seconds, Spark
+  * jobs and generated-class compiles — separates per-session warm-up
+  * (JIT/codegen/IO cache) from the query's steady-state cost. Usage:
   *   runMain graft.DevProbe <sfDir> <key> [n]
   */
 object DevProbe {
@@ -16,10 +16,13 @@ object DevProbe {
     // (with whole-stage-codegen ids — the ids OOM stack traces name)
     // and exit without executing. Forensics for scale-probe failures:
     // maps "GeneratedIteratorForCodegenStage<k>" to an operator.
+    // `plan_id`s are masked: a builder's own jobs draw a varying number
+    // of them, so they differ between two runs of one commit.
     if (sys.env.get("SPARK_GRAFT_EXPLAIN").contains("1")) {
       val df = SparkEntry.queries(key)(spark, sfDir)
       println(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
+        org.apache.spark.sql.execution.FormattedMode)
+        .replaceAll("plan_id=\\d+", "plan_id=N"))
       spark.stop()
       return
     }
@@ -33,6 +36,7 @@ object DevProbe {
     val compiles =
       org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
     val jit = java.lang.management.ManagementFactory.getCompilationMXBean
+    val jobs = Bench.countJobs(spark)
     (1 to n).foreach { i =>
       val c0 = compiles.getCount
       val j0 = jit.getTotalCompilationTime
@@ -48,6 +52,7 @@ object DevProbe {
       println(f"PROBE pass=$i $key build=${(tBuild - t0) / 1e9}%.3f " +
         f"plan=${(tPlan - tBuild) / 1e9}%.3f " +
         f"exec=${(tExec - tPlan) / 1e9}%.3f s " +
+        s"jobs=${jobs.getAndSet(0)} " +
         s"codegen_compiles=${compiles.getCount - c0} " +
         s"jit_ms=${jit.getTotalCompilationTime - j0}")
     }

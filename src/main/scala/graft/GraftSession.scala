@@ -21,9 +21,8 @@ object GraftSession {
     // keep adaptive-width exchanges on the zero-execution-memory bypass
     // writer (InternalCaches.ShuffleBypassKey)
     InternalCaches.ShuffleBypassKey -> InternalCaches.ShuffleBypassValue,
-    // one BroadcastExchange build of the IVF lazy round chain can nest
-    // up to `Similarity.IvfChainDepth` rounds of corpus compute
-    // (Similarity.ivfCentroidsOf); 300 s would time the whole nest
+    // a broadcast build's timer covers its whole subtree's compute; the
+    // committed sf100 sweep ran at 3600 s
     "spark.sql.broadcastTimeout" -> "3600",
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{DataFrame, Dataset}
 
 /** Registry of the engine's internal persisted relations.
   *
@@ -18,10 +18,10 @@ import org.apache.spark.sql.Dataset
   * operator appends another (equivalent-plan) entry. That is deliberate —
   * Spark's CacheManager dedupes cache storage by canonicalized plan, so
   * the duplicate entry costs a registry slot, not a second cache copy,
-  * and unpersist is idempotent (an operator that unpersists an
-  * intermediate itself, as the BPE training rounds and the IVF Lloyd
-  * chain do, leaves a stale registry entry whose later unpersist is a
-  * no-op).
+  * and unpersist is idempotent.
+  *
+  * Driver-run round loops do not persist their per-round state here: they
+  * pass it through [[cut]], whose blocks the ContextCleaner frees.
   */
 object InternalCaches {
   private val entries = scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]
@@ -54,15 +54,31 @@ object InternalCaches {
   }
 
   /** [[persistTracked]] with eager materialization, surfacing the
-    * materializing count — for iterative drivers whose loop condition is
-    * the row count (BFS frontiers, CC convergence): eager + a separate
-    * isEmpty/count probe was two Spark jobs per round for one number.
+    * materializing count — for callers that branch on the row count (the
+    * connected-components edge cache, the triangle counter's oriented
+    * edges): eager + a separate count was two Spark jobs for one number.
     */
   private[graft] def persistTrackedCounted[T](ds: Dataset[T])
       : (Dataset[T], Long) = {
     val p = persistTracked(ds)
     (p, p.count())
   }
+
+  /** One round's state of a driver-run loop (CC rounds, BFS hops, BPE
+    * merges, Lloyd rounds), cut from its lineage: a lazy
+    * `localCheckpoint`, rebuilt over the same rows. Spark's
+    * `Dataset.checkpoint` calls `execute()` on the adaptive plan, so the
+    * round's shuffle and broadcast stages run here and only its final
+    * stage waits for the caller's first action, which writes the blocks.
+    * The next round's plan starts at a scan of those blocks, so plans stay
+    * one round deep however many rounds run, and the rebuild drops the
+    * checkpoint's inherited size estimate, so join estimates do not
+    * multiply round over round. The ContextCleaner frees the blocks once
+    * the loop drops the handle; like any local checkpoint they are lost
+    * with their executor.
+    */
+  private[graft] def cut(df: DataFrame): DataFrame =
+    org.apache.spark.sql.GraftSqlBridge.withoutStats(df.localCheckpoint(false))
 
   /** Drop every engine-internal cache entry registered since the last call.
     * Safe to call at any time — in-flight queries recompute from source.

@@ -168,7 +168,7 @@ object Graph {
     // co-partitioned cache on both sides — no exchange, just the sort.
     // persistTrackedCounted: the materializing count doubles as the edge
     // count the bloom sizing below needs (eager + a separate count was
-    // two jobs for one number — the BFS/CC pattern).
+    // two jobs for one number).
     // sortWithinPartitions(src): InMemoryTableScan forwards the cached
     // plan's outputOrdering, so the wedge self-join's TWO merge-join
     // sorts become no-ops — the m-sized relation is sorted ONCE at cache
@@ -182,7 +182,7 @@ object Graph {
         when(ku < kv, kv).otherwise(ku).as("kdst"))
         .repartition(p, col("src"))
         .sortWithinPartitions("src"))
-    // Cache rotation (the dedup_clusters per-round pattern): every reader
+    // Early drop: every reader
     // of `e` and `deg` is consumed by the oriented materialization above
     // — from here the whole computation reads `oriented` only. Dropping
     // them NOW frees ~m-sized columnar storage (disk-spilled at scale:
@@ -435,15 +435,13 @@ object Graph {
     * on dense graphs; capped at depth 2 for that reason) where this
     * enumerates NODES. The edge relation is cached pre-partitioned on
     * `src`; frontiers are rank-sized relations keyed the same way, so
-    * each step is one co-partitioned join + one distinct shuffle. Only
-    * the per-step FRONTIER is persisted (it feeds three branches: the
-    * anti-join, the next expansion, and the result union); the visited
-    * set stays a shallow union over the already-cached frontiers, so a
-    * step costs one materialization. Entries live until the caller's
-    * [[graft.InternalCaches.unpersistAll]] — at most maxHops+2 cached
-    * relations (fewer when the frontier exhausts early): the seeds and
-    * per-hop frontiers are frontier-sized, the first entry is the
-    * EDGE-sized repartitioned relation.
+    * each step is one co-partitioned join + one distinct shuffle. Each
+    * hop's frontier passes through [[graft.InternalCaches.cut]] (it
+    * feeds three branches: the anti-join, the next expansion, and the
+    * result union), whose materializing count is the loop condition; the
+    * visited set stays a shallow union over the cut frontiers. The edge
+    * and seed caches live until the caller's
+    * [[graft.InternalCaches.unpersistAll]].
     */
   def shortestPaths(edges: DataFrame, seeds: DataFrame,
                     maxHops: Int, parts: Int = -1): DataFrame = {
@@ -476,8 +474,6 @@ object Graph {
       // Aliases, not Dataset column refs: after the first step every
       // relation here shares lineage with `e`, and unqualified refs trip
       // the ambiguous-self-join detector.
-      // The materializing count IS the loop condition — eager + a
-      // separate isEmpty probe was two jobs per hop for one number.
       // Both the frontier and the visited set GROW WITH THE GRAPH (on a
       // dense graph the 2nd frontier is already most nodes) — shuffle
       // pins on both joins, same broadcast-cliff rule as pagerank above.
@@ -485,18 +481,7 @@ object Graph {
       // frontier/visited relations, 87.6 s vs 44.9 s with shuffle plans.
       // Build sides: the frontier against the cached hash(src) edge
       // partitioning (edges never move), the visited set for the anti.
-      // LINEAGE TRUNCATION (r17, the dedup_clusters fix — guide
-      // §3.3/§7.3): hop h's plan embeds BOTH frontier(h−1) and the
-      // whole visited(h−1) union, so |plan(hop h)| ≈ 2^h — fine at the
-      // declared maxHops=3 (measured 4,608 formatted lines), a dead
-      // driver at a caller's maxHops=20. localCheckpoint cuts each hop
-      // to a constant-size LogicalRDD; the lazy form materializes in
-      // the SAME count job as before (jobs/hop unchanged), and `visited`
-      // stays a shallow union over constant-size checkpoint scans.
-      // Blocks are freed by the ContextCleaner when the hop's Dataset
-      // becomes unreachable (the registry cannot track RDD checkpoints);
-      // they are frontier-sized, the same space the old cache held.
-      val next =
+      val next = InternalCaches.cut(
         frontier.as("f").hint("shuffle_hash")
           .join(e.as("g"), col("f.node") === col("g.src"))
           .select(col("g.dst").as("node")).distinct()
@@ -504,8 +489,7 @@ object Graph {
           .join(visited.as("v").hint("shuffle_hash"),
             col("x.node") === col("v.node"),
             "left_anti")
-          .withColumn("hops", lit(h))
-          .localCheckpoint(false)
+          .withColumn("hops", lit(h)))
       val n = next.count()
       // Early exit on an exhausted frontier: the remaining hops would
       // each still launch the full expansion pipeline over zero rows.

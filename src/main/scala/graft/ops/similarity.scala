@@ -57,12 +57,6 @@ object Similarity {
     */
   private val NearEmbNprobe = 3
 
-  /** IVF training rounds one broadcast build may nest before
-    * [[ivfCentroidsOf]] materializes a generation mid-chain. 4 keeps the
-    * default iters = 3 chain free of mid-chain counts.
-    */
-  private val IvfChainDepth = 4
-
   /** Probe-cell width past which `dedup_near_embedding` salts a cell
     * when `spark.graft.lsh.hotBucketWidth` is unset. k-means cells are
     * not uniform: one skewed cell at the sf100 probe put its whole
@@ -115,9 +109,8 @@ object Similarity {
     *    groupBy — the one shuffle per round carries K·dim averaged
     *    cells (map-side partial sums), not vectors.
     *  - The driver loop is control-plane only, exactly like
-    *    dedup_clusters: K rows of centroid state per round, persisted
-    *    eagerly (the assign stage reads it from every task) and dropped
-    *    through the handle.
+    *    dedup_clusters: K rows of centroid state per round, passed
+    *    through [[graft.InternalCaches.cut]].
     *
     * Determinism: centroid coordinates are rounded to 6 decimals each
     * round, so the order-dependent last-ulp of the distributed mean
@@ -130,7 +123,7 @@ object Similarity {
     * and determinism laws additionally live in AccuracySpec.
     *
     * [[ivfCentroids]] runs the training loop and returns the final K-row
-    * centroid relation `(cid, c)` (persisted — the consumers read it
+    * centroid relation `(cid, c)` (materialized — the consumers read it
     * from every task). [[scoredVecs]] packs those K rows into ONE
     * broadcast row and scores every vector against all of them in a
     * single codegen'd projection ([[graft.expr.CentroidScores]]) — so
@@ -200,7 +193,7 @@ object Similarity {
     * relation — extracted (r10) so the blocked near-dup path and the
     * accuracy laws can train on planted fixtures, not only the
     * embeddings table. Seeds are the k lowest vec_ids; the returned
-    * K-row (cid, c) relation is persisted (every consumer task reads
+    * K-row (cid, c) relation is materialized (every consumer task reads
     * it).
     */
   private[graft] def ivfCentroidsOf(v: DataFrame, k: Int,
@@ -209,49 +202,20 @@ object Similarity {
     // correctly on dense 0-based ids (review finding r10: a planted
     // relation starting at 1000 would train on zero seeds and silently
     // return an empty index)
-    // LAZY round chain (r16, guide §1.2 — control-plane job count): each
-    // round's K-row centroid relation persists lazily; the whole chain
-    // materializes in ONE final count, each generation's cache written as
-    // the next round's broadcast subtree pulls it through. The old eager
-    // rotation ran a standalone count job per round. Peak live state is
-    // `iters` K-row relations (K ∝ √n — a few MB even at 10⁹ vectors), so
-    // the rotation's memory argument doesn't apply at centroid size;
-    // intermediates drop right after the final materialization, through
-    // their handles.
-    var cents = graft.InternalCaches.persistTracked(
+    var cents = graft.InternalCaches.cut(
       v.orderBy(col("vec_id")).limit(k)
         .select(col("vec_id").cast("int").as("cid"), col("v").as("c")))
-    val stale = scala.collection.mutable.ArrayBuffer.empty[
-      org.apache.spark.sql.DataFrame]
-    // CHAIN-DEPTH BOUND (r17, advice): in the lazy chain, round i's
-    // BroadcastExchange build recursively computes every unmaterialized
-    // earlier round — a full corpus scan + K·dim shuffle each — and
-    // `spark.sql.broadcastTimeout` (default 300 s) times the WHOLE nest.
-    // A mid-chain count() every [[IvfChainDepth]] rounds materializes
-    // that generation's cache, so no single broadcast build ever covers
-    // more than that many rounds of compute. The per-generation persists
-    // below are what make this effective (and retries cheap): each K-row
-    // cache write costs ~nothing, but is the checkpoint a mid-count (or
-    // a task retry) lands on — that is why intermediates stay persisted
-    // even though each is read exactly once on the happy path. The
-    // engine's GraftSession also raises broadcastTimeout;
-    // library callers with huge corpora should do one or the other.
-    (1 to iters).foreach { i =>
-      val upd = assignCells(v, cents)
+    (1 to iters).foreach { _ =>
+      cents = graft.InternalCaches.cut(assignCells(v, cents)
         .select(col("cell").as("cid"), posexplode(col("v")))
         .groupBy(col("cid"), col("pos"))
         .agg(round(avg(col("col")), 6).as("m"))
         .groupBy(col("cid"))
         .agg(transform(array_sort(collect_list(struct(col("pos"),
-          col("m")))), x => x.getField("m")).as("c"))
-      stale += cents
-      cents = graft.InternalCaches.persistTracked(upd)
-      if (i % IvfChainDepth == 0 && i < iters) cents.count(): Unit
+          col("m")))), x => x.getField("m")).as("c")))
     }
-    // one materializing action for the chain tail; consumers then read a
-    // populated final relation from every task (the return contract)
+    // consumers then read a materialized final relation from every task
     cents.count()
-    stale.foreach(_.unpersist())
     cents
   }
 

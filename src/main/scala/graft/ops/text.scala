@@ -138,32 +138,17 @@ object Text {
   private def bpeTrainUncached(s: SparkSession, d: String)
       : Seq[(Int, String, String, Long)] = {
     val k = 8
-    // ONE Spark job per training round (r16, guide §1.2 "remove
-    // unnecessary passes" applied to the control plane): each round's
-    // rewritten vocabulary persists LAZILY and is materialized by the
-    // NEXT round's argmax job — the old eager persist ran a standalone
-    // count job per round (2 jobs/round), and the final round's rewrite
-    // (which nothing reads — `merges` is the training output) paid a
-    // whole materialization for a relation that was immediately dropped.
-    // Rotation discipline: a generation may only unpersist AFTER its
-    // successor is materialized (unpersisting earlier would force the
-    // successor's lineage to recompute the whole merge chain from the
-    // corpus), so `prev` trails one round behind. Peak live generations:
-    // 2 — identical to the eager rotation.
-    var seqs = graft.InternalCaches.persistTracked(
+    var seqs = graft.InternalCaches.cut(
       tokenizedDocs(s, d)
         .select(explode(col("t")).as("w"))
         .filter(length(col("w")) > 0)
         .groupBy(col("w")).agg(count(lit(1)).as("freq"))
         .select(col("freq"), split(col("w"), "").as("seq")))
-    var prev = seqs
     val merges = scala.collection.mutable.ArrayBuffer
       .empty[(Int, String, String, Long)]
     var rank = 0
     var exhausted = false
     while (rank < k && !exhausted) {
-      // this argmax job materializes `seqs` (single-branch first reader,
-      // the lazy-persist contract in InternalCaches.persistTracked)...
       val top = seqs.filter(size(col("seq")) >= 2)
         .select(col("freq"),
           explode(transform(sequence(lit(0), size(col("seq")) - 2),
@@ -173,16 +158,13 @@ object Text {
         .agg(sum(col("freq")).as("n"))
         .orderBy(desc("n"), col("a"), col("b"))
         .limit(1).collect()
-      // ... so the PREVIOUS generation (fully consumed by that
-      // materialization) can drop now
-      if (prev ne seqs) { prev.unpersist(); prev = seqs }
       if (top.isEmpty) exhausted = true
       else {
         val (a, b, n) =
           (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
         rank += 1
         merges += ((rank, a, b, n))
-        if (rank < k) seqs = graft.InternalCaches.persistTracked(
+        if (rank < k) seqs = graft.InternalCaches.cut(
           seqs.select(col("freq"),
             aggregate(col("seq"), array().cast("array<string>"),
               (acc, x) =>
@@ -193,8 +175,6 @@ object Text {
                   .otherwise(concat(acc, array(x)))).as("seq")))
       }
     }
-    seqs.unpersist()
-    prev.unpersist()
     merges.toSeq
   }
 
@@ -739,7 +719,6 @@ object Text {
     * clusters.
     */
   private[graft] def labelRounds(edges: DataFrame): DataFrame = {
-    val s = edges.sparkSession
     // lazy: the probe is the first reader, and AQE materializes the seed
     // once for both of its branches (persistTracked)
     var labels: DataFrame = graft.InternalCaches.persistTracked(
@@ -762,27 +741,19 @@ object Text {
           col("j_id") === col("j_id2"))
         .select(col("via").as("id"), col("j_lbl"))
       // The new label carries its changed flag (labels only decrease), so
-      // convergence needs no comparison join. localCheckpoint cuts the
-      // lineage: the round reads `labels` from four branches, so without
-      // it the plan grows ~4x per round and analysis goes exponential.
-      // The lazy form materializes in the same job as the count.
-      val next = labels.join(nm, labels("id") === nm("src"), "left")
-        .join(jump, Seq("id"), "left")
-        .select(col("id"),
-          least(col("lbl"),
-            least(coalesce(col("nbr_lbl"), col("lbl")),
-              coalesce(col("j_lbl"), col("lbl")))).as("new_lbl"),
-          col("lbl"))
-        .select(col("id"), col("new_lbl").as("lbl"),
-          (col("new_lbl") < col("lbl")).as("chg"))
-        .localCheckpoint(false)
+      // convergence needs no comparison join.
+      val next = graft.InternalCaches.cut(
+        labels.join(nm, labels("id") === nm("src"), "left")
+          .join(jump, Seq("id"), "left")
+          .select(col("id"),
+            least(col("lbl"),
+              least(coalesce(col("nbr_lbl"), col("lbl")),
+                coalesce(col("j_lbl"), col("lbl")))).as("new_lbl"),
+            col("lbl"))
+          .select(col("id"), col("new_lbl").as("lbl"),
+            (col("new_lbl") < col("lbl")).as("chg")))
       val changed = next.filter(col("chg")).count()
-      // rebuilt from the checkpoint's rows: a checkpoint keeps its plan's
-      // size estimate, join estimates multiply their inputs', so the
-      // estimate's digits grew ~4x per round and planning stalled in
-      // BigInt products after about eight rounds
-      val kept = next.select(col("id"), col("lbl"))
-      labels = s.createDataFrame(kept.rdd, kept.schema)
+      labels = next.select(col("id"), col("lbl"))
       converged = changed == 0
       rounds += 1
     }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * standard extension-library pattern for registering custom Catalyst
   * expressions without a full FunctionRegistry plugin (cf. the public
   * DatasetFactory/ExpressionUtils bridges in Spark extension projects).
-  * Kept to exactly these two forwarders.
+  * Kept to these forwarders.
   */
 object GraftSqlBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -24,4 +24,14 @@ object GraftSqlBridge {
       builder: Seq[Expression] => Expression): Unit =
     spark.sessionState.functionRegistry.registerFunction(
       org.apache.spark.sql.catalyst.FunctionIdentifier(name), info, builder)
+
+  /** A checkpointed DataFrame's rows as a new DataFrame over the same RDD,
+    * without the statistics the checkpoint inherited from its plan
+    * (`graft.InternalCaches.cut`). Unlike `createDataFrame(df.rdd, schema)`
+    * it converts no rows.
+    */
+  def withoutStats(checkpointed: DataFrame): DataFrame =
+    checkpointed.sparkSession.asInstanceOf[classic.SparkSession]
+      .internalCreateDataFrame(checkpointed.queryExecution.logical
+        .asInstanceOf[execution.LogicalRDD].rdd, checkpointed.schema)
 }

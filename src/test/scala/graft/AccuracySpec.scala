@@ -392,8 +392,7 @@ class AccuracySpec extends SparkSpec {
           rows.map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("cell"))).toSeq)
       } finally spark.conf.unset("spark.graft.ivf.iters")
     }
-    // rounds 4 and 5 run past the chain depth (4): round 4 materializes
-    // its generation mid-chain, and the descent must not notice
+    // iters 0 (the raw seeds) through 5, one lineage cut per round
     val objs = (0 to 5).map(i => run(i)._1)
     objs.sliding(2).foreach { case Seq(a, b) =>
       assert(b <= a + 1e-3, s"objective rose across a round: $objs")
