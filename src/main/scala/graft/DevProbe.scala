@@ -1,28 +1,32 @@
 package graft
 
-/** Dev-only timing probe (not part of the shipped surface): run one
-  * query N times in a single session, print each pass's seconds, Spark
-  * jobs and generated-class compiles — separates per-session warm-up
-  * (JIT/codegen/IO cache) from the query's steady-state cost. Usage:
-  *   runMain graft.DevProbe <sfDir> <key> [n]
+/** Dev-only timing probe (not part of the shipped surface): run a
+  * comma-separated list of queries N times in a single session, in order
+  * within each pass as a workload's keys share a JVM, and print each
+  * key's seconds, Spark jobs and generated-class compiles per pass —
+  * separates per-session warm-up (JIT/codegen/IO cache) from the
+  * queries' steady-state cost. Usage:
+  *   runMain graft.DevProbe <sfDir> <key>[,<key>...] [n]
   */
 object DevProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val key = args(1)
+    val keys = args(1).split(',').toSeq
     val n = if (args.length > 2) args(2).toInt else 3
     val spark = GraftSession.local(Some(sfDir))
-    // SPARK_GRAFT_EXPLAIN=1: print the key's formatted physical plan
+    // SPARK_GRAFT_EXPLAIN=1: print each key's formatted physical plan
     // (with whole-stage-codegen ids — the ids OOM stack traces name)
     // and exit without executing. Forensics for scale-probe failures:
     // maps "GeneratedIteratorForCodegenStage<k>" to an operator.
     // `plan_id`s are masked: a builder's own jobs draw a varying number
     // of them, so they differ between two runs of one commit.
     if (sys.env.get("SPARK_GRAFT_EXPLAIN").contains("1")) {
-      val df = SparkEntry.queries(key)(spark, sfDir)
-      println(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-        .replaceAll("plan_id=\\d+", "plan_id=N"))
+      keys.foreach { key =>
+        val df = SparkEntry.queries(key)(spark, sfDir)
+        println(df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+          .replaceAll("plan_id=\\d+", "plan_id=N"))
+      }
       spark.stop()
       return
     }
@@ -37,7 +41,7 @@ object DevProbe {
       org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
     val jit = java.lang.management.ManagementFactory.getCompilationMXBean
     val jobs = Bench.countJobs(spark)
-    (1 to n).foreach { i =>
+    for (i <- 1 to n; key <- keys) {
       val c0 = compiles.getCount
       val j0 = jit.getTotalCompilationTime
       val t0 = System.nanoTime()

@@ -7,7 +7,8 @@ import scala.util.Using
 
 /** One declared dial table: `Dials` is the only source of `spark.graft.*`
   * keys, the README conf table mirrors it row for row, and the specs'
-  * session is the one `GraftSession` builds.
+  * session is the one `GraftSession` builds. Plan checks walk the plan
+  * that ran through `PlanWalk` alone, under that session's AQE setting.
   */
 class DialSpec extends SparkSpec {
   private val declared = Dials.all.map(d => d.key -> d).toMap
@@ -78,6 +79,21 @@ class DialSpec extends SparkSpec {
     }
     assert(unexercised.isEmpty,
       s"dials no test or smoke step sets: ${unexercised.mkString(", ")}")
+  }
+
+  test("only PlanWalk walks adaptive plans or toggles AQE under src/test") {
+    // split so this file does not match its own patterns
+    val banned = Seq("collectWith" + "Subqueries", "QueryStage" + "Exec",
+      "AdaptiveSparkPlan" + "Helper", "AdaptiveSparkPlan" + "Exec",
+      "spark.sql.adaptive" + ".enabled")
+    val files = scalaSources("src/test")
+    assert(files.exists(_.getFileName.toString == "PlanWalk.scala"))
+    val hits = for {
+      f <- files if f.getFileName.toString != "PlanWalk.scala"
+      text = Files.readString(f)
+      b <- banned if text.contains(b)
+    } yield s"$f: $b"
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 
   test("each declared default passes its own check; a bad value names the key") {

@@ -24,16 +24,12 @@ class ExprSpec extends SparkSpec {
   }
 
   test("DotProduct generates code (no CodegenFallback in the projection)") {
-    val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val plan = vecsDf.select(VectorExprs.dot(col("v"), col("v")).as("d"))
-        .queryExecution.executedPlan
-      val hasWsc = plan.collect {
-        case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w
-      }.nonEmpty
-      assert(hasWsc, s"dot_product fell out of codegen:\n$plan")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    val plan = PlanWalk.executed(
+      vecsDf.select(VectorExprs.dot(col("v"), col("v")).as("d")))
+    val hasWsc = PlanWalk.collect(plan) {
+      case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w
+    }.nonEmpty
+    assert(hasWsc, s"dot_product fell out of codegen:\n$plan")
   }
 
   /** The declarative HOF formulation [[ops.Text.shingleCol]] replaced,

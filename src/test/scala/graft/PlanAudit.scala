@@ -5,35 +5,23 @@
 package graft
 
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec, SortMergeJoinExec}
 
 object PlanAudit {
-  // Node-based counting, not plan-STRING token counting: the rendered
-  // string repeats every cached (InMemoryRelation) subtree once per scan
-  // and every reused exchange once per reference, so grep-counts explode
-  // by orders of magnitude on cache-heavy plans (dedup_clusters rendered
-  // 2342 "shuffles" where the executed plan holds a handful of nodes).
-  private def nodes[T](p: SparkPlan)(pf: PartialFunction[SparkPlan, T]): Seq[T] =
-    p.collectWithSubqueries {
-      case q if pf.isDefinedAt(q) => Seq(pf(q))
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)(pf)
-    }.flatten
-
   def main(args: Array[String]): Unit = {
     val spark = GraftSession(Some("local[8]"), 8, None)
     spark.sparkContext.setLogLevel("ERROR")
     val sfDir = "/root/testdata/sf0.001"
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
-        val df = fn(spark, sfDir)
-        df.write.format("noop").mode("overwrite").save()
-        val plan = df.queryExecution.executedPlan match {
-          case a: AdaptiveSparkPlanExec => a.executedPlan
-          case p => p
-        }
-        def c(pf: PartialFunction[SparkPlan, Unit]) = nodes(plan)(pf).size
+        // Node-based counting over the executed plan and each cached plan
+        // it reads, once per plan: the rendered string repeats every
+        // cached subtree once per scan and every reused exchange once per
+        // reference (dedup_clusters rendered 2342 "shuffles").
+        val plans = PlanWalk.withCaches(PlanWalk.executed(fn(spark, sfDir)))
+        def c(pf: PartialFunction[SparkPlan, Unit]) =
+          plans.map(PlanWalk.collect(_)(pf).size).sum
         println(f"$name%-24s " +
           f"shuffles=${c { case _: ShuffleExchangeLike => }}%-3d " +
           f"cartesian=${c { case _: CartesianProductExec => }}%-2d " +

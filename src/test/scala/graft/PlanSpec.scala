@@ -1,9 +1,11 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+
+import PlanWalk.{collect, executed, withCaches}
 
 /** Plan-shape assertions (SURVEY.md §5.2 item 3): semantics that live in
   * the physical plan — broadcast hints honored, predicates pushed to the
@@ -11,56 +13,27 @@ import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
   * 100 TB guarantees: each one is the difference between a plan that scales
   * and one that merely passes at sf0.001.
   *
-  * AQE discipline (round-1 verdict): with adaptive execution on, the
-  * pre-execution plan is a single opaque `AdaptiveSparkPlan` leaf — every
-  * assertion here first MATERIALIZES the query, then unwraps
-  * `AdaptiveSparkPlanExec.executedPlan` and walks the real final plan.
-  * Asserting on the un-executed plan is vacuously true/false.
+  * Node checks run the key's own query and walk the real final plan
+  * ([[PlanWalk]]): AQE's join conversions, empty-relation pruning and
+  * per-stage codegen are in it, and its metrics are the rows that ran.
+  * Pushed filters, `ReadSchema`, partition filters, partial+final
+  * aggregation and top-k fusion are read from the pre-execution
+  * `planString`: AQE re-plans neither scans nor aggregate phases.
   */
 class PlanSpec extends SparkSpec {
 
-  /** Materialize through the noop sink, then return the final
-    * (post-adaptive) physical plan.
-    */
-  private def finalPlan(name: String): SparkPlan = {
-    val df = SparkEntry.queries(name)(spark, sfDir)
-    df.write.format("noop").mode("overwrite").save()
-    df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
-  }
-
-  /** Collect from the final plan, recursing through reused/adaptive
-    * subtrees (AQE nests further AdaptiveSparkPlanExec under exchanges).
-    */
-  private def collectAll[T](p: SparkPlan)(pf: PartialFunction[SparkPlan, T]): Seq[T] = {
-    val here = p.collectWithSubqueries {
-      case q if pf.isDefinedAt(q) => Seq(pf(q))
-      case a: AdaptiveSparkPlanExec => collectAll(a.executedPlan)(pf)
-    }.flatten
-    here
-  }
-
-  /** Collect through AQE query stages too, which [[collectAll]] sees as
-    * leaves.
-    */
-  private def stages[T](p: SparkPlan)(pf: PartialFunction[SparkPlan, T])
-      : Seq[T] =
-    new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
-      .collectWithSubqueries(p)(pf)
+  private def query(name: String, sf: String = sfDir): DataFrame =
+    SparkEntry.queries(name)(spark, sf)
 
   private def planString(name: String): String =
-    SparkEntry.queries(name)(spark, sfDir)
-      .queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    query(name).queryExecution.explainString(
+      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
 
   test("join_broadcast plans a BroadcastHashJoin (fact side never shuffles)") {
-    val bhjs = collectAll(finalPlan("join_broadcast")) {
-      case b: BroadcastHashJoinExec => b
-    }
+    val plan = executed(query("join_broadcast"))
+    val bhjs = collect(plan) { case b: BroadcastHashJoinExec => b }
     assert(bhjs.nonEmpty,
-      s"expected BroadcastHashJoinExec in final plan:\n${finalPlan("join_broadcast")}")
+      s"expected BroadcastHashJoinExec in final plan:\n$plan")
   }
 
   test("project_filter pushes the predicate into the parquet scan") {
@@ -91,20 +64,11 @@ class PlanSpec extends SparkSpec {
   }
 
   test("whole-stage codegen covers the flagship aggregation") {
-    // AQE applies CollapseCodegenStages per query stage at materialization,
-    // outside `executedPlan` — the post-execution formatted explain is the
-    // only stable surface that shows the codegen spans. With AQE disabled
-    // for this one probe, the plan itself carries WholeStageCodegenExec.
-    val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val q = SparkEntry.queries("agg_groupby_max")(spark, sfDir)
-      val wsc = q.queryExecution.executedPlan.collect {
-        case w: WholeStageCodegenExec => w
-      }
-      assert(wsc.nonEmpty,
-        s"expected WholeStageCodegenExec in:\n${q.queryExecution.executedPlan}")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    // AQE collapses codegen stages per query stage as it runs them, so
+    // only the executed final plan shows them
+    val plan = executed(query("agg_groupby_max"))
+    val wsc = collect(plan) { case w: WholeStageCodegenExec => w }
+    assert(wsc.nonEmpty, s"expected WholeStageCodegenExec in:\n$plan")
   }
 
   test("queries/oracleSql contract: every oracle key has a query") {
@@ -129,7 +93,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("dedup_near_minhash candidates come from an equi-join, never a cartesian") {
-    val cart = collectAll(finalPlan("dedup_near_minhash")) {
+    val cart = collect(executed(query("dedup_near_minhash"))) {
       case c: org.apache.spark.sql.execution.joins.CartesianProductExec => c
     }
     assert(cart.isEmpty,
@@ -147,7 +111,7 @@ class PlanSpec extends SparkSpec {
       .foreach { name =>
         // the band join keys on (band, bhash|bval); the later verification
         // joins key on doc_id alone (nullable in the parquet schema, fine)
-        val joins = collectAll(finalPlan(name)) {
+        val joins = collect(executed(query(name))) {
           case j: org.apache.spark.sql.execution.joins.BaseJoinExec
               if j.leftKeys.size >= 2 => j
         }
@@ -166,7 +130,7 @@ class PlanSpec extends SparkSpec {
     // block-pair tags in ADDITION to the bucket, or a hot bucket would
     // serialize O(bucket²) pair work into one task at 100 TB
     Seq("dedup_near_minhash").foreach { name =>
-      val wide = collectAll(finalPlan(name)) {
+      val wide = collect(executed(query(name))) {
         case j: org.apache.spark.sql.execution.joins.BaseJoinExec
             if j.leftKeys.size >= 4 => j
       }
@@ -179,7 +143,7 @@ class PlanSpec extends SparkSpec {
     // the cross mode's skew guard: a hot index bucket keeps one block per
     // row and the batch side copies to every block, so the probe join
     // must key on the block as well as the bucket
-    val wide = collectAll(finalPlan("dedup_lsh_ingest")) {
+    val wide = collect(executed(query("dedup_lsh_ingest"))) {
       case j: org.apache.spark.sql.execution.joins.BaseJoinExec
           if j.leftKeys.size >= 3 => j
     }
@@ -197,13 +161,9 @@ class PlanSpec extends SparkSpec {
     // those too. (dedup_clusters runs dedup_near_minhash's pipeline but
     // labels its pair graph inside the builder, so its final plan holds
     // no band generator.)
-    def withCaches(p: SparkPlan): Seq[SparkPlan] = p +: stages(p) {
-      case i: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-        withCaches(i.relation.cachedPlan)
-    }.flatten
     Seq("dedup_near_minhash", "dedup_ngram_jaccard", "dedup_lsh_ingest")
         .foreach { name =>
-      val gens = withCaches(finalPlan(name)).flatMap(p => stages(p) {
+      val gens = withCaches(executed(query(name))).flatMap(p => collect(p) {
         case g: org.apache.spark.sql.execution.GenerateExec
             if g.generator.isInstanceOf[
               org.apache.spark.sql.catalyst.expressions.PosExplode] => g
@@ -225,7 +185,7 @@ class PlanSpec extends SparkSpec {
     // broadcast as a local relation; a subtree under both join sides ran
     // its aggregation twice (AQE did not reuse the exchange)
     Seq("dedup_near_minhash", "dedup_lsh_ingest").foreach { name =>
-      val widthAggs = stages(finalPlan(name)) {
+      val widthAggs = collect(executed(query(name))) {
         case a: org.apache.spark.sql.execution.aggregate.BaseAggregateExec
             if a.groupingExpressions.map(_.references.map(_.name).toSet)
               .reduceOption(_ ++ _).contains(Set("band", "bhash")) &&
@@ -247,14 +207,14 @@ class PlanSpec extends SparkSpec {
     // serializing O(bucket²) in one), and no cartesian/BNLJ may appear
     // anywhere (the retired exact-band plan's quadratic candidate stream
     // must not come back as a nested-loop fallback)
-    val plan = finalPlan("dedup_simhash")
-    val wide = collectAll(plan) {
+    val plan = executed(query("dedup_simhash"))
+    val wide = collect(plan) {
       case j: org.apache.spark.sql.execution.joins.BaseJoinExec
           if j.leftKeys.size >= 3 => j
     }
     assert(wide.nonEmpty,
       "dedup_simhash: expected the multi-index join keyed (band, key, salt)")
-    val loops = collectAll(plan) {
+    val loops = collect(plan) {
       case c: org.apache.spark.sql.execution.joins.CartesianProductExec => c
       case b: org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec => b
     }
@@ -271,7 +231,7 @@ class PlanSpec extends SparkSpec {
     // that single-key scan-fed window is the #groups-task funnel the
     // scaffold exists to prevent
     Seq("win_distribution", "win_ntile").foreach { name =>
-      val wins = collectAll(finalPlan(name)) {
+      val wins = collect(executed(query(name))) {
         case w: org.apache.spark.sql.execution.window.WindowExec => w
       }
       assert(wins.nonEmpty, s"$name: expected window nodes")
@@ -295,7 +255,7 @@ class PlanSpec extends SparkSpec {
     val s = planString("sim_topk_cosine")
     assert(s.contains("LessThan(vec_id,100)"),
       s"probe bound must reach the broadcast-side scan as a pushed filter:\n$s")
-    val bcasts = collectAll(finalPlan("sim_topk_cosine")) {
+    val bcasts = collect(executed(query("sim_topk_cosine"))) {
       case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeLike => b
     }
     assert(bcasts.nonEmpty, "probe side must be broadcast")
@@ -308,12 +268,12 @@ class PlanSpec extends SparkSpec {
     // on the probed-cell id (its bucket `bhash`, beside the salt tags),
     // so pair work is per-cell after one shuffle — no cartesian
     try {
-      val plan = finalPlan("dedup_near_embedding")
-      val cart = collectAll(plan) {
+      val plan = executed(query("dedup_near_embedding"))
+      val cart = collect(plan) {
         case c: org.apache.spark.sql.execution.joins.CartesianProductExec => c
       }
       assert(cart.isEmpty, s"candidate sweep must be an equi-join:\n$plan")
-      val cellJoins = collectAll(plan) {
+      val cellJoins = collect(plan) {
         case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec
             if j.leftKeys.exists(_.references.exists(_.name == "bhash")) =>
           j
@@ -334,10 +294,10 @@ class PlanSpec extends SparkSpec {
     for (key <- Seq("sim_ann_ivf", "sim_ann_ivf_trained", "sim_ann_lsh",
         "sim_topk_cosine", "sim_recall_int8", "sim_recall_prefix")) {
       try {
-        val plan = finalPlan(key)
-        assert(stages(plan) { case w: WindowExec => w }.isEmpty,
+        val plan = executed(query(key))
+        assert(collect(plan) { case w: WindowExec => w }.isEmpty,
           s"$key: no window may rank the candidates:\n$plan")
-        assert(stages(plan) { case a: ObjectHashAggregateExec => a }
+        assert(collect(plan) { case a: ObjectHashAggregateExec => a }
           .nonEmpty, s"$key: expected the top-k aggregate:\n$plan")
       } finally InternalCaches.unpersistAll()
     }
@@ -348,12 +308,12 @@ class PlanSpec extends SparkSpec {
     // bucket key — a BroadcastNestedLoopJoin here means the range
     // predicate leaked back into the join condition and the O(n·m) sweep
     // returned
-    val plan = finalPlan("join_range_banded")
-    val bnlj = collectAll(plan) {
+    val plan = executed(query("join_range_banded"))
+    val bnlj = collect(plan) {
       case b: org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec => b
     }
     assert(bnlj.isEmpty, s"range predicate must be residual, not a BNLJ:\n$plan")
-    val equi = collectAll(plan) {
+    val equi = collect(plan) {
       case j: org.apache.spark.sql.execution.joins.BaseJoinExec
         if j.leftKeys.nonEmpty => j
     }
@@ -361,7 +321,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("join_asof plans as a union-stream window: no join node, no amplification") {
-    val joins = collectAll(finalPlan("join_asof")) {
+    val joins = collect(executed(query("join_asof"))) {
       case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j
     }
     assert(joins.isEmpty,
@@ -395,12 +355,12 @@ class PlanSpec extends SparkSpec {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val plan = finalPlan("join_bucketed")
-      val joins = collectAll(plan) {
+      val plan = executed(query("join_bucketed"))
+      val joins = collect(plan) {
         case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec => j
       }
       assert(joins.nonEmpty, s"expected a sort-merge join over buckets:\n$plan")
-      val shufflesBelowJoin = joins.flatMap(j => collectAll(j) {
+      val shufflesBelowJoin = joins.flatMap(j => collect(j) {
         case e: ShuffleExchangeLike => e
       })
       assert(shufflesBelowJoin.isEmpty,
@@ -410,18 +370,17 @@ class PlanSpec extends SparkSpec {
   }
 
   test("single-shuffle windows: win_topk_per_group exchanges at most twice") {
-    val shuffles = collectAll(finalPlan("win_topk_per_group")) {
-      case e: ShuffleExchangeLike => e
-    }
+    val plan = executed(query("win_topk_per_group"))
+    val shuffles = collect(plan) { case e: ShuffleExchangeLike => e }
     // one shuffle for the window partition key; the final presentation
     // orderBy adds a range exchange — anything beyond 2 is a regression
     assert(shuffles.size <= 2 && shuffles.nonEmpty,
-      s"expected 1-2 shuffles, got ${shuffles.size}:\n${finalPlan("win_topk_per_group")}")
+      s"expected 1-2 shuffles, got ${shuffles.size}:\n$plan")
   }
 
   test("stream_join broadcasts the dim: the event stream side never shuffles for the join") {
-    val plan = finalPlan("stream_join")
-    val bhjs = collectAll(plan) { case b: BroadcastHashJoinExec => b }
+    val plan = executed(query("stream_join"))
+    val bhjs = collect(plan) { case b: BroadcastHashJoinExec => b }
     assert(bhjs.nonEmpty, s"expected BroadcastHashJoinExec:\n$plan")
     // fast HashedRelation probe: the enrichment key must be pinned
     // non-nullable on both sides (same discipline as the LSH band joins)
@@ -432,17 +391,17 @@ class PlanSpec extends SparkSpec {
     }
     // shuffles: the windowed agg + the presentation orderBy only — a
     // shuffle feeding the join would re-key every micro-batch at scale
-    val shuffles = collectAll(plan) { case e: ShuffleExchangeLike => e }
+    val shuffles = collect(plan) { case e: ShuffleExchangeLike => e }
     assert(shuffles.size <= 2,
       s"expected <=2 shuffles (agg + sort), got ${shuffles.size}:\n$plan")
   }
 
   test("dedup_lines: window-keyed dedup shuffles at most 3 times, no cartesian") {
-    val plan = finalPlan("dedup_lines")
+    val plan = executed(query("dedup_lines"))
     // line-key window + per-doc re-agg + presentation sort; union/explode
     // stay narrow. A joinish blowup here means the keep-first became a
     // self-join instead of one window pass.
-    val shuffles = collectAll(plan) { case e: ShuffleExchangeLike => e }
+    val shuffles = collect(plan) { case e: ShuffleExchangeLike => e }
     assert(shuffles.size <= 3 && shuffles.nonEmpty,
       s"expected 1-3 shuffles, got ${shuffles.size}:\n$plan")
     assert(!plan.toString.contains("CartesianProduct"),
@@ -453,12 +412,12 @@ class PlanSpec extends SparkSpec {
     // equality on user_id must drive the join; the 10-minute range is a
     // residual condition. A BNLJ/cartesian here would be O(views×clicks)
     // at scale instead of O(per-user pairs).
-    val plan = finalPlan("stream_interval_join")
+    val plan = executed(query("stream_interval_join"))
     val s = plan.toString
     assert(!s.contains("BroadcastNestedLoopJoin")
       && !s.contains("CartesianProduct"),
       s"interval join degenerated to a nested loop:\n$plan")
-    val keyed = collectAll(plan) {
+    val keyed = collect(plan) {
       case j: org.apache.spark.sql.execution.joins.BaseJoinExec
           if j.leftKeys.nonEmpty => j
     }
@@ -482,12 +441,12 @@ class PlanSpec extends SparkSpec {
     // single user_id exchange; the only other shuffle is the
     // presentation sort. The join formulation this pins against moved
     // the event table 7 times.
-    val plan = finalPlan("agg_funnel")
-    val shuffles = collectAll(plan) { case e: ShuffleExchangeLike => e }
+    val plan = executed(query("agg_funnel"))
+    val shuffles = collect(plan) { case e: ShuffleExchangeLike => e }
     assert(shuffles.size <= 2,
       s"expected user exchange + presentation sort only, " +
         s"got ${shuffles.size}:\n$plan")
-    val joins = collectAll(plan) {
+    val joins = collect(plan) {
       case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j
     }
     assert(joins.isEmpty, s"funnel must not join:\n$plan")
@@ -497,8 +456,8 @@ class PlanSpec extends SparkSpec {
     // an implicit pivot (no value list) would first run a distinct scan
     // over the input to discover the column set — two scans, one capped
     // at pivotMaxValues. Declared values: ONE scan, partial+final agg.
-    val plan = finalPlan("agg_pivot")
-    val scans = collectAll(plan) {
+    val plan = executed(query("agg_pivot"))
+    val scans = collect(plan) {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f
     }
     assert(scans.size == 1,
@@ -522,12 +481,12 @@ class PlanSpec extends SparkSpec {
     // same law as stream_interval_join, for the LEFT-outer form: equality
     // on user_id drives the join, the range is a residual — and the
     // null-padding must not demote it to BNLJ
-    val plan = finalPlan("stream_left_join")
+    val plan = executed(query("stream_left_join"))
     val s = plan.toString
     assert(!s.contains("BroadcastNestedLoopJoin")
       && !s.contains("CartesianProduct"),
       s"left interval join degenerated to a nested loop:\n$plan")
-    val keyed = collectAll(plan) {
+    val keyed = collect(plan) {
       case j: org.apache.spark.sql.execution.joins.BaseJoinExec
           if j.leftKeys.nonEmpty => j
     }
@@ -553,8 +512,8 @@ class PlanSpec extends SparkSpec {
     // corpus — vectors and all — moves once per k-means round, the exact
     // plan this operator exists to avoid at 100 TB.
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-    val plan = finalPlan("sim_ivf_train")
-    val hashShuffles = collectAll(plan) {
+    val plan = executed(query("sim_ivf_train"))
+    val hashShuffles = collect(plan) {
       case e: ShuffleExchangeLike
         if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
     }
@@ -563,8 +522,8 @@ class PlanSpec extends SparkSpec {
   }
 
   test("text_pii_mask stays a narrow map-side transform (presentation sort only)") {
-    val plan = finalPlan("text_pii_mask")
-    val shuffles = collectAll(plan) { case e: ShuffleExchangeLike => e }
+    val plan = executed(query("text_pii_mask"))
+    val shuffles = collect(plan) { case e: ShuffleExchangeLike => e }
     // regex mask + count are per-row; the only exchange allowed is the
     // final orderBy's range partition — at 100 TB the mask pipelines over
     // the scan
@@ -584,13 +543,13 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.execution.joins.{
       BroadcastNestedLoopJoinExec, CartesianProductExec,
       ShuffledHashJoinExec, SortMergeJoinExec}
-    val plan = finalPlan("dedup_incremental")
-    val bad = collectAll(plan) {
+    val plan = executed(query("dedup_incremental"))
+    val bad = collect(plan) {
       case b: BroadcastNestedLoopJoinExec => b: SparkPlan
       case c: CartesianProductExec => c: SparkPlan
     }
     assert(bad.isEmpty, s"nested-loop/cartesian in anti-join plan:\n$plan")
-    val anti = collectAll(plan) {
+    val anti = collect(plan) {
       case j: BroadcastHashJoinExec if j.joinType.toString == "LeftAnti" =>
         j: SparkPlan
       case j: SortMergeJoinExec if j.joinType.toString == "LeftAnti" =>
@@ -608,11 +567,11 @@ class PlanSpec extends SparkSpec {
     // the only non-hash join allowed is the 1-row total's broadcast NLJ
     import org.apache.spark.sql.execution.joins.CartesianProductExec
     try {
-      val plan = finalPlan("text_heavy_hitters")
-      val bhj = collectAll(plan) { case b: BroadcastHashJoinExec => b }
+      val plan = executed(query("text_heavy_hitters"))
+      val bhj = collect(plan) { case b: BroadcastHashJoinExec => b }
       assert(bhj.nonEmpty,
         s"candidate filter must be a BroadcastHashJoin:\n$plan")
-      val cart = collectAll(plan) { case c: CartesianProductExec => c }
+      val cart = collect(plan) { case c: CartesianProductExec => c }
       assert(cart.isEmpty, s"cartesian in heavy-hitters plan:\n$plan")
     } finally InternalCaches.unpersistAll() // even on failure: a leaked
     // cache entry would satisfy later specs' plans from memory
@@ -623,11 +582,11 @@ class PlanSpec extends SparkSpec {
     // aggregate once per outer row; after RewriteCorrelatedScalarSubquery
     // the plan must hold only joins + aggregates — no subquery node of
     // any kind on the correlated path
-    val plan = finalPlan("sql_correlated")
+    val plan = executed(query("sql_correlated"))
     val str = plan.toString
     assert(!str.contains("Subquery"),
       s"correlated subquery survived planning:\n$str")
-    val joins = collectAll(plan) {
+    val joins = collect(plan) {
       case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j
     }
     assert(joins.size >= 2,
@@ -643,28 +602,10 @@ class PlanSpec extends SparkSpec {
     val str = planString("join_partition_pruned")
     assert(str.contains("dynamicpruning"),
       s"expected a dynamicpruning PartitionFilter on the fact scan:\n$str")
-    // materialize through collect(), NOT the noop sink: a write wraps
-    // the plan in its own QueryExecution, so the inspected instance
-    // would never have run and every metric would read 0
-    val df = SparkEntry.queries("join_partition_pruned")(spark, sfDir)
-    df.collect()
-    val plan = df.queryExecution.executedPlan match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        a.executedPlan
-      case p => p
+    val plan = executed(query("join_partition_pruned"))
+    val factScans = collect(plan) {
+      case f: FileSourceScanExec if f.partitionFilters.nonEmpty => f
     }
-    // an EXECUTED adaptive plan nests its stages as QueryStageExec
-    // LEAVES (unlike the pre-execution tree the other pins walk), so the
-    // collector must recurse through stage.plan explicitly
-    import org.apache.spark.sql.execution.adaptive.QueryStageExec
-    def scans(p: SparkPlan): Seq[FileSourceScanExec] =
-      p.collectWithSubqueries {
-        case f: FileSourceScanExec if f.partitionFilters.nonEmpty => Seq(f)
-        case q: QueryStageExec => scans(q.plan)
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          scans(a.executedPlan)
-      }.flatten
-    val factScans = scans(plan)
     assert(factScans.nonEmpty, s"no partition-filtered scan:\n$plan")
     val read = factScans.map(_.metrics("numPartitions").value).min
     assert(read > 0 && read < 7,
@@ -679,13 +620,13 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.window.WindowExec
     try {
-      val plan = finalPlan("text_pack_sequences")
-      val windows = collectAll(plan) { case w: WindowExec => w }
+      val plan = executed(query("text_pack_sequences"))
+      val windows = collect(plan) { case w: WindowExec => w }
       assert(windows.nonEmpty, s"expected window operators:\n$plan")
       assert(windows.exists(_.partitionSpec.nonEmpty),
         "the data-path cumsum window must be partition-keyed")
       windows.filter(_.partitionSpec.isEmpty).foreach { w =>
-        val scans = collectAll(w.child) { case f: FileSourceScanExec => f }
+        val scans = collect(w.child) { case f: FileSourceScanExec => f }
         assert(scans.isEmpty,
           s"global window directly over a table scan (one-task cumsum):\n$w")
       }
@@ -702,13 +643,13 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.window.WindowExec
     try {
-      val plan = finalPlan("mm_shard_manifest_global")
-      val windows = collectAll(plan) { case w: WindowExec => w }
+      val plan = executed(query("mm_shard_manifest_global"))
+      val windows = collect(plan) { case w: WindowExec => w }
       assert(windows.nonEmpty, s"expected window operators:\n$plan")
       assert(windows.exists(_.partitionSpec.nonEmpty),
         "the data-path prefix-sum window must be partition-keyed")
       windows.filter(_.partitionSpec.isEmpty).foreach { w =>
-        val scans = collectAll(w.child) { case f: FileSourceScanExec => f }
+        val scans = collect(w.child) { case f: FileSourceScanExec => f }
         assert(scans.isEmpty,
           s"global window directly over a table scan (one-task cumsum):\n$w")
       }
@@ -731,31 +672,24 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.execution.{FileSourceScanExec,
       GlobalLimitExec, TakeOrderedAndProjectExec}
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-    import org.apache.spark.sql.execution.adaptive.QueryStageExec
     import org.apache.spark.sql.execution.window.WindowExec
-    def deep[T](p: SparkPlan)(pf: PartialFunction[SparkPlan, T]): Seq[T] =
-      p.collectWithSubqueries {
-        case q if pf.isDefinedAt(q) => Seq(pf(q))
-        case a: AdaptiveSparkPlanExec => deep(a.executedPlan)(pf)
-        case q: QueryStageExec => deep(q.plan)(pf)
-      }.flatten
     for (key <- Seq("agg_ks_test", "stream_watermark_late",
         "sim_hybrid_rrf")) {
       try {
-        val plan = finalPlan(key)
-        val globals = deep(plan) {
+        val plan = executed(query(key))
+        val globals = collect(plan) {
           case w: WindowExec if w.partitionSpec.isEmpty => w
         }
         assert(globals.nonEmpty,
           s"$key: audit expects a (bounded) global window in this plan — " +
             s"if it was restructured away, drop it from this list:\n$plan")
         globals.foreach { w =>
-          val bounded = deep(w.child) {
+          val bounded = collect(w.child) {
             case a: BaseAggregateExec if a.groupingExpressions.nonEmpty => ()
             case _: GlobalLimitExec => ()
             case _: TakeOrderedAndProjectExec => ()
           }.nonEmpty ||
-            deep(w.child) { case f: FileSourceScanExec => f }.isEmpty
+            collect(w.child) { case f: FileSourceScanExec => f }.isEmpty
           assert(bounded,
             s"$key: global window with an unbounded (corpus-sized) " +
               s"input:\n$w")
@@ -765,45 +699,37 @@ class PlanSpec extends SparkSpec {
   }
 
   test("graph_triangles: no cartesian/BNLJ; oriented edges read from cache on all three branches") {
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
     try {
-      val plan = finalPlan("graph_triangles")
+      val plan = executed(query("graph_triangles"))
       // A BNLJ is allowed ONLY as the bloom-blob attach: a broadcast of a
       // single no-grouping aggregate row (the sized closing-edge filter,
       // ops/graph.scala). Any other BNLJ — and any cartesian — is the
-      // all-pairs wedge product this pin exists to forbid. QueryStageExec
-      // is a leaf to TreeNode traversal, so the single-row check recurses
-      // into materialized stages by hand.
-      def hasGlobalAgg(sp: SparkPlan): Boolean = {
-        import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-        import org.apache.spark.sql.execution.adaptive.QueryStageExec
-        sp.collectFirst {
-          case a: BaseAggregateExec if a.groupingExpressions.isEmpty => a
-        }.isDefined ||
-          sp.collect { case q: QueryStageExec => q }
-            .exists(q => hasGlobalAgg(q.plan))
-      }
+      // all-pairs wedge product this pin exists to forbid.
       // The carve-out inspects only the BROADCAST child (r14, advice):
       // exempting "any child with a global agg" would also exempt a bad
       // broadcast whose STREAMED side merely contains one upstream —
       // the blob attach is specifically a broadcast of the 1-row
       // aggregate, so that is the side that must prove it.
-      val bad = collectAll(plan) {
+      val bad = collect(plan) {
         case c: CartesianProductExec => c: SparkPlan
         case b: BroadcastNestedLoopJoinExec
-            if !hasGlobalAgg(b.buildSide match {
+            if collect(b.buildSide match {
               case org.apache.spark.sql.catalyst.optimizer.BuildLeft =>
                 b.left
               case _ => b.right
-            }) => b: SparkPlan
+            }) {
+              case a: BaseAggregateExec if a.groupingExpressions.isEmpty => a
+            }.isEmpty => b: SparkPlan
       }
       assert(bad.isEmpty,
         s"wedge enumeration must stay an equi-join, never a product:\n$plan")
       // Two wedge sides + the closing semi-join all scan the SAME cached
       // oriented relation — the multi-branch recompute fix that cut the
       // bench line 6x (ops/graph.scala). Edge cache branches add more.
-      val imts = collectAll(plan) { case s: InMemoryTableScanExec => s }
+      val imts = collect(plan) { case s: InMemoryTableScanExec => s }
       assert(imts.size >= 3,
         s"expected >=3 InMemoryTableScans (oriented read 3x from cache), " +
           s"got ${imts.size}:\n$plan")
@@ -814,7 +740,7 @@ class PlanSpec extends SparkSpec {
       // planner/AQE drift can't silently re-sort the wedge stream.
       import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
       import org.apache.spark.sql.catalyst.plans.LeftSemi
-      val closing = collectAll(plan) {
+      val closing = collect(plan) {
         case j: ShuffledHashJoinExec if j.joinType == LeftSemi => j
       }
       assert(closing.nonEmpty,
@@ -825,7 +751,7 @@ class PlanSpec extends SparkSpec {
 
   test("graph_pagerank: one contribution shuffle per iteration, partial-agged") {
     try {
-      val plan = finalPlan("graph_pagerank")
+      val plan = executed(query("graph_pagerank"))
       // 3 iterations: each costs ONE groupBy(dst) exchange (the rank join
       // aligns with the cached hash(src) partitioning or broadcasts); on
       // top: the presentation sort's range exchange and whatever the
@@ -833,7 +759,7 @@ class PlanSpec extends SparkSpec {
       // per-iteration edge re-shuffles: the 1.2M-row edge relation must
       // never cross the wire after the cache materializes, so the
       // exchange count stays O(iterations), not O(iterations x joins).
-      val shuffles = collectAll(plan) {
+      val shuffles = collect(plan) {
         case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e
       }
       assert(shuffles.size <= 7,
@@ -851,8 +777,8 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec, SortMergeJoinExec}
     try {
-      val plan = finalPlan("text_containment")
-      val bad = collectAll(plan) {
+      val plan = executed(query("text_containment"))
+      val bad = collect(plan) {
         case c: CartesianProductExec => c: SparkPlan
         case b: BroadcastNestedLoopJoinExec => b: SparkPlan
       }
@@ -864,13 +790,13 @@ class PlanSpec extends SparkSpec {
       // between cache and join — the §2.4 reuse this operator's rewrite
       // bought. A shuffle or sort sneaking back in (e.g. the cache
       // boundary moving above/below the window) is the regression.
-      val imts = collectAll(plan) { case s: InMemoryTableScanExec => s }
+      val imts = collect(plan) { case s: InMemoryTableScanExec => s }
       assert(imts.size >= 2,
         s"expected >=2 InMemoryTableScans (both join sides from the " +
           s"posting cache), got ${imts.size}:\n$plan")
-      val smjs = collectAll(plan) { case j: SortMergeJoinExec => j }
+      val smjs = collect(plan) { case j: SortMergeJoinExec => j }
       assert(smjs.size == 1, s"expected the posting self-join:\n$plan")
-      val under = smjs.flatMap(j => collectAll(j) {
+      val under = smjs.flatMap(j => collect(j) {
         case e: ShuffleExchangeLike => e: SparkPlan
         case s: SortExec => s: SparkPlan
       })
@@ -887,23 +813,24 @@ class PlanSpec extends SparkSpec {
     // clustering — a second hash exchange is the regression this pins.
     // The presentation orderBy adds one RANGE exchange on top.
     for (q <- Seq("win_cumsum_reset", "win_sessionize")) {
-      val shuffles = collectAll(finalPlan(q)) {
-        case e: ShuffleExchangeLike => e
-      }
+      val plan = executed(query(q))
+      val shuffles = collect(plan) { case e: ShuffleExchangeLike => e }
       assert(shuffles.size <= 2 && shuffles.nonEmpty,
-        s"$q: expected 1 window shuffle + 1 sort, got ${shuffles.size}:\n" +
-          s"${finalPlan(q)}")
+        s"$q: expected 1 window shuffle + 1 sort, got ${shuffles.size}:\n$plan")
     }
   }
 
   test("join_bloom_prefilter: the bloom cut runs on the scan side, " +
     "before any fact exchange") {
-    val plan = finalPlan("join_bloom_prefilter")
+    // sf0.01: the spec sf's NATION_7 has no supplier, so AQE replaces the
+    // whole plan with an empty relation and no probe runs
+    val sf = "/root/testdata/sf0.01"
+    val plan = executed(query("join_bloom_prefilter", sf))
     // Catalyst fuses the probe predicate into the one-row broadcast
     // cross join's condition — the only place a variable-distance
     // shiftleft appears in this plan. The cut thus happens AT the BNLJ,
     // directly above the fact scan.
-    val probes = collectAll(plan) {
+    val probes = collect(plan) {
       case j: org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
         if j.condition.exists(_.toString.contains("shiftleft")) => j
     }
@@ -918,16 +845,25 @@ class PlanSpec extends SparkSpec {
         case org.apache.spark.sql.catalyst.optimizer.BuildRight => j.left
         case _ => j.right
       }
-      val below = collectAll(streamed) { case e: ShuffleExchangeLike => e }
+      val below = collect(streamed) { case e: ShuffleExchangeLike => e }
       assert(below.isEmpty,
         s"bloom probe sits above a fact exchange — the cut came too late:\n$plan")
     }
-    // executed selectivity: survivors ≤ half the fact table (at the spec
-    // sf the dim slice is empty, so the bloom rejects everything — the
-    // degenerate best case; equality with the plain join is the oracle's
-    // job, pruning is this pin's)
+    // executed selectivity: survivors ≤ half the fact table, and no fewer
+    // than the exact semi-join (a Bloom filter has no false negatives);
+    // equality with the plain join is the oracle's job, pruning is this
+    // pin's
+    import org.apache.spark.sql.functions.col
     val survivors = probes.map(_.metrics("numOutputRows").value).min
-    val factN = Tables.lineitem(spark, sfDir).count()
+    val fact = Tables.lineitem(spark, sf)
+    val exact = fact
+      .join(Tables.supplier(spark, sf), col("l_suppkey") === col("s_suppkey"))
+      .join(Tables.nation(spark, sf).filter(col("n_name") === "NATION_7"),
+        col("s_nationkey") === col("n_nationkey"))
+      .count()
+    val factN = fact.count()
+    assert(survivors > 0 && survivors >= exact,
+      s"bloom kept $survivors fact rows, below the exact join's $exact")
     assert(survivors <= factN / 2,
       s"bloom kept $survivors of $factN fact rows — not pruning")
   }
@@ -936,8 +872,8 @@ class PlanSpec extends SparkSpec {
     // (group, value) count → per-group argmax → presentation sort: both
     // aggregate levels partial-combine map-side, so the plan holds at
     // most three exchanges and the shuffled keys are domain-bounded
-    val plan = finalPlan("agg_mode")
-    val shuffles = collectAll(plan) { case e: ShuffleExchangeLike => e }
+    val plan = executed(query("agg_mode"))
+    val shuffles = collect(plan) { case e: ShuffleExchangeLike => e }
     assert(shuffles.size <= 3,
       s"expected <=3 shuffles (2 aggs + sort), got ${shuffles.size}:\n$plan")
     val partials = planString("agg_mode")
@@ -950,8 +886,8 @@ class PlanSpec extends SparkSpec {
     // window partitionBy(user_id) then groupBy(user_id): the aggregate
     // must ride the exchange the window already paid — two exchanges
     // total (user hash + presentation sort), not three
-    val plan = finalPlan("win_time_weighted")
-    val shuffles = collectAll(plan) { case e: ShuffleExchangeLike => e }
+    val plan = executed(query("win_time_weighted"))
+    val shuffles = collect(plan) { case e: ShuffleExchangeLike => e }
     assert(shuffles.size <= 2,
       s"expected <=2 exchanges (user hash + sort), got ${shuffles.size}:\n$plan")
   }
@@ -962,15 +898,15 @@ class PlanSpec extends SparkSpec {
     // gram stream probes it in place, and the only exchange left is the
     // per-doc hit count (map-side combined). A sort-merge join here would
     // shuffle the full corpus gram stream on a string key.
-    val plan = finalPlan("text_contamination")
-    val bhj = collectAll(plan) { case b: BroadcastHashJoinExec => b }
+    val plan = executed(query("text_contamination"))
+    val bhj = collect(plan) { case b: BroadcastHashJoinExec => b }
     assert(bhj.nonEmpty, s"gram join must be a BroadcastHashJoin:\n$plan")
     bhj.foreach { j =>
       val nullable = (j.leftKeys ++ j.rightKeys).filter(_.nullable)
       assert(nullable.isEmpty,
         s"nullable gram keys $nullable demote the HashedRelation probe")
     }
-    val smj = collectAll(plan) {
+    val smj = collect(plan) {
       case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec => j
     }
     assert(smj.isEmpty, "corpus grams must never sort-merge on the gram key")
@@ -982,11 +918,11 @@ class PlanSpec extends SparkSpec {
         case org.apache.spark.sql.catalyst.optimizer.BuildRight => j.left
         case _ => j.right
       }
-      val below = collectAll(streamed) { case e: ShuffleExchangeLike => e }
+      val below = collect(streamed) { case e: ShuffleExchangeLike => e }
       assert(below.isEmpty,
         s"corpus gram stream must probe in place, not shuffle:\n$plan")
     }
-    val shuffles = collectAll(plan) { case e: ShuffleExchangeLike => e }
+    val shuffles = collect(plan) { case e: ShuffleExchangeLike => e }
     assert(shuffles.size <= 3,
       s"expected <=3 exchanges (bench distinct + hit count + presentation), got ${shuffles.size}:\n$plan")
   }
@@ -997,8 +933,8 @@ class PlanSpec extends SparkSpec {
     // compressed index partition-parallel). The final orderBy is the
     // presentation sort the driver compare needs; everything below it
     // must be shuffle-free, so the only allowed exchange is that sort's.
-    val plan = finalPlan("embed_quantize_int8")
-    val shuffles = collectAll(plan) { case e: ShuffleExchangeLike => e }
+    val plan = executed(query("embed_quantize_int8"))
+    val shuffles = collect(plan) { case e: ShuffleExchangeLike => e }
     assert(shuffles.size <= 1,
       s"map-only op: at most the presentation sort's exchange:\n$plan")
   }
@@ -1012,7 +948,7 @@ class PlanSpec extends SparkSpec {
       val s = planString(key)
       assert(s.contains("LessThan(vec_id,100)"),
         s"$key: probe bound must push to the broadcast-side scan:\n$s")
-      val bcasts = collectAll(finalPlan(key)) {
+      val bcasts = collect(executed(query(key))) {
         case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeLike => b
       }
       assert(bcasts.nonEmpty, s"$key: probe side must broadcast")
@@ -1024,8 +960,8 @@ class PlanSpec extends SparkSpec {
     // the |langs|-row rate relation must come to the corpus (broadcast
     // hash join), not the corpus to it — the corpus-side shuffle on a
     // 5-value key is the skew trap at scale
-    val plan = finalPlan("sample_temperature")
-    val bhj = collectAll(plan) { case b: BroadcastHashJoinExec => b }
+    val plan = executed(query("sample_temperature"))
+    val bhj = collect(plan) { case b: BroadcastHashJoinExec => b }
     assert(bhj.nonEmpty, s"rate join must be broadcast:\n$plan")
   }
 
@@ -1034,12 +970,12 @@ class PlanSpec extends SparkSpec {
     // single-row joins — a Window over an empty partitionBy would funnel
     // every domain row through ONE task, the shape that dies first at
     // real domain cardinality (millions of sources)
-    val plan = finalPlan("text_domain_mix")
-    val windows = collectAll(plan) {
+    val plan = executed(query("text_domain_mix"))
+    val windows = collect(plan) {
       case w: org.apache.spark.sql.execution.window.WindowExec => w
     }
     assert(windows.isEmpty, s"no window node allowed in the plan:\n$plan")
-    val bcasts = collectAll(plan) {
+    val bcasts = collect(plan) {
       case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeLike => b
     }
     assert(bcasts.size >= 2,
@@ -1052,8 +988,8 @@ class PlanSpec extends SparkSpec {
     // HOF expansion of the ≤50-doc posting list, so the plan must carry
     // no join of any kind (the classic failure is a shingle self-join
     // that goes quadratic on a hot fingerprint)
-    val plan = finalPlan("text_winnowing")
-    val joins = collectAll(plan) {
+    val plan = executed(query("text_winnowing"))
+    val joins = collect(plan) {
       case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j
     }
     assert(joins.isEmpty, s"posting-list expansion needs no join:\n$plan")
@@ -1062,8 +998,8 @@ class PlanSpec extends SparkSpec {
 
   test("mm_shard_manifest: the prefix-sum window partitions by source " +
     "(never a global single-partition window)") {
-    val plan = finalPlan("mm_shard_manifest")
-    val windows = collectAll(plan) {
+    val plan = executed(query("mm_shard_manifest"))
+    val windows = collect(plan) {
       case w: org.apache.spark.sql.execution.window.WindowExec => w
     }
     assert(windows.nonEmpty, s"expected a window node:\n$plan")
@@ -1073,8 +1009,8 @@ class PlanSpec extends SparkSpec {
 
   test("agg_ks_test: local CDF windows partition by pid; the value " +
     "relation is persisted for both consumers") {
-    val plan = finalPlan("agg_ks_test")
-    val windows = collectAll(plan) {
+    val plan = executed(query("agg_ks_test"))
+    val windows = collect(plan) {
       case w: org.apache.spark.sql.execution.window.WindowExec => w
     }
     // the corpus-sized cumulative sums must run in pid-partitioned
@@ -1090,12 +1026,12 @@ class PlanSpec extends SparkSpec {
 
   test("agg_drift_psi: midpoint and totals ride broadcasts; the event " +
     "stream never shuffles wide") {
-    val plan = finalPlan("agg_drift_psi")
+    val plan = executed(query("agg_drift_psi"))
     // the totals join broadcasts at top level; the midpoint broadcast
     // sits inside the persisted bucket relation's cached subtree (its
-    // text still shows in plan.toString, but collectAll does not
-    // recurse into InMemoryRelation)
-    val bcasts = collectAll(plan) {
+    // text still shows in plan.toString, but collect does not
+    // recurse into cached plans)
+    val bcasts = collect(plan) {
       case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeLike => b
     }
     assert(bcasts.nonEmpty,
@@ -1107,7 +1043,7 @@ class PlanSpec extends SparkSpec {
     // bucket-cardinality hash exchange, and the two tiny aggregates
     // over the PERSISTED bucket relation (totals + final psi row) —
     // without the persist the totals branch re-derives the whole scan
-    val wide = collectAll(plan) { case e: ShuffleExchangeLike => e }
+    val wide = collect(plan) { case e: ShuffleExchangeLike => e }
     assert(wide.size <= 4, s"unexpected wide shuffle count:\n$plan")
     // the bucket relation must be served from the persisted handle —
     // both downstream consumers (totals + psi terms) read the cache,
