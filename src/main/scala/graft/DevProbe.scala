@@ -5,14 +5,17 @@ package graft
   * within each pass as a workload's keys share a JVM, and print each
   * key's seconds, Spark jobs and generated-class compiles per pass —
   * separates per-session warm-up (JIT/codegen/IO cache) from the
-  * queries' steady-state cost. Usage:
-  *   runMain graft.DevProbe <sfDir> <key>[,<key>...] [n]
+  * queries' steady-state cost. Read passes 6+ as the steady state: at
+  * sf0.1 passes 3-5 are still JIT warm-up (`sim_topk_cosine` ran
+  * 1.08/0.77/0.59 s in passes 3-5, 0.42-0.53 s in 6-10; CHANGES.md).
+  * Usage:
+  *   runMain graft.DevProbe <sfDir> <key>[,<key>...] [n, default 10]
   */
 object DevProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val keys = args(1).split(',').toSeq
-    val n = if (args.length > 2) args(2).toInt else 3
+    val n = if (args.length > 2) args(2).toInt else 10
     val spark = GraftSession.local(Some(sfDir))
     // SPARK_GRAFT_EXPLAIN=1: print each key's formatted physical plan
     // (with whole-stage-codegen ids — the ids OOM stack traces name)

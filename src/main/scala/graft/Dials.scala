@@ -72,15 +72,6 @@ object Dials {
     "IVF cells probed per vector")
   val AnnlshProbeEvery = int("spark.graft.annlsh.probeEvery", 13,
     "sim_ann_lsh re-ingests every Nth vector as a clone; 0 disables")
-  val TrianglesBloom = dial("spark.graft.triangles.bloom", "auto",
-    "auto, on or off", "bloom semi-join on the triangle wedge stream")(
-    v => Option(v).filter(Set("auto", "on", "off")))
-  val TrianglesBloomShards = dial[Option[Int]](
-    "spark.graft.triangles.bloomShards", "auto", "auto or 1..64",
-    "closing-edge bloom shards; auto = ceil(8 * edges / 2^31) <= 8") {
-    case "auto" => Some(None)
-    case v => v.toIntOption.filter(k => k >= 1 && k <= 64).map(Some(_))
-  }
 
   /** Every declared dial, in declaration order. */
   val all: Seq[Dial[_]] = declared.result()

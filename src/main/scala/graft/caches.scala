@@ -149,13 +149,23 @@ object InternalCaches {
     * measurement.
     */
   private[graft] def adaptiveParts(s: org.apache.spark.sql.SparkSession,
-                                   path: String, bytesPerPart: Long): Int = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val bytes = fs.getContentSummary(p).getLength
-    math.max(s.sparkContext.defaultParallelism,
-      math.ceil(bytes.toDouble / bytesPerPart).toInt)
-  }
+                                   path: String, bytesPerPart: Long): Int =
+    math.max(s.sparkContext.defaultParallelism, math.ceil(
+      sourceBytes(path, s.sparkContext.hadoopConfiguration).toDouble /
+        bytesPerPart).toInt)
+
+  /** Bytes under `path`, a file or a directory, by one filesystem
+    * listing (no job); 0 when the path is missing or unreadable, so every
+    * size derived from it falls back to its floor and the read itself
+    * reports the missing input.
+    */
+  private[graft] def sourceBytes(path: String,
+      conf: org.apache.hadoop.conf.Configuration): Long =
+    try {
+      val p = new org.apache.hadoop.fs.Path(path)
+      val fs = p.getFileSystem(conf)
+      if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
+    } catch { case _: java.io.IOException => 0L }
 
   /** AQE initial shuffle-partition count, derived from the whole
     * fixture directory's bytes — the [[adaptiveParts]] doctrine applied
@@ -180,11 +190,8 @@ object InternalCaches {
     */
   private[graft] def adaptiveInitialShuffleParts(dir: String,
                                                  floor: Int): Int = {
-    val bytes = try {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-      if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
-    } catch { case _: java.io.IOException => 0L }
+    // no session exists yet: the session's conf is being derived
+    val bytes = sourceBytes(dir, new org.apache.hadoop.conf.Configuration())
     math.min(ShuffleBypassValue.toInt,
       math.max(floor, math.ceil(bytes / (64.0 * (1L << 20))).toInt))
   }

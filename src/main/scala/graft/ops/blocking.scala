@@ -36,12 +36,8 @@ object Blocking {
     * documents.parquet falls back to the floor.
     */
   private[graft] def adaptiveHotWidth(s: SparkSession, d: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(s"$d/documents.parquet")
-    val bytes =
-      try {
-        val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
-      } catch { case _: java.io.IOException => 0L }
+    val bytes = graft.InternalCaches.sourceBytes(s"$d/documents.parquet",
+      s.sparkContext.hadoopConfiguration)
     math.max(HotBucketDefault,
       math.ceil(math.sqrt(bytes / 32.0)).toInt)
   }

@@ -44,22 +44,18 @@ object Graph {
     */
   private[ops] val SuppOffset = 1000000000L
 
-  /** Bloom dials for the triangle closing-edge prefilter (rationale at
-    * the use site in [[triangleCount]]): auto-engage threshold — below
-    * ~4M edges the wedge exchange is MBs and the filter is pure
-    * overhead; every sf ≤ 1 fixture stays under it, so committed
-    * toy-scale plans are bit-identical — and the width cap bounding the
-    * broadcast blob at ~268 MB however large the graph grows.
+  /** Closing-edge Bloom shard count for `nEdges` oriented edges: 0
+    * below BloomAutoMinEdges, where the wedge exchange is MBs and the
+    * filter pure overhead (every sf ≤ 1 fixture), else ⌈8·n /
+    * BloomMaxBits⌉ blobs capped at BloomMaxShards. BloomMaxBits is the
+    * Int ceiling, 64-aligned (~268 MB a blob); past the sharded ceiling
+    * (~2·10⁹ edges) fpp degrades toward neutral, never wrong.
     */
+  private def bloomShards(nEdges: Long): Int =
+    if (nEdges < BloomAutoMinEdges) 0
+    else math.min((8L * nEdges + BloomMaxBits - 1) / BloomMaxBits,
+      BloomMaxShards).toInt
   private[ops] val BloomAutoMinEdges = 1L << 22
-  // Near the Int ceiling, 64-aligned (the array is indexed in words; a
-  // row carrying the blob is ~268 MB — far under row/broadcast limits).
-  // At the cap the fpp for n edges is (1−e^(−3n/M))³: ~5 % at n = 3·10⁸
-  // (the measured sf100 co-purchase graph) — past which the filter now
-  // SHARDS (r14): up to BloomMaxShards independent blobs routed by
-  // pmod(xxhash64(src), k) hold the 8-bits/edge sizing (fpp ≈ 3 %)
-  // through ~2·10⁹ edges for a ≤ ~2.1 GB total broadcast, degrading
-  // gracefully past the sharded ceiling exactly as the single blob did.
   private[ops] val BloomMaxBits = (1L << 31) - 64
   private[ops] val BloomMaxShards = 8
 
@@ -101,7 +97,8 @@ object Graph {
     * small so edge count stays linear in fact rows (and makes the filter
     * pushdown visible in the scan).
     */
-  private def coPurchaseEdges(s: SparkSession, d: String): DataFrame = {
+  private[graft] def coPurchaseEdges(s: SparkSession,
+                                     d: String): DataFrame = {
     // adaptive pre-partition on the join key: the self-join's two
     // ensure-requirements exchanges land at this width instead of the
     // 32-partition conf, so the merge sorters AND the pair stream's
@@ -128,7 +125,14 @@ object Graph {
     * (two wedge sides + the closing semi-join) → persisted eagerly, like
     * dedup_clusters' multi-branch cache (caches.scala).
     */
-  def triangleCount(edges: DataFrame, parts: Int = -1): DataFrame = {
+  def triangleCount(edges: DataFrame, parts: Int = -1): DataFrame =
+    triangleCount(edges, parts, bloomShards)
+
+  /** [[triangleCount]] with the Bloom shard count taken from `shards`
+    * (edge count => k, 0 for no filter), so laws can force any k.
+    */
+  private[graft] def triangleCount(edges: DataFrame, parts: Int,
+                                   shards: Long => Int): DataFrame = {
     val p = if (parts > 0) parts
       else edges.sparkSession.sparkContext.defaultParallelism
     // The edge relation is read from three branches below (degree count +
@@ -201,109 +205,44 @@ object Graph {
       .join(oriented.as("e2"),
         col("e1.src") === col("e2.src") && col("e1.kdst") < col("e2.kdst"))
       .select(col("e1.dst").as("wu"), col("e2.dst").as("wv"))
-    // Bloom semi-join reduction on the wedge stream, applied IN-STAGE
-    // (inside the wedge join's own codegen, before any exchange). The
-    // closing join is exact either way, so the filter only has to be
-    // conservative — a false positive costs one extra shuffled row, a
-    // false negative is impossible by the ExprSpec lockstep law. Why it
-    // exists: the wedge stream is Θ(m^1.5) and even WITHOUT a sort its
-    // closing exchange alone outran the sf100 probe box's disk (measured
-    // r13: ~93 GB written, "No space left on device" — after the
-    // shuffle_hash flip had already deleted the 48 GB sorter spill).
-    // Survivors are (triangles + fpp·wedges): at the 8-bits/edge sizing
-    // fpp ≈ 3 %, so the exchange shrinks ~30× toward output-sized.
-    // Broadcast discipline: each blob is one row of ≤ 2^31−64 bits
-    // (~268 MB, the BloomMaxBits cap) built by a distributed
-    // OR-aggregate — never a driver-built HashedRelation, and bounded
-    // however large the graph grows (the r12 cliff rule wants
-    // corpus-growing RELATIONS off broadcast; a capped scalar blob
-    // qualifies as bounded).
-    // SHARDING past the single-blob cap (r14, the r13 verdict's item 4):
-    // one Int-indexed array tops out at 2^31 bits, and past ~2.7e8 edges
-    // its fpp was degrading toward neutral — the Θ(m^1.5) exchange crept
-    // back exactly at the scale that needs the cut most. The filter now
-    // splits into k = ceil(8·edges / BloomMaxBits) ≤ BloomMaxShards
-    // INDEPENDENT blobs routed by pmod(xxhash64(src), k): a closing edge
-    // lands in exactly one shard and a wedge (wu, wv) probes exactly the
-    // shard pmod(xxhash64(wu), k) — the same per-blob position contract,
-    // k× the effective width (fpp holds ≈ 3 % through ~2·10⁹ edges at
-    // the 8-shard ceiling), still a bounded broadcast (≤ k·268 MB, the
-    // k-row relation below). Shard builds run as k SEQUENTIAL
-    // control-plane jobs (the BPE-argmax/k-means-round pattern): each
-    // build bounds its partial-aggregation footprint at ONE shard blob —
-    // concurrent per-shard aggregates would co-schedule k·2 capped
-    // partials and recreate the exact 16 g heap-OOM the coalesce(2)
-    // below was measured to fix. Past the sharded ceiling
-    // (≳2·10⁹ edges) per-shard fpp degrades toward 1 and the filter
-    // goes gracefully neutral — never wrong — which is the honest
-    // contract: at that scale the Θ(m^1.5) exchange is the operator's
-    // documented cost and a cluster's aggregate disk absorbs it.
-    // coalesce(2): each map-side partial holds the FULL array PLUS its
-    // in-flight UnsafeRow serialization (ScalaAggregator.serialize →
-    // BufferHolder.grow — ~3× the blob in UNTRACKED JVM allocations that
-    // cannot evict the storage pool; 8 concurrent partials heap-OOM'd a
-    // 16 g probe at the capped width, measured r13). Two partials bound
-    // the untracked spike at ~1.6 GB and cost ~15 s of single-pass
-    // hashing at 3·10⁸ edges — noise against the exchange they delete.
-    // spark.graft.triangles.bloom = auto|on|off (build-time read,
-    // the graft conf convention): auto engages at ≥ 2^22 edges, so the
-    // bloom branch is absent from every sf ≤ 1 plan.
-    // spark.graft.triangles.bloomShards = auto|<k> forces the shard
-    // count (the GraphSpec count-identity law drives the sharded path
-    // on toy graphs, where the byte-derived k is always 1).
-    val useBloom = graft.Dials.TrianglesBloom(edges.sparkSession) match {
-      case "on" => true
-      case "off" => false
-      case _ => nEdges >= Graph.BloomAutoMinEdges
-    }
-    val candidates = if (!useBloom) wedges else {
+    // Bloom semi-join reduction: the wedge stream is filtered against the
+    // closing edges inside the wedge join's stage, before its exchange.
+    // The closing join stays exact, so a false positive costs one
+    // shuffled row and a false negative cannot happen. Unfiltered, that
+    // exchange wrote ~93 GB and filled the disk at sf100; at 8 bits an
+    // edge (fpp ≈ 3 %) ~8 wedges per edge shrink to ~1 survivor
+    // (BASELINE.md r13). A blob is an Int-indexed bit array, so past
+    // BloomMaxBits / 8 edges the filter splits into k blobs routed by
+    // pmod(xxhash64(src), k). Each blob aggregates over coalesce(2), and
+    // k > 1 shards build eagerly, one at a time, so at most two partials
+    // of one blob are in memory (concurrent partials heap-OOM'd a 16 g
+    // box). One shard builds inside the query instead, beside the closing
+    // side's shuffle: built eagerly it ran ~2 s a pass slower at 6 M
+    // edges (CHANGES.md). The broadcast reads the cached 1-row blobs; a
+    // collected LocalRelation put the blobs in the task binary (BASELINE.md
+    // r14).
+    val k = shards(nEdges)
+    val candidates = if (k == 0) wedges else {
       val idealBits = (8L * nEdges).max(1L << 16)
-      val k = graft.Dials.TrianglesBloomShards(edges.sparkSession)
-        .getOrElse((((idealBits + Graph.BloomMaxBits - 1) /
-          Graph.BloomMaxBits).toInt).max(1).min(Graph.BloomMaxShards))
       val bits = ((idealBits + k - 1) / k).min(Graph.BloomMaxBits)
       val numBits = (((bits + 63) / 64) * 64).toInt
       val bagg = udaf(new graft.expr.BloomFilter.SizedAgg(numBits))
-      val probeKey = graft.expr.BloomFilter.mightContain(col("bf"),
-        xxhash64(col("wu"), col("wv")), numBits)
-      if (k == 1) {
-        // single-blob path: the exact pre-r14 plan (crossJoin of the
-        // 1-row aggregate), so every previously-measured map is
-        // unchanged wherever one blob suffices
-        val bloom = oriented
-          .select(xxhash64(col("src"), col("dst")).as("ek"))
-          .coalesce(2)
-          .agg(bagg(col("ek")).as("bf"))
-        wedges.crossJoin(broadcast(bloom))
-          .filter(probeKey)
-          .drop("bf")
-      } else {
-        // k sequential 1-row builds (see the sharding note above): each
-        // shard aggregate persists EAGERLY — the materializing action
-        // runs NOW, so builds are strictly one-at-a-time — and the
-        // broadcast then collects k cached 1-row relations. (A first
-        // cut collected the blobs to the driver and re-entered them
-        // through a LocalRelation; its rows serialize into the TASK
-        // binary when AQE materializes the broadcast stage — a measured
-        // 146 MB task at sf100. The cache path ships blocks, not task
-        // closures.) ONE broadcast hash join on the shard route: each
-        // wedge row probes exactly its shard's blob.
-        val blooms = (0 until k).map { s =>
-          InternalCaches.persistTracked(
-            oriented
-              .filter(pmod(xxhash64(col("src")), lit(k.toLong)) === s)
-              .select(xxhash64(col("src"), col("dst")).as("ek"))
-              .coalesce(2)
-              .agg(bagg(col("ek")).as("bf"))
-              .select(lit(s.toLong).as("shard"), col("bf")),
-            eager = true)
-        }.reduce(_.unionAll(_))
-        wedges
-          .withColumn("shard", pmod(xxhash64(col("wu")), lit(k.toLong)))
-          .join(broadcast(blooms), "shard")
-          .filter(probeKey)
-          .drop("bf", "shard")
-      }
+      val blooms = (0 until k).map { s =>
+        InternalCaches.persistTracked(
+          oriented
+            .filter(pmod(xxhash64(col("src")), lit(k.toLong)) === s)
+            .select(xxhash64(col("src"), col("dst")).as("ek"))
+            .coalesce(2)
+            .agg(bagg(col("ek")).as("bf"))
+            .select(lit(s.toLong).as("shard"), col("bf")),
+          eager = k > 1)
+      }.reduce(_.unionAll(_))
+      wedges
+        .withColumn("shard", pmod(xxhash64(col("wu")), lit(k.toLong)))
+        .join(broadcast(blooms), "shard")
+        .filter(graft.expr.BloomFilter.mightContain(col("bf"),
+          xxhash64(col("wu"), col("wv")), numBits))
+        .drop("bf", "shard")
     }
     // Left-semi keeps every wedge ROW with a closing edge (no dedup of the
     // left side): distinct wedges (a,b,c) map 1:1 to counted triangles.

@@ -36,13 +36,15 @@ class GraphSpec extends SparkSpec {
   }
 
   test("triangleCount: forced bloom prefilter is count-identical (fp-only law)") {
-    // The auto dial never engages at test scale (BloomAutoMinEdges), so
-    // this law FORCES the bloom path and pins it against the unfiltered
-    // count on a seeded pseudo-random graph — the filter may only pass
-    // extra candidates into the exact closing join (false positives,
-    // absorbed), never drop one (a false negative would undercount).
-    // 60 nodes, ~xxhash-selected 20% of canonical pairs: dense enough
-    // for hundreds of triangles, distinct counts per graph.
+    // The Bloom never engages at test scale (BloomAutoMinEdges), so this
+    // law FORCES its shard count k through the shard-function seam and
+    // pins it against the unfiltered (k = 0) count on a seeded
+    // pseudo-random graph — the filter may only pass extra candidates
+    // into the exact closing join (false positives, absorbed), never
+    // drop one (a false negative would undercount). Shard routing must
+    // partition the closing-edge set: a mis-routed edge would surface as
+    // a dropped triangle. 60 nodes, ~xxhash-selected 20% of canonical
+    // pairs: dense enough for hundreds of triangles.
     val rnd = for {
       u <- 1L to 60L; v <- (u + 1) to 60L
       if java.lang.Math.floorMod(
@@ -51,29 +53,15 @@ class GraphSpec extends SparkSpec {
     } yield (u, v)
     val g = edges(rnd: _*)
     val k4 = edges((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L))
-    def count(df: DataFrame, mode: String, shards: Int = 0): Long = {
-      spark.conf.set("spark.graft.triangles.bloom", mode)
-      if (shards > 0)
-        spark.conf.set("spark.graft.triangles.bloomShards", shards.toString)
-      try ops.Graph.triangleCount(df).as[Long].head()
-      finally {
-        spark.conf.unset("spark.graft.triangles.bloom")
-        spark.conf.unset("spark.graft.triangles.bloomShards")
-        InternalCaches.unpersistAll()
-      }
-    }
-    val off = count(g, "off")
+    def count(df: DataFrame, k: Int): Long =
+      try ops.Graph.triangleCount(df, -1, _ => k).as[Long].head()
+      finally InternalCaches.unpersistAll()
+    val off = count(g, 0)
     assert(off > 0L, "fixture must actually contain triangles")
-    assert(count(g, "on") === off)
-    assert(count(k4, "on") === 4L)
-    // the r14 sharded path (byte-derived k is 1 at toy scale, so the
-    // law FORCES k): shard routing must partition the closing-edge set —
-    // a mis-routed edge would surface as a dropped triangle here, since
-    // per-shard fpp can only ADD candidates to the exact closing join
-    for (k <- Seq(2, 4, 7)) {
-      assert(count(g, "on", shards = k) === off,
-        s"sharded bloom (k=$k) must be count-identical")
-      assert(count(k4, "on", shards = k) === 4L)
+    assert(count(k4, 0) === 4L)
+    for (k <- Seq(1, 2, 4, 7)) {
+      assert(count(g, k) === off, s"bloom (k=$k) must be count-identical")
+      assert(count(k4, k) === 4L, s"bloom (k=$k) on K4")
     }
   }
 

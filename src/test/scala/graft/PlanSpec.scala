@@ -699,53 +699,47 @@ class PlanSpec extends SparkSpec {
   }
 
   test("graph_triangles: no cartesian/BNLJ; oriented edges read from cache on all three branches") {
-    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
-    try {
-      val plan = executed(query("graph_triangles"))
-      // A BNLJ is allowed ONLY as the bloom-blob attach: a broadcast of a
-      // single no-grouping aggregate row (the sized closing-edge filter,
-      // ops/graph.scala). Any other BNLJ — and any cartesian — is the
-      // all-pairs wedge product this pin exists to forbid.
-      // The carve-out inspects only the BROADCAST child (r14, advice):
-      // exempting "any child with a global agg" would also exempt a bad
-      // broadcast whose STREAMED side merely contains one upstream —
-      // the blob attach is specifically a broadcast of the 1-row
-      // aggregate, so that is the side that must prove it.
+    import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec, ShuffledHashJoinExec}
+    def pin(what: String, df: DataFrame): Unit = {
+      val plan = executed(df)
+      // The wedge enumeration and the Bloom shard attach are equi-joins;
+      // a product anywhere is the all-pairs wedge blow-up.
       val bad = collect(plan) {
         case c: CartesianProductExec => c: SparkPlan
-        case b: BroadcastNestedLoopJoinExec
-            if collect(b.buildSide match {
-              case org.apache.spark.sql.catalyst.optimizer.BuildLeft =>
-                b.left
-              case _ => b.right
-            }) {
-              case a: BaseAggregateExec if a.groupingExpressions.isEmpty => a
-            }.isEmpty => b: SparkPlan
+        case b: BroadcastNestedLoopJoinExec => b: SparkPlan
       }
       assert(bad.isEmpty,
-        s"wedge enumeration must stay an equi-join, never a product:\n$plan")
+        s"$what: wedge enumeration must stay an equi-join, never a " +
+          s"product:\n$plan")
       // Two wedge sides + the closing semi-join all scan the SAME cached
       // oriented relation — the multi-branch recompute fix that cut the
       // bench line 6x (ops/graph.scala). Edge cache branches add more.
       val imts = collect(plan) { case s: InMemoryTableScanExec => s }
       assert(imts.size >= 3,
-        s"expected >=3 InMemoryTableScans (oriented read 3x from cache), " +
-          s"got ${imts.size}:\n$plan")
+        s"$what: expected >=3 InMemoryTableScans (oriented read 3x from " +
+          s"cache), got ${imts.size}:\n$plan")
       // The closing semi-join must be a HASH join building the m-sized
       // oriented side — a merge join here SORTS the Θ(m^1.5) wedge
       // stream (~48 GB of sorter spill at sf100, the r13 ladder's one ✗;
       // BASELINE.md), and a broadcast build is the r12 cliff. Pinned so
       // planner/AQE drift can't silently re-sort the wedge stream.
-      import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
-      import org.apache.spark.sql.catalyst.plans.LeftSemi
       val closing = collect(plan) {
         case j: ShuffledHashJoinExec if j.joinType == LeftSemi => j
       }
       assert(closing.nonEmpty,
-        s"closing semi-join must be ShuffledHashJoin (wedge stream never " +
-          s"sorted):\n$plan")
+        s"$what: closing semi-join must be ShuffledHashJoin (wedge stream " +
+          s"never sorted):\n$plan")
+    }
+    try {
+      pin("graph_triangles", query("graph_triangles"))
+      // the Bloom engages only past 2^22 edges, so force its shard count
+      for (k <- Seq(1, 3)) {
+        pin(s"bloom k=$k", ops.Graph.triangleCount(
+          ops.Graph.coPurchaseEdges(spark, sfDir), -1, _ => k))
+        InternalCaches.unpersistAll()
+      }
     } finally InternalCaches.unpersistAll()
   }
 
